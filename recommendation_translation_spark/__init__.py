@@ -13,8 +13,8 @@ Layout
 ------
 - ``session``    SparkSession builder tuned for local[32] testing and
                  cluster-scale defaults (AQE, Arrow, UTC).
-- ``schemas``    explicit StructTypes for the reference data model
-                 (Utils.scala:8-14) and the extension tables.
+- ``schemas``    exists-flag constants, the feature-matrix column order
+                 and the pagecounts StructType (Utils.scala:8-21).
 - ``sources``    readers/writers S1-S10 (DataGatherer.scala, ScorePredictor.scala).
 - ``operators``  the relational core: normalized rank (FeatureExtractor.scala:50-104),
                  feature pivot, joins, plus dedup / similarity / text / events.

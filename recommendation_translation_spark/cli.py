@@ -89,22 +89,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def params_from_args(argv: list[str]) -> Params:
     ns = build_parser().parse_args(argv)
-    targets = [w for w in ns.target_wikis.replace(",", " ").split() if w]
-    return Params(
-        parse_raw_data=ns.parse_raw_data,
-        extract_features=ns.extract_features,
-        build_models=ns.build_models,
-        score_items=ns.score_items,
-        raw_sitelinks=ns.raw_sitelinks,
-        raw_pagecounts=ns.raw_pagecounts,
-        raw_data=ns.raw_data,
-        parsed_data=ns.parsed_data,
-        feature_data=ns.feature_data,
-        model_dir=ns.model_dir,
-        output_dir=ns.output_dir,
-        target_wikis=targets,
-        seed=ns.seed,
-    )
+    ns.target_wikis = ns.target_wikis.replace(",", " ").split()
+    return Params(**vars(ns))
 
 
 def check_config(p: Params) -> list[str]:
@@ -169,7 +155,7 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
     fold is the single-shuffle union+pivot, and everything stays in the
     DataFrame API.
     """
-    from .operators.features import pivot_features, unpivot_features  # noqa: F401
+    from .operators.features import pivot_features
     from .operators.rank import normalized_rank
     from .pipeline.score import assemble_predictions, score_items
     from .pipeline.train import build_models
@@ -222,9 +208,11 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
                        if c.startswith("exists_"))
 
     targets = p.target_wikis or sites  # JobRunner.scala:47-50
+    if p.build_models or p.score_items:
+        # one cached copy feeds every per-site training and scoring job
+        features = features.cache()
     models = None
     if p.build_models:
-        features = features.cache()
         model_dir = os.path.join(out, "models")
         models = build_models(features, targets, seed=p.seed, model_dir=model_dir)
         artifacts["model_dir"] = model_dir
@@ -242,10 +230,11 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
             try:
                 models[site] = RandomForestRegressionModel.load(path)  # S9
             except Exception as exc:
+                # X2: scored as an empty column (ScorePredictor.scala:37-44)
                 log.warning("no model for site %s: %s", site, exc)
+                models[site] = None
 
     if p.score_items:  # EP3 scorer
-        features = features.cache()
         scored = score_items(features, models)
         predictions = assemble_predictions(scored)
         path = os.path.join(out, "predictions")

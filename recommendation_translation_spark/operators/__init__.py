@@ -1,4 +1,4 @@
 from .rank import normalized_rank
-from .features import pivot_features, unpivot_features
+from .features import pivot_features
 
-__all__ = ["normalized_rank", "pivot_features", "unpivot_features"]
+__all__ = ["normalized_rank", "pivot_features"]

@@ -375,19 +375,21 @@ def dup_clusters(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id",
             ]
         )
         # r14 (guide §6 "Arrow for driver transfers"): ship the label
-        # table back as ONE Arrow frame — createDataFrame over a python
+        # table back as ONE Arrow table — createDataFrame over a python
         # list pickles row-by-row into defaultParallelism slices
         # (measured 1.2 s of a 32-task stage for ~5k labels inside
-        # corpus_dedup_report); the pandas path is Arrow-batched under
-        # this session's arrow conf and degrades gracefully (identical
-        # values) on vanilla driver sessions.  Empty stays on the
-        # list path: pandas cannot carry dtype for zero rows.
-        if rows:
-            import pandas as _pd
+        # corpus_dedup_report).  The Arrow column types come from
+        # out_schema, not from inference, so an empty label set takes
+        # the same path with the same types, with or without the
+        # session's arrow conf.
+        import pyarrow as _pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-            pdf_out = _pd.DataFrame(rows, columns=["doc_id", "cluster_id"])
-            return pairs.sparkSession.createDataFrame(pdf_out, out_schema)
-        return pairs.sparkSession.createDataFrame(rows, out_schema)
+        labels = _pa.table(
+            {"doc_id": [r[0] for r in rows], "cluster_id": [r[1] for r in rows]},
+            schema=to_arrow_schema(out_schema),
+        )
+        return pairs.sparkSession.createDataFrame(labels, out_schema)
     # r13: the whole iterative path runs under fixpoint_scope — the
     # per-round relations are edge/label-sized, and the profile showed
     # the query was job-floor-bound (66 jobs, no stage over 1 s) from

@@ -1,4 +1,4 @@
-"""Long → wide feature pivot (SURVEY.md §2.4 A4/A5) and its inverse.
+"""Long → wide feature pivot (SURVEY.md §2.4 A4/A5).
 
 The reference groups ranked rows by id, builds a per-id
 ``Map[site -> (pageviews, rank)]`` and assembles Rows by hand
@@ -14,8 +14,7 @@ Scale note (SURVEY §7): the wide matrix has ``1 + 3·|sites|`` columns —
 fine for hundreds of sites, a hazard for tens of thousands.  The long
 form ``(id, site, pageviews, rank, exists)`` is the canonical store;
 ``pivot_features`` takes an explicit ``sites`` list so the pivot never
-needs the implicit distinct-collect pass, and ``unpivot_features``
-(``stack``) goes back without data loss.
+needs the implicit distinct-collect pass.
 """
 
 from __future__ import annotations
@@ -25,26 +24,21 @@ from pyspark.sql import functions as F
 
 from ..schemas import EXISTS, NOT_EXISTS, feature_column_names
 
-__all__ = ["pivot_features", "unpivot_features"]
+__all__ = ["pivot_features"]
 
 
-def pivot_features(
-    ranked: DataFrame,
-    sites: list[str],
-    id_col: str = "id",
-    site_col: str = "site",
-) -> DataFrame:
+def pivot_features(ranked: DataFrame, sites: list[str]) -> DataFrame:
     """Wide feature matrix: id + (pageviews_S, rank_S, exists_S) per site.
 
     ``sites`` must be the full sorted site list (JobRunner.scala:50 /
     FeatureExtractor.scala:51-52 discover it; callers do
-    ``[r[0] for r in ranked.select(site_col).distinct().collect()]``).
+    ``[r[0] for r in ranked.select("site").distinct().collect()]``).
     Passing it explicitly keeps the pivot single-pass.
     """
     sites = sorted(sites)
     pivoted = (
-        ranked.groupBy(id_col)
-        .pivot(site_col, sites)
+        ranked.groupBy("id")
+        .pivot("site", sites)
         .agg(
             F.first("pageviews").alias("pageviews"),
             F.first("rank").alias("rank"),
@@ -53,7 +47,7 @@ def pivot_features(
     )
     # Spark names pivot-agg columns "<site>_<aggalias>"; the reference's
     # layout is "<metric>_<site>" (FeatureExtractor.scala:88-90).
-    select = [F.col(id_col).cast("string").alias("id")]
+    select = [F.col("id").cast("string").alias("id")]
     for site in sites:
         select.append(
             F.coalesce(F.col(f"`{site}_pageviews`"), F.lit(0.0)).alias(f"pageviews_{site}")
@@ -66,21 +60,3 @@ def pivot_features(
     assert out.columns == feature_column_names(sites)
     return out
 
-
-def unpivot_features(wide: DataFrame, sites: list[str], id_col: str = "id") -> DataFrame:
-    """Inverse pivot (wide → long) via ``stack``; drops absent pairs."""
-    sites = sorted(sites)
-    n = len(sites)
-    args = []
-    for site in sites:
-        args += [
-            f"'{site}'",
-            f"`pageviews_{site}`",
-            f"`rank_{site}`",
-            f"`exists_{site}`",
-        ]
-    stacked = wide.selectExpr(
-        id_col,
-        f"stack({n}, {', '.join(args)}) AS (site, pageviews, rank, `exists`)",
-    )
-    return stacked.filter(F.col("exists") == EXISTS).drop("exists")

@@ -124,10 +124,14 @@ def pagerank_integer(
         # read partitioned blocks, exactly as before.
         from concurrent.futures import ThreadPoolExecutor
 
+        from ..session import inherit_local_properties
+
+        checkpoint = inherit_local_properties(
+            edges.sparkSession.sparkContext,
+            lambda df: df.localCheckpoint(eager=True),
+        )
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(lambda: nodes.localCheckpoint(eager=True))
-            f_e = pool.submit(lambda: e.localCheckpoint(eager=True))
-            nodes, e = f_nodes.result(), f_e.result()
+            nodes, e = pool.map(checkpoint, (nodes, e))
         ranks = nodes.withColumn("rank_int", F.lit(int(base)).cast("long"))
         for _ in range(n_iter):
             contrib = e.join(ranks, e["e_src"] == ranks["node"]).select(

@@ -34,19 +34,16 @@ __all__ = ["normalized_rank"]
 
 def normalized_rank(
     df: DataFrame,
-    site_col: str = "site",
-    order_col: str = "pageviews",
     tiebreak_cols: tuple[str, ...] = ("id",),
-    rank_col: str = "rank",
 ) -> DataFrame:
     """rank = row_number over (site, pageviews asc, <tiebreaks>) / count(site).
 
     Matches FeatureExtractor.scala:59-75 with deterministic tie order.
     """
-    order = [F.col(order_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
-    w_order = Window.partitionBy(site_col).orderBy(*order)
-    w_site = Window.partitionBy(site_col)
+    order = [F.col("pageviews").asc()] + [F.col(c).asc() for c in tiebreak_cols]
+    w_order = Window.partitionBy("site").orderBy(*order)
+    w_site = Window.partitionBy("site")
     return df.withColumn(
-        rank_col,
+        "rank",
         (F.row_number().over(w_order).cast("double") / F.count("*").over(w_site)),
     )

@@ -982,6 +982,8 @@ def pq_codebooks(
         # centroids/costs/sizes are bit-identical to the serial loop.
         from concurrent.futures import ThreadPoolExecutor
 
+        from ..session import inherit_local_properties
+
         def _fit(s: int):
             feats = arr.select(
                 array_to_vector(F.slice("e", s * d_sub + 1, d_sub)).alias("features")
@@ -995,7 +997,10 @@ def pq_codebooks(
             )
 
         with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-            fits = list(pool.map(_fit, range(m)))
+            fits = list(pool.map(
+                inherit_local_properties(emb.sparkSession.sparkContext, _fit),
+                range(m),
+            ))
         sizes_ok = [f[0] for f in fits]
         codebooks = [f[1] for f in fits]
         costs = [f[2] for f in fits]

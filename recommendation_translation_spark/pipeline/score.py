@@ -2,17 +2,14 @@
 
 The reference scores each target site into its own 2-column DataFrame and
 folds them with N−1 chained full-outer joins on id
-(ScorePredictor.scala:47) — N−1 shuffles.  We keep that operator
-available (``assemble_predictions(..., strategy="join_fold")``) for
-parity, but the default path unions the per-site results into ONE long
-DataFrame and pivots: a single shuffle regardless of N (SURVEY §2.3 J2
-mapping).
+(ScorePredictor.scala:47) — N−1 shuffles.  We union the per-site results
+into ONE long DataFrame and pivot instead: the same relation from a
+single shuffle regardless of N (SURVEY §2.3 J2 mapping).
 """
 
 from __future__ import annotations
 
 import logging
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 from pyspark.ml.regression import RandomForestRegressionModel
@@ -21,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .assemble import get_work_data
-from .train import SITE_PARALLELISM, TrainResult
+from .train import TrainResult
 
 log = logging.getLogger(__name__)
 
@@ -47,53 +44,43 @@ def _score_one(features: DataFrame, site: str,
     target site (``exists=False``, the reference behavior); prediction
     column named after the site.  ``exists=None`` scores every item."""
     work = get_work_data(features, site, exists=exists)
-    model = model.copy()  # setPredictionCol mutates; don't race across threads
+    model = model.copy()  # setPredictionCol mutates; leave the caller's model as given
     model.setPredictionCol(site)
     return model.transform(work).select("id", site)  # P5 column prune
 
 
 def score_items(
     features: DataFrame,
-    models: dict[str, RandomForestRegressionModel | TrainResult],
-    parallelism: int = SITE_PARALLELISM,
+    models: dict[str, RandomForestRegressionModel | TrainResult | None],
     exists: bool | None = False,
 ) -> dict[str, DataFrame]:
-    """Score every target site (lazily — returns unevaluated DataFrames);
-    failures yield the empty frame like the reference.  ``exists``
-    passes through to the work-data filter (False = reference behavior:
-    only items missing on the target site; None = all items)."""
-    features = features.cache()
+    """Score every target site (lazily — returns unevaluated DataFrames
+    and submits no Spark job); a missing model or a failure yields the
+    empty frame like the reference.  ``exists`` passes through to the
+    work-data filter (False = reference behavior: only items missing on
+    the target site; None = all items)."""
     spark = features.sparkSession
-
-    def run(item: tuple[str, RandomForestRegressionModel | TrainResult]) -> tuple[str, DataFrame]:
-        site, model = item
+    scored = {}
+    for site, model in models.items():
         if isinstance(model, TrainResult):
             model = model.model
         try:
             if model is None:
                 raise ValueError("no model")
-            return site, _score_one(features, site, model, exists=exists)
+            scored[site] = _score_one(features, site, model, exists=exists)
         except Exception as exc:
             log.warning("scoring failed for site %s: %s", site, exc)
-            return site, _empty_site_scores(spark, site)
-
-    with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
-        return dict(pool.map(run, models.items()))
+            scored[site] = _empty_site_scores(spark, site)
+    return scored
 
 
-def assemble_predictions(per_site: dict[str, DataFrame],
-                         strategy: str = "union_pivot") -> DataFrame:
+def assemble_predictions(per_site: dict[str, DataFrame]) -> DataFrame:
     """Fold per-site score frames into (id, <site1>, <site2>, ...).
 
-    ``join_fold`` reproduces ScorePredictor.scala:47 exactly (N−1 outer
-    joins).  ``union_pivot`` computes the same relation with one shuffle:
-    melt to (id, site, score), then groupBy(id).pivot(site).
+    The same relation as ScorePredictor.scala:47's N−1 outer joins, from
+    one shuffle: melt to (id, site, score), then groupBy(id).pivot(site).
     """
     sites = sorted(per_site)
-    if strategy == "join_fold":
-        frames = [per_site[s] for s in sites]
-        return reduce(lambda l, r: l.join(r, ["id"], "outer"), frames)
-
     long_frames = [
         df.select(
             F.col("id"),

@@ -2,14 +2,16 @@
 
 Differences from the reference, all deliberate:
 
-- the feature matrix is ``.cache()``d by the caller before the per-site
-  fan-out — the reference recomputes the whole feature lineage for every
-  site (SURVEY §3 EP3), its biggest performance bug;
+- the feature matrix is persisted by the caller (``.cache()`` in the CLI,
+  ``localCheckpoint`` in the catalog) and materialized here before the
+  per-site fan-out — the reference recomputes the whole feature lineage
+  for every site (SURVEY §3 EP3), its biggest performance bug;
 - ``randomSplit`` and the RandomForest are seeded for reproducibility
   (the reference is unseeded, ModelBuilder.scala:23);
 - per-site concurrency uses a ThreadPoolExecutor over Spark actions
   (PySpark job submission is thread-safe), replacing ``sites.par`` with
-  ``ForkJoinPool(8)`` (JobRunner.scala:15,51-54);
+  ``ForkJoinPool(8)`` (JobRunner.scala:15,51-54); each site's jobs keep
+  the caller's job group;
 - per-site failures are isolated and reported, not fatal
   (ModelBuilder.scala:35-37).
 """
@@ -19,12 +21,13 @@ from __future__ import annotations
 import logging
 import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.regression import RandomForestRegressor, RandomForestRegressionModel
 from pyspark.sql import DataFrame
 
+from ..session import inherit_local_properties
 from .assemble import get_work_data
 
 log = logging.getLogger(__name__)
@@ -56,7 +59,6 @@ class TrainResult:
     rmse: float | None = None
     error: str | None = None
     model_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 # Rows per partition for the training set.  The per-site work data is a
@@ -95,18 +97,15 @@ def build_models(
     sites: list[str],
     seed: int = 42,
     model_dir: str | None = None,
-    parallelism: int = SITE_PARALLELISM,
 ) -> dict[str, TrainResult]:
-    """Train one RandomForest per target site, up to ``parallelism`` at
-    a time (X1), isolating per-site failures (X2).
+    """Train one RandomForest per target site, up to ``SITE_PARALLELISM``
+    at a time (X1), isolating per-site failures (X2).
 
-    Callers should ``features.cache()`` first; this function triggers
-    many actions per site.
+    Callers persist ``features`` first; this function materializes it
+    once and then triggers many actions per site.
     """
-    if not features.is_cached:
-        features = features.cache()
     features.count()  # materialize before fan-out: concurrent per-site jobs
-    # would otherwise each recompute the uncached feature lineage
+    # would otherwise each compute the feature lineage
 
     sc = features.sparkSession.sparkContext
 
@@ -114,18 +113,16 @@ def build_models(
         # One FAIR pool per site (JobRunner.scala:51-54 intent): under
         # spark.scheduler.mode=FAIR (session.py) the 8 concurrent sites
         # round-robin executor slots instead of FIFO-queueing one
-        # site's tree-depth jobs ahead of the rest.  The local property
-        # is per-thread; reset in finally because the pool reuses
-        # threads across sites.  No-op under a FIFO session.
+        # site's tree-depth jobs ahead of the rest.  Set on this task's
+        # own copy of the local properties, so it never leaks into
+        # another site.  No-op under a FIFO session.
         sc.setLocalProperty("spark.scheduler.pool", f"site-{site}")
         try:
             return _train_one(features, site, seed, model_dir)
         except Exception as exc:  # X2: log & continue (ModelBuilder.scala:35-37)
             log.warning("model build failed for site %s: %s", site, exc)
             return TrainResult(site=site, error=str(exc))
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
 
-    with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
-        results = list(pool.map(run, sites))
+    with ThreadPoolExecutor(max_workers=SITE_PARALLELISM) as pool:
+        results = list(pool.map(inherit_local_properties(sc, run), sites))
     return {r.site: r for r in results}

@@ -773,7 +773,7 @@ def _trained(spark: SparkSession, sf_dir: str):
         # one copy instead of racing to compute the pivot concurrently
         # (SURVEY §3 EP3 fix).
         feats = feature_table(spark, sf_dir).localCheckpoint()
-        _ML_CACHE[key] = (feats, build_models(feats, SITES, seed=42, parallelism=3))
+        _ML_CACHE[key] = (feats, build_models(feats, SITES, seed=42))
     return _ML_CACHE[key]
 
 
@@ -886,9 +886,7 @@ def q_ml_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         > 0
     )
-    scored = score_items(
-        feats, models, parallelism=3, exists=False if any_missing else None
-    )
+    scored = score_items(feats, models, exists=False if any_missing else None)
     frames = []
     for site, df in scored.items():
         flag = feats.select("id", F.col(f"exists_{site}").alias("exists_flag"))
@@ -4488,10 +4486,6 @@ def q_tpch_q2_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # oracle SQL (DuckDB dialect; views pre-registered by the driver)
 # ---------------------------------------------------------------------------
-
-
-def _pivot_cols_sql() -> str:
-    return _PIVOT_SQL
 
 
 def _lang_id_sql() -> str:
@@ -8766,8 +8760,9 @@ def capped_balance_walk(spark: SparkSession, ord_df: DataFrame,
     shape the scope exists for — each level re-plans adaptively and
     materializes 3-4 jobs for sub-second work — so below the scope's
     row gate AQE is off, shuffle width derives from the data, and the
-    chain materializes in-scope; inert above the gate and when
-    ``n_rows`` is None (the property tests' direct calls)."""
+    chain materializes in-scope with a broadcast frontier join; inert
+    (no hint, AQE plans the join) above the gate and when ``n_rows`` is
+    None (the property tests' direct calls)."""
     chunks = (
         ord_df.withColumn(
             "chunk", F.expr(f"CAST((rn - 1) DIV {chunk_size} AS BIGINT)")
@@ -8789,32 +8784,34 @@ def capped_balance_walk(spark: SparkSession, ord_df: DataFrame,
     )
     chunks.createOrReplaceTempView("capped_balance_chunks")
     clamp = f"(acc, x) -> LEAST(CAST({cap} AS BIGINT), acc + x)"
-    # BROADCAST the frontier (w): the live-chain side shrinks every
-    # level while `chunks` is the already-materialized, pre-partitioned
-    # relation — broadcasting w makes each level a map-side join with
-    # ZERO shuffle.  Under AQE the runtime stats picked this plan
-    # anyway; the hint pins it where the scope below turns AQE off
-    # (an RDD-backed relation has no stats, so the planner would
-    # otherwise fall back to a sort-merge join of the full chunk
-    # table per level).
-    walk = spark.sql(
-        f"""
-        WITH RECURSIVE walk(custkey, chunk, bal_cents) AS (
-          SELECT custkey, chunk,
-                 aggregate(cents_arr, CAST(0 AS BIGINT), {clamp})
-          FROM capped_balance_chunks WHERE chunk = 0
-          UNION ALL
-          SELECT /*+ BROADCAST(w) */ c.custkey, c.chunk,
-                 aggregate(c.cents_arr, w.bal_cents, {clamp})
-          FROM walk w JOIN capped_balance_chunks c
-            ON c.custkey = w.custkey AND c.chunk = w.chunk + 1
-        )
-        SELECT custkey, chunk, bal_cents FROM walk
-        """
-    )
     from .operators.fixpoint import fixpoint_scope
 
     with fixpoint_scope(spark, n_rows) as scoped:
+        # In scope, BROADCAST the frontier (w): the live-chain side
+        # shrinks every level while `chunks` is the already-materialized,
+        # pre-partitioned relation — broadcasting w makes each level a
+        # map-side join with ZERO shuffle.  The scope turns AQE off and
+        # an RDD-backed relation has no stats, so without the hint the
+        # planner would fall back to a sort-merge join of the full chunk
+        # table per level.  Out of scope (unknown or large n_rows) the
+        # frontier grows with the customer count, so the choice is left
+        # to AQE's runtime sizes.
+        hint = "/*+ BROADCAST(w) */" if scoped else ""
+        walk = spark.sql(
+            f"""
+            WITH RECURSIVE walk(custkey, chunk, bal_cents) AS (
+              SELECT custkey, chunk,
+                     aggregate(cents_arr, CAST(0 AS BIGINT), {clamp})
+              FROM capped_balance_chunks WHERE chunk = 0
+              UNION ALL
+              SELECT {hint} c.custkey, c.chunk,
+                     aggregate(c.cents_arr, w.bal_cents, {clamp})
+              FROM walk w JOIN capped_balance_chunks c
+                ON c.custkey = w.custkey AND c.chunk = w.chunk + 1
+            )
+            SELECT custkey, chunk, bal_cents FROM walk
+            """
+        )
         if scoped:
             # materialize the recursion while AQE is off (the pagerank
             # discipline): the caller's action then reads blocks

@@ -1,18 +1,17 @@
-"""Explicit schemas for the reference data model.
+"""Shared shapes of the reference data model.
 
-The reference encodes these as Scala case classes (Utils.scala:8-14):
+The reference encodes its records as Scala case classes (Utils.scala:8-14):
 
 - ``SitelinkEntry(id, site, title)``
 - ``PagecountEntry(site, title, pageviews)``
 - ``SitelinkPageviewsEntry(id, site, title, pageviews)``
 - ``RankedEntry(id, site, title, pageviews, rank)``
 
-plus two runtime-constructed shapes: the wide feature matrix
-(FeatureExtractor.scala:85-91: ``id`` + 3 double columns per sorted site)
-and per-site predictions (ScorePredictor.scala:40-42).
-
-PySpark has no typed Dataset, so the StructType IS the contract; readers
-apply it explicitly or assert it after inference.
+PySpark has no typed Dataset, so the readers enforce these shapes with a
+trailing ``select`` + cast (``sources.readers``).  Only the header-less
+pagecounts dump needs an explicit StructType (``PAGECOUNT_SCHEMA``); the
+wide feature matrix (FeatureExtractor.scala:85-91: ``id`` + 3 double
+columns per sorted site) is pinned by ``feature_column_names``.
 """
 
 from __future__ import annotations
@@ -20,14 +19,9 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 __all__ = [
-    "SITELINK_SCHEMA",
     "PAGECOUNT_SCHEMA",
-    "SITELINK_PAGEVIEWS_SCHEMA",
-    "RANKED_SCHEMA",
     "EXISTS",
     "NOT_EXISTS",
-    "feature_matrix_schema",
-    "predictions_schema",
     "feature_column_names",
 ]
 
@@ -35,38 +29,11 @@ __all__ = [
 EXISTS = 1.0
 NOT_EXISTS = 0.0
 
-SITELINK_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("site", T.StringType(), False),
-        T.StructField("title", T.StringType(), False),
-    ]
-)
-
 PAGECOUNT_SCHEMA = T.StructType(
     [
         T.StructField("site", T.StringType(), False),
         T.StructField("title", T.StringType(), False),
         T.StructField("pageviews", T.DoubleType(), False),
-    ]
-)
-
-SITELINK_PAGEVIEWS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("site", T.StringType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("pageviews", T.DoubleType(), False),
-    ]
-)
-
-RANKED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("site", T.StringType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("pageviews", T.DoubleType(), False),
-        T.StructField("rank", T.DoubleType(), False),
     ]
 )
 
@@ -81,20 +48,3 @@ def feature_column_names(sites: list[str]) -> list[str]:
     for site in sorted(sites):
         cols += [f"pageviews_{site}", f"rank_{site}", f"exists_{site}"]
     return cols
-
-
-def feature_matrix_schema(sites: list[str]) -> T.StructType:
-    """Wide feature matrix: 1 + 3·|sites| columns, all doubles but id."""
-    fields = [T.StructField("id", T.StringType(), False)]
-    for site in sorted(sites):
-        for metric in ("pageviews", "rank", "exists"):
-            fields.append(T.StructField(f"{metric}_{site}", T.DoubleType(), False))
-    return T.StructType(fields)
-
-
-def predictions_schema(sites: list[str]) -> T.StructType:
-    """Prediction fold output: id + one nullable double per target site
-    (ScorePredictor.scala:40-42,47)."""
-    fields = [T.StructField("id", T.StringType(), False)]
-    fields += [T.StructField(site, T.DoubleType(), True) for site in sorted(sites)]
-    return T.StructType(fields)

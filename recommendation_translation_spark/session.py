@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import os
 import sys
+from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-__all__ = ["ensure_python_protobuf", "get_spark", "stop_spark"]
+__all__ = ["ensure_python_protobuf", "get_spark", "inherit_local_properties"]
 
 #: Known locations of a vendored pure-python ``google.protobuf``
 #: runtime on hosts whose interpreter has no protobuf installed (this
@@ -145,7 +147,18 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def inherit_local_properties(sc: SparkContext, fn: Callable) -> Callable:
+    """Wrap ``fn`` so that, run on a pool thread, it submits its jobs
+    under the calling thread's local properties (job group, scheduler
+    pool, ...).  Spark keeps those per thread, so without this a pool's
+    jobs lose the caller's job group.  Unlike
+    ``pyspark.util.inheritable_thread_target``, every call installs its
+    own copy: a task that sets a property (``build_models``' per-site
+    scheduler pool) cannot leak it into the other tasks."""
+    props = sc._jsc.sc().getLocalProperties().clone()
+
+    def run(*args, **kwargs):
+        sc._jsc.sc().setLocalProperties(props.clone())
+        return fn(*args, **kwargs)
+
+    return run

@@ -4,10 +4,10 @@ Each reader reproduces the reference's exact reader options
 (DataGatherer.scala) but stays fully declarative so Catalyst keeps
 pushdown/pruning.  Scale notes:
 
-- ``inferSchema`` costs an extra full pass over the file; the reference
-  pays it (DataGatherer.scala:40,55).  We accept an optional explicit
-  schema to skip that pass at 100 TB — inference is only the default to
-  match reference behavior.
+- the TSV readers use ``inferSchema`` like the reference
+  (DataGatherer.scala:40,55) and bind columns by header name, so an
+  extra leading index column (FIXTURES.md A1) is harmless; inference
+  costs one extra pass over the file.
 - ``DROPMALFORMED`` drops bad rows inside the scan task — no shuffle,
   scales linearly.
 """
@@ -21,11 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import (
-    PAGECOUNT_SCHEMA,
-    SITELINK_PAGEVIEWS_SCHEMA,
-    SITELINK_SCHEMA,
-)
+from ..schemas import PAGECOUNT_SCHEMA
 
 __all__ = [
     "read_sitelinks_tsv",
@@ -58,26 +54,24 @@ TESTDATA_TABLES = (
 )
 
 
-def _tsv_reader(spark: SparkSession, infer: bool):
+def _read_tsv(spark: SparkSession, path: str) -> DataFrame:
     # DataGatherer.scala:37-44 / 52-59: header, inferSchema, DROPMALFORMED, tab sep.
     return (
         spark.read.option("header", True)
-        .option("inferSchema", infer)
+        .option("inferSchema", True)
         .option("mode", "DROPMALFORMED")
         .option("sep", "\t")
+        .csv(path)
     )
 
 
-def read_sitelinks_tsv(spark: SparkSession, path: str, infer_schema: bool = True) -> DataFrame:
+def read_sitelinks_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S1 — sitelinks TSV → (id, site, title).  DataGatherer.scala:37-44.
 
     Extra columns (the sample fixture has a leading row-index) are dropped
     by the trailing select, matching the reference's by-name encoder bind.
     """
-    reader = _tsv_reader(spark, infer_schema)
-    if not infer_schema:
-        reader = reader.schema(SITELINK_SCHEMA)
-    df = reader.csv(path)
+    df = _read_tsv(spark, path)
     return df.select(
         F.col("id").cast("string").alias("id"),
         F.col("site").cast("string").alias("site"),
@@ -85,13 +79,10 @@ def read_sitelinks_tsv(spark: SparkSession, path: str, infer_schema: bool = True
     )
 
 
-def read_raw_data_tsv(spark: SparkSession, path: str, infer_schema: bool = True) -> DataFrame:
+def read_raw_data_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S2 — combined raw data TSV → (id, site, title, pageviews).
     DataGatherer.scala:52-59; column contract ArgParser.scala:68-74."""
-    reader = _tsv_reader(spark, infer_schema)
-    if not infer_schema:
-        reader = reader.schema(SITELINK_PAGEVIEWS_SCHEMA)
-    df = reader.csv(path)
+    df = _read_tsv(spark, path)
     return df.select(
         F.col("id").cast("string").alias("id"),
         F.col("site").cast("string").alias("site"),

@@ -77,11 +77,11 @@ def write_bucketed_table(
     w.format("parquet").saveAsTable(table)
 
 
-def write_predictions_csv(df: DataFrame, path: str, mode: str = "errorifexists") -> None:
+def write_predictions_csv(df: DataFrame, path: str) -> None:
     """S10 — single bzip2 CSV with header.  ScorePredictor.scala:51-56."""
     (
         df.coalesce(1)
-        .write.mode(mode)
+        .write.mode("errorifexists")
         .option("header", True)
         .option("compression", "bzip2")
         .csv(path)

@@ -16,6 +16,13 @@ from recommendation_translation_spark.sources.readers import TESTDATA_TABLES
 # PYTHONPATH extension must exist first (session.ensure_python_protobuf)
 ensure_python_protobuf()
 
+# The suite's driver heap, unless the caller sets one.  Under get_spark's
+# 48g default the driver JVM grows its heap toward the cap before it
+# collects; on a 15 GiB, 4-core host the suite's driver reached
+# 12-15 GiB resident that way and was OOM-killed.  At 8g the whole
+# suite passes with the driver peaking near 8 GiB.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 

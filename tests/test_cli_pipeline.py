@@ -201,6 +201,98 @@ def test_resume_from_artifacts(spark, full_run, tmp_path_factory):
     assert len(files) == 1
 
 
+def test_resume_with_missing_model_keeps_empty_site_column(
+    spark, full_run, tmp_path_factory
+):
+    """X2 fault isolation (ScorePredictor.scala:37-44): resume-scoring a
+    target site whose model is missing still writes that site's column,
+    all empty, next to the sites that did score."""
+    import shutil
+
+    models = tmp_path_factory.mktemp("partial") / "models"
+    shutil.copytree(full_run["model_dir"], models)
+    shutil.rmtree(models / "frwiki")
+    p = Params(
+        score_items=True,
+        feature_data=full_run["feature_data"],
+        model_dir=str(models),
+        output_dir=str(tmp_path_factory.mktemp("resume_partial")),
+        target_wikis=SITES,
+    )
+    artifacts = run(spark, p)
+    (path,) = glob.glob(os.path.join(artifacts["predictions"], "*.csv.bz2"))
+    with bz2.open(path, "rt") as f:
+        rows = list(csv.DictReader(f))
+    assert list(rows[0]) == ["id"] + SITES
+    assert all(r["frwiki"] == "" for r in rows)
+    for site in ("dewiki", "enwiki", "eswiki"):
+        assert any(r[site] != "" for r in rows), site
+
+
+def test_score_and_assemble_submit_no_job(spark, full_run):
+    """Scoring only builds plans: ``score_items`` + ``assemble_predictions``
+    run no Spark action, so the CSV writer is the first job of the
+    scoring stage (and there is nothing for a thread pool to overlap)."""
+    from pyspark.ml.regression import RandomForestRegressionModel
+
+    from recommendation_translation_spark.pipeline.score import (
+        assemble_predictions,
+        score_items,
+    )
+
+    feats = spark.read.parquet(full_run["feature_data"])
+    models = {
+        s: RandomForestRegressionModel.load(os.path.join(full_run["model_dir"], s))
+        for s in ("dewiki", "enwiki")
+    }
+    models["frwiki"] = None
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("score_no_job_probe", "score_items + assemble_predictions")
+    try:
+        predictions = assemble_predictions(score_items(feats, models))
+    finally:
+        sc.setJobGroup(None, None)
+    assert tracker.getJobIdsForGroup("score_no_job_probe") == []
+    assert set(tracker.getJobIdsForGroup()) <= before
+    assert predictions.columns == ["id", "dewiki", "enwiki", "frwiki"]
+
+
+def test_build_models_jobs_keep_callers_job_group(spark):
+    """Training runs on a thread pool; every job it submits must still
+    carry the caller's job group, and one site's scheduler pool must
+    not leak back into the caller's thread."""
+    from recommendation_translation_spark.pipeline.train import build_models
+
+    rng = random.Random(3)
+    rows = []
+    for i in range(40):
+        ea, eb = float(i % 4 != 0), float(i % 3 != 0)
+        rows.append((f"Q{i}", rng.random() * ea, rng.random() * ea, ea,
+                     rng.random() * eb, rng.random() * eb, eb))
+    feats = spark.createDataFrame(
+        rows,
+        "id string, pageviews_a double, rank_a double, exists_a double, "
+        "pageviews_b double, rank_b double, exists_b double",
+    ).cache()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("build_models_probe", "two-site training")
+    try:
+        results = build_models(feats, ["a", "b"], seed=1)
+    finally:
+        sc.setJobGroup(None, None)
+        feats.unpersist()
+    assert all(r.error is None for r in results.values()), results
+    # the materializing count plus at least one fit and one evaluation
+    # per site; none of them may fall outside the group
+    assert len(tracker.getJobIdsForGroup("build_models_probe")) > 4
+    assert set(tracker.getJobIdsForGroup()) <= before
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
+
+
 def test_split_inputs_equal_combined(spark, fixture_dir, tmp_path_factory):
     """EP1 parity: sitelinks ⋈ pagecounts (with .z filter/rewrite)
     produces the same parsed relation as the combined raw-data TSV."""
