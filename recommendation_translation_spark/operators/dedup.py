@@ -11,7 +11,11 @@ shuffles the algorithm requires:
   shingle join is the classic inverted-index plan; hot shingles are the
   skew hazard, so shingles above a document-frequency cap are dropped
   (stopword shingles carry no dedup signal, and the cap bounds the
-  worst-case pair blowup).
+  worst-case pair blowup).  Every exact verifier (n-gram pairs,
+  containment, rep edges, MinHash and incremental candidates) runs the
+  ONE shingle-overlap kernel (``_shingle_overlap``: intersection
+  count, both set sizes; all-pairs or candidate-driven, at document or
+  content-fingerprint level) and its rounded-Jaccard filter.
 - **MinHash + LSH banding**: k independent min-hashes per doc computed
   in ONE aggregation over the exploded shingles (k min() aggregates, no
   k-fold explode), then band signatures, then an equi-join on
@@ -39,8 +43,11 @@ from .text import cross_engine_hash, cross_engine_hash_hi, tokens
 __all__ = [
     "normalize_text",
     "word_shingles",
+    "hashed_shingles",
     "dedup_exact",
     "ngram_jaccard_pairs",
+    "ngram_containment_pairs",
+    "content_fingerprints",
     "ngram_rep_edges",
     "minhash_signatures",
     "minhash_bands",
@@ -49,6 +56,7 @@ __all__ = [
     "band_collision_pairs",
     "first_collision_claim",
     "minhash_lsh_pairs",
+    "verify_batch_candidates",
     "incremental_dedup_flags",
     "fuzzy_pairs_ed1",
     "simhash",
@@ -113,6 +121,18 @@ def word_shingles(df: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
+def hashed_shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFrame:
+    """:func:`word_shingles` with each shingle hashed to a 64-bit key
+    BEFORE any shuffle: (id, shingle long).  The self-joins and
+    aggregations of every exact-overlap verifier then ship 8-byte longs
+    instead of n-word strings (~3.7x faster end-to-end at sf0.1,
+    identical pairs — a 64-bit collision needs ~2^32 distinct shingles
+    to be likely)."""
+    return word_shingles(df, n=n, id_col=id_col).select(
+        id_col, F.xxhash64("shingle").alias("shingle")
+    )
+
+
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact duplicate groups on normalized content.
 
@@ -150,124 +170,74 @@ def _spread_by(df: DataFrame, spread_rows: int | None, *cols: str) -> DataFrame:
     return spread_small_by(df, spread_rows, *cols)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    collapse_distinct: bool = False,
+def _shingle_sizes(sh: DataFrame, key: str) -> DataFrame:
+    """(key, n_sh): each side's shingle-set size."""
+    return sh.groupBy(key).agg(F.count("*").alias("n_sh"))
+
+
+def _shingle_overlap(
+    sh: DataFrame, key: str, ka: str, kb: str, cand: DataFrame | None = None
 ) -> DataFrame:
-    """Near-duplicate pairs by exact n-gram Jaccard similarity.
+    """The exact shingle-set overlap kernel shared by every n-gram and
+    MinHash verifier: (ka, kb, …, n_inter, n_a, n_b) — the intersection
+    count and both sides' set sizes over the (``key``, shingle)
+    relation ``sh``, at document (``doc_id``) or fingerprint (``__fp``)
+    level.
 
-    (a, b, jaccard) for a < b with jaccard ≥ threshold.  ``max_doc_freq``
-    (finite by default — see DEFAULT_MAX_DOC_FREQ) drops shingles
-    appearing in more than that many docs before the inverted-index
-    self-join; sizes and intersections are both computed on the capped
-    relation, so the Jaccard stays a true set similarity of the capped
-    shingle sets.  ``max_doc_freq=None`` opts out (exact, skew-unsafe).
+    Two shapes, one arithmetic:
 
-    ``collapse_distinct=True`` (round 12, the fourth application of the
-    distinct-text collapse — see ngram_rep_edges): the audit's OUTPUT
-    is quadratic per clone group by definition, but its COMPUTE need
-    not be — Jaccard is a function of the two (normalized) texts, so
-    the shingle inverted index, the df-cap (document counts recovered
-    as Σ clone multiplicities), and the intersection self-join all run
-    over distinct-content fingerprints; a same-fp group with any
-    surviving shingle is a Jaccard-1.0 clique emitted closed-form.
-    The doc-level legs are the narrow fingerprint passes and the final
-    fp-pair → doc-pair expansion, which is ∝ OUTPUT.  Crucially the
-    shingle self-join no longer multiplies by duplication²: a 10×-
-    tiled corpus pays 100× per shingle bucket on the direct path and
-    1× here.  Bit-identical pairs (property-pinned, df-cap interplay
-    included); callers gate on the footer row count
-    (SHINGLE_COLLAPSE_MIN_ROWS).
+    - ``cand`` None — ALL pairs: the inverted-index self-equi-join on
+      shingle, ``a < b``.  Output pairs are (ka, kb).
+    - ``cand`` given — CANDIDATE-driven: expand each candidate row by
+      ``ka``'s shingles and keep the ones ``kb`` also holds —
+      Θ(Σ_cand |S_a|) rows, never an all-pairs join; grouped by every
+      column of ``cand`` (extra columns ride along).
     """
-    if collapse_distinct:
-        fpmap, rsh = _fp_shingles(df, n, text_col, id_col)
-        fpg = fpmap.groupBy("__fp").agg(F.count(F.lit(1)).alias("m"))
-        if max_doc_freq is not None:
-            freq = rsh.join(fpg, "__fp").groupBy("shingle").agg(
-                F.sum("m").alias("df_")
-            )
-            rsh = rsh.join(
-                F.broadcast(freq.filter(F.col("df_") > max_doc_freq)),
-                "shingle", "left_anti",
-            ).cache()  # capped twin; same trade-off note as below
-        # (uncapped: rsh deliberately UNCACHED — its consumers fork
-        # above the dropDuplicates exchange, so shuffle reuse already
-        # shares the scan+md5+dedup work; see the _fp_shingles note)
-        sizes = rsh.groupBy("__fp").agg(F.count("*").alias("n_sh"))
-        a, b = rsh.alias("a"), rsh.alias("b")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("a.__fp") < F.col("b.__fp"))
-            .groupBy(
-                F.col("a.__fp").alias("f1"), F.col("b.__fp").alias("f2")
-            )
-            .agg(F.count("*").alias("n_inter"))
+    if cand is None:
+        a, b = sh.alias("a"), sh.alias("b")
+        hits = a.join(b, "shingle").filter(F.col(f"a.{key}") < F.col(f"b.{key}"))
+        by = [F.col(f"a.{key}").alias(ka), F.col(f"b.{key}").alias(kb)]
+    else:
+        hits = cand.join(sh.select(F.col(key).alias(ka), "shingle"), ka).join(
+            sh.select(F.col(key).alias(kb), "shingle"), [kb, "shingle"]
         )
-        s1 = sizes.select(
-            F.col("__fp").alias("f1"), F.col("n_sh").alias("n_a")
+        by = cand.columns
+    out = hits.groupBy(*by).agg(F.count("*").alias("n_inter"))
+    sizes = _shingle_sizes(sh, key)
+    for k, n_col in ((ka, "n_a"), (kb, "n_b")):
+        out = out.join(
+            sizes.select(F.col(key).alias(k), F.col("n_sh").alias(n_col)), k
         )
-        s2 = sizes.select(
-            F.col("__fp").alias("f2"), F.col("n_sh").alias("n_b")
-        )
-        cross = (
-            inter.join(s1, "f1")
-            .join(s2, "f2")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("f1", "f2", "jaccard")
-        )
-        m1 = fpmap.select(
-            F.col("__fp").alias("f1"), F.col(id_col).alias("x")
-        )
-        m2 = fpmap.select(
-            F.col("__fp").alias("f2"), F.col(id_col).alias("y")
-        )
-        cross_docs = (
-            cross.join(m1, "f1")
-            .join(m2, "f2")
-            .select(
-                F.least("x", "y").alias("a_id"),
-                F.greatest("x", "y").alias("b_id"),
-                "jaccard",
-            )
-        )
-        # same-content cliques: every pair inside an fp group with ≥1
-        # surviving shingle has jaccard exactly 1.0 (the direct path
-        # computes round(n/n, 6) per pair); emitted closed-form
-        same = (
-            sizes.join(fpg.filter(F.col("m") >= 2), "__fp")
-            .withColumn("jaccard", F.lit(1.0))
-            .filter(F.col("jaccard") >= threshold)
-            .select("__fp", "jaccard")
-        )
-        same_docs = (
-            same.join(fpmap.select("__fp", F.col(id_col).alias("x")), "__fp")
-            .join(fpmap.select("__fp", F.col(id_col).alias("y")), "__fp")
-            .filter(F.col("x") < F.col("y"))
-            .select(
-                F.col("x").alias("a_id"), F.col("y").alias("b_id"), "jaccard"
-            )
-        )
-        return cross_docs.unionByName(same_docs)
-    # hash each shingle to a 64-bit key BEFORE any shuffle: the
-    # self-join/aggregations then ship 8-byte longs instead of n-word
-    # strings (~3.7x faster end-to-end at sf0.1, identical pairs —
-    # a 64-bit collision needs ~2^32 distinct shingles to be likely)
-    sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
+    return out
+
+
+def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
+    """Kernel output + ``jaccard`` = |A∩B| / |A∪B| rounded to 6 places
+    (the cross-engine oracle precision), kept where ≥ ``threshold``."""
+    return overlap.withColumn(
+        "jaccard",
+        F.round(
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
+        ),
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _drop_hot(sh: DataFrame, freq: DataFrame, max_doc_freq: int) -> DataFrame:
+    """``sh`` without the shingles whose document frequency ``df_``
+    (per ``freq``) exceeds the cap — a broadcast anti-join."""
+    return sh.join(
+        F.broadcast(freq.filter(F.col("df_") > max_doc_freq)),
+        "shingle", "left_anti",
     )
+
+
+def _capped_shingles(
+    df: DataFrame, n: int, max_doc_freq: int | None
+) -> DataFrame:
+    """The df-capped doc-level (doc_id, shingle) relation of the
+    all-pairs audits (ngram_jaccard_pairs / ngram_containment_pairs),
+    cached."""
+    sh = hashed_shingles(df, n=n)
     if max_doc_freq is not None:
         # cache the RAW stream too: the df-cap aggregate below and the
         # capped relation's cache fill both consume it, and without a
@@ -286,10 +256,8 @@ def ngram_jaccard_pairs(
         # clearCache() between queries (both bench harnesses do) or
         # the operators leak cached storage.
         sh = sh.cache()
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
-        sh = (
-            sh.join(F.broadcast(freq.filter(F.col("df_") > max_doc_freq)),
-                    "shingle", "left_anti")
+        sh = _drop_hot(
+            sh, sh.groupBy("shingle").agg(F.count("*").alias("df_")), max_doc_freq
         )
     # cache, not localCheckpoint: the frame feeds several downstream
     # consumers of ONE final plan, and a lazy cache populates inside
@@ -301,27 +269,103 @@ def ngram_jaccard_pairs(
     # shingle-keyed _spread_cached here was tried and reverted — the
     # self-join legs BROADCAST one cached side, so the keyed fill
     # exchange bought nothing and cost a barrier; measured +0.9 s.)
-    sh = sh.cache()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a_id"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("b_id"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
+    return sh.cache()
+
+
+def _capped_fp_shingles(
+    df: DataFrame, n: int, max_doc_freq: int | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Fingerprint-level twin of :func:`_capped_shingles` for the
+    collapse paths: (fpmap, fpg, rsh) — the (doc_id → __fp) map, the
+    per-fp multiplicity ``m``, and the df-capped (__fp, shingle)
+    relation, with document counts recovered as Σ clone
+    multiplicities."""
+    fpmap, rsh = _fp_shingles(df, n)
+    fpg = fpmap.groupBy("__fp").agg(F.count(F.lit(1)).alias("m"))
+    if max_doc_freq is not None:
+        freq = rsh.join(fpg, "__fp").groupBy("shingle").agg(
+            F.sum("m").alias("df_")
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
+        # capped twin cached; same trade-off note as _capped_shingles
+        rsh = _drop_hot(rsh, freq, max_doc_freq).cache()
+    # (uncapped: rsh deliberately UNCACHED — its consumers fork above
+    # the dropDuplicates exchange, so shuffle reuse already shares the
+    # scan+md5+dedup work; see the _fp_shingles note)
+    return fpmap, fpg, rsh
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    n: int = 3,
+    threshold: float = 0.5,
+    max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
+    collapse_distinct: bool = False,
+) -> DataFrame:
+    """Near-duplicate pairs by exact n-gram Jaccard similarity.
+
+    (a_id, b_id, jaccard) for a_id < b_id with jaccard ≥ threshold.
+    ``max_doc_freq`` (finite by default — see DEFAULT_MAX_DOC_FREQ)
+    drops shingles appearing in more than that many docs before the
+    inverted-index self-join; sizes and intersections are both computed
+    on the capped relation, so the Jaccard stays a true set similarity
+    of the capped shingle sets.  ``max_doc_freq=None`` opts out (exact,
+    skew-unsafe).
+
+    ``collapse_distinct=True`` (round 12, the fourth application of the
+    distinct-text collapse — see ngram_rep_edges): the audit's OUTPUT
+    is quadratic per clone group by definition, but its COMPUTE need
+    not be — Jaccard is a function of the two (normalized) texts, so
+    the shingle inverted index, the df-cap (document counts recovered
+    as Σ clone multiplicities), and the intersection self-join all run
+    over distinct-content fingerprints; a same-fp group with any
+    surviving shingle is a Jaccard-1.0 clique emitted closed-form.
+    The doc-level legs are the narrow fingerprint passes and the final
+    fp-pair → doc-pair expansion, which is ∝ OUTPUT.  Crucially the
+    shingle self-join no longer multiplies by duplication²: a 10×-
+    tiled corpus pays 100× per shingle bucket on the direct path and
+    1× here.  Bit-identical pairs (property-pinned, df-cap interplay
+    included); callers gate on the footer row count
+    (sources.readers.collapse_dial).
+    """
+    if collapse_distinct:
+        fpmap, fpg, rsh = _capped_fp_shingles(df, n, max_doc_freq)
+        cross = _jaccard_at_least(
+            _shingle_overlap(rsh, "__fp", "f1", "f2"), threshold
+        ).select("f1", "f2", "jaccard")
+        m1 = fpmap.select(F.col("__fp").alias("f1"), F.col("doc_id").alias("x"))
+        m2 = fpmap.select(F.col("__fp").alias("f2"), F.col("doc_id").alias("y"))
+        cross_docs = (
+            cross.join(m1, "f1")
+            .join(m2, "f2")
+            .select(
+                F.least("x", "y").alias("a_id"),
+                F.greatest("x", "y").alias("b_id"),
+                "jaccard",
+            )
+        )
+        # same-content cliques: every pair inside an fp group with ≥1
+        # surviving shingle has jaccard exactly 1.0 (the direct path
+        # computes round(n/n, 6) per pair); emitted closed-form
+        same = (
+            _shingle_sizes(rsh, "__fp")
+            .join(fpg.filter(F.col("m") >= 2), "__fp")
+            .withColumn("jaccard", F.lit(1.0))
+            .filter(F.col("jaccard") >= threshold)
+            .select("__fp", "jaccard")
+        )
+        same_docs = (
+            same.join(fpmap.select("__fp", F.col("doc_id").alias("x")), "__fp")
+            .join(fpmap.select("__fp", F.col("doc_id").alias("y")), "__fp")
+            .filter(F.col("x") < F.col("y"))
+            .select(
+                F.col("x").alias("a_id"), F.col("y").alias("b_id"), "jaccard"
+            )
+        )
+        return cross_docs.unionByName(same_docs)
+    sh = _capped_shingles(df, n, max_doc_freq)
+    return _jaccard_at_least(
+        _shingle_overlap(sh, "doc_id", "a_id", "b_id"), threshold
+    ).select("a_id", "b_id", "jaccard")
 
 
 def ngram_containment_pairs(
@@ -329,8 +373,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     collapse_distinct: bool = False,
 ) -> DataFrame:
     """DIRECTIONAL near-containment pairs by exact n-gram containment
@@ -355,7 +397,7 @@ def ngram_containment_pairs(
     df-cap, intersection self-join) at the distinct-content
     fingerprint level with an output-proportional doc expansion, the
     round-12 collapse family applied verbatim; callers gate on the
-    shared dial (SHINGLE_COLLAPSE_MIN_ROWS).
+    shared dial (sources.readers.collapse_dial).
     """
     def emit_both(pairs: DataFrame, ka: str, kb: str) -> DataFrame:
         """(ka, kb, n_inter, n_a, n_b) → directional rows, both ways."""
@@ -374,48 +416,13 @@ def ngram_containment_pairs(
         )
 
     if collapse_distinct:
-        fpmap, rsh = _fp_shingles(df, n, text_col, id_col)
-        fpg = fpmap.groupBy("__fp").agg(F.count(F.lit(1)).alias("m"))
-        if max_doc_freq is not None:
-            freq = rsh.join(fpg, "__fp").groupBy("shingle").agg(
-                F.sum("m").alias("df_")
-            )
-            rsh = rsh.join(
-                F.broadcast(freq.filter(F.col("df_") > max_doc_freq)),
-                "shingle", "left_anti",
-            ).cache()  # capped twin; note as in ngram_jaccard_pairs
-        # (uncapped: rsh deliberately UNCACHED — its consumers fork
-        # above the dropDuplicates exchange, so shuffle reuse already
-        # shares the scan+md5+dedup work; see the _fp_shingles note)
-        sizes = rsh.groupBy("__fp").agg(F.count("*").alias("n_sh"))
-        a, b = rsh.alias("a"), rsh.alias("b")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("a.__fp") < F.col("b.__fp"))
-            .groupBy(
-                F.col("a.__fp").alias("f1"), F.col("b.__fp").alias("f2")
-            )
-            .agg(F.count("*").alias("n_inter"))
-        )
-        sized = (
-            inter.join(
-                sizes.select(
-                    F.col("__fp").alias("f1"), F.col("n_sh").alias("n_a")
-                ),
-                "f1",
-            ).join(
-                sizes.select(
-                    F.col("__fp").alias("f2"), F.col("n_sh").alias("n_b")
-                ),
-                "f2",
-            )
-        )
-        fp_pairs = emit_both(sized, "f1", "f2")
+        fpmap, fpg, rsh = _capped_fp_shingles(df, n, max_doc_freq)
+        fp_pairs = emit_both(_shingle_overlap(rsh, "__fp", "f1", "f2"), "f1", "f2")
         m1 = fpmap.select(
-            F.col("__fp").alias("contained_id"), F.col(id_col).alias("x")
+            F.col("__fp").alias("contained_id"), F.col("doc_id").alias("x")
         )
         m2 = fpmap.select(
-            F.col("__fp").alias("container_id"), F.col(id_col).alias("y")
+            F.col("__fp").alias("container_id"), F.col("doc_id").alias("y")
         )
         cross_docs = (
             fp_pairs.join(m1, "contained_id")
@@ -430,9 +437,10 @@ def ngram_containment_pairs(
         # directions for every ordered pair inside an fp group with
         # ≥ 1 surviving shingle
         same_docs = (
-            sizes.join(fpg.filter(F.col("m") >= 2), "__fp")
-            .join(fpmap.select("__fp", F.col(id_col).alias("x")), "__fp")
-            .join(fpmap.select("__fp", F.col(id_col).alias("y")), "__fp")
+            _shingle_sizes(rsh, "__fp")
+            .join(fpg.filter(F.col("m") >= 2), "__fp")
+            .join(fpmap.select("__fp", F.col("doc_id").alias("x")), "__fp")
+            .join(fpmap.select("__fp", F.col("doc_id").alias("y")), "__fp")
             .filter(F.col("x") != F.col("y"))
             .withColumn("containment", F.lit(1.0))
             .filter(F.col("containment") >= threshold)
@@ -443,54 +451,8 @@ def ngram_containment_pairs(
             )
         )
         return cross_docs.unionByName(same_docs)
-    sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
-    )
-    if max_doc_freq is not None:
-        # raw-stream cache: see ngram_jaccard_pairs (one tokenize
-        # pass, not one per consumer)
-        sh = sh.cache()
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
-        sh = sh.join(
-            F.broadcast(freq.filter(F.col("df_") > max_doc_freq)),
-            "shingle", "left_anti",
-        )
-    sh = sh.cache()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sized = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("a_id"),
-                         F.col("n_sh").alias("n_a")),
-            "a_id",
-        ).join(
-            sizes.select(F.col(id_col).alias("b_id"),
-                         F.col("n_sh").alias("n_b")),
-            "b_id",
-        )
-    )
-    return emit_both(sized, "a_id", "b_id")
-
-
-#: Corpus size (parquet-footer row count) above which the catalog's
-#: rep-edge consumers (corpus_dedup_report, corpus_keep_best) shingle
-#: once per DISTINCT normalized text instead of once per row — the
-#: same dial, value, and rationale as text.BPE_COLLAPSE_MIN_ROWS:
-#: below it the join-back exchange cannot pay for itself; above it the
-#: Θ(duplication) tokenize+shingle+hash savings dominate (and the
-#: duplicate fraction is the very thing a dedup report measures, so
-#: big corpora hitting this operator are duplication-heavy by
-#: construction).
-SHINGLE_COLLAPSE_MIN_ROWS = 20_000
+    sh = _capped_shingles(df, n, max_doc_freq)
+    return emit_both(_shingle_overlap(sh, "doc_id", "a_id", "b_id"), "a_id", "b_id")
 
 
 def content_fingerprints(
@@ -505,22 +467,20 @@ def content_fingerprints(
     consumer in the same query.  Narrow (id, fp) rows populated inside
     the first consuming job; MEMORY_AND_DISK spills at scale;
     bench/driver clearCache() between queries (same lifetime caveat as
-    the raw shingle-stream cache below)."""
+    the raw shingle-stream cache in
+    _capped_shingles)."""
     return df.select(
         F.col(id_col), F.md5(normalize_text(text_col)).alias("__fp")
     ).cache()
 
 
-def _fp_shingles(
-    df: DataFrame, n: int, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _fp_shingles(df: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
     """Shared prelude of the distinct-text collapse paths
-    (ngram_rep_edges / ngram_jaccard_pairs): the (id → md5
-    content-fingerprint) map — the dedup_exact digest standard — and
-    the per-DISTINCT-normalized-text hashed shingle relation
-    (fp, xxhash64(shingle)), one row per (distinct text, distinct
+    (ngram_rep_edges / ngram_jaccard_pairs / ngram_containment_pairs):
+    the (doc_id → md5 content-fingerprint) map — the dedup_exact digest
+    standard — and the per-DISTINCT-normalized-text hashed shingle
+    relation (__fp, shingle), one row per (distinct text, distinct
     shingle)."""
-    norm = normalize_text(text_col)
     # fpmap is multiply consumed by EVERY caller (the multiplicity
     # aggregate + the final doc expansion(s)) and each uncached
     # consumer re-scans the corpus TEXT and re-runs the md5 — a full
@@ -534,12 +494,12 @@ def _fp_shingles(
     # decoding the exploded stream through the columnar cache —
     # measured +0.6-0.8 s at sf1 (dedup_ngram_capped) when it was
     # cached this round.
-    fpmap = content_fingerprints(df, text_col=text_col, id_col=id_col)
-    rsh = word_shingles(
-        df.select(F.md5(norm).alias("__fp"), F.col(text_col))
+    fpmap = content_fingerprints(df)
+    rsh = hashed_shingles(
+        df.select(F.md5(normalize_text()).alias("__fp"), "text")
         .dropDuplicates(["__fp"]),
-        n=n, text_col=text_col, id_col="__fp",
-    ).select("__fp", F.xxhash64("shingle").alias("shingle"))
+        n=n, id_col="__fp",
+    )
     return fpmap, rsh
 
 
@@ -548,8 +508,6 @@ def ngram_rep_edges(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     collapse_distinct: bool = False,
     spread_rows: int | None = None,
 ) -> DataFrame:
@@ -592,12 +550,12 @@ def ngram_rep_edges(
     rep's own clones edge to it through the rep_fp==b_fp pairs), and
     the Jaccard is the same integer division at fp level.  On a
     near-unique corpus it degrades to the two narrow exchanges —
-    callers gate on the footer row count (SHINGLE_COLLAPSE_MIN_ROWS).
+    callers gate on the footer row count (sources.readers.collapse_dial).
     """
     if collapse_distinct:
-        fpmap, rsh = _fp_shingles(df, n, text_col, id_col)
+        fpmap, rsh = _fp_shingles(df, n)
         fpg = fpmap.groupBy("__fp").agg(
-            F.min(id_col).alias("fp_min"), F.count(F.lit(1)).alias("m")
+            F.min("doc_id").alias("fp_min"), F.count(F.lit(1)).alias("m")
         )
         g = (
             rsh.join(fpg, "__fp")
@@ -613,11 +571,10 @@ def ngram_rep_edges(
         # capped fp-level shingle relation — the analogue of the direct
         # path's cached doc-level ``sh``, smaller by the duplication
         # factor (cache, not localCheckpoint: same trade-off note as
-        # ngram_jaccard_pairs)
+        # _capped_shingles)
         rshc = rsh.join(
             g.select("shingle", "rep_id", "rep_fp"), "shingle"
         ).cache()
-        sizes = rshc.groupBy("__fp").agg(F.count("*").alias("n_sh"))
         # r13: pin the candidate stream cores-wide after its distinct
         # (footer-gated spread_small_by) — AQE coalesces the few-MB
         # distinct exchange to ~2 partitions on byte size alone, and
@@ -634,37 +591,13 @@ def ngram_rep_edges(
             ).distinct(),
             spread_rows, "rep_fp",
         )
-        sa = rshc.select(F.col("__fp").alias("rep_fp"), "shingle")
-        sb = rshc.select(F.col("__fp").alias("b_fp"), "shingle")
-        inter = (
-            candfp.join(sa, "rep_fp")
-            .join(sb, ["b_fp", "shingle"])
-            .groupBy("rep_id", "rep_fp", "b_fp")
-            .agg(F.count("*").alias("n_inter"))
-        )
-        sza = sizes.select(
-            F.col("__fp").alias("rep_fp"), F.col("n_sh").alias("n_a")
-        )
-        szb = sizes.select(
-            F.col("__fp").alias("b_fp"), F.col("n_sh").alias("n_b")
-        )
-        fp_edges = (
-            inter.join(sza, "rep_fp")
-            .join(szb, "b_fp")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
+        fp_edges = _jaccard_at_least(
+            _shingle_overlap(rshc, "__fp", "rep_fp", "b_fp", candfp), threshold
         )
         return (
             fp_edges.join(
                 fpmap.select(
-                    F.col("__fp").alias("b_fp"), F.col(id_col).alias("b_id")
+                    F.col("__fp").alias("b_fp"), F.col("doc_id").alias("b_id")
                 ),
                 "b_fp",
             )
@@ -673,12 +606,10 @@ def ngram_rep_edges(
                 F.col("rep_id").alias("a_id"), F.col("b_id"), "jaccard"
             )
         )
-    sh0 = word_shingles(df, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
     # raw-stream cache: the rep/df aggregation below and the join-back
-    # that builds ``sh`` both consume sh0 — see ngram_jaccard_pairs
-    # (one tokenize pass, not one per consumer)
-    ).cache()
+    # that builds ``sh`` both consume sh0 — see _capped_shingles (one
+    # tokenize pass, not one per consumer)
+    sh0 = hashed_shingles(df, n=n).cache()
     # ONE aggregation yields both the document frequency (for the cap)
     # and the bucket representative: the cap drops whole shingle
     # buckets, never rows within a bucket, so min(id) over the raw rows
@@ -688,46 +619,26 @@ def ngram_rep_edges(
     # rep-assignment join (each row comes back already carrying its
     # bucket's rep).
     g = sh0.groupBy("shingle").agg(
-        F.count("*").alias("df_"), F.min(id_col).alias("rep")
+        F.count("*").alias("df_"), F.min("doc_id").alias("rep")
     )
     if max_doc_freq is not None:
         g = g.filter(F.col("df_") <= max_doc_freq)
-    # cache, not localCheckpoint (see the ngram_jaccard_pairs note on
-    # this trade-off)
+    # cache, not localCheckpoint (see the _capped_shingles note on this
+    # trade-off)
     sh = sh0.join(g.select("shingle", "rep"), "shingle").cache()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     # r13: footer-gated cores-wide pin of the candidate pair stream —
     # see the collapse path's note above (same AQE byte-blind coalesce,
     # same broadcast-preserving fix)
     cand = _spread_by(
-        sh.filter(F.col(id_col) > F.col("rep"))
-        .select(F.col("rep").alias("a_id"), F.col(id_col).alias("b_id"))
+        sh.filter(F.col("doc_id") > F.col("rep"))
+        .select(F.col("rep").alias("a_id"), F.col("doc_id").alias("b_id"))
         .distinct(),
         spread_rows, "a_id",
     )
-    # exact capped-set intersection for the candidate pairs only:
-    # expand each pair by the rep's shingles, keep the ones the other
-    # side also holds — Θ(Σ_cand |S_rep|) rows, never an all-pairs join
-    sa = sh.select(F.col(id_col).alias("a_id"), "shingle")
-    sb = sh.select(F.col(id_col).alias("b_id"), "shingle")
-    inter = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sza = sizes.select(F.col(id_col).alias("a_id"), F.col("n_sh").alias("n_a"))
-    szb = sizes.select(F.col(id_col).alias("b_id"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sza, "a_id")
-        .join(szb, "b_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
+    # exact capped-set intersection for the candidate pairs only
+    return _jaccard_at_least(
+        _shingle_overlap(sh, "doc_id", "a_id", "b_id", cand), threshold
+    ).select("a_id", "b_id", "jaccard")
 
 
 _MH_P = 4294967291  # largest 32-bit prime: range of the derived permutations
@@ -1007,8 +918,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """LSH-banded candidate generation + exact-Jaccard verification.
 
@@ -1017,8 +926,7 @@ def minhash_lsh_pairs(
     digest); candidates are verified with exact shingle Jaccard.
     Returns (a_id, b_id, jaccard ≥ threshold).
     """
-    stacked = minhash_bands(df, k=k, bands=bands, n=n, text_col=text_col,
-                            id_col=id_col)
+    stacked = minhash_bands(df, k=k, bands=bands, n=n)
     # narrow per-band join + distinct, NOT first-colliding-band
     # claiming (band_collision_pairs): here the exact-Jaccard verify
     # already runs after the distinct, so claiming would only trade the
@@ -1030,36 +938,44 @@ def minhash_lsh_pairs(
     a, b = stacked.alias("a"), stacked.alias("b")
     cand = (
         a.join(b, ["band", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
     # exact-Jaccard verification restricted to the candidate pairs — the
-    # pairwise join runs over candidates only, never all-pairs.  Shingles
-    # are internal here too, so ship 64-bit hashes, not strings.
-    sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
-    ).cache()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col(id_col).alias("a_id"), F.col("shingle"))
-    sb = sh.select(F.col(id_col).alias("b_id"), F.col("shingle"))
-    inter = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("n_inter"))
+    # pairwise join runs over candidates only, never all-pairs
+    sh = hashed_shingles(df, n=n).cache()
+    return _jaccard_at_least(
+        _shingle_overlap(sh, "doc_id", "a_id", "b_id", cand), threshold
+    ).select("a_id", "b_id", "jaccard")
+
+
+def verify_batch_candidates(
+    cand: DataFrame,
+    batch: DataFrame,
+    corpus: DataFrame,
+    n: int,
+    threshold: float,
+    new_col: str = "new_id",
+) -> DataFrame:
+    """Exact-Jaccard verification of incremental-ingest candidates.
+    ``cand`` rows pair a batch doc (``new_col``) with an earlier doc
+    (``old_id``, from ``corpus`` or ``batch``); the rows whose Jaccard
+    is ≥ ``threshold`` come back with (n_inter, n_a, n_b, jaccard).
+
+    Shingles are fetched for the batch plus ONLY the corpus docs that
+    appear as candidates (left-semi pushdown), so the corpus-side work
+    stays proportional to the batch and the big side's text is never
+    re-shuffled.  ``batch`` and ``corpus`` ids must be disjoint (see
+    :func:`incremental_dedup_flags`)."""
+    sh_c = hashed_shingles(corpus, n=n).join(
+        cand.select(F.col("old_id").alias("doc_id")).distinct(),
+        "doc_id",
+        "left_semi",
     )
-    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(na, "a_id")
-        .join(nb, "b_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
+    sh = hashed_shingles(batch, n=n).unionByName(sh_c).cache()
+    return _jaccard_at_least(
+        _shingle_overlap(sh, "doc_id", new_col, "old_id", cand), threshold
     )
 
 
@@ -1070,8 +986,6 @@ def incremental_dedup_flags(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental MinHash-LSH dedup: flag each NEW (batch) document
@@ -1100,7 +1014,7 @@ def incremental_dedup_flags(
     PRECONDITION: ``corpus`` and ``batch`` ids must be DISJOINT (an
     append-only ingest assigns new ids past the corpus high-water
     mark).  The Jaccard verification unions both sides' shingle sets
-    keyed on ``id_col`` alone; a shared id would silently merge two
+    keyed on ``doc_id`` alone; a shared id would silently merge two
     different documents' shingles and double-count sizes and
     intersections.  The catalog caller satisfies this structurally
     (``hash_split`` partitions are disjoint); external callers must
@@ -1111,11 +1025,11 @@ def incremental_dedup_flags(
     # stored") — q_dedup_incremental_persisted passes the parquet
     # read-back, so the corpus text is never re-shingled for banding;
     # it is still read for the candidate-only Jaccard verification,
-    # which is proportional to the batch by the semi-join below.
+    # which is proportional to the batch by the semi-join in
+    # verify_batch_candidates.
     stacked_c = corpus_bands if corpus_bands is not None else minhash_bands(
-        corpus, k=k, bands=bands, n=n, text_col=text_col, id_col=id_col)
-    stacked_b = minhash_bands(batch, k=k, bands=bands, n=n,
-                              text_col=text_col, id_col=id_col)
+        corpus, k=k, bands=bands, n=n)
+    stacked_b = minhash_bands(batch, k=k, bands=bands, n=n)
     # narrow band joins + distinct, not first-colliding-band claiming —
     # verification runs post-distinct here, so claiming loses (see the
     # note in minhash_lsh_pairs)
@@ -1123,8 +1037,8 @@ def incremental_dedup_flags(
     cand_corpus = (
         nw.join(old_c, ["band", "band_hash"])
         .select(
-            F.col(f"nw.{id_col}").alias("new_id"),
-            F.col(f"old.{id_col}").alias("old_id"),
+            F.col("nw.doc_id").alias("new_id"),
+            F.col("old.doc_id").alias("old_id"),
         )
         .distinct()
         .withColumn("src", F.lit("corpus"))
@@ -1132,62 +1046,25 @@ def incremental_dedup_flags(
     a, b = stacked_b.alias("a"), stacked_b.alias("b")
     cand_batch = (
         a.join(b, ["band", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"b.{id_col}").alias("new_id"),
-            F.col(f"a.{id_col}").alias("old_id"),
+            F.col("b.doc_id").alias("new_id"),
+            F.col("a.doc_id").alias("old_id"),
         )
         .distinct()
         .withColumn("src", F.lit("batch"))
     )
     cand = cand_corpus.unionByName(cand_batch)
-
-    sh_b = word_shingles(batch, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
-    )
-    sh_c = word_shingles(corpus, n=n, text_col=text_col, id_col=id_col).select(
-        id_col, F.xxhash64("shingle").alias("shingle")
-    )
-    # only candidate corpus docs enter verification — the semi-join is
-    # what keeps the corpus-side work proportional to the batch
-    sh_c_needed = sh_c.join(
-        cand.select(F.col("old_id").alias(id_col)).distinct(),
-        id_col,
-        "left_semi",
-    )
-    sh = sh_b.unionByName(sh_c_needed).cache()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col(id_col).alias("new_id"), "shingle")
-    sb = sh.select(F.col(id_col).alias("old_id"), "shingle")
-    inter = (
-        cand.join(sa, "new_id")
-        .join(sb, ["old_id", "shingle"])
-        .groupBy("new_id", "old_id", "src")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("new_id"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("old_id"), F.col("n_sh").alias("n_b"))
-    verified = (
-        inter.join(na, "new_id")
-        .join(nb, "old_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    verified = verify_batch_candidates(cand, batch, corpus, n, threshold)
     per_doc = verified.groupBy("new_id").agg(
         F.sum(F.when(F.col("src") == "corpus", 1).otherwise(0)).alias("n_dup_corpus"),
         F.sum(F.when(F.col("src") == "batch", 1).otherwise(0)).alias("n_dup_batch"),
     )
     return (
-        batch.select(id_col)
-        .join(per_doc.withColumnRenamed("new_id", id_col), id_col, "left")
+        batch.select("doc_id")
+        .join(per_doc.withColumnRenamed("new_id", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_dup_corpus", F.lit(0)).cast("long").alias("n_dup_corpus"),
             F.coalesce("n_dup_batch", F.lit(0)).cast("long").alias("n_dup_batch"),
             (

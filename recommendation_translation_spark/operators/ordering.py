@@ -52,10 +52,9 @@ _SEP = "\x1f"
 #: a web corpus) switch from the plain grouped window to
 #: :func:`range_partitioned_row_number` with ``group_cols``.  Below it
 #: the grouped window is exchange-minimal and the two-pass machinery
-#: cannot pay for itself; the threshold matches the other collapse
-#: dials (BPE_COLLAPSE_MIN_ROWS / SHINGLE_COLLAPSE_MIN_ROWS) so
-#: driver/bench SFs keep the direct plan and sf1+ takes the scale
-#: path.
+#: cannot pay for itself; the threshold matches the collapse dial
+#: (sources.readers.COLLAPSE_MIN_ROWS) so driver/bench SFs keep the
+#: direct plan and sf1+ takes the scale path.
 RANGE_RANK_MIN_ROWS = 20_000
 
 

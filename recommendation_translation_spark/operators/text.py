@@ -125,16 +125,6 @@ def bpe_piece_count(text: Column | str) -> Column:
     return F.length(F.translate(c, BPE_WHITESPACE, ""))
 
 
-#: Corpus size (parquet-footer row count) above which the catalog's
-#: BPE consumers switch to the collapsed counting plan.  Below it the
-#: direct chain is exchange-free and the collapse shuffle cannot pay
-#: for itself; above it the corpus is large enough that Θ(duplication)
-#: chain savings dominate one narrow exchange (and a production
-#: pipeline would set the dial from its own dedup report — the
-#: duplication ratio dedup_exact computes — rather than a row count).
-BPE_COLLAPSE_MIN_ROWS = 20_000
-
-
 def per_distinct_text(df: DataFrame, derive, text_col: str = "text") -> DataFrame:
     """Collapse-before-compute for TEXT-FUNCTIONAL derivations (the
     same insight that collapsed the SimHash pair enumeration): run

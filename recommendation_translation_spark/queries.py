@@ -486,16 +486,13 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), n=3, threshold=0.05,
         # footer gate (round 12): the pairwise audit's COMPUTE runs at
         # the distinct-text level on big corpora; output unchanged
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
     )
 
 
@@ -1080,7 +1077,7 @@ def q_corpus_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB, so every count — and therefore the keep set — is
     bit-exact.
 
-    Round-11 (verdict #5): above BPE_COLLAPSE_MIN_ROWS (footer row
+    Round-11 (verdict #5): above readers.COLLAPSE_MIN_ROWS (footer row
     count, no Spark job) the WHOLE text-functional stage — the BPE
     chain AND the quality score, both pure functions of the text —
     collapses to once-per-DISTINCT-text via
@@ -1088,15 +1085,11 @@ def q_corpus_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-identical by text-functionality, and expression work scales
     with distinct texts instead of rows (sf10 measured in SCALE.md).
     Driver/bench SFs keep the exchange-free direct plan."""
-    from .operators.text import (
-        BPE_COLLAPSE_MIN_ROWS,
-        bpe_piece_count,
-        per_distinct_text,
-    )
+    from .operators.text import bpe_piece_count, per_distinct_text
     from .sources.readers import collapse_dial
 
     docs = _t(spark, sf_dir, "documents")
-    if collapse_dial(spark, sf_dir, min_rows=BPE_COLLAPSE_MIN_ROWS):
+    if collapse_dial(spark, sf_dir):
         q = per_distinct_text(
             docs.select("doc_id", "text"),
             lambda reps, key: quality_score(
@@ -3946,7 +3939,7 @@ def q_corpus_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, q_len, cluster) relation ever shuffles — never the text.
     ``corpus_keep_best_pairs`` is the exact-pairwise audit variant."""
     from .operators.curation import dup_clusters
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS, ngram_rep_edges
+    from .operators.dedup import ngram_rep_edges
     from .sources.readers import collapse_dial
 
     docs = _t(spark, sf_dir, "documents")
@@ -3956,9 +3949,7 @@ def q_corpus_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-12 verdict #5) — above it the shingle leg runs once per
         # distinct normalized text (round-11 verdict #5); driver/bench
         # SFs keep the exchange-free direct plan
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
         spread_rows=table_row_count(sf_dir, "documents"),
     )
     clusters = dup_clusters(edges)
@@ -3985,15 +3976,12 @@ def q_corpus_keep_best_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     with_q = docs.withColumn("q_len", F.length("text").cast("long"))
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     pairs = ngram_jaccard_pairs(
         docs, n=3, threshold=0.05,
         # same footer gate as dedup_ngram_jaccard (round 12)
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
     )
     kept = keep_best_per_pair(with_q, pairs, "q_len")
     return kept.select("doc_id", "q_len")
@@ -6613,13 +6601,13 @@ def q_corpus_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the footer-count gate the chain runs once per distinct
     text."""
     from .operators.curation import pack_sequences
-    from .operators.text import BPE_COLLAPSE_MIN_ROWS, with_bpe_piece_count
+    from .operators.text import with_bpe_piece_count
     from .sources.readers import collapse_dial
 
     docs = _t(spark, sf_dir, "documents")
     narrow = with_bpe_piece_count(
         docs.select("doc_id", "text"),
-        collapse=collapse_dial(spark, sf_dir, min_rows=BPE_COLLAPSE_MIN_ROWS),
+        collapse=collapse_dial(spark, sf_dir),
     ).select("doc_id", "n_pieces")
     out = pack_sequences(narrow, seq_len=512, tokens_col="n_pieces")
     return out.select(
@@ -6788,15 +6776,12 @@ def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs would emit 10¹² join rows).  Sizes and intersections are
     computed AFTER the cap on both engines, so the oracle mirrors the
     exact capped relation."""
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), n=3, threshold=0.05, max_doc_freq=50,
         # same footer gate as dedup_ngram_jaccard (round 12)
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
     ).select("a_id", "b_id", "jaccard")
 
 
@@ -6924,15 +6909,13 @@ def q_corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelated-scalar-subquery shape) — no driver-side counts."""
     docs = _t(spark, sf_dir, "documents")
     from .operators.curation import dup_clusters
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS, ngram_rep_edges
+    from .operators.dedup import ngram_rep_edges
     from .sources.readers import collapse_dial
 
     edges = ngram_rep_edges(
         docs, n=3, threshold=0.05,
         # same footer gate as corpus_keep_best (round-11 verdict #5)
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
         spread_rows=table_row_count(sf_dir, "documents"),
     )
     clusters = dup_clusters(edges)
@@ -7212,7 +7195,7 @@ def q_docs_stream_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semi-join scoping, AND the verifier in one relation: a pair
     the gate dropped, a verification run against the wrong shingle
     sets, or a threshold drift all mismatch."""
-    from .operators.dedup import word_shingles
+    from .operators.dedup import verify_batch_candidates
     from .streaming.events_stream import (
         run_stream_to_memory,
         stream_docs_dedup_gate,
@@ -7225,42 +7208,8 @@ def q_docs_stream_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = hash_split(_t(spark, sf_dir, "documents"))
     corpus = docs.filter(F.col("split") != "test").select("doc_id", "text")
     batch = docs.filter(F.col("split") == "test").select("doc_id", "text")
-    sh_b = word_shingles(batch, n=3).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
-    # only gate-surfaced corpus docs enter verification
-    sh_c = word_shingles(corpus, n=3).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    ).join(
-        cand.select(F.col("old_id").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_semi",
-    )
-    sh = sh_b.unionByName(sh_c).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cand.join(sh.select("doc_id", "shingle"), "doc_id")
-        .join(
-            sh.select(F.col("doc_id").alias("old_id"), "shingle"),
-            ["old_id", "shingle"],
-        )
-        .groupBy("doc_id", "old_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    verified = (
-        inter.join(sizes.select("doc_id", F.col("n_sh").alias("n_a")), "doc_id")
-        .join(
-            sizes.select(F.col("doc_id").alias("old_id"), F.col("n_sh").alias("n_b")),
-            "old_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.02)
+    verified = verify_batch_candidates(
+        cand, batch, corpus, n=3, threshold=0.02, new_col="doc_id"
     )
     cagg = cand.groupBy("doc_id").agg(F.count("*").alias("n_cand_corpus"))
     vagg = verified.groupBy("doc_id").agg(F.count("*").alias("n_dup_corpus"))
@@ -8879,7 +8828,6 @@ def q_corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     driven, JobRunner.scala:31-44); this is the LLM-pipeline
     data-selection op the published pretraining recipes use."""
     from .operators.curation import dsir_select
-    from .operators.text import BPE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     return dsir_select(
@@ -8891,7 +8839,7 @@ def q_corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dial both DSIR passes build the gram stream once per DISTINCT
         # text (round-11 verdict #6); driver/bench SFs keep the direct
         # two-pass plan the hash gate covers
-        collapse=collapse_dial(spark, sf_dir, min_rows=BPE_COLLAPSE_MIN_ROWS),
+        collapse=collapse_dial(spark, sf_dir),
     )
 
 
@@ -9030,7 +8978,6 @@ def q_corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (JobRunner.scala:31-44 selects by
     site config); this is the published pretraining-selection recipe."""
     from .operators.curation import dsir_resample
-    from .operators.text import BPE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     return dsir_resample(
@@ -9038,7 +8985,7 @@ def q_corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         target=F.col("lang") == "en",
         n_buckets=_DSIR_BUCKETS,
         k=_DSIR_K,
-        collapse=collapse_dial(spark, sf_dir, min_rows=BPE_COLLAPSE_MIN_ROWS),
+        collapse=collapse_dial(spark, sf_dir),
     )
 
 
@@ -9213,17 +9160,12 @@ def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same inverted-index candidate generation (never all-pairs), same
     shared collapse dial: above it every superlinear stage runs at the
     distinct-content fingerprint level (operators.dedup)."""
-    from .operators.dedup import (
-        SHINGLE_COLLAPSE_MIN_ROWS,
-        ngram_containment_pairs,
-    )
+    from .operators.dedup import ngram_containment_pairs
     from .sources.readers import collapse_dial
 
     return ngram_containment_pairs(
         _t(spark, sf_dir, "documents"), n=3, threshold=0.4,
-        collapse_distinct=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_distinct=collapse_dial(spark, sf_dir),
     )
 
 

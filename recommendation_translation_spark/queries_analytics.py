@@ -439,13 +439,12 @@ def q_doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the narrow (fp, n_bigrams, avg_nll, ppl) relation joins back —
     path-identical (the per-doc NLL multiset IS the rep's), work
     Θ(distinct·bigrams) instead of Θ(rows·bigrams)."""
-    from .operators.text import BPE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return _bigram_ppl(
         docs,
-        collapse=collapse_dial(spark, sf_dir, min_rows=BPE_COLLAPSE_MIN_ROWS),
+        collapse=collapse_dial(spark, sf_dir),
         spread_rows=table_row_count(sf_dir, "documents"),
     )
 
@@ -1250,14 +1249,11 @@ def q_dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a SAMPLE while the production path runs banding only — the
     report is how you justify k/bands before trusting them (that
     sampled scale form exists as ``dedup_lsh_recall_sampled``)."""
-    from .operators.dedup import SHINGLE_COLLAPSE_MIN_ROWS
     from .sources.readers import collapse_dial
 
     return _lsh_recall_report_frame(
         _t(spark, sf_dir, "documents"),
-        collapse_truth=(
-            collapse_dial(spark, sf_dir, min_rows=SHINGLE_COLLAPSE_MIN_ROWS)
-        ),
+        collapse_truth=collapse_dial(spark, sf_dir),
     )
 
 

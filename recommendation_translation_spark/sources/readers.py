@@ -376,6 +376,15 @@ def distinct_text_fraction(spark: SparkSession, sf_dir: str,
     return got
 
 
+#: Corpus size (documents footer row count) at or below which the
+#: collapse dial is off: the direct per-row chain is exchange-free and
+#: a collapse shuffle cannot pay for itself at any duplication.  Above
+#: it the Θ(duplication) tokenize/shingle/BPE savings dominate one
+#: narrow exchange plus the output-proportional join-back.  One value
+#: for every collapse consumer — the shingle (dedup) and BPE (text)
+#: families share the rationale, so they share the dial.
+COLLAPSE_MIN_ROWS = 20_000
+
 #: Distinct-text fraction ABOVE which the collapse plan is skipped
 #: even on a large corpus: the per-distinct chain saves
 #: ``(1 − fraction)`` of the expression work but pays a narrow
@@ -386,28 +395,17 @@ def distinct_text_fraction(spark: SparkSession, sf_dir: str,
 COLLAPSE_MAX_DISTINCT_FRACTION = 0.9
 
 
-def collapse_dial(spark: SparkSession, sf_dir: str, *, min_rows: int,
-                  name: str = "documents", text_col: str = "text",
-                  distinct_fraction: float | None = None,
-                  max_distinct_fraction: float = COLLAPSE_MAX_DISTINCT_FRACTION,
-                  ) -> bool:
-    """The SHARED collapse gate (round-12 verdict #5): True when the
-    corpus is both big enough (footer row count > ``min_rows`` — below
-    it the direct chain is exchange-free and a collapse shuffle cannot
-    pay for itself at any duplication) AND duplicated enough
-    (distinct-text fraction ≤ ``max_distinct_fraction`` — a 100 TB
-    near-unique corpus skips the collapse shuffle it cannot amortize).
-    ``distinct_fraction`` overrides the measurement when the caller
-    already has it (e.g. from a dedup report); otherwise it is the
-    memoized one-job :func:`distinct_text_fraction`, only ever
-    measured on corpora already above ``min_rows``."""
-    if table_row_count(sf_dir, name) <= min_rows:
+def collapse_dial(spark: SparkSession, sf_dir: str) -> bool:
+    """The SHARED collapse gate (round-12 verdict #5) over the
+    ``documents`` corpus: True when it is both big enough (footer row
+    count > COLLAPSE_MIN_ROWS) AND duplicated enough (distinct-text
+    fraction ≤ COLLAPSE_MAX_DISTINCT_FRACTION — a 100 TB near-unique
+    corpus skips the collapse shuffle it cannot amortize).  The
+    fraction is the memoized one-job :func:`distinct_text_fraction`,
+    only ever measured on corpora already above the row gate."""
+    if table_row_count(sf_dir, "documents") <= COLLAPSE_MIN_ROWS:
         return False
-    if distinct_fraction is None:
-        distinct_fraction = distinct_text_fraction(
-            spark, sf_dir, name, text_col
-        )
-    return distinct_fraction <= max_distinct_fraction
+    return distinct_text_fraction(spark, sf_dir) <= COLLAPSE_MAX_DISTINCT_FRACTION
 
 
 @_functools.lru_cache(maxsize=512)

@@ -1645,6 +1645,50 @@ def test_ngram_rep_edges_collapse_identity_random(spark, rows):
     assert edges(False) == edges(True)
 
 
+@SETTINGS
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=999),       # doc_id
+            st.one_of(
+                st.sampled_from([                          # overlapping pool
+                    "w0 w1 w2 w3 w4 w5",
+                    "w0 w1 w2 w3 w4 w9",
+                    "w5 w6 w7 w8 w9 w0",
+                    "w2 w3 w4 w5 w6",
+                    "w0 w1",                               # < n tokens
+                    None,
+                ]),
+                st.text(alphabet="ab c", max_size=30),
+            ),
+        ),
+        min_size=2, max_size=20, unique_by=lambda t: t[0],
+    ),
+)
+def test_candidate_verifiers_agree_with_all_pairs_jaccard(spark, rows):
+    # the candidate-driven verifiers (MinHash-LSH candidates, rep-edge
+    # stars) and the all-pairs audit share one overlap kernel: every
+    # pair a candidate shape emits must carry exactly the jaccard the
+    # all-pairs shape reports for it (uncapped, threshold 0 — each
+    # emitted pair shares ≥ 1 shingle, so the audit has it too)
+    from recommendation_translation_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        ngram_rep_edges,
+    )
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(frame):
+        return {(r.a_id, r.b_id): r.jaccard for r in frame.collect()}
+
+    audit = pairs(ngram_jaccard_pairs(df, max_doc_freq=None, threshold=0.0))
+    lsh = pairs(minhash_lsh_pairs(df, threshold=0.0))
+    star = pairs(ngram_rep_edges(df, max_doc_freq=None, threshold=0.0))
+    assert {k: audit.get(k) for k in lsh} == lsh
+    assert {k: audit.get(k) for k in star} == star
+
+
 def test_bigram_ppl_collapse_path_identical(spark):
     # third application of the multiplicity-weighted collapse: the
     # bigram-LM model counts and per-doc perplexities must be identical
@@ -1757,11 +1801,12 @@ def test_ccnet_range_rank_path_identical(spark):
     assert yo == [("head", 1)]
 
 
-def test_collapse_dial_duplication_regimes(spark, tmp_path):
+def test_collapse_dial_duplication_regimes(spark, tmp_path, monkeypatch):
     # round-12 verdict #5: the shared collapse gate keys on MEASURED
     # duplication, not just row count — a near-unique corpus above the
     # row threshold skips the collapse shuffle it cannot amortize; a
     # duplication-heavy one takes it
+    from recommendation_translation_spark.sources import readers
     from recommendation_translation_spark.sources.readers import (
         _DISTINCT_FRACTION_MEMO,
         collapse_dial,
@@ -1779,19 +1824,14 @@ def test_collapse_dial_duplication_regimes(spark, tmp_path):
     heavy = corpus("heavy", [f"clone {i % 10}" for i in range(300)])
     unique = corpus("unique", [f"one-of-a-kind text {i}" for i in range(300)])
 
-    assert collapse_dial(spark, heavy, min_rows=100)
-    assert not collapse_dial(spark, unique, min_rows=100)
     # below the row threshold NOTHING is measured and the answer is
     # False at any duplication (driver/bench SFs keep direct plans)
-    assert not collapse_dial(spark, heavy, min_rows=1000)
-    assert not collapse_dial(spark, heavy, min_rows=1000,
-                             distinct_fraction=0.0)
-    # a caller-supplied fraction (e.g. from a dedup report) overrides
-    # the measurement entirely
-    assert not collapse_dial(spark, heavy, min_rows=100,
-                             distinct_fraction=0.95)
-    assert collapse_dial(spark, unique, min_rows=100,
-                         distinct_fraction=0.1)
+    monkeypatch.setattr(readers, "COLLAPSE_MIN_ROWS", 1000)
+    assert not collapse_dial(spark, heavy)
+    assert not any(k[0].startswith(heavy) for k in _DISTINCT_FRACTION_MEMO)
+    monkeypatch.setattr(readers, "COLLAPSE_MIN_ROWS", 100)
+    assert collapse_dial(spark, heavy)
+    assert not collapse_dial(spark, unique)
     # the measured fraction is memoized per (corpus, fingerprint):
     # repeated plan builds cost zero Spark jobs
     f1 = distinct_text_fraction(spark, heavy)

@@ -1,28 +1,53 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: the simple-mode physical plan of every catalog
 query at sf0.001.  The enforceable plan contract lives in
-tests/test_plan_quality.py; this dump is the human-auditable twin."""
+tests/test_plan_quality.py; this dump is the human-auditable twin.
+
+Usage: ``python tools_dump_plans.py [OUT [SF_DIR]]`` (default
+``PLANS.md`` in the repo root and the test suite's sf0.001).  Plans
+are normalized — expression ids (``#123L``), ``plan_id=N`` and
+``/tmp/...`` paths stripped — so two checkouts' dumps, taken on the
+same host with the same ``SPARK_GRAFT_CPUS``, can be diffed.  The
+code imported is the checkout this script lives in."""
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 
-sys.path[:0] = ["/root/repo"]
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT]
 
 from recommendation_translation_spark.plans.checks import physical_plan  # noqa: E402
 from recommendation_translation_spark.queries import QUERIES  # noqa: E402
 from recommendation_translation_spark.session import get_spark  # noqa: E402
 
+from tests.conftest import SF_SMALL  # noqa: E402
+
 # single source of truth for "materializes work at DataFrame-build
 # time" — shared with the catalog-wide plan audit
 from tests.test_plan_quality import _BUILD_HEAVY as HEAVY  # noqa: E402
 
+_RUN_SPECIFIC = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/…"),
+]
 
-def main() -> int:
+
+def normalized(plan: str) -> str:
+    """``plan`` without the ids and scratch paths that differ per run."""
+    for pat, repl in _RUN_SPECIFIC:
+        plan = pat.sub(repl, plan)
+    return plan.strip()
+
+
+def main(out_path: str = os.path.join(ROOT, "PLANS.md"),
+         sf: str = SF_SMALL) -> int:
     spark = get_spark(app_name="plans")
-    sf = "/root/testdata/sf0.001"
     out = [
-        "# PLANS — physical plan per query (simple mode, sf0.001)",
+        f"# PLANS — physical plan per query (simple mode, {os.path.basename(sf)})",
         "",
         "Generated by `python tools_dump_plans.py`.",
         "The plan-quality CONTRACT lives in tests/test_plan_quality.py;",
@@ -36,12 +61,14 @@ def main() -> int:
             out.append("_(streaming/ML — plan exercised by its dedicated tests)_\n")
             continue
         out.append("```")
-        out.append(physical_plan(fn(spark, sf), mode="simple").strip()[:4000])
+        out.append(normalized(physical_plan(fn(spark, sf), mode="simple")))
         out.append("```")
         out.append("")
-    open("PLANS.md", "w").write("\n".join(out))
+        spark.catalog.clearCache()
+    with open(out_path, "w") as f:
+        f.write("\n".join(out))
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(*sys.argv[1:3]))
