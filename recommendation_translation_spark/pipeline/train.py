@@ -73,11 +73,11 @@ TRAIN_ROWS_PER_PARTITION = 50_000
 def _train_one(features: DataFrame, site: str, seed: int, model_dir: str | None) -> TrainResult:
     """ModelBuilder.scala:18-38 for a single target site."""
     cached = get_work_data(features, site, exists=True).cache()
-    n = cached.count()
-    parallelism = features.sparkSession.sparkContext.defaultParallelism
-    target = max(1, min(parallelism, n // TRAIN_ROWS_PER_PARTITION + 1))
-    work = cached.coalesce(target)
     try:
+        n = cached.count()
+        parallelism = features.sparkSession.sparkContext.defaultParallelism
+        target = max(1, min(parallelism, n // TRAIN_ROWS_PER_PARTITION + 1))
+        work = cached.coalesce(target)
         train, test = work.randomSplit([0.7, 0.3], seed=seed)  # ModelBuilder.scala:23, seeded
         model = _regressor(seed).fit(train)
         result = TrainResult(site=site, model=model)

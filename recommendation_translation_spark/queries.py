@@ -64,7 +64,7 @@ from .operators.similarity import (
     ivf_topk,
 )
 from .operators.text import LANG_MARKERS, STOPWORDS, fingerprint, lang_id, quality_score, token_stats, tokens
-from .sources.readers import read_events, table_row_count
+from .sources.readers import read_events, read_table, table_row_count
 from . import queries_analytics as _qa
 
 # ---------------------------------------------------------------------------
@@ -77,7 +77,7 @@ SITES = ["A", "N", "R"]  # l_returnflag domain (TPC-H)
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_table(spark, sf_dir, name)
 
 
 def long_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8655,118 +8655,74 @@ ORACLES["docs_compaction"] = """
 
 
 def q_orders_capped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 recursive CTE (``WITH RECURSIVE``) on a genuinely
-    non-window-expressible fold: a per-customer running balance CLAMPED
-    at a credit cap after every order (``LEAST(cap, bal + price)``) —
-    the clamp makes the fold non-associative, so no window aggregate or
-    two-pass partial-sum trick can express it; sequential recursion is
-    the honest shape (credit limits, capacity-clamped inventory).
-    All math is integer cents, so the chain is bit-exact cross-engine
-    and the DuckDB oracle runs the same recursion with ``list_reduce``.
-
-    Depth control — the thing that makes recursion viable on Spark:
-    each recursion level is a separate job (≈1 s of scheduling at
-    local[32] regardless of row count), so the chain is batched into
-    CHUNKS of 8 orders and each level folds its chunk sequentially
-    in-row with the higher-order ``aggregate`` lambda.  Depth becomes
-    ceil(max_chain/8) = 3 levels at sf0.1 instead of 24, output is the
-    balance checkpoint after every chunk, and the per-order clamp
-    semantics are exactly preserved inside the fold.  Each level is
-    ONE equi-join of the live frontier on (custkey, chunk); rows in
-    flight shrink as chains end.  The numbered-chunk relation is
-    materialized once up front — the recursive execution re-evaluates
-    every referenced relation per level, so an un-materialized input
-    would re-run the scan + window at every depth.  For unbounded
-    chains prefer a grouped applyInPandas fold; recursion is the right
-    tool when depth is bounded and the step is relational."""
+    """Per-customer running balance CLAMPED at a credit cap after every
+    order (``LEAST(cap, bal + price)``; credit limits, capacity-clamped
+    inventory).  The clamp makes the fold non-associative, so no window
+    aggregate or two-pass partial-sum trick can express it: the chain
+    is folded in order, per customer, inside one grouped row (see
+    :func:`capped_balance_walk`).  Output is the balance checkpoint
+    after every chunk of 8 orders.  All math is integer cents, so the
+    chain is bit-exact cross-engine; the DuckDB oracle computes the
+    same checkpoints with a recursive CTE and ``list_reduce``.  (The
+    catalog's Spark ``WITH RECURSIVE`` row is ``orders_month_spine``.)"""
+    # the window partitions by the renamed key, so the walk's
+    # GROUP BY custkey reuses its exchange
     ord_df = spark.sql(
-        f"""
-        SELECT o_custkey AS custkey,
-               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                  ORDER BY o_orderdate, o_orderkey) AS rn
-        FROM parquet.`{sf_dir}/orders.parquet`
         """
+        SELECT custkey, cents,
+               ROW_NUMBER() OVER (PARTITION BY custkey
+                                  ORDER BY o_orderdate, o_orderkey) AS rn
+        FROM (SELECT o_custkey AS custkey,
+                     CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+                     o_orderdate, o_orderkey
+              FROM {orders})
+        """,
+        orders=read_table(spark, sf_dir, "orders"),
     )
-    return capped_balance_walk(
-        spark, ord_df, cap=50000000, chunk_size=8,
-        n_rows=table_row_count(sf_dir, "orders"),
-    )
+    return capped_balance_walk(spark, ord_df, cap=50000000, chunk_size=8)
 
 
 def capped_balance_walk(spark: SparkSession, ord_df: DataFrame,
-                        cap: int, chunk_size: int = 8,
-                        n_rows: int | None = None) -> DataFrame:
-    """The chunked recursive clamp fold behind q_orders_capped_balance,
-    factored so property tests can drive it with generated chains.
-    ``ord_df`` is (custkey, cents, rn) with rn 1-based per custkey;
-    returns (custkey, chunk, bal_cents) — the clamped balance
-    checkpoint after each ``chunk_size``-order chunk.
+                        cap: int, chunk_size: int = 8) -> DataFrame:
+    """The clamp fold behind q_orders_capped_balance, factored so
+    property tests can drive it with generated chains.  ``ord_df`` is
+    (custkey, cents, rn) with rn 1-based per custkey; returns
+    (custkey, chunk, bal_cents) — the clamped balance checkpoint after
+    each ``chunk_size``-order chunk.
 
-    ``n_rows`` (optional, the caller's parquet-footer row count) gates
-    a ``fixpoint_scope`` around the recursive execution (r14, r13
-    verdict #5): the recursion is exactly the small-relation iterative
-    shape the scope exists for — each level re-plans adaptively and
-    materializes 3-4 jobs for sub-second work — so below the scope's
-    row gate AQE is off, shuffle width derives from the data, and the
-    chain materializes in-scope with a broadcast frontier join; inert
-    (no hint, AQE plans the join) above the gate and when ``n_rows`` is
-    None (the property tests' direct calls)."""
-    chunks = (
-        ord_df.withColumn(
-            "chunk", F.expr(f"CAST((rn - 1) DIV {chunk_size} AS BIGINT)")
+    One grouped pass, no eager job: per customer, the rn-sorted cents
+    are sliced into chunks, and an outer ``aggregate`` over the chunks
+    carries the balance through the inner per-order clamp fold while
+    appending each chunk's closing balance; ``posexplode`` turns the
+    list into rows.  The outer fold copies its output array once per
+    chunk, so its cost is quadratic in chunks per customer — fine for
+    order chains of tens of orders (TPC-H), where the recursive CTE it
+    replaces paid one Spark job per chunk level instead.  A customer's
+    whole chain must fit in one row."""
+    return spark.sql(
+        """
+        SELECT custkey, CAST(chunk AS BIGINT) AS chunk, bal_cents
+        FROM (
+          SELECT custkey,
+                 posexplode(aggregate(
+                   transform(sequence(0, (size(cents) - 1) DIV {k}),
+                             i -> slice(cents, i * {k} + 1, {k})),
+                   named_struct('bal', CAST(0 AS BIGINT),
+                                'out', CAST(array() AS ARRAY<BIGINT>)),
+                   (acc, a) -> aggregate(
+                     a, acc.bal,
+                     (bal, x) -> LEAST(CAST({cap} AS BIGINT), bal + x),
+                     bal -> named_struct('bal', bal,
+                                         'out', concat(acc.out, array(bal))))
+                 ).out) AS (chunk, bal_cents)
+          FROM (SELECT custkey,
+                       transform(array_sort(collect_list(struct(rn, cents))),
+                                 x -> x.cents) AS cents
+                FROM {ord} GROUP BY custkey)
         )
-        .groupBy("custkey", "chunk")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(rn, cents))),"
-                " x -> x.cents)"
-            ).alias("cents_arr")
-        )
-        # r14: no repartition("custkey") — the rn window upstream
-        # already hash-partitions by custkey (the groupBy reuses it,
-        # ClusteredDistribution on a key superset), and the
-        # broadcast-frontier join below streams `chunks` map-side, so
-        # a keyed layout buys nothing; the explicit exchange was one
-        # full extra pass over the chunk table (profiled ~0.25 s).
-        .localCheckpoint(eager=True)
+        """,
+        ord=ord_df, k=int(chunk_size), cap=int(cap),
     )
-    chunks.createOrReplaceTempView("capped_balance_chunks")
-    clamp = f"(acc, x) -> LEAST(CAST({cap} AS BIGINT), acc + x)"
-    from .operators.fixpoint import fixpoint_scope
-
-    with fixpoint_scope(spark, n_rows) as scoped:
-        # In scope, BROADCAST the frontier (w): the live-chain side
-        # shrinks every level while `chunks` is the already-materialized,
-        # pre-partitioned relation — broadcasting w makes each level a
-        # map-side join with ZERO shuffle.  The scope turns AQE off and
-        # an RDD-backed relation has no stats, so without the hint the
-        # planner would fall back to a sort-merge join of the full chunk
-        # table per level.  Out of scope (unknown or large n_rows) the
-        # frontier grows with the customer count, so the choice is left
-        # to AQE's runtime sizes.
-        hint = "/*+ BROADCAST(w) */" if scoped else ""
-        walk = spark.sql(
-            f"""
-            WITH RECURSIVE walk(custkey, chunk, bal_cents) AS (
-              SELECT custkey, chunk,
-                     aggregate(cents_arr, CAST(0 AS BIGINT), {clamp})
-              FROM capped_balance_chunks WHERE chunk = 0
-              UNION ALL
-              SELECT {hint} c.custkey, c.chunk,
-                     aggregate(c.cents_arr, w.bal_cents, {clamp})
-              FROM walk w JOIN capped_balance_chunks c
-                ON c.custkey = w.custkey AND c.chunk = w.chunk + 1
-            )
-            SELECT custkey, chunk, bal_cents FROM walk
-            """
-        )
-        if scoped:
-            # materialize the recursion while AQE is off (the pagerank
-            # discipline): the caller's action then reads blocks
-            walk = walk.localCheckpoint(eager=False)
-            walk.count()
-    return walk
 
 
 ORACLES["orders_capped_balance"] = """

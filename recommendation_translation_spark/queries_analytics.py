@@ -24,7 +24,7 @@ from .operators.ordering import (
     range_partitioned_running_sum,
 )
 from .operators.text import tokens
-from .sources.readers import read_events, table_row_count
+from .sources.readers import read_events, read_table, table_row_count
 
 # canonical copies live at queries.py:135-136 (kept in sync by
 # tests/test_oracle_parity — any drift hash-mismatches immediately)
@@ -37,7 +37,7 @@ ANALYTICS_ORACLES: dict[str, str] = {}
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -604,16 +604,18 @@ def q_orders_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation in ``topk_per_group``, queries.py).  Customers with no
     orders drop out (inner lateral semantics, both engines)."""
     return spark.sql(
-        f"""
+        """
         SELECT c.c_custkey, t.o_orderkey,
                ROUND(t.o_totalprice, 2) AS totalprice
-        FROM parquet.`{sf_dir}/customer.parquet` c,
+        FROM {customer} c,
         LATERAL (SELECT o_orderkey, o_totalprice
-                 FROM parquet.`{sf_dir}/orders.parquet` o
+                 FROM {orders} o
                  WHERE o.o_custkey = c.c_custkey
                  ORDER BY o_totalprice DESC, o_orderkey
                  LIMIT 3) t
-        """
+        """,
+        customer=read_table(spark, sf_dir, "customer"),
+        orders=read_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1130,8 +1132,7 @@ ANALYTICS_ORACLES["events_first_last_touch"] = """
 
 
 # ONE SQL text for both engines (the pricing_summary_sql pattern):
-# Spark substitutes a direct parquet table ref, DuckDB the registered
-# view.  Recursion depth = months between min and max order date
+# Spark substitutes the orders DataFrame, DuckDB the registered view.  Recursion depth = months between min and max order date
 # (~80 here), under Spark's cteRecursionLevelLimit default of 100 —
 # the spine is calendar-bounded, not data-bounded.
 _MONTH_SPINE_SQL = """
@@ -1169,9 +1170,7 @@ def q_orders_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical reporting gap-fill.  The IDENTICAL SQL text runs on both
     engines (the `pricing_summary_sql` portability pattern, now
     including recursion)."""
-    return spark.sql(
-        _MONTH_SPINE_SQL.format(orders=f"parquet.`{sf_dir}/orders.parquet`")
-    )
+    return spark.sql(_MONTH_SPINE_SQL, orders=read_table(spark, sf_dir, "orders"))
 
 
 ANALYTICS_ORACLES["orders_month_spine"] = _MONTH_SPINE_SQL.format(orders="orders")
@@ -1383,16 +1382,18 @@ def q_orders_pipe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is that classic SQL; hash parity proves plan-equivalence
     of the two frontends)."""
     return spark.sql(
-        f"""
-        FROM parquet.`{sf_dir}/orders.parquet`
+        """
+        FROM {orders}
         |> WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-        |> JOIN parquet.`{sf_dir}/customer.parquet` ON o_custkey = c_custkey
+        |> JOIN {customer} ON o_custkey = c_custkey
         |> AGGREGATE COUNT(*) AS n_orders,
                      ROUND(SUM(o_totalprice), 2) AS revenue
            GROUP BY c_nationkey
         |> WHERE n_orders > 50
         |> SELECT c_nationkey, n_orders, revenue
-        """
+        """,
+        orders=read_table(spark, sf_dir, "orders"),
+        customer=read_table(spark, sf_dir, "customer"),
     )
 
 
@@ -1494,16 +1495,17 @@ def q_orders_pivot_unpivot_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     vanish on both engines).  The DataFrame twins are
     `feature_pivot`/`feature_unpivot`; this pins the SQL frontend."""
     return spark.sql(
-        f"""
+        """
         SELECT year, status, n_orders FROM (
           SELECT * FROM (
             SELECT EXTRACT(YEAR FROM o_orderdate) AS year, o_orderstatus
-            FROM parquet.`{sf_dir}/orders.parquet`
+            FROM {orders}
           )
           PIVOT (COUNT(*) AS cnt FOR o_orderstatus IN ('F' AS f, 'O' AS o, 'P' AS p))
         )
         UNPIVOT (n_orders FOR status IN (f AS `F`, o AS `O`, p AS `P`))
-        """
+        """,
+        orders=read_table(spark, sf_dir, "orders"),
     ).select(
         F.col("year").cast("long").alias("year"),
         "status",

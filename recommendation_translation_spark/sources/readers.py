@@ -10,6 +10,10 @@ pushdown/pruning.  Scale notes:
   costs one extra pass over the file.
 - ``DROPMALFORMED`` drops bad rows inside the scan task — no shuffle,
   scales linearly.
+- catalog tables (``<sf_dir>/<name>.parquet``) are read through
+  :func:`read_table`, which infers each table's schema once per
+  application and file fingerprint: a plain parquet read submits a
+  schema-inference Spark job every time it is planned.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import PAGECOUNT_SCHEMA
 
@@ -35,6 +40,7 @@ __all__ = [
     "read_parquet_evolving",
     "read_media_dir",
     "load_testdata",
+    "read_table",
     "table_row_count",
     "TESTDATA_TABLES",
 ]
@@ -236,8 +242,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan TIMESTAMP(NANOS) parquet at all and only affects that legacy
     physical type."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return normalize_event_ts(spark, df)
+    return normalize_event_ts(spark, read_table(spark, sf_dir, "events"))
 
 
 def normalize_event_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -267,15 +272,41 @@ def load_testdata(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Da
     """Load driver testdata tables (TESTDATA.md) as DataFrames.
 
     ``events`` goes through :func:`read_events` for timestamp
-    normalization; everything else is a plain parquet scan."""
-    names = names or TESTDATA_TABLES
-    out = {}
-    for n in names:
-        if n == "events":
-            out[n] = read_events(spark, sf_dir)
-        else:
-            out[n] = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-    return out
+    normalization; everything else through :func:`read_table`."""
+    return {
+        n: read_events(spark, sf_dir) if n == "events" else read_table(spark, sf_dir, n)
+        for n in names or TESTDATA_TABLES
+    }
+
+
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Catalog table ``<sf_dir>/<name>.parquet`` as a DataFrame.
+
+    A plain ``spark.read.parquet`` infers the schema from the file
+    footers in a one-task Spark job, every time it is called; a catalog
+    builder that reads three tables pays three jobs before its own plan
+    runs.  The first read here infers as usual and memoizes the schema;
+    later reads pass it back with ``spark.read.schema``, which submits
+    no job.  The memo key is the application id plus the table's
+    :func:`_table_fingerprint` (the same staleness key as
+    :func:`table_row_count`), so a rewritten table is re-inferred and
+    a new SparkContext never inherits another's schema.  A missing or
+    non-local path (no ``os.stat``) takes the plain read, so Spark
+    raises its own ``AnalysisException`` for a missing table."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        key = (spark.sparkContext.applicationId, _table_fingerprint(path))
+    except OSError:
+        return spark.read.parquet(path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
+    return df
 
 
 #: Target sub-corpus size for the SAMPLED quality audits (round-9

@@ -13,11 +13,12 @@ shape.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.readers import normalize_event_ts, read_table
 
 __all__ = [
     "stream_tumbling_agg",
@@ -43,11 +44,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema comes from a batch peek (readStream requires an explicit
     schema); the ns-as-long timestamp gets the same normalization as
     sources.readers.read_events."""
-    path = os.path.join(sf_dir, "events.parquet")
     # Vanilla sessions (the correctness driver's) can't read the
     # TIMESTAMP(NANOS) column without this; see sources.readers.read_events.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = read_table(spark, sf_dir, "events").schema
     # FileStreamSource needs a directory; the sf dir holds one parquet
     # file per table, so glob-filter down to the events file.
     stream = (
@@ -58,8 +58,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE normalization shared with the batch reader — the streaming
     # replay must land on the identical TimestampType values the
     # batch relations (and their oracles) use
-    from ..sources.readers import normalize_event_ts
-
     return normalize_event_ts(spark, stream)
 
 
@@ -404,8 +402,7 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_events_stream`` pattern (batch schema peek + pathGlobFilter)
     pointed at the corpus table, for the ingest-side curation
     operators."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = read_table(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -445,7 +442,7 @@ def stream_docs_dedup_gate(
     from ..operators.curation import hash_split
     from ..operators.dedup import minhash_bands, minhash_bands_rowlocal
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = read_table(spark, sf_dir, "documents")
     corpus = (
         hash_split(docs).filter(F.col("split") != "test").select("doc_id", "text")
     )

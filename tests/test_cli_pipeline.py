@@ -293,6 +293,29 @@ def test_build_models_jobs_keep_callers_job_group(spark):
     assert sc.getLocalProperty("spark.scheduler.pool") is None
 
 
+def test_failed_site_releases_its_training_cache(spark):
+    """A site whose training rows raise at execution is reported as
+    failed, and its per-site cache is released, not left registered."""
+    from pyspark.sql import functions as F
+
+    from recommendation_translation_spark.pipeline.train import build_models
+
+    feats = spark.range(12).select(
+        F.concat(F.lit("Q"), F.col("id").cast("string")).alias("id"),
+        F.col("id").cast("double").alias("pageviews_a"),
+        (F.col("id") / 12.0).alias("rank_a"),
+        F.lit(1.0).alias("exists_a"),
+        # a feature of site a's training set only: build_models'
+        # materializing count() prunes it, the per-site count() does not
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("bad feature")))
+        .cast("double").alias("pageviews_b"),
+    )
+    spark.catalog.clearCache()
+    results = build_models(feats, ["a"], seed=1)
+    assert results["a"].error and "bad feature" in results["a"].error
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_split_inputs_equal_combined(spark, fixture_dir, tmp_path_factory):
     """EP1 parity: sitelinks ⋈ pagecounts (with .z filter/rewrite)
     produces the same parsed relation as the combined raw-data TSV."""

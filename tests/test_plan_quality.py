@@ -9,6 +9,9 @@ when sf0.01 results still match.
 
 from __future__ import annotations
 
+import inspect
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1123,22 +1126,66 @@ def test_no_forced_broadcast_on_sf_scaled_relations(spark, monkeypatch):
         f"{sorted(set(offenders))}"
     )
 
-    # The recursive balance walk hints its frontier in SQL text, over
-    # renamed columns the key-column rule cannot see.  The frontier
-    # grows with the customer count, so the hint may only appear
-    # inside fixpoint_scope (a small, known row count): an unknown
-    # size plans the join with no hint at all.
+
+def test_capped_balance_walk_is_one_lazy_grouped_fold(spark):
+    """The clamp fold is one grouped pass: building it submits no Spark
+    job (no eager checkpoint of the chunks, no materialized walk), and
+    its plan has no recursive-CTE loop and no broadcast hint."""
     from recommendation_translation_spark.queries import capped_balance_walk
 
     ord_df = spark.createDataFrame(
         [(1, 5, 1), (1, 7, 2), (2, 3, 1)], "custkey long, cents long, rn int"
     )
-    recorded.clear()
-    unscoped = capped_balance_walk(spark, ord_df, cap=10, chunk_size=1)
-    assert not any(_broadcast_hinted_subplans(df) for df in [unscoped, *recorded])
-    recorded.clear()
-    capped_balance_walk(spark, ord_df, cap=10, chunk_size=1, n_rows=3)
-    assert any(_broadcast_hinted_subplans(df) for df in recorded)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("capped_walk_probe", "capped_balance_walk build")
+    try:
+        walk = capped_balance_walk(spark, ord_df, cap=10, chunk_size=1)
+    finally:
+        sc.setJobGroup(None, None)
+    assert tracker.getJobIdsForGroup("capped_walk_probe") == []
+    assert set(tracker.getJobIdsForGroup()) <= before
+    analyzed = walk._jdf.queryExecution().analyzed().toString()
+    assert "UnionLoop" not in analyzed + physical_plan(walk)
+    assert not _broadcast_hinted_subplans(walk)
+
+
+# An ``sf_dir`` table read that bypasses ``read_table``: the Python
+# reader over an ``{sf_dir}`` path, or a ``parquet.`{sf_dir}…``` table
+# reference in SQL text.
+_TABLE_READ_BYPASS = re.compile(
+    r"""\.parquet\(\s*(?:f["']\{sf_dir\}|os\.path\.join\(\s*sf_dir)"""
+    r"|parquet\.`\{sf_dir\}"
+)
+
+
+def _table_read_bypasses(source: str) -> list[str]:
+    lines = source.splitlines()
+    return [
+        lines[source.count("\n", 0, m.start())].strip()
+        for m in _TABLE_READ_BYPASS.finditer(source)
+    ]
+
+
+def test_catalog_table_reads_go_through_read_table():
+    """Every catalog table read goes through ``sources.readers.read_table``,
+    which memoizes the schema: a plain parquet read submits a
+    schema-inference job each time a builder runs.  SQL text is scanned
+    too, since a ``parquet.`path``` reference plans the same read."""
+    from recommendation_translation_spark import queries, queries_analytics
+
+    planted = [
+        'lines = spark.read.parquet(f"{sf_dir}/lineitem.parquet")',
+        "docs = spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))",
+        "FROM parquet.`{sf_dir}/orders.parquet` o",
+    ]
+    allowed = "orders = read_table(spark, sf_dir, 'orders')"
+    assert _table_read_bypasses("\n".join([allowed, *planted])) == planted
+
+    for mod in (queries, queries_analytics):
+        bypasses = _table_read_bypasses(inspect.getsource(mod))
+        assert not bypasses, f"{mod.__name__}: {bypasses}"
 
 
 # ---------------------------------------------------------------------------

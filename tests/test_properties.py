@@ -713,8 +713,8 @@ def test_range_partitioned_running_max_equals_global_window(spark, rows):
 
 
 # chains: per key, a short list of order amounts (cents).  Small cap
-# forces the clamp to actually bite; chunk_size=3 forces multi-chunk
-# recursion with a ragged final chunk.
+# forces the clamp to actually bite; chunk_size=3 forces a multi-chunk
+# fold with a ragged final chunk.
 capped_chains = st.lists(
     st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=10),
     min_size=1,
@@ -725,9 +725,10 @@ capped_chains = st.lists(
 @SETTINGS
 @given(chains=capped_chains, cap=st.integers(min_value=1, max_value=80))
 def test_capped_balance_walk_equals_sequential_fold(spark, chains, cap):
-    # the chunked recursion + in-chunk aggregate() lambda must equal the
-    # naive per-element clamp fold — the chunking is a depth
-    # optimization, never a semantics change
+    # the fold over chunks (an outer aggregate() carrying the balance
+    # into each chunk's inner clamp aggregate()) must equal the naive
+    # per-element clamp fold — chunking only sets which balances are
+    # emitted, never the semantics
     from recommendation_translation_spark.queries import capped_balance_walk
 
     rows = [

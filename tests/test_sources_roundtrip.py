@@ -7,12 +7,17 @@ opaque payloads plus file metadata, feeding the mapInPandas decoders.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from recommendation_translation_spark.plans.checks import physical_plan
 from recommendation_translation_spark.sources.readers import (
     read_media_dir,
     read_orc,
+    read_table,
 )
 from recommendation_translation_spark.sources.writers import write_orc
 
@@ -340,3 +345,35 @@ def test_compact_versioned_parquet_partitioned_and_orphan_gc(spark, tmp_path):
     assert any(e.startswith("source=src") for e in os.listdir(v2))
     back = read_current_version(spark, target)
     assert {(r.doc_id, r.source) for r in back.collect()} == before
+
+
+def test_read_table_repeat_read_submits_no_job(spark, tmp_path):
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}),
+                   tmp_path / "t.parquet")
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(2):
+        sc.setJobGroup(f"read_table_probe_{i}", "read_table")
+        try:
+            df = read_table(spark, str(tmp_path), "t")
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(sc.statusTracker().getJobIdsForGroup(f"read_table_probe_{i}"))
+    # the first read infers the schema in a Spark job; the repeat does not
+    assert jobs[0] and jobs[1] == []
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_read_table_rewritten_table_gets_new_schema(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2], "extra": [0.5, 1.5]}), path)
+    back = read_table(spark, str(tmp_path), "t")
+    assert back.columns == ["k", "extra"]
+    assert sorted(r.extra for r in back.collect()) == [0.5, 1.5]
+
+
+def test_read_table_missing_table_raises_spark_error(spark, tmp_path):
+    with pytest.raises(AnalysisException):
+        read_table(spark, str(tmp_path), "absent")
