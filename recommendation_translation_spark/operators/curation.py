@@ -260,13 +260,16 @@ def token_budget_sample(df: DataFrame, budget_tokens: int,
     return df.drop(quality_col, tokens_col, *carry_cols).join(sel, id_col)
 
 
-# Below this many (symmetrized, distinct) edges, connected components
-# runs as a driver-side union-find instead of iterated distributed
-# joins: the iterative path costs ~5 Spark jobs PER ROUND regardless of
-# edge count, so a 240-edge graph pays ~2 s of pure scheduling for
-# microseconds of actual work.  200k edges Arrow-fetch to ~3 MB — the
-# same bounded-relation standard as a broadcast threshold — and the
-# distributed pointer-jumping path remains the plan above the gate.
+# When at most this many (u, v) pair rows come back from the bounded
+# driver fetch in ``dup_clusters``, connected components runs as a
+# driver-side union-find over them instead of iterated distributed
+# joins: the iterative path costs ~5 Spark jobs PER ROUND regardless
+# of edge count, so a 240-edge graph pays ~2 s of pure scheduling for
+# microseconds of actual work.  The constant bounds the pair rows
+# fetched to the driver (at most this many plus one; 200k id pairs
+# Arrow-fetch to ~3 MB) — the same bounded-relation standard as a
+# broadcast threshold — and the distributed pointer-jumping path
+# remains the plan above the gate.
 # r13 re-measure (3 alternating same-window rounds, dedup_clusters'
 # 75k-edge rep graph): driver 2.9-4.6 s vs distributed 5.1-7.1 s —
 # the r10 "wash" at this size predated the fixpoint scope's job
@@ -274,6 +277,54 @@ def token_budget_sample(df: DataFrame, budget_tokens: int,
 # gate moved up a decade (r10 value 20k).  Union-find on 200k edges is
 # single-digit milliseconds; the fetch, not the find, is the bound.
 DRIVER_CC_MAX_EDGES = 200_000
+
+
+def _union_find_labels(spark, uv, utype) -> DataFrame:
+    """(doc_id, cluster_id = min id in the component) by union-find over
+    the Arrow table ``uv`` of ``(u, v)`` pairs (no NULLs; duplicates,
+    reversed duplicates and self-loops are harmless), shipped back as
+    ONE Arrow table typed from ``utype``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in zip(uv.column("u").to_pylist(), uv.column("v").to_pylist()):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[ru] = rv
+    groups: dict = {}
+    for node in parent:
+        groups.setdefault(find(node), []).append(node)
+    rows = [(node, min(members)) for members in groups.values() for node in members]
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", utype),
+            T.StructField("cluster_id", utype),
+        ]
+    )
+    # r14 (guide §6 "Arrow for driver transfers"): createDataFrame over
+    # a python list pickles row-by-row into defaultParallelism slices
+    # (measured 1.2 s of a 32-task stage for ~5k labels inside
+    # corpus_dedup_report).  The Arrow column types come from
+    # out_schema, not from inference, so an empty label set takes the
+    # same path with the same types, with or without the session's
+    # arrow conf.
+    labels = pa.table(
+        {"doc_id": [r[0] for r in rows], "cluster_id": [r[1] for r in rows]},
+        schema=to_arrow_schema(out_schema),
+    )
+    return spark.createDataFrame(labels, out_schema)
 
 
 def dup_clusters(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id",
@@ -300,96 +351,54 @@ def dup_clusters(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id",
     monotonically non-increasing, so `min(new) < old` is the complete
     change test.
 
-    SIZE-ADAPTIVE (round-10): when the symmetrized edge set is at most
-    ``driver_threshold`` rows (a constant — bounded memory, the same
-    standard as a broadcast threshold), the components are computed by
-    an exact driver-side union-find over the already-checkpointed
-    edges instead: the iterative path's per-round scheduling floor
-    (~5 jobs × ~0.3 s on a busy host) dwarfs the actual work on small
-    graphs (measured 4.7 s → ~0.2 s on a 240-edge sf0.1 graph).  Both
-    paths produce identical labels (property-pinned); pass
-    ``driver_threshold=0`` to force the distributed path.
+    SIZE-ADAPTIVE (round-10): the raw ``(u, v)`` pairs, NULL
+    endpoints dropped, are checkpointed once.  When at most
+    ``driver_threshold`` of them come back from a bounded Arrow fetch
+    (a constant — bounded memory, the same standard as a broadcast
+    threshold), the components are computed by an exact driver-side
+    union-find over the fetched columns instead: the iterative path's
+    per-round scheduling floor (~5 jobs × ~0.3 s on a busy host) dwarfs
+    the actual work on small graphs (measured 4.7 s → ~0.2 s on a
+    240-edge sf0.1 graph).  Union-find needs neither symmetrized nor
+    distinct edges, so only the distributed path builds them, from the
+    same checkpoint.  Both paths produce identical labels
+    (property-pinned); pass ``driver_threshold=0`` to force the
+    distributed path.
     """
-    # symmetrize in ONE pass over `pairs` — a union of two selects would
-    # recompute the (possibly expensive) candidate-pair pipeline twice
+    # NULL endpoints: the distributed path would drop them implicitly
+    # (every step is an inner join); dropping them here gives both
+    # paths the identical edge set
+    uv = (
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .localCheckpoint()
+    )
+    # strict ">0" guard: driver_threshold=0 must force the distributed
+    # path even on an EMPTY pair set (the escape hatch the property
+    # tests rely on), and skips the fetch and the count there
+    if driver_threshold > 0:
+        # ONE bounded Arrow fetch: a row-based py4j collect of the
+        # worst case (DRIVER_CC_MAX_EDGES pair rows) costs enough to
+        # erode the win; one row past the gate says "too many"
+        fetched = uv.limit(driver_threshold + 1).toArrow()
+        if fetched.num_rows <= driver_threshold:
+            return _union_find_labels(pairs.sparkSession, fetched,
+                                      uv.schema["u"].dataType)
+    # symmetrize in ONE pass over the checkpoint
     edges = (
-        pairs.select(
+        uv.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
+                    F.struct(F.col("u"), F.col("v")),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
                 )
             ).alias("e")
         )
         .select("e.u", "e.v")
-        # NULL endpoints: the distributed path drops them implicitly
-        # (every step is an inner join), but toPandas would coerce an
-        # int column with NULLs to float64 — ids become floats, NULL
-        # becomes NaN — silently corrupting driver-path labels.  Drop
-        # them explicitly so both paths see the identical edge set.
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
         .localCheckpoint()
     )
-    # strict ">0" guard: driver_threshold=0 must force the distributed
-    # path even on an EMPTY edge set (the escape hatch the property
-    # tests rely on), and skipping the count() saves a job there
     n_edges = edges.count() if driver_threshold > 0 else None
-    if driver_threshold > 0 and n_edges <= driver_threshold:
-        # exact union-find over the bounded, checkpointed edge set;
-        # min-id-per-component matches the distributed fixpoint
-        # exactly.  Arrow fetch, not collect(): a row-based py4j
-        # collect of even the threshold-bounded worst case (20k edge
-        # rows, DRIVER_CC_MAX_EDGES) costs enough to erode the win,
-        # while toPandas moves the same batch as one Arrow frame.
-        pdf = edges.toPandas()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[ru] = rv
-        groups: dict = {}
-        for node in parent:
-            groups.setdefault(find(node), []).append(node)
-        rows = [
-            (node, min(members))
-            for members in groups.values()
-            for node in members
-        ]
-        utype = edges.schema["u"].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", utype),
-                T.StructField("cluster_id", utype),
-            ]
-        )
-        # r14 (guide §6 "Arrow for driver transfers"): ship the label
-        # table back as ONE Arrow table — createDataFrame over a python
-        # list pickles row-by-row into defaultParallelism slices
-        # (measured 1.2 s of a 32-task stage for ~5k labels inside
-        # corpus_dedup_report).  The Arrow column types come from
-        # out_schema, not from inference, so an empty label set takes
-        # the same path with the same types, with or without the
-        # session's arrow conf.
-        import pyarrow as _pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        labels = _pa.table(
-            {"doc_id": [r[0] for r in rows], "cluster_id": [r[1] for r in rows]},
-            schema=to_arrow_schema(out_schema),
-        )
-        return pairs.sparkSession.createDataFrame(labels, out_schema)
     # r13: the whole iterative path runs under fixpoint_scope — the
     # per-round relations are edge/label-sized, and the profile showed
     # the query was job-floor-bound (66 jobs, no stage over 1 s) from

@@ -1177,17 +1177,17 @@ def simhash(df: DataFrame, bits: int = 32, text_col: str = "text",
     return base.select(F.col(id_col), _simhash_sum_expr(bits).alias("simhash"))
 
 
-def _simhash_sum_expr(bits: int, via_sql: bool = True) -> F.Column:
+def _simhash_sum_expr(bits: int) -> F.Column:
     """The per-row signature fold over the projected ``_hl``/``_hh``/
-    ``_n`` columns.  ``via_sql`` (default) emits the whole fold as ONE
-    SQL string parsed JVM-side — the r13 SQL-text fast path: the
-    Column form issues ~10 py4j round-trips per bit (≈1.5 s of pure
-    driver time per simhash build at 32 bits), which dominated the
-    dedup_clusters/simhash rows' build cost.  Same functions, same
-    per-bit CASE, same left-to-right sum (each term is a distinct
+    ``_n`` columns, as ONE SQL string parsed JVM-side (one py4j call;
+    spelled Column-by-Column it cost ~10 round-trips per bit, ≈1.5 s of
+    driver time per 32-bit simhash build).  Bit ``b`` counts the token
+    hashes with that bit set (``_hl`` for bits 0-31, ``_hh`` for 32-63)
+    and adds its weight when more than half of the ``_n`` tokens vote
+    for it; the terms are summed in bit order.  Each term is a distinct
     power of two or 0, so partial sums never overflow and the total is
-    exactly the signed 64-bit pattern) — result- and schema-identical,
-    pinned by tests/test_properties.py alongside the ANN builders."""
+    exactly the signed 64-bit pattern.  tests/test_properties.py pins
+    the fold to a pure-Python vote over the same arrays."""
 
     def _ones_sql(b: int) -> str:
         src = "_hl" if b < 32 else "_hh"
@@ -1198,35 +1198,11 @@ def _simhash_sum_expr(bits: int, via_sql: bool = True) -> F.Column:
         # overflows a BIGINT, so spell −2⁶³ as arithmetic
         return "(-9223372036854775807L - 1L)" if b == 63 else f"{2 ** b}L"
 
-    if via_sql:
-        terms = " + ".join(
-            f"(CASE WHEN {_ones_sql(b)} * 2 > _n"
-            f" THEN {_weight_sql(b)} ELSE 0L END)"
-            for b in range(bits)
-        )
-        return F.expr(terms)
-
-    def _ones(b: int) -> F.Column:
-        src = F.col("_hl") if b < 32 else F.col("_hh")
-        return F.size(
-            F.filter(
-                src,
-                lambda h: F.shiftright(h, b % 32).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-
-    def _weight(b: int) -> F.Column:
-        # bit 63 is the two's-complement sign bit: 2**63 overflows a
-        # long, the SIGNED weight −2⁶³ sets exactly that bit
-        return F.lit(-(2**63) if b == 63 else 2**b).cast("long")
-
-    return sum(
-        (
-            F.when(_ones(b) * 2 > F.col("_n"), _weight(b))
-            .otherwise(F.lit(0).cast("long"))
-        )
+    return F.expr(" + ".join(
+        f"(CASE WHEN {_ones_sql(b)} * 2 > _n"
+        f" THEN {_weight_sql(b)} ELSE 0L END)"
         for b in range(bits)
-    )
+    ))
 
 
 def simhash_pairs(df: DataFrame, max_hamming: int = 3, bits: int = 32,

@@ -8,9 +8,13 @@ row numbers / running sums with the classic two-pass ``zipWithIndex``
 formulation, fully partitioned:
 
 1. ``repartitionByRange`` on the sort key — rows land in ordered,
-   non-overlapping partitions (RangePartitioner's reservoir sampling
-   uses seeds derived from the partition index, so the boundaries are
-   deterministic for a deterministic input lineage);
+   non-overlapping partitions.  The boundaries are NOT reproducible
+   from build to build: ``RangePartitioner.sketch`` seeds each
+   partition's reservoir sample with
+   ``byteswap32(index ^ (rdd.id << 16))``, and every build plans a new
+   RDD id, so each build draws new bounds and bakes its own offset map
+   (step 3) into the plan.  Results are unaffected — each build's
+   offsets are counted over its own partitions;
 2. a cheap counting job aggregates one row **per partition** (per
    group) — a histogram of at most ``n_partitions × n_groups`` rows
    collected to the driver (bounded by configuration, not by data);

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import cross_engine_hash
-
 __all__ = [
     "dot",
     "l2_norm",
@@ -240,50 +238,28 @@ def hyperplane_weight(i: int, j: int, seed: str = "hp") -> float:
     return (h % 2001 - 1000) / 1000.0
 
 
-def _hyperplane_bits_sql(vec_ref: str, n_bits: int, dim: int,
-                         seed: str = "hp") -> str:
-    """SQL text of :func:`hyperplane_bits` — same packed-weight
-    zip_with/aggregate projection per hyperplane, same left-to-right
-    bit adds, same long/int CASE coercion."""
+def hyperplane_bits(vec: str, n_bits: int, dim: int,
+                    seed: str = "hp") -> Column:
+    """LSH bucket id: sign bits of ``n_bits`` deterministic hyperplanes,
+    as one long.  ``vec`` is the SQL text of an array<double> column
+    reference; the result is ONE ``F.expr`` parsed JVM-side (one py4j
+    call, whatever ``n_bits``·``dim``).
+
+    Each hyperplane's weights ride as one packed array literal folded
+    with ``zip_with`` + ``aggregate``: the projection is ``dim``
+    multiply-adds from a 0.0 seed, left to right (``zip_with``'s NULL
+    padding makes a short ``vec`` project to NULL, so its bit is 0).
+    Bit ``i`` adds ``2**i`` when the projection is > 0, the bits summed
+    in index order.  tests/test_properties.py pins the result to a
+    pure-Python reference of the same folds."""
     total = "CAST(0 AS BIGINT)"
     for i in range(n_bits):
         w = _sql_arr(hyperplane_weight(i, j, seed) for j in range(dim))
-        proj = (f"aggregate(zip_with({vec_ref}, {w}, (x, y) -> x * y), "
+        proj = (f"aggregate(zip_with({vec}, {w}, (x, y) -> x * y), "
                 f"0.0D, (acc, x) -> acc + x)")
         total = (f"{total} + (CASE WHEN {proj} > 0 "
                  f"THEN CAST({2 ** i} AS BIGINT) ELSE 0 END)")
-    return total
-
-
-def hyperplane_bits(vec: Column | str, n_bits: int, dim: int,
-                    seed: str = "hp") -> Column:
-    """LSH bucket id: sign bits of ``n_bits`` deterministic hyperplanes,
-    as one long.  Weights are literals → the projections run inside a
-    single codegen'd stage.
-
-    r13: each hyperplane's weights ride as ONE packed array literal
-    (``F.lit(list)``) folded with ``zip_with``+``aggregate`` instead of
-    ``dim`` separate Literal nodes chained with ``+`` — the projection
-    is the same multiply-adds in the same left-to-right order
-    (bit-identical result; zip_with's NULL padding reproduces the old
-    out-of-bounds-index NULL), but the expression tree shrinks from
-    O(n_bits·dim) to O(n_bits) nodes.  A str ``vec`` additionally
-    takes the SQL-text fast path (one JVM parse; py4j build
-    chattiness, not Catalyst, dominates driver time on this catalog)."""
-    if isinstance(vec, str):
-        return F.expr(_hyperplane_bits_sql(vec, n_bits, dim, seed))
-    bucket = F.lit(0).cast("long")
-    for i in range(n_bits):
-        # r14: one SQL-parsed array literal per hyperplane (see
-        # centroid_rows_literal) — F.lit(list) costs dim py4j calls
-        w = F.expr(_sql_arr([hyperplane_weight(i, j, seed) for j in range(dim)]))
-        proj = F.aggregate(
-            F.zip_with(vec, w, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0))
-    return bucket
+    return F.expr(total)
 
 
 def ann_lsh_topk(
@@ -1011,33 +987,22 @@ def pq_codebooks(
     return codebooks, costs, sub_total_ss, n_points, sizes_ok
 
 
-def _pq_cents_lit(codebooks: list, s: int) -> Column:
-    """Subspace ``s``'s centroids as ONE literal array-of-arrays —
-    shared by the ADC lookup and the decode so their literals (and
-    thus their bit-exact agreement, which the consistency flag and the
-    hash-exact oracle both lean on) cannot drift apart."""
-    # r13: ONE packed nested-array literal instead of k·d_sub Literal
-    # nodes — same array<array<double>> values; the packed form cuts
-    # the expression tree (and Catalyst's planning walks) by ~d_sub·k×.
-    # r14: parsed as ONE SQL literal (see centroid_rows_literal) —
-    # F.lit(list) itself cost k·d_sub py4j round-trips.
-    return F.expr(_sql_mat([[float(x) for x in codebooks[s][j]]
-                            for j in range(len(codebooks[s]))]))
-
-
 # ---------------------------------------------------------------------------
-# SQL-text expression builders (r13)
+# PQ expression builders: SQL text in, one F.expr out
 # ---------------------------------------------------------------------------
-# Building the PQ/IVF expressions Column-by-Column costs one py4j
-# round-trip per operation — measured ~1 s of pure Python/py4j time
-# per pq_code_expr call on the r13 bench host, dominating several
-# emb_* rows.  When the caller can name its input columns, the same
-# expression is generated as ONE SQL string and parsed JVM-side in a
-# single call (measured 1019 → 129 ms build, bit-identical output —
-# the SQL text spells out the exact same functions in the same order,
-# so the resolved plan is the same expression tree).  The Column-based
-# builders remain as the generic path (tests and ad-hoc callers);
-# tests/test_properties.py pins the two paths equal.
+# Every PQ/IVF expression is generated as ONE SQL string and parsed
+# JVM-side in a single py4j call.  Spelled Column-by-Column the same
+# expression costs one round-trip per operation (~1 s of pure
+# Python/py4j time per pq_code_expr on the r13 bench host, 1019 →
+# 129 ms once spelled as text).  Callers pass their input columns as
+# SQL text (a column name or fragment such as
+# ``cast(embedding as array<double>)``).  The codebooks ride as packed
+# ``_sql_mat`` literals (exact IEEE round-trip, see ``_sql_dbl``), and
+# every squared distance is the ``_sql_l2sq_fold`` left fold, so the
+# ADC lookup, the LUT entries and the decode select bit-identical
+# values.  tests/test_properties.py pins each builder to a pure-Python
+# reference doing the same folds in the same element order on IEEE
+# doubles, compared with ``==``.
 
 def _sql_dbl(x: float) -> str:
     """Exact SQL double literal: ``repr`` is the shortest round-trip
@@ -1058,21 +1023,28 @@ def _sql_mat(rows) -> str:
 
 
 def _sql_l2sq_fold(a_ref: str, b_ref: str) -> str:
-    """SQL text of :func:`_l2sq_fold` — same zip_with/aggregate calls,
-    same (x−y)·(x−y) terms, same 0.0D seed and left-to-right adds."""
+    """||a − b||² as a left-to-right fold — the ONE squared-distance
+    construction every PQ expression uses: (x−y)·(x−y) terms added to
+    a 0.0D seed in element order (mirrored by
+    queries._pq_sub_dist_sql)."""
     return (f"aggregate(zip_with({a_ref}, {b_ref}, "
             f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)")
 
 
-def _pq_code_sql(vec_ref: str, codebooks: list) -> str:
-    """SQL text of :func:`pq_code_expr` over ``vec_ref`` — the same
-    slice/zip_with/fold/array_sort calls in the same order, so the
-    parsed plan computes the identical floats and tie-breaks."""
+def pq_code_expr(vec: str, codebooks: list) -> Column:
+    """Encode ``vec`` (SQL text of an array<double>) to its PQ code —
+    array<int> of length m, ``code[s]`` = index of subspace s's
+    nearest centroid by L2, the lower index winning a tie.  The
+    codebooks ride as PLAN LITERALS, so encoding the full corpus is a
+    pure zero-shuffle projection — the same scale mechanism as
+    ``assign_lists`` / ``sq8_quantize``: the 100 TB corpus is written
+    once as m bytes per vector.  Per subspace, the (d, j) structs are
+    sorted by distance then index and the first j is kept."""
     m = len(codebooks)
     d_sub = len(codebooks[0][0])
     codes = []
     for s in range(m):
-        sub = f"slice({vec_ref}, {s * d_sub + 1}, {d_sub})"
+        sub = f"slice({vec}, {s * d_sub + 1}, {d_sub})"
         idxs = "array(" + ",".join(str(j) for j in range(len(codebooks[s]))) + ")"
         fold = _sql_l2sq_fold(sub, "cv")
         scored = (f"zip_with({_sql_mat(codebooks[s])}, {idxs}, "
@@ -1081,174 +1053,60 @@ def _pq_code_sql(vec_ref: str, codebooks: list) -> str:
             f"array_sort({scored}, (x, y) -> CAST(CASE WHEN x.d < y.d THEN -1 "
             f"WHEN x.d > y.d THEN 1 ELSE x.j - y.j END AS INT))[0].j"
         )
-    return "array(" + ",".join(codes) + ")"
+    return F.expr("array(" + ",".join(codes) + ")")
 
 
-def _pq_lut_sql(vec_ref: str, codebooks: list) -> str:
-    """SQL text of :func:`pq_lut_expr` — one transform per subspace
-    over the packed centroid matrix, same fold per entry."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    parts = []
-    for s in range(m):
-        sub = f"slice({vec_ref}, {s * d_sub + 1}, {d_sub})"
-        parts.append(
-            f"transform({_sql_mat(codebooks[s])}, cv -> {_sql_l2sq_fold(sub, 'cv')})"
-        )
-    return "array(" + ",".join(parts) + ")"
-
-
-def _pq_adc_sql(vec_ref: str, code_ref: str, codebooks: list) -> str:
-    """SQL text of :func:`pq_adc_expr` — 0.0D seed then left-to-right
-    adds of the per-subspace folds, identical term order."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    total = "0.0D"
-    for s in range(m):
-        sub = f"slice({vec_ref}, {s * d_sub + 1}, {d_sub})"
-        cv = f"element_at({_sql_mat(codebooks[s])}, {code_ref}[{s}] + 1)"
-        total = f"{total} + {_sql_l2sq_fold(sub, cv)}"
-    return total
-
-
-def _pq_decode_sql(code_ref: str, codebooks: list) -> str:
-    """SQL text of :func:`pq_decode_expr` — concat of the selected
-    centroid per subspace (same element values; concat is
-    order-preserving so n-ary vs chained binary is immaterial)."""
-    m = len(codebooks)
-    parts = [
-        f"element_at({_sql_mat(codebooks[s])}, {code_ref}[{s}] + 1)"
-        for s in range(m)
-    ]
-    return parts[0] if m == 1 else "concat(" + ",".join(parts) + ")"
-
-
-def _pq_adc_from_lut_sql(lut_ref: str, code_ref: str, m: int) -> str:
-    """SQL text of :func:`pq_adc_from_lut` — same left-to-right adds."""
-    total = "0.0D"
-    for s in range(m):
-        total = f"{total} + element_at({lut_ref}[{s}], {code_ref}[{s}] + 1)"
-    return total
-
-
-def _l2sq_fold(a: Column, b: Column) -> Column:
-    """||a − b||² as a left-to-right fold — the ONE squared-distance
-    construction every PQ expression uses (same term order everywhere,
-    mirrored by queries._pq_sub_dist_sql)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def pq_code_expr(vec: Column | str, codebooks: list) -> Column:
-    """Encode ``vec`` (array<double>) to its PQ code — array<int> of
-    length m, ``code[s]`` = index of subspace s's nearest centroid by
-    L2 (index tie-break).  The codebooks ride as PLAN LITERALS, so
-    encoding the full corpus is a pure zero-shuffle projection — the
-    same scale mechanism as ``assign_lists`` / ``sq8_quantize``: the
-    100 TB corpus is written once as m bytes per vector.
-
-    ``vec`` as a str (column name / SQL fragment) takes the SQL-text
-    fast path — one JVM parse instead of hundreds of py4j calls;
-    tests pin the two paths result-identical."""
-    if isinstance(vec, str):
-        return F.expr(_pq_code_sql(vec, codebooks))
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    codes = []
-    for s in range(m):
-        sub = F.slice(vec, s * d_sub + 1, d_sub)
-        # r13: the subspace's centroids ride as ONE packed literal
-        # (_pq_cents_lit) zipped against small per-index j literals —
-        # same (d, j) structs, same fold, same comparator; the j
-        # literals stay individual int nodes so the struct field type
-        # matches the old construction exactly
-        idxs = F.array(*[F.lit(j) for j in range(len(codebooks[s]))])
-        # single-param lambda: PySpark treats a 2-param lambda as
-        # (element, index) and would pass the INDEX into zip_with;
-        # the expression is built eagerly, so closing over the loop's
-        # `sub` is safe
-        scored = F.zip_with(
-            _pq_cents_lit(codebooks, s),
-            idxs,
-            lambda cv, j: F.struct(
-                _l2sq_fold(sub, cv).alias("d"),
-                j.alias("j"),
-            ),
-        )
-        best = F.array_sort(
-            scored,
-            lambda x, y: F.when(x["d"] < y["d"], F.lit(-1))
-            .when(x["d"] > y["d"], F.lit(1))
-            .otherwise(x["j"] - y["j"])
-            .cast("int"),
-        )[0]["j"]
-        codes.append(best)
-    return F.array(*codes)
-
-
-def pq_adc_expr(vec: Column | str, code: Column | str, codebooks: list) -> Column:
+def pq_adc_expr(vec: str, code: str, codebooks: list) -> Column:
     """Asymmetric-distance computation: ||q − decode(code)||² as the
     sum of per-subspace lookup terms — LUT_s[j] = ||q_sub − c_sj||²
-    evaluated against the literal codebooks, selected by ``code[s]``.
-    This is the per-subspace-partials formulation (ADC proper); its
-    float addition order differs from a whole-vector fold, which is
-    exactly what ``q_emb_pq_train_report``'s consistency flag
-    exploits to verify the lookup path against a direct decode.
-    str refs take the SQL-text fast path (both must be str then)."""
-    if isinstance(vec, str) and isinstance(code, str):
-        return F.expr(_pq_adc_sql(vec, code, codebooks))
+    evaluated against the literal codebooks, selected by ``code[s]``,
+    added to a 0.0D seed left to right.  This is the
+    per-subspace-partials formulation (ADC proper); its float addition
+    order differs from a whole-vector fold, which is exactly what
+    ``q_emb_pq_train_report``'s consistency flag exploits to verify
+    the lookup path against a direct decode.  ``vec`` and ``code``
+    are SQL text."""
     m = len(codebooks)
     d_sub = len(codebooks[0][0])
-    total = F.lit(0.0)
+    total = "0.0D"
     for s in range(m):
-        sub = F.slice(vec, s * d_sub + 1, d_sub)
-        cv = F.element_at(_pq_cents_lit(codebooks, s), code[s] + 1)
-        total = total + _l2sq_fold(sub, cv)
-    return total
+        sub = f"slice({vec}, {s * d_sub + 1}, {d_sub})"
+        cv = f"element_at({_sql_mat(codebooks[s])}, {code}[{s}] + 1)"
+        total = f"{total} + {_sql_l2sq_fold(sub, cv)}"
+    return F.expr(total)
 
 
-def pq_lut_expr(vec: Column | str, codebooks: list) -> Column:
+def pq_lut_expr(vec: str, codebooks: list) -> Column:
     """Per-QUERY ADC lookup table — LUT[s][j] = ||q_sub_s − c_sj||²,
     an array<array<double>> computed ONCE per query row (m·k folds).
     This is ADC as Jégou et al. actually run it: the query pays the
     table build once, and every candidate pair is then m array
     lookups instead of m·d_sub multiply-adds (pq_adc_from_lut).  Each
-    entry is the SAME _l2sq_fold over the same elements in the same
-    order as pq_adc_expr's inline form, so selecting LUT[s][code_s]
-    is bit-identical to computing the term per pair — the oracle SQL
-    (queries._pq_adc_sql) needs no change.  A str ``vec`` takes the
-    SQL-text fast path."""
-    if isinstance(vec, str):
-        return F.expr(_pq_lut_sql(vec, codebooks))
+    entry is the SAME ``_sql_l2sq_fold`` over the same elements in the
+    same order as pq_adc_expr's inline form, so selecting
+    LUT[s][code_s] is bit-identical to computing the term per pair —
+    the oracle SQL (queries._pq_adc_sql) needs no change.  ``vec`` is
+    SQL text."""
     m = len(codebooks)
     d_sub = len(codebooks[0][0])
-
-    # one-arg closure per subspace: a two-parameter lambda would be
-    # treated by Spark as the (element, index) form, hijacking ``s``
-    def _sub_dists(s: int):
-        sub = F.slice(vec, s * d_sub + 1, d_sub)
-        return lambda cv: _l2sq_fold(sub, cv)
-
-    return F.array(*[
-        F.transform(_pq_cents_lit(codebooks, s), _sub_dists(s))
-        for s in range(m)
-    ])
-
-
-def pq_adc_from_lut(lut: Column | str, code: Column | str, m: int) -> Column:
-    """ADC from a precomputed per-query LUT: Σ_s LUT[s][code_s],
-    partials added left-to-right — the pair-scoring half of
-    pq_lut_expr, bit-identical to pq_adc_expr.  str refs take the
-    SQL-text fast path (both must be str then)."""
-    if isinstance(lut, str) and isinstance(code, str):
-        return F.expr(_pq_adc_from_lut_sql(lut, code, m))
-    total = F.lit(0.0)
+    parts = []
     for s in range(m):
-        total = total + F.element_at(lut[s], code[s] + 1)
-    return total
+        sub = f"slice({vec}, {s * d_sub + 1}, {d_sub})"
+        parts.append(
+            f"transform({_sql_mat(codebooks[s])}, cv -> {_sql_l2sq_fold(sub, 'cv')})"
+        )
+    return F.expr("array(" + ",".join(parts) + ")")
+
+
+def pq_adc_from_lut(lut: str, code: str, m: int) -> Column:
+    """ADC from a precomputed per-query LUT: Σ_s LUT[s][code_s],
+    partials added to a 0.0D seed left to right — the pair-scoring
+    half of pq_lut_expr, bit-identical to pq_adc_expr.  ``lut`` and
+    ``code`` are SQL text."""
+    total = "0.0D"
+    for s in range(m):
+        total = f"{total} + element_at({lut}[{s}], {code}[{s}] + 1)"
+    return F.expr(total)
 
 
 def pq_adc_rank(cand: DataFrame, q_lut: DataFrame, m: int, k_nn: int = 5,
@@ -1312,21 +1170,15 @@ def ivf_rank_topk(cand_lists: DataFrame, q_lists: DataFrame, k: int = 5,
     )
 
 
-def pq_decode_expr(code: Column | str, codebooks: list) -> Column:
+def pq_decode_expr(code: str, codebooks: list) -> Column:
     """Reconstruct the quantized vector: concat of the selected
-    centroid per subspace (array<double> of the original dim).
-    A str ``code`` takes the SQL-text fast path."""
-    if isinstance(code, str):
-        return F.expr(_pq_decode_sql(code, codebooks))
-    m = len(codebooks)
+    centroid per subspace, in subspace order (array<double> of the
+    original dim).  ``code`` is SQL text."""
     parts = [
-        F.element_at(_pq_cents_lit(codebooks, s), code[s] + 1)
-        for s in range(m)
+        f"element_at({_sql_mat(cb)}, {code}[{s}] + 1)"
+        for s, cb in enumerate(codebooks)
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = F.concat(out, p)
-    return out
+    return F.expr(parts[0] if len(parts) == 1 else "concat(" + ",".join(parts) + ")")
 
 
 def pq_det_codebooks(m: int = 4, k: int = 16, d_sub: int = 16,

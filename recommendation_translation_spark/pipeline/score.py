@@ -44,9 +44,11 @@ def _score_one(features: DataFrame, site: str,
     target site (``exists=False``, the reference behavior); prediction
     column named after the site.  ``exists=None`` scores every item."""
     work = get_work_data(features, site, exists=exists)
-    model = model.copy()  # setPredictionCol mutates; leave the caller's model as given
-    model.setPredictionCol(site)
-    return model.transform(work).select("id", site)  # P5 column prune
+    # the projection names the prediction after the site, so the
+    # caller's model is used as given, with no per-site copy
+    return model.transform(work).select(  # P5 column prune
+        "id", F.col(model.getPredictionCol()).alias(site)
+    )
 
 
 def score_items(

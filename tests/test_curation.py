@@ -29,19 +29,21 @@ def _union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def _check(spark, pairs: list[tuple[int, int]]):
-    df = spark.createDataFrame(pairs, ["a_id", "b_id"])
+def _check(spark, pairs: list[tuple[int | None, int | None]]):
+    df = spark.createDataFrame(pairs, "a_id long, b_id long")
     # default (size-gated driver union-find for small edge sets) AND
     # the forced distributed pointer-jumping path must BOTH equal the
-    # reference union-find — the round-10 adaptive gate may never
-    # change labels, only job counts
+    # reference union-find over the pairs without a NULL endpoint —
+    # the round-10 adaptive gate may never change labels, only job
+    # counts
+    want = _union_find([(a, b) for a, b in pairs if None not in (a, b)])
     got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df).collect()}
-    assert got == _union_find(pairs)
+    assert got == want
     got_dist = {
         r["doc_id"]: r["cluster_id"]
         for r in dup_clusters(df, driver_threshold=0).collect()
     }
-    assert got_dist == _union_find(pairs)
+    assert got_dist == want
 
 
 def test_clusters_chain(spark):
@@ -63,6 +65,31 @@ def test_clusters_cliques_and_singletons(spark):
     pairs += [(10 + a, 10 + b) for a in range(4) for b in range(a + 1, 4)]
     pairs += [(100, 101)]
     _check(spark, pairs)
+
+
+def test_clusters_duplicates_self_loops_and_nulls(spark):
+    # the driver union-find reads the raw pairs, the distributed path
+    # their symmetrized distinct edges: duplicate pairs, reversed
+    # duplicates, self-loops and NULL endpoints change neither
+    pairs = [(1, 2), (1, 2), (2, 1), (2, 8), (3, 3), (3, 4), (4, 3),
+             (5, 5), (5, 5), (6, None), (None, 7), (None, None), (9, 3)]
+    _check(spark, pairs)
+
+
+def test_clusters_gate_counts_fetched_pairs(spark):
+    # at the gate the driver path runs; one pair past it the
+    # distributed path does — same labels either way
+    from recommendation_translation_spark.plans.checks import physical_plan
+
+    pairs = [(i, i + 1) for i in range(0, 20, 2)] + [(0, 1)] * 5
+    df = spark.createDataFrame(pairs, "a_id long, b_id long")
+    want = _union_find(pairs)
+    for threshold, on_driver in ((len(pairs), True), (len(pairs) - 1, False)):
+        out = dup_clusters(df, driver_threshold=threshold)
+        # the driver path returns its labels as a local relation
+        plan = physical_plan(out, mode="simple")
+        assert ("LocalTableScan" in plan) == on_driver, plan
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == want
 
 
 def test_clusters_empty_input_has_nonempty_schema(spark):

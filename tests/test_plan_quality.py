@@ -9,8 +9,10 @@ when sf0.01 results still match.
 
 from __future__ import annotations
 
+import ast
 import inspect
 import re
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -1188,6 +1190,77 @@ def test_catalog_table_reads_go_through_read_table():
         assert not bypasses, f"{mod.__name__}: {bypasses}"
 
 
+_SQL_TEXT_BUILDERS = {
+    "pq_code_expr", "pq_lut_expr", "pq_adc_expr", "pq_adc_from_lut",
+    "pq_decode_expr", "hyperplane_bits", "_simhash_sum_expr",
+}
+
+
+def _called_name(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    return f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _isinstance_forks(source: str) -> list[int]:
+    """Line numbers of the ``isinstance(`` calls in ``source``."""
+    return [
+        n.lineno for n in ast.walk(ast.parse(textwrap.dedent(source)))
+        if isinstance(n, ast.Call) and _called_name(n) == "isinstance"
+    ]
+
+
+def _column_builder_calls(source: str) -> list[int]:
+    """Line numbers of the SQL-text builder calls in ``source`` that
+    pass a ``col(…)`` Column anywhere in their arguments."""
+    out = []
+    for n in ast.walk(ast.parse(source)):
+        if isinstance(n, ast.Call) and _called_name(n) in _SQL_TEXT_BUILDERS:
+            args = [*n.args, *(k.value for k in n.keywords)]
+            if any(isinstance(m, ast.Call) and _called_name(m) == "col"
+                   for a in args for m in ast.walk(a)):
+                out.append(n.lineno)
+    return sorted(out)
+
+
+def test_expression_builders_take_sql_text_only():
+    """The PQ, hyperplane and simhash expression builders have one
+    spelling: SQL text in, one ``F.expr`` out.  None of them forks on
+    its argument's type, and no package call site hands one a
+    Column."""
+    import pathlib
+
+    import recommendation_translation_spark as pkg
+    from recommendation_translation_spark.operators import dedup, similarity
+
+    planted_fork = (
+        "def pq_code_expr(vec, codebooks):\n"
+        "    if isinstance(vec, str):\n"
+        "        return F.expr(vec)\n"
+        "    return vec\n"
+    )
+    assert _isinstance_forks(planted_fork) == [2]
+    planted_calls = (
+        'a = df.select(pq_code_expr("v", cb))\n'
+        'b = df.select(S.pq_lut_expr(F.col("v"), cb))\n'
+        "c = pq_adc_expr(\n"
+        '    "v",\n'
+        '    F.col("code"),\n'
+        "    cb,\n"
+        ")\n"
+    )
+    assert _column_builder_calls(planted_calls) == [2, 3]
+
+    for name in sorted(_SQL_TEXT_BUILDERS):
+        fn = getattr(similarity, name, None) or getattr(dedup, name)
+        assert not _isinstance_forks(inspect.getsource(fn)), name
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        calls = _column_builder_calls(path.read_text())
+        assert not calls, f"{path.relative_to(root)}: lines {calls}"
+
+
 # ---------------------------------------------------------------------------
 # round-4 families: shuffle floors
 # ---------------------------------------------------------------------------
@@ -1424,7 +1497,7 @@ def test_ivfpq_append_batch_encode_touches_only_batch(spark):
         F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
     ).withColumn("nrm", l2_norm(F.col("cvec")))
     enc = assign_lists(ncand, cent_arr, "cand_id", "cvec", 1).select(
-        "cand_id", pq_code_expr(F.col("cvec"), cb).alias("code"), "list_label"
+        "cand_id", pq_code_expr("cvec", cb).alias("code"), "list_label"
     )
     plan = physical_plan(enc, mode="simple")
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
@@ -1500,7 +1573,7 @@ def test_compact_partitioned_preserves_layout_and_dpp(spark):
     q = _queries_frame(emb).select(
         "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
     ).withColumn("nrm", l2_norm(F.col("qvec")))
-    q_lut = q.select("query_id", pq_lut_expr(F.col("qvec"), cb).alias("lut"))
+    q_lut = q.select("query_id", pq_lut_expr("qvec", cb).alias("lut"))
     q_probe = assign_lists(q, cent_arr, "query_id", "qvec", 2).select(
         "query_id", "list_label"
     ).join(q_lut, "query_id")

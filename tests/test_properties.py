@@ -1091,7 +1091,7 @@ def test_pq_encode_decode_adc_identities(spark):
     coded = emb.select(
         "vec_id",
         F.col("embedding").alias("vec"),
-        pq_code_expr(F.col("embedding"), codebooks).alias("code"),
+        pq_code_expr("embedding", codebooks).alias("code"),
     )
     got1 = {r.vec_id: list(r.code) for r in coded.collect()}
     got2 = {r.vec_id: list(r.code) for r in coded.collect()}
@@ -1105,11 +1105,11 @@ def test_pq_encode_decode_adc_identities(spark):
 
     checked = coded.select(
         F.abs(
-            pq_adc_expr(F.col("vec"), F.col("code"), codebooks)
+            pq_adc_expr("vec", "code", codebooks)
             - F.aggregate(
                 F.zip_with(
                     F.col("vec"),
-                    pq_decode_expr(F.col("code"), codebooks),
+                    pq_decode_expr("code", codebooks),
                     lambda a, b: (a - b) * (a - b),
                 ),
                 F.lit(0.0),
@@ -1122,12 +1122,8 @@ def test_pq_encode_decode_adc_identities(spark):
     # a concatenation of per-subspace centroids quantizes to itself
     centroid_vec = codebooks[0][1] + codebooks[1][2]
     cdf = spark.createDataFrame([(0, centroid_vec)], "vec_id long, embedding array<double>")
-    r = cdf.select(
-        pq_adc_expr(
-            F.col("embedding"),
-            pq_code_expr(F.col("embedding"), codebooks),
-            codebooks,
-        ).alias("d")
+    r = cdf.withColumn("code", pq_code_expr("embedding", codebooks)).select(
+        pq_adc_expr("embedding", "code", codebooks).alias("d")
     ).collect()[0]
     assert r.d < 1e-12
 
@@ -1143,7 +1139,7 @@ def test_pq_encode_decode_adc_identities(spark):
 def test_pq_lut_adc_bit_identical_to_inline(spark, vec, code):
     """The per-query ADC lookup table (pq_lut_expr + pq_adc_from_lut,
     the round-8 scoring rewrite) must equal the inline per-pair fold
-    (pq_adc_expr) BIT-FOR-BIT — each LUT entry is the same _l2sq_fold
+    (pq_adc_expr) BIT-FOR-BIT — each LUT entry is the same _sql_l2sq_fold
     over the same elements in the same order, and the oracle SQL
     (_pq_adc_sql) mirrors that order, so any reassociation here would
     surface as a driver hash mismatch at 6dp rounding boundaries."""
@@ -1158,11 +1154,9 @@ def test_pq_lut_adc_bit_identical_to_inline(spark, vec, code):
     df = spark.createDataFrame(
         [(vec, code)], "v array<double>, code array<int>"
     )
-    row = df.select(
-        pq_adc_expr(F.col("v"), F.col("code"), cb).alias("inline"),
-        pq_adc_from_lut(
-            pq_lut_expr(F.col("v"), cb), F.col("code"), 2
-        ).alias("lut"),
+    row = df.withColumn("lut", pq_lut_expr("v", cb)).select(
+        pq_adc_expr("v", "code", cb).alias("inline"),
+        pq_adc_from_lut("lut", "code", 2).alias("lut"),
     ).collect()[0]
     assert row.inline == row.lut  # exact float equality, not approx
 
@@ -1889,55 +1883,189 @@ def test_ngram_containment_collapse_path_identical(spark):
     assert (1, 3, 1.0) in got and (3, 1, 1.0) in got
 
 
-def test_sql_text_builders_match_column_builders(spark):
-    """r13: the SQL-text fast paths of the similarity expression
-    builders (str column refs -> one JVM-parsed F.expr) must produce
-    results AND schemas identical to the legacy Column paths — the
-    hash-exact oracle gate leans on this equivalence."""
-    from pyspark.sql import functions as F
+# Pure-Python references for the SQL-text expression builders of
+# operators.similarity and operators.dedup.  Each does the same left
+# folds in the same element order on IEEE doubles as the SQL the
+# builder emits, so the pins below compare with ``==``.
 
+
+def _ref_fold(terms) -> float:
+    """``aggregate(…, 0.0D, (acc, x) -> acc + x)``: left fold from 0.0."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def _ref_l2sq(a, b) -> float:
+    return _ref_fold((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _ref_subvecs(vec, codebooks):
+    d_sub = len(codebooks[0][0])
+    return [vec[s * d_sub:(s + 1) * d_sub] for s in range(len(codebooks))]
+
+
+def _ref_pq_code(vec, codebooks):
+    # nearest centroid per subspace, the lower index winning a tie
+    return [
+        min(range(len(cb)), key=lambda j: (_ref_l2sq(sub, cb[j]), j))
+        for sub, cb in zip(_ref_subvecs(vec, codebooks), codebooks)
+    ]
+
+
+def _ref_pq_lut(vec, codebooks):
+    return [
+        [_ref_l2sq(sub, cv) for cv in cb]
+        for sub, cb in zip(_ref_subvecs(vec, codebooks), codebooks)
+    ]
+
+
+def _ref_pq_adc(vec, code, codebooks) -> float:
+    return _ref_fold(
+        _ref_l2sq(sub, cb[c])
+        for sub, cb, c in zip(_ref_subvecs(vec, codebooks), codebooks, code)
+    )
+
+
+def _ref_pq_adc_from_lut(lut, code) -> float:
+    return _ref_fold(row[c] for row, c in zip(lut, code))
+
+
+def _ref_pq_decode(code, codebooks):
+    return [x for cb, c in zip(codebooks, code) for x in cb[c]]
+
+
+def _ref_hyperplane_bits(vec, n_bits: int, dim: int, seed: str) -> int:
+    from recommendation_translation_spark.operators.similarity import (
+        hyperplane_weight,
+    )
+
+    bucket = 0
+    for i in range(n_bits):
+        w = [hyperplane_weight(i, j, seed) for j in range(dim)]
+        # zip_with pads the shorter array with NULL, which makes the
+        # projection NULL and the bit 0
+        if len(vec) == dim and _ref_fold(x * y for x, y in zip(vec, w)) > 0:
+            bucket += 2 ** i
+    return bucket
+
+
+def _ref_simhash(n: int, hl, hh, bits: int) -> int:
+    sig = 0
+    for b in range(bits):
+        src = hl if b < 32 else hh
+        ones = sum(1 for h in src if (h >> (b % 32)) & 1 == 1)
+        if ones * 2 > n:
+            # bit 63 is the long's sign bit: its weight is −2⁶³
+            sig += -(2 ** 63) if b == 63 else 2 ** b
+    return sig
+
+
+def _ref_vectors() -> list[list[float]]:
+    import random
+
+    rng = random.Random(11)
+    rows = [
+        [((i * 31 + j * 7) % 2001 - 1000) / 1000.0 for j in range(64)]
+        for i in range(30)
+    ]
+    rows += [[rng.gauss(0.0, 0.2) for _ in range(64)] for _ in range(30)]
+    return rows
+
+
+def test_pq_builders_match_python_reference(spark):
+    """pq_code_expr, pq_lut_expr, pq_adc_expr, pq_adc_from_lut and
+    pq_decode_expr equal the pure-Python folds bit-for-bit — the
+    hash-exact oracle rows (emb_pq_*, ivfpq) lean on these exact
+    doubles and on the index tie-break."""
     from recommendation_translation_spark.operators import similarity as S
 
-    rows = [
-        (i, [((i * 31 + j * 7) % 2001 - 1000) / 1000.0 for j in range(64)])
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
     cb = S.pq_det_codebooks(m=4, k=16, d_sub=16)
     cb8 = S.pq_det_codebooks(m=8, k=16, d_sub=8)
+    # duplicated centroids: in every subspace centroid 15 equals
+    # centroid 0 and centroid 9 equals centroid 4, so a vector built
+    # from centroid 0 or 4 is at distance 0 from two centroids and the
+    # index tie-break picks the code
+    tie = [[*sub[:9], sub[4], *sub[10:15], sub[0]] for sub in cb]
+    vecs = _ref_vectors() + [
+        [x for sub in tie for x in sub[0]],
+        [x for sub in tie for x in sub[4]],
+    ]
+    assert _ref_pq_code(vecs[-2], tie) == [0] * 4
+    assert _ref_pq_code(vecs[-1], tie) == [4] * 4
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, v array<double>")
 
-    def check(a, b):
-        assert a.schema == b.schema
-        assert a.exceptAll(b).count() + b.exceptAll(a).count() == 0
+    for c in (cb, cb8, tie):
+        out = (
+            df.withColumn("code", S.pq_code_expr("v", c))
+            .withColumn("lut", S.pq_lut_expr("v", c))
+            .select(
+                "vec_id", "code", "lut",
+                S.pq_adc_expr("v", "code", c).alias("adc"),
+                S.pq_adc_from_lut("lut", "code", len(c)).alias("adc_lut"),
+                S.pq_decode_expr("code", c).alias("dec"),
+            )
+        )
+        types = {f.name: f.dataType.simpleString() for f in out.schema}
+        assert types == {
+            "vec_id": "bigint", "code": "array<int>",
+            "lut": "array<array<double>>", "adc": "double",
+            "adc_lut": "double", "dec": "array<double>",
+        }
+        rows = out.collect()
+        assert len(rows) == len(vecs)
+        for r in rows:
+            v = vecs[r.vec_id]
+            code = _ref_pq_code(v, c)
+            lut = _ref_pq_lut(v, c)
+            assert list(r.code) == code, r.vec_id
+            assert [list(x) for x in r.lut] == lut, r.vec_id
+            assert r.adc == _ref_pq_adc(v, code, c), r.vec_id
+            assert r.adc_lut == _ref_pq_adc_from_lut(lut, code), r.vec_id
+            assert list(r.dec) == _ref_pq_decode(code, c), r.vec_id
 
-    for c in (cb, cb8):
-        check(df.select("vec_id", S.pq_code_expr(F.col("v"), c).alias("x")),
-              df.select("vec_id", S.pq_code_expr("v", c).alias("x")))
-    check(df.select("vec_id", S.pq_lut_expr(F.col("v"), cb).alias("x")),
-          df.select("vec_id", S.pq_lut_expr("v", cb).alias("x")))
-    coded = df.withColumn("code", S.pq_code_expr("v", cb))
-    check(coded.select("vec_id", S.pq_adc_expr(F.col("v"), F.col("code"), cb).alias("x")),
-          coded.select("vec_id", S.pq_adc_expr("v", "code", cb).alias("x")))
-    check(coded.select("vec_id", S.pq_decode_expr(F.col("code"), cb).alias("x")),
-          coded.select("vec_id", S.pq_decode_expr("code", cb).alias("x")))
-    lutd = coded.withColumn("lut", S.pq_lut_expr("v", cb))
-    check(lutd.select("vec_id", S.pq_adc_from_lut(F.col("lut"), F.col("code"), 4).alias("x")),
-          lutd.select("vec_id", S.pq_adc_from_lut("lut", "code", 4).alias("x")))
+
+def test_hyperplane_bits_match_python_reference(spark):
+    """hyperplane_bits equals the sign bits of the pure-Python
+    projections onto hyperplane_weight, bit i weighted 2**i; a vector
+    of the wrong length projects to NULL and gets bucket 0."""
+    from recommendation_translation_spark.operators.similarity import (
+        hyperplane_bits,
+        hyperplane_weight,
+    )
+
+    # a fold-order probe for hyperplane 0: w[28] and w[62] have equal
+    # magnitude, so the two 1e20 terms cancel exactly, and the tiny last
+    # term decides the bit only when it is added after them
+    w = [hyperplane_weight(0, j, "hp1") for j in range(64)]
+    probe = [0.0] * 64
+    probe[28] = 1e20
+    probe[62] = -1e20 * w[28] / w[62]
+    probe[63] = 1e-10 if w[63] > 0 else -1e-10
+    terms = [x * y for x, y in zip(probe, w)]
+    assert _ref_fold(terms) > 0 >= _ref_fold(reversed(terms))
+    vecs = _ref_vectors() + [probe, [0.5] * 63]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, v array<double>")
     for nb in (1, 4, 12):
-        check(df.select("vec_id", S.hyperplane_bits(F.col("v"), nb, 64, seed="hp1").alias("x")),
-              df.select("vec_id", S.hyperplane_bits("v", nb, 64, seed="hp1").alias("x")))
+        out = df.select("vec_id", hyperplane_bits("v", nb, 64, seed="hp1").alias("x"))
+        assert out.schema["x"].dataType.simpleString() == "bigint"
+        got = {r.vec_id: r.x for r in out.collect()}
+        want = {
+            i: _ref_hyperplane_bits(v, nb, 64, "hp1") for i, v in enumerate(vecs)
+        }
+        assert got == want, nb
+        assert len(set(want.values())) > 1, nb
+    assert want[len(vecs) - 1] == 0
 
 
-def test_simhash_sql_fold_matches_column_fold(spark):
-    """r13: the simhash signature fold's SQL-text fast path must equal
-    the legacy Column fold bit-for-bit at both widths — including the
-    sign-bit (−2⁶³) weight at bits=64 and the zero-token no-row rule.
-    Same pinning discipline as the similarity builder test above."""
-    from pyspark.sql import functions as F
-
+def test_simhash_fold_matches_python_vote(spark):
+    """simhash's signature fold equals the pure-Python bit vote over the
+    same hashed token arrays at both widths — including the −2⁶³
+    weight at bit 63 and the zero-token no-row rule."""
     from recommendation_translation_spark.operators.dedup import (
-        _simhash_sum_expr,
         normalize_text,
+        simhash,
     )
     from recommendation_translation_spark.operators.text import (
         cross_engine_hash,
@@ -1952,22 +2080,27 @@ def test_simhash_sql_fold_matches_column_fold(spark):
         (4, "ALL CAPS   with   runs    of whitespace"),
         (5, "unicode tökens und ümlaute everywhere"),
         (6, "a"),
+        (7, "   "),
+        (8, "two words"),
+        (9, "near duplicate detection with simhash signatures"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     toks = tokens(normalize_text("text"))
-    base = df.filter(F.size(toks) > 0).select(
+    arrays = df.select(
         "doc_id",
-        F.size(toks).alias("_n"),
-        F.transform(toks, lambda t: cross_engine_hash(t, seed="sh")).alias("_hl"),
-        F.transform(toks, lambda t: cross_engine_hash_hi(t, seed="sh")).alias("_hh"),
-    )
+        F.size(toks).alias("n"),
+        F.transform(toks, lambda t: cross_engine_hash(t, seed="sh")).alias("hl"),
+        F.transform(toks, lambda t: cross_engine_hash_hi(t, seed="sh")).alias("hh"),
+    ).collect()
     for bits in (32, 64):
-        a = base.select("doc_id", _simhash_sum_expr(bits).alias("s"))
-        b = base.select(
-            "doc_id", _simhash_sum_expr(bits, via_sql=False).alias("s")
-        )
-        assert a.schema == b.schema
-        assert a.exceptAll(b).count() + b.exceptAll(a).count() == 0
+        got = {r.doc_id: r.simhash for r in simhash(df, bits=bits).collect()}
+        want = {
+            a.doc_id: _ref_simhash(a.n, a.hl, a.hh, bits)
+            for a in arrays if a.n > 0
+        }
+        assert 7 not in want
+        assert got == want, bits
+    assert any(s < 0 for s in want.values())  # some signature sets bit 63
 
 
 def test_minhash_sql_aggs_match_column_aggs(spark):
@@ -2036,9 +2169,10 @@ def test_minhash_sql_aggs_match_column_aggs(spark):
 
 
 def test_packed_sql_literals_match_column_literals(spark):
-    """r14: centroid_rows_literal / _pq_cents_lit / hyperplane_bits'
-    packed matrices now parse as ONE SQL array literal; values and
-    schemas must equal the F.lit(list) construction exactly (repr ->
+    """r14: centroid_rows_literal and the PQ builders' packed
+    matrices parse as ONE SQL array literal; values and schemas must
+    equal the F.lit(list) construction exactly, and the PQ literal must
+    read back as the exact Python doubles (repr ->
     Double.parseDouble is an exact IEEE-754 round-trip)."""
     from pyspark.sql import functions as F
 
@@ -2067,10 +2201,8 @@ def test_packed_sql_literals_match_column_literals(spark):
     ta = {f.name: f.dataType for f in lit_df.schema}
     assert ta["a"] == ta["b"]
 
+    # the PQ builders' packed codebook literal reads back as the exact
+    # Python doubles
     cb = S.pq_det_codebooks(m=2, k=4, d_sub=3)
-    pq_df = spark.range(1).select(
-        S._pq_cents_lit(cb, 0).alias("a"),
-        F.lit([[float(x) for x in cb[0][j]] for j in range(len(cb[0]))]).alias("b"),
-    )
-    row = pq_df.collect()[0]
-    assert row["a"] == row["b"]
+    row = spark.range(1).select(F.expr(S._sql_mat(cb[0])).alias("a")).collect()[0]
+    assert [list(r) for r in row["a"]] == cb[0]

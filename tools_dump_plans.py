@@ -18,6 +18,11 @@ import sys
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [ROOT]
+# Spark's Python workers (q_pysource_scan's data source) import the
+# package too; they see PYTHONPATH, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from recommendation_translation_spark.plans.checks import physical_plan  # noqa: E402
 from recommendation_translation_spark.queries import QUERIES  # noqa: E402
