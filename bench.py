@@ -2,23 +2,37 @@
 """Benchmark harness: runs the full declared query set (the same
 ``queries()`` map the driver smoke-checks) against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints two JSON lines, the full map
 
     {"metric": "sum_query_sec", "value": N, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1, "schema_version": 2}
+     "queries": {"q": sec, ...}, "sf": 0.1, "schema_version": 3}
 
-Schema v2 (round-6 ADVICE #1): the headline key is named for what it
-measures — ``sum_query_sec`` is the sum of recorded per-query times
-(each possibly the min of two runs under the quiet-host protocol);
-``loop_wall_sec`` is the raw loop wall clock including re-measures.
-v1 sidecars called the former ``total_wall_sec``, silently changing
-its meaning when the quiet-host protocol landed — do not compare a v1
-``total_wall_sec`` against a v2 ``sum_query_sec`` without noting the
-definitions.
+and, last, a bounded summary line (``"summary_line": true``).
 
-Each query is materialized with ``df.count()`` (full plan execution,
-no driver-side collect of the payload).  BASELINE.md records the first
-run; later runs must stay within 2x.
+Usage: ``python bench.py [query ...]`` (a subset when names are given).
+
+Rows are measured by the shared rule in
+``recommendation_translation_spark/bench_common.py``, after the shared
+untimed warmup and the host probe: each row's build plus ``count()``
+(full plan execution, no driver-side collect of the payload), timed
+steal-adjusted, a failed attempt retried once; at sf0.1 a row over 2x
+its reference (its BASELINE.md anchor x the clamped probe factor) is
+re-measured once at the end of the pass and the lower time kept.
+Other scale factors have no anchors, so every row is measured once.
+
+Schema v3: every row time is steal-adjusted — wall time scaled by the
+share of CPU the host's hypervisor did not steal — so ``sum_query_sec``
+reads what the rows take on an uncontended host;
+``sum_query_wall_sec`` is the same sum in raw wall time, ``steal_frac``
+the stolen share of the loop and ``loop_wall_sec`` the raw loop wall
+clock including re-measures.  v2 row times were raw wall times, each
+possibly the min of up to three runs under the earlier quiet-host
+protocol; v1 sidecars called the sum ``total_wall_sec``.  Do not
+compare sums across schema versions without noting the definitions.
+
+A full-catalog sf0.1 run also writes the ``BENCH_QUERIES.json``
+sidecar and compares every row with its anchor (probe-normalized and
+raw ratios); subset runs and other scale factors skip both.
 """
 
 from __future__ import annotations
@@ -27,7 +41,6 @@ import json
 import os
 import re
 import sys
-import time
 
 from recommendation_translation_spark.session import get_spark
 
@@ -39,289 +52,56 @@ def main() -> int:
 
     spark = get_spark(app_name="bench")
     import __spark_entry__ as entry_mod
-
-    # Untimed warmup (shared helper since round-11 — the host probe is
-    # context-sensitive, see bench_common.warmup): JVM/codegen, page
-    # cache, dominant plan shapes, the Python worker daemon, and the
-    # Arrow driver-collection path — one-time costs that would
-    # otherwise land on whichever query runs first.
-    from recommendation_translation_spark.bench_common import warmup
-
-    warmup(spark, sf_dir)
-
-    # HOST PROBE (round-10; shared helper since round-11 — ADVICE #3):
-    # a deterministic, data-independent CPU fingerprint recorded in the
-    # sidecar AND fed into the ratio math (round-11 verdict #3): the 2x
-    # fence and the quiet-host re-measure trigger compare against
-    # anchors recorded on a specific machine class, so a slower host
-    # inflated every raw ratio (round 10: 48 re-measures, 1.685
-    # headline at unchanged code).  Ratios are now reported BOTH raw
-    # and probe-normalized; the over-2x fence uses the normalized one.
     from recommendation_translation_spark.bench_common import (
-        host_probe as _host_probe,
-        probe_factor,
-        probe_factor_raw,
-        same_probe_class,
+        Timer,
+        anchor_factors,
+        host_probe,
+        measure_rows,
+        row_order,
+        row_runner,
+        warmup,
     )
 
-    host_probe = _host_probe(spark)
-    # factor vs the BASELINE.md anchor class (clamped, see bench_common);
-    # r14: the RAW factor rides beside it in the sidecar/summary so a
-    # clamp saturation is always visible (r13 verdict #7)
-    anchor_factor = probe_factor(host_probe)
-    anchor_factor_raw = probe_factor_raw(host_probe)
+    # the host probe is context-sensitive: it must run after the same
+    # warmup in every harness (see bench_common.warmup)
+    warmup(spark, sf_dir)
+    probe = host_probe(spark)
+    factors = anchor_factors(probe)
 
     qmap = entry_mod.queries()
-    only = sys.argv[1:]  # optional subset: bench.py q1 q2 ...
-    timings: dict[str, float] = {}
-    reruns: list[str] = []
-    # Quiet-host protocol (round-4 verdict #5): the committed
-    # BENCH_QUERIES.json still holds the PREVIOUS sidecar when this run
-    # starts — use its per-query ALL-TIME BEST map as the contention
-    # reference (falling back to the previous round's raw map for
-    # sidecars that predate the "best" key).  Comparing against the
-    # historical best rather than the previous round's numbers matters:
-    # one fully-contended round would otherwise poison the next round's
-    # trigger (every inflated prior makes the 1.5x test vacuous).  A
-    # query measuring >1.5x its best (plus a 0.2 s floor so sub-100 ms
-    # noise never triggers) is re-run once and the MIN of the two
-    # CURRENT measurements is recorded — a real regression reproduces
-    # and stays visible; a co-tenant CPU burst doesn't.  New queries
-    # (no prior) also get best-of-2 so a contended first measurement
-    # can't poison the recorded baseline.
-    # Queries that have repeatedly measured ~2-3x their quiet-host best
-    # under co-tenant load even when their prior is healthy (the 1.5x
-    # trigger only fires against an inflated FIRST measurement, not a
-    # merely-unlucky one): always take best-of-2 (round-5 verdict #6 —
-    # corpus_token_budget measured 2.66 s r3 / 2.94 s r5 vs 1.76 s
-    # quiet with an unchanged, audited-sound plan).
-    ALWAYS_BEST_OF_2 = {"corpus_token_budget"}
-    # Queries whose cost is a Python-side memo (the _ML_CACHE model
-    # store) are NEVER re-measured: their second run is warm through a
-    # mechanism clearCache cannot reach, so a best-of-2 min would hide
-    # the one-time training cost the row exists to measure (the cold
-    # BASELINE.md anchor for ml_train_rmse is ~9 s; the warm min was
-    # recording 0.36 s).
-    NEVER_REMEASURE = {"ml_train_rmse"}
-    prior: dict[str, float] = {}
-    prior_probe: dict[str, float] | None = None
-    prior_best_all: dict[str, float] = {}
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_QUERIES.json")) as fh:
-            side = json.load(fh)
-            prior = {
-                k: v
-                for k, v in (side.get("best") or side.get("queries", {})).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-            prior_best_all = {
-                k: v
-                for k, v in (side.get("best_all_hosts") or side.get("best")
-                             or side.get("queries", {})).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-            # probe class the "best" map belongs to: explicit key when
-            # present, else the run's own host_probe (pre-r11 sidecars)
-            prior_probe = side.get("best_probe") or side.get("host_probe")
-    except (OSError, ValueError):
-        pass
-    # Cross-host trigger normalization (round-11 verdict #3): the 1.5x
-    # re-measure trigger compares against the prior best map, which was
-    # recorded on the prior sidecar's machine class — scale it by the
-    # probe ratio so a host step doesn't fire ~50 spurious re-measures
-    # (round 10) or, on a faster host, mask a real regression.
-    prior_factor = probe_factor(host_probe, prior_probe) if prior_probe else 1.0
-    prior_raw = dict(prior)  # unscaled, for the per-class best merge
-    if prior_factor != 1.0:
-        prior = {k: round(v * prior_factor, 3) for k, v in prior.items()}
-        print(f"# prior best map scaled by probe factor {prior_factor} "
-              f"(host class change)", file=sys.stderr)
-    t_all = time.perf_counter()
-    # Sorted order, NOT dict order: the queries() dict rotates across
-    # rounds for the correctness driver's window, and per-query timings
-    # are only comparable round-over-round if every query keeps its
-    # position (the first heavy queries pay JIT/codegen warmup).
-    # Exception: ml_train_rmse runs before every other ml_* query —
-    # they share the memoized model cache, and training cost must land
-    # on the training row, not on whichever consumer sorts first.
-    names = sorted(qmap)
-    ml = [n for n in names if n.startswith("ml_")]
-    if "ml_train_rmse" in ml and ml[0] != "ml_train_rmse":
-        names.remove("ml_train_rmse")
-        names.insert(names.index(ml[0]), "ml_train_rmse")
-    def measure_once(fn):
-        """ONE cold measurement under the loop protocol (round-11
-        ADVICE #3: this block existed as three near-verbatim copies —
-        first run, quiet-host re-measure, backoff retry — so a hygiene
-        fix to one silently skipped the others).  Cache hygiene first:
-        operators cache internal frames (e.g. the shingle stream)
-        rebuilt per query, so earlier queries' entries are dead weight
-        that grows GC/memory pressure across the loop — one observed
-        symptom was a mid-panel query measuring 4x slow on BOTH its
-        runs yet normal in isolation; clearing costs microseconds.
-        Memory-sink tables from earlier streaming drains hold full
-        result sets in driver memory with no TTL (clearCache does not
-        touch temp views) — drop them too.  Returns (seconds, rows) on
-        success, (None, exception) on failure."""
-        from recommendation_translation_spark.streaming.events_stream import (
-            drop_memory_sink_tables,
-        )
+    only = sys.argv[1:]
+    names = row_order(n for n in qmap if not only or n in only)
+    base = _baseline_map() if sf == 0.1 else {}
+    reference = {
+        k: v * factors["anchor_probe_factor"] for k, v in base.items()
+    }
+    loop = Timer()
+    with loop.measure():
+        rows = measure_rows(names, row_runner(spark, sf_dir, qmap), reference)
+    timings = {n: r["sec"] for n, r in rows.items()}
+    reruns = sorted(n for n, r in rows.items() if r["remeasured"])
+    ok = [r for r in rows.values() if r["sec"] > 0]
+    total = round(sum(r["sec"] for r in ok), 3)
+    total_wall = round(sum(r["wall_sec"] for r in ok), 3)
+    loop_wall = round(loop.wall_s, 3)
+    steal = round(loop.steal_frac, 3)
 
-        spark.catalog.clearCache()
-        drop_memory_sink_tables(spark)
-        # r13: release the PREVIOUS queries' leaked blocks before
-        # timing.  localCheckpoint blocks are RDD-level state that
-        # clearCache cannot reach; they are freed by the ContextCleaner
-        # only after a JVM GC notices the dead references, which on a
-        # 48 g heap can lag dozens of queries — measured mid-loop rows
-        # at 2-5x their isolated cost (corpus_bpe_budget 13.6 s in-loop
-        # vs 2.6 s isolated) from exactly this accumulation.  A Python
-        # collect drops the py4j handles, then one explicit JVM GC lets
-        # the cleaner unpersist everything unreferenced.  Referenced
-        # state (the ml model memo) is untouched — GC frees garbage
-        # only — so no timed computation is ever satisfied from a
-        # prior run; this is the same between-query hygiene as
-        # clearCache, one layer lower.
-        import gc as _gc
-
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        try:
-            n = fn(spark, sf_dir).count()
-        except Exception as exc:  # noqa: BLE001 — recorded, never fatal
-            return None, exc
-        return round(time.perf_counter() - t0, 3), n
-
-    for name in names:
-        fn = qmap[name]
-        if only and name not in only:
-            continue
-        # Streaming queries replay through a fresh memory sink and can
-        # hit environment-flaky Python-worker socket timeouts (round-3
-        # BENCH tail) — give them one retry before recording a failure.
-        attempts = 2 if "stream" in name else 1
-        for attempt in range(attempts):
-            t, res = measure_once(fn)
-            if t is not None:
-                timings[name] = t
-                print(f"# {name}: {t}s rows={res}", file=sys.stderr)
-                break
-            if attempt + 1 == attempts:
-                timings[name] = -1.0
-                # One line, truncated: a full Java stack trace here
-                # burned most of the driver's bounded stdout/stderr
-                # tail in round 3 and cost the final JSON line.
-                msg = " ".join(str(res).split())[:200]
-                print(f"# FAILED {name}: {msg}", file=sys.stderr)
-        t = timings[name]
-        ref = prior.get(name)
-        # SPARK_GRAFT_BENCH_ONCE=1 disables the quiet-host re-measure:
-        # scale-sweep runs (tools_gen_scale_data.py tiles the tables,
-        # then per-SF subset bench invocations produce the SCALE.md
-        # table) compare one measurement per SF, and the committed
-        # sf0.1 priors would otherwise flag nearly every query at
-        # other scale factors.
-        if os.environ.get("SPARK_GRAFT_BENCH_ONCE") == "1":
-            continue
-        if t > 0 and name not in NEVER_REMEASURE and (
-            ref is None or t > 1.5 * ref + 0.2 or name in ALWAYS_BEST_OF_2
-        ):
-            # cold re-run under the SAME protocol as first runs
-            # (measure_once clears caches + memory-sink tables) so
-            # best-of-2 never records a warm-cache min and a flagged
-            # STREAMING query's re-run does not execute with its first
-            # run's memory-sink table still resident (round-7 advisor)
-            t2, _ = measure_once(fn)
-            if t2 is not None and t2 < t:
-                timings[name] = t2
-            reruns.append(name)
-            print(f"# re-measured {name}: {t}s -> {timings[name]}s "
-                  f"(prior {ref})", file=sys.stderr)
-            # Backoff retry (round-11): this host shows multi-second
-            # hypervisor-steal stalls (loadavg 15+ while vmstat reports
-            # the VM idle) that outlast an immediate re-run — a 0.57 s
-            # query measured 10+ s on BOTH attempts inside one storm.
-            # Same remedy the sf1 fence has used since round 8: if the
-            # row still reads > 2x its quiet-host reference, wait out
-            # the burst once and take the min of three.  Both values
-            # are logged so a no-op retry is distinguishable from an
-            # improvement (round-11 ADVICE #3).
-            if ref is not None and timings[name] > 2 * ref + 0.2:
-                time.sleep(10)
-                before = timings[name]
-                t4, _ = measure_once(fn)
-                if t4 is not None and t4 < before:
-                    timings[name] = t4
-                print(f"# backoff re-measured {name}: {before}s -> "
-                      f"{timings[name]}s", file=sys.stderr)
-    # sum_query_sec = SUM OF RECORDED PER-QUERY TIMES, not the loop's
-    # wall clock: the quiet-host protocol executes flagged queries a
-    # second time inside the loop, and rounds that add many new queries
-    # (all best-of-2) would otherwise inflate the headline relative to
-    # earlier rounds and to the BASELINE 2x comparison (round-5
-    # ADVICE).  The raw loop wall (reruns included) is kept in the
-    # sidecar as loop_wall_sec for the audit trail.
-    loop_wall = round(time.perf_counter() - t_all, 3)
-    total = round(sum(v for v in timings.values() if v > 0), 3)
-
-    # BENCH_QUERIES.json sidecar keeps the full map + the re-measure
-    # audit trail.  Subset runs (bench.py q1 q2 ...) skip it — a
-    # partial map must not clobber the committed full-catalog record —
-    # and so do BENCH_ONCE scale-sweep runs: a full-catalog sweep at
-    # another SF would otherwise overwrite the sf0.1 record AND
-    # min-merge cross-SF timings into the quiet-host best map, which
-    # min() could then never repair.
-    if not only and os.environ.get("SPARK_GRAFT_BENCH_ONCE") != "1":
-        # "best" is keyed BY PROBE CLASS (round-11 verdict #3): a
-        # fast-host historical minimum persisting under a slower host
-        # understates current-host cost, so minima only merge when the
-        # prior sidecar's probe class matches this run's (within the
-        # same_probe_class tolerance); on a class change the map is
-        # re-seeded from this run and the old cross-host minima remain
-        # in best_all_hosts for the audit trail.
-        merge_class = same_probe_class(host_probe, prior_probe)
-        best = {
-            # memo-backed rows take THIS run's cold value, not the min:
-            # historical entries were warm-poisoned (0.24 s against a
-            # ~3 s cold measurement) and min() could never repair them
-            k: round(
-                v if k in NEVER_REMEASURE
-                else min(v, prior_raw.get(k, v)) if merge_class
-                else v,
-                3,
-            )
-            for k, v in timings.items() if v > 0
-        }
-        best_all = {
-            k: round(v if k in NEVER_REMEASURE
-                     else min(v, prior_best_all.get(k, v)), 3)
-            for k, v in timings.items() if v > 0
-        }
+    # The anchors hold for the full catalog at sf0.1 only: a subset run
+    # must not clobber the committed full map, and another scale factor
+    # would report a wall of false over-2x flags
+    full_sf01_run = not only and sf == 0.1
+    if full_sf01_run:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_QUERIES.json"), "w") as fh:
-            json.dump({"sum_query_sec": total, "loop_wall_sec": loop_wall,
-                       "schema_version": 2, "sf": sf,
-                       "queries": timings, "remeasured": sorted(reruns),
-                       "host_probe": host_probe,
-                       "anchor_probe_factor": anchor_factor,
-                       "anchor_probe_factor_raw": anchor_factor_raw,
-                       "best": best,
-                       # the class the best map belongs to — current
-                       # run's probe either way (same class on merge,
-                       # re-seeded from this run otherwise)
-                       "best_probe": host_probe,
-                       "best_merged_with_prior": merge_class,
-                       "best_all_hosts": best_all},
+            json.dump({"sum_query_sec": total,
+                       "sum_query_wall_sec": total_wall,
+                       "loop_wall_sec": loop_wall, "steal_frac": steal,
+                       "schema_version": 3, "sf": sf,
+                       "queries": timings, "remeasured": reruns,
+                       "host_probe": probe, **factors},
                       fh, indent=1, sort_keys=True)
-    # Full per-query map to stdout first (round-4 verdict #7) for human
-    # runs — but the 193-query map is ~6 KB, past the driver's 2,000-char
-    # tail capture, which left BENCH_r07/r08 with "parsed": null
-    # (round-8 verdict #2).  So a compact, parse-guaranteed SUMMARY line
-    # prints LAST: bounded keys only (over_2x capped at 10 names), well
-    # under the capture window, while the committed BENCH_QUERIES.json
-    # sidecar carries the full data.
+    # Full map first, for human runs; the ~6 KB map is past a 2,000-char
+    # output-tail capture, so the bounded summary line prints LAST
     print(
         json.dumps(
             {
@@ -329,52 +109,42 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "loop_wall_sec": loop_wall,
-                "schema_version": 2,
+                "schema_version": 3,
                 "queries": dict(sorted(timings.items())),
-                "remeasured": sorted(reruns),
+                "remeasured": reruns,
                 "sf": sf,
             },
             separators=(",", ":"),
         )
-    )
-    # The baseline comparison is only meaningful for the run the
-    # anchors were recorded for: full catalog at sf0.1 under the
-    # quiet-host protocol.  A scale-sweep (BENCH_ONCE at another SF)
-    # or a subset run would otherwise report a wall of false over-2x
-    # flags (sf1 timings divided by sf0.1 anchors), and the sidecar
-    # pointer would advertise a full map the run deliberately did not
-    # write.
-    full_sf01_run = (
-        not only
-        and sf == 0.1
-        and os.environ.get("SPARK_GRAFT_BENCH_ONCE") != "1"
     )
     summary = {
         "metric": "sum_query_sec",
         "value": total,
         "unit": "sec",
         "sf": sf,
-        "schema_version": 3,
+        "schema_version": 4,
         "summary_line": True,
         "n_queries": len(timings),
         "n_failed": sum(1 for v in timings.values() if v < 0),
+        "sum_query_wall_sec": total_wall,
         "loop_wall_sec": loop_wall,
+        "steal_frac": steal,
         "n_remeasured": len(reruns),
-        "host_probe": host_probe,
+        "host_probe": probe,
+        "anchor_probe_clamped": factors["anchor_probe_clamped"],
     }
     if full_sf01_run:
-        base = _baseline_map()
         ratios = {
             k: round(v / base[k], 3)
             for k, v in timings.items()
             if v > 0 and base.get(k)
         }
-        # probe-normalized ratios (round-11 verdict #3): divide the raw
-        # ratio by the clamped host factor vs the anchor class — the 2x
-        # fence judges the PLAN, not the machine.  Both forms are
-        # reported; n_over_2x (the fence) uses the normalized one, the
-        # raw twins keep the unadjusted signal visible beside it.
-        ratios_norm = {k: round(r / anchor_factor, 3) for k, r in ratios.items()}
+        # the 2x fence judges the plan, not the machine: it uses the
+        # probe-normalized ratio, the raw twins stay visible beside it
+        ratios_norm = {
+            k: round(r / factors["anchor_probe_factor"], 3)
+            for k, r in ratios.items()
+        }
         over_2x_raw = sorted(k for k, r in ratios.items() if r > 2.0)
         over_2x = sorted(k for k, r in ratios_norm.items() if r > 2.0)
         worst_raw = max(ratios, key=ratios.get) if ratios else None
@@ -382,8 +152,7 @@ def main() -> int:
         summary.update(
             {
                 "n_with_baseline": len(ratios),
-                "anchor_probe_factor": anchor_factor,
-                "anchor_probe_factor_raw": anchor_factor_raw,
+                **factors,
                 "max_vs_baseline": ratios_norm.get(worst),
                 "max_vs_baseline_query": worst,
                 "max_vs_baseline_raw": ratios.get(worst_raw),
@@ -396,7 +165,7 @@ def main() -> int:
         )
     else:
         summary["baseline_comparison"] = (
-            "skipped: anchors are full-catalog sf0.1 quiet-host runs"
+            "skipped: anchors are full-catalog sf0.1 runs"
         )
     print(json.dumps(summary, separators=(",", ":")))
     return 0

@@ -1,70 +1,34 @@
 #!/usr/bin/env python
-"""Per-round sf1 regression fence (round-6 verdict #4): the expensive
-panel, promoted from a one-shot curve (SCALE.md round 6) to a
-repeatable sidecar with the quiet-host best-of protocol and a 2x guard.
+"""sf1 regression fence: the expensive panel at sf1, measured by the
+same rule as bench.py, with a 2x guard.
 
-Protocol:
 - data: ``tools_gen_scale_data.py`` tiles /root/testdata/sf0.1 to sf1
   (run it first; default location /tmp/scaledata/sf1);
-- one timed run per query in sorted order after the same shape warmup
-  bench.py uses; any query measuring > 1.5x its reference (or > 2x,
-  the guard bound) is re-run once and the min recorded — co-tenant CPU
-  bursts don't fail the fence, real regressions reproduce;
-- load context (round-8 verdict #6): ``os.getloadavg()`` is recorded
-  beside every measurement (the 1-min average at measurement START),
-  so a future reader can adjudicate contention from the artifact alone
-  — the round-8 closing run violated 2 anchors 4.3x while executing
-  concurrently with the driver's own bench, and nothing in the JSON
-  showed it.  A still-violating query after the first re-measure gets
-  ONE more attempt after a 10 s backoff (a co-tenant burst outlasting
-  one immediate retry usually doesn't outlast the backoff too);
-- STORM DEFERRAL (round-11 verdict #7): the 10 s backoff demonstrably
-  does not outlast a sustained hypervisor-steal storm (r11 committed
-  two violation rows measured at loadavg 22–26 that a quiet re-run
-  cleared).  Before burning the backoff on a still-violating row, the
-  host probe is re-run; if it reads > STORM_PROBE_FACTOR x the anchor
-  class RAW, the row is DEFERRED to the end of the run instead.
-  Deferred rows get one more full protocol pass after the panel; rows
-  still unmeasurable on a quiet host land under ``deferred_storm`` in
-  the sidecar — a storm produces a deferred marker, never a committed
-  violation row (pinned by tests/test_fence_guard.py);
-- LOAD-TAIL IMMUNITY (round-12 verdict #1): the probe detects
-  hypervisor steal but NOT the harness's own load tail — the r12
-  judge's in-pytest fence recorded ``dedup_emb_cosine`` at 31.9 s
-  under 1-min loadavg 20.65 (prior suite activity + GC still
-  draining) while the adjudication probe read quiet, so the row was
-  classified a violation when the quiet min-of-3 was 12.7 s.  A
-  loadavg threshold cannot discriminate: the CLEAN committed r12 run
-  has green rows whose attempt-start loadavg reached 27.8 (the
-  fence's own healthy 32-thread saturation).  Two fixes instead:
-  (a) rows with storm/re-measure history (``volatile`` in the
-  baseline file) take an unconditional min-of-N — no single
-  contaminated attempt can set their timing; (b) ANY row still over
-  the guard after the in-place protocol on a quiet-probe host is
-  retried once at END OF RUN (``retried_end_of_run`` in the sidecar)
-  where the tail has had the whole remaining panel to drain — a real
-  regression reproduces there; weather does not.  Every attempt's
-  (sec, loadavg-at-start) pair is recorded under ``attempts`` so a
-  contaminated attempt is visible in the artifact;
-- reference: ``BENCH_SF1_BASELINE.json`` (seeded from the round-6
-  SCALE.md curve, post-ANN-panel-fix values; overwritten only
-  deliberately).  A query > 2x its reference ON A QUIET HOST is a
-  FENCE VIOLATION, listed in the output JSON and on stderr;
-- output: ``BENCH_sf1.json`` at the repo root — commit it per round
-  (the driver's own bench stays sf0.1).  ARTIFACT GUARD (round-11
-  verdict #1): a run with non-empty ``violations_2x`` may not replace
-  a committed artifact whose ``violations_2x`` is empty — it lands in
-  ``BENCH_sf1_VIOLATING.json`` for triage instead (r11's end-of-round
-  snapshot overwrote the clean quarterly 48/48 fence with a
-  storm-contaminated run).  SPARK_GRAFT_FENCE_FORCE=1 overrides after
-  an explicit triage decision.
+- measurement: the shared warmup and host probe, then
+  ``bench_common.measure_rows`` over the panel: each row's build plus
+  ``count()``, timed steal-adjusted (wall time scaled by the share of
+  CPU the host's hypervisor did not steal), a failed attempt retried
+  once; a row over 2x its reference is re-measured once at the end of
+  the pass, from the ML memo state its first measurement saw, and the
+  lower time is kept.  Every attempt's time is recorded under
+  ``attempts``;
+- reference: the row's anchor in ``BENCH_SF1_BASELINE.json`` x the
+  clamped probe factor against the file's ``anchor_probe``.  A row
+  still over 2x its reference, a failed row and a panel row missing
+  from the catalog are FENCE VIOLATIONS, listed in ``violations_2x``
+  and on stderr; the process then exits 2 (0 when clean);
+- output: ``BENCH_sf1.json`` at the repo root.  ARTIFACT GUARD: a run
+  with violations may not replace a committed artifact without any —
+  it lands in ``BENCH_sf1_VIOLATING.json`` for triage instead.  A
+  deliberate regression is recorded by re-anchoring
+  ``BENCH_SF1_BASELINE.json``, after which the run is clean.
 
-Panel policy (round-10, SCALE.md "sf1 fence panel policy"): the
-default run covers the ACTIVE panel (``queries`` in the baseline
-file); rows that measured <= 1.0x their anchor in 3 consecutive
-committed fence runs live under ``retired`` and run only in the
-quarterly FULL fence — ``--full`` merges them back in (every 4th
-round; a retired row violating 2x there is reinstated).
+Panel policy (SCALE.md "sf1 fence panel policy"): the default run
+covers the ACTIVE panel (``queries`` in the baseline file); rows that
+measured <= 1.0x their anchor in 3 consecutive committed fence runs
+live under ``retired`` and run only in the quarterly FULL fence —
+``--full`` merges them back in (a retired row violating 2x there is
+reinstated).
 
 Usage: python tools_bench_sf1.py [--full] [sf1_dir]
 """
@@ -74,110 +38,8 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-
-#: Unconditional attempt count for ``volatile`` rows (storm/re-measure
-#: history in BENCH_SF1_BASELINE.json): the round-12 verdict's
-#: "unconditional min-of-3" — no single load-contaminated attempt can
-#: set a volatile row's timing or verdict.
-VOLATILE_ATTEMPTS = 3
-
-
-def measure_protocol(
-    run_fn,
-    stormy_fn,
-    ref: float,
-    *,
-    volatile: bool = False,
-    never_remeasure: bool = False,
-    sleep=time.sleep,
-    getload=None,
-) -> dict:
-    """One full quiet-host measurement pass for a fence row — pure
-    orchestration (no Spark; pinned Spark-free by
-    tests/test_fence_guard.py).  ``run_fn()`` performs hygiene + one
-    timed execution and returns seconds (raises on query failure);
-    ``stormy_fn()`` is the probe-based storm check; ``ref`` is the
-    probe-normalized reference.
-
-    Protocol: one attempt always; VOLATILE rows take attempts until
-    ``VOLATILE_ATTEMPTS`` succeed (early-stop only once the best is
-    already under the 1.5x re-measure trigger with >= 2 attempts — at
-    that point no further attempt can change the verdict, only shave
-    the number); other rows re-run immediately when > 1.5x ref; any
-    row still > 2x ref gets the storm check, then ONE more attempt
-    after a 10 s backoff.  ``never_remeasure`` rows (ml_train_rmse:
-    re-runs are warm through a Python-side memo) take exactly one
-    attempt.
-
-    Returns ``{"sec", "attempts", "outcome", "failures", "errors"}``
-    where ``attempts`` records every attempt's (sec, loadavg-at-start)
-    — a load-contaminated attempt is visible in the artifact — and
-    ``outcome`` comes from :func:`fence_row_outcome`, the single
-    source of truth for the ok/violation/deferred decision (round-12
-    ADVICE #3)."""
-    from recommendation_translation_spark.bench_common import (
-        fence_row_outcome,
-    )
-
-    if getload is None:
-        getload = lambda: os.getloadavg()[0]  # noqa: E731
-    attempts: list[dict] = []
-    errors: list[str] = []
-
-    def one_attempt() -> float | None:
-        la = round(getload(), 2)
-        try:
-            t = round(run_fn(), 2)
-        except Exception as exc:  # noqa: BLE001 — a row must never kill the fence
-            attempts.append({"sec": -1.0, "load": la})
-            errors.append(" ".join(str(exc).split())[:200])
-            return None
-        attempts.append({"sec": t, "load": la})
-        return t
-
-    def valid() -> list[float]:
-        return [a["sec"] for a in attempts if a["sec"] > 0]
-
-    def best() -> float | None:
-        v = valid()
-        return min(v) if v else None
-
-    one_attempt()
-    stormy = False
-    if best() is not None and not never_remeasure:
-        if volatile:
-            # total-attempt bound: a permanently-failing row must not
-            # spin forever chasing VOLATILE_ATTEMPTS valid timings
-            while (
-                len(valid()) < VOLATILE_ATTEMPTS
-                and len(attempts) < VOLATILE_ATTEMPTS + 2
-            ):
-                b = best()
-                if b is not None and len(attempts) >= 2 and b <= 1.5 * ref:
-                    break
-                one_attempt()
-        elif best() > 1.5 * ref:
-            one_attempt()
-        b = best()
-        if b is not None and b > 2.0 * ref:
-            if stormy_fn():
-                stormy = True
-            else:
-                sleep(10.0)
-                one_attempt()
-    b = best()
-    return {
-        "sec": b if b is not None else -1.0,
-        "attempts": attempts,
-        "outcome": fence_row_outcome(
-            b if b is not None else -1.0, ref, stormy
-        ),
-        "failures": len(attempts) - len(valid()),
-        "errors": errors,
-    }
 
 
 def main() -> int:
@@ -194,217 +56,71 @@ def main() -> int:
     if full:
         baseline.update(_b.get("retired", {}))
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from recommendation_translation_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="bench_sf1")
-    # the SHARED bench warmup (bench_common, round-11): identical
-    # context is required for the probe to be comparable — this tool's
-    # old lighter warmup left CPU clocks low and the probe read ~1.3×
-    # slower than bench.py's on the same machine, silently loosening
-    # every normalized threshold
     from recommendation_translation_spark.bench_common import (
+        Timer,
+        anchor_factors,
         fence_exit_code,
         fence_row_outcome,
         fence_write_decision,
-        host_is_stormy,
-        host_probe as _host_probe,
-        merged_timing,
-        probe_factor,
-        probe_factor_raw,
+        host_probe,
+        measure_rows,
+        row_order,
+        row_runner,
         warmup,
     )
 
+    # the same warmup as bench.py: the probe is only comparable across
+    # harnesses when measured in the identical context
     warmup(spark, sf_dir)
-
-    # same deterministic host probe bench.py records, from the SHARED
-    # helper (round-10 ADVICE #3).  Since round-11 (verdict #3) the
-    # probe also FEEDS the fence: thresholds are scaled by the clamped
-    # probe factor vs the anchor class recorded in
-    # BENCH_SF1_BASELINE.json, so a host step inflates neither the
-    # re-measure count nor the violation list — both raw and
-    # normalized ratios land in the sidecar.
-    host_probe = _host_probe(spark)
-    anchor_probe = _b.get("anchor_probe")
-    anchor_factor = probe_factor(host_probe, anchor_probe)
+    probe = host_probe(spark)
+    factors = anchor_factors(probe, _b.get("anchor_probe"))
 
     qmap = entry_mod.queries()
-    volatile = set(_b.get("volatile", []))
-    timings: dict[str, float] = {}
-    loadavg: dict[str, float] = {}
-    attempts_log: dict[str, list[dict]] = {}
-    outcomes: dict[str, str] = {}
-    reruns: list[str] = []
-    rerun_failures: dict[str, int] = {}
-    deferred: list[str] = []
-    retry: list[str] = []
-    retried: list[str] = []
-    deferred_storm: dict[str, float] = {}
-
-    def hygiene() -> None:
-        # same cache hygiene as bench.py, plus GC: clearCache does NOT
-        # free localCheckpoint RDD blocks — those are released by the
-        # ContextCleaner only after the JVM GCs the RDD objects, which
-        # in a long single session lags tens of queries behind.  At sf1
-        # the accumulated blocks are large enough to squeeze the
-        # iterative rows (part_pagerank measured 27 s fresh vs 59 s as
-        # fence row 26-of-30).  Nudge both collectors so each row
-        # starts from a clean block store.
-        spark.catalog.clearCache()
-        from recommendation_translation_spark.streaming.events_stream import (
-            drop_memory_sink_tables,
-        )
-
-        drop_memory_sink_tables(spark)
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-        except Exception:
-            pass  # py4j surface changed — hygiene only, never fail the fence
-
-    def run_row(name: str, ref: float) -> str:
-        """One :func:`measure_protocol` pass for ``name``, merged into
-        the run state (a later pass only improves the recorded timing —
-        round-12 ADVICE #1: a failed end-of-run attempt must not
-        clobber a valid earlier measurement).  Returns the row's
-        merged :func:`fence_row_outcome` classification."""
-        fn = qmap[name]
-        nrows: dict[str, int] = {}
-
-        def timed_run() -> float:
-            hygiene()
-            t0 = time.perf_counter()
-            nrows["n"] = fn(spark, sf_dir).count()
-            return time.perf_counter() - t0
-
-        res = measure_protocol(
-            timed_run,
-            lambda: host_is_stormy(_host_probe(spark), anchor_probe),
-            ref,
-            volatile=name in volatile,
-            never_remeasure=name == "ml_train_rmse",
-        )
-        attempts_log.setdefault(name, []).extend(res["attempts"])
-        ok_attempts = [a for a in res["attempts"] if a["sec"] > 0]
-        merged = merged_timing(timings.get(name), res["sec"])
-        if ok_attempts and merged == res["sec"]:
-            loadavg[name] = min(ok_attempts, key=lambda a: a["sec"])["load"]
-        timings[name] = merged
-        if len(ok_attempts) > 1 and name not in reruns:
-            reruns.append(name)
-        if res["failures"]:
-            rerun_failures[name] = rerun_failures.get(name, 0) + res[
-                "failures"
-            ]
-            for msg in res["errors"]:
-                print(f"# FAILED {name}: {msg}", file=sys.stderr)
-        # classify on the MERGED best (an end-of-run pass may beat a
-        # contaminated in-place one); the storm flag is this pass's —
-        # fence_row_outcome is the single decision point (ADVICE #3)
-        outcome = fence_row_outcome(
-            timings[name], ref, res["outcome"] == "deferred"
-        )
-        outcomes[name] = outcome
-        label = {
-            "ok": "ok",
-            "violation": "VIOLATION",
-            "deferred": "DEFERRED (probe-confirmed storm)",
-        }[outcome]
-        print(
-            f"# {name}: {timings[name]}s (ref {round(ref, 2)}s = anchor "
-            f"{baseline[name]} x {anchor_factor}, rows={nrows.get('n')}, "
-            f"load {loadavg.get(name)}, attempts "
-            f"{len(attempts_log[name])}) {label}",
-            file=sys.stderr,
-        )
-        return outcome
-
-    # Same ordering rule as bench.py: ml_train_rmse runs BEFORE the
-    # other ml_* rows so the shared one-time training cost lands on the
-    # training row — in plain sorted order ml_als_recs/ml_cv_tuning
-    # would pay it and ml_train_rmse would measure fully warm,
-    # hiding a training-cost regression from the fence.
-    names = sorted(baseline)
-    ml = [n for n in names if n.startswith("ml_")]
-    if "ml_train_rmse" in ml and ml[0] != "ml_train_rmse":
-        names.remove("ml_train_rmse")
-        names.insert(names.index(ml[0]), "ml_train_rmse")
-    for name in names:
-        if name not in qmap:
-            print(f"# panel query {name} missing from catalog", file=sys.stderr)
-            timings[name] = -1.0
-            outcomes[name] = "violation"
-            continue
-        ref = baseline[name] * anchor_factor
-        outcome = run_row(name, ref)
-        if outcome == "deferred":
-            deferred.append(name)
-        elif (
-            outcome == "violation"
-            and timings[name] > 0
-            and name != "ml_train_rmse"
-        ):
-            # round-12 verdict #1: a quiet-PROBE violation can still be
-            # the harness's own load tail (the probe sees hypervisor
-            # steal, not local contention).  Retry once at end of run,
-            # where the tail has had the rest of the panel to drain —
-            # a real regression reproduces there.
-            retry.append(name)
-
-    # End-of-run pass: storm-deferred rows (the burst has had the whole
-    # remaining panel to pass) and quiet-probe over-guard rows (the
-    # load-tail retry).  One more full protocol run each; a row whose
-    # host is stormy here lands under deferred_storm with its best
-    # measurement — visible, excluded from the violation fence, never
-    # silently dropped, and (round-12 ADVICE #2) still non-clean for
-    # the artifact guard and the exit code.
-    for name in deferred + [n for n in retry if n not in deferred]:
-        ref = baseline[name] * anchor_factor
-        if host_is_stormy(_host_probe(spark), anchor_probe):
-            deferred_storm[name] = timings[name]
-            outcomes[name] = "deferred"
-            print(f"# {name}: host stormy at end of run — recorded "
-                  f"as deferred_storm ({timings[name]}s), not a violation",
-                  file=sys.stderr)
-            continue
-        if name in retry:
-            retried.append(name)
-        if run_row(name, ref) == "deferred":
-            deferred_storm[name] = timings[name]
-            print(f"# {name}: storm returned during end-of-run re-measure "
-                  f"— recorded as deferred_storm ({timings[name]}s)",
-                  file=sys.stderr)
-
+    missing = sorted(n for n in baseline if n not in qmap)
+    for name in missing:
+        print(f"# panel query {name} missing from catalog", file=sys.stderr)
+    names = row_order(n for n in baseline if n in qmap)
+    reference = {
+        n: baseline[n] * factors["anchor_probe_factor"] for n in names
+    }
+    loop = Timer()
+    with loop.measure():
+        rows = measure_rows(names, row_runner(spark, sf_dir, qmap), reference)
+    timings = {n: rows[n]["sec"] for n in names}
+    timings.update((n, -1.0) for n in missing)
     violations = sorted(
-        n for n, o in outcomes.items() if o == "violation"
+        n for n, t in timings.items()
+        if fence_row_outcome(t, reference.get(n, 0.0)) == "violation"
     )
-    raw_violations = sorted(
-        n
-        for n, t in timings.items()
-        if baseline.get(n) is not None and (t < 0 or t > 2.0 * baseline[n])
-    )
+    for name in violations:
+        print(f"# VIOLATION {name}: {timings[name]}s against ref "
+              f"{round(reference.get(name, 0.0), 2)}s (anchor "
+              f"{baseline[name]} x {factors['anchor_probe_factor']}), "
+              f"attempts {rows.get(name, {}).get('attempts')}",
+              file=sys.stderr)
 
+    ok = [rows[n] for n in names if rows[n]["sec"] > 0]
     out = {
         "sf": 1.0,
-        "schema_version": 4,
+        "schema_version": 5,
         "panel": "full" if full else "active",
-        "sum_query_sec": round(sum(v for v in timings.values() if v > 0), 2),
+        "sum_query_sec": round(sum(r["sec"] for r in ok), 2),
+        "sum_query_wall_sec": round(sum(r["wall_sec"] for r in ok), 2),
+        "steal_frac": round(loop.steal_frac, 3),
         "queries": timings,
-        "loadavg_1min": loadavg,
-        "attempts": attempts_log,
-        "host_probe": host_probe,
-        "anchor_probe_factor": anchor_factor,
-        "anchor_probe_factor_raw": probe_factor_raw(host_probe, anchor_probe),
-        "volatile": sorted(volatile & set(baseline)),
-        "remeasured": sorted(reruns),
-        "remeasure_failed": rerun_failures,
-        "retried_end_of_run": sorted(retried),
-        "deferred_storm": deferred_storm,
+        "attempts": {n: rows[n]["attempts"] for n in names},
+        "host_probe": probe,
+        **factors,
+        "remeasured": sorted(n for n in names if rows[n]["remeasured"]),
         "violations_2x": violations,
-        "violations_2x_raw": raw_violations,
+        "violations_2x_raw": sorted(
+            n for n, t in timings.items()
+            if fence_row_outcome(t, baseline[n]) == "violation"
+        ),
     }
     committed = None
     try:
@@ -412,18 +128,13 @@ def main() -> int:
             committed = json.load(fh)
     except (OSError, ValueError):
         pass
-    fname, refusal = fence_write_decision(
-        out, committed,
-        force=os.environ.get("SPARK_GRAFT_FENCE_FORCE") == "1",
-    )
+    fname, refusal = fence_write_decision(out, committed)
     if refusal:
         print(f"# ARTIFACT GUARD: {refusal}", file=sys.stderr)
         out["artifact_guard"] = refusal
     with open(os.path.join(REPO, fname), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(json.dumps(out, separators=(",", ":")))
-    # 0 clean / 2 violations / 3 storm-deferred-only (ADVICE #2: an
-    # unproven run must not exit 0)
     return fence_exit_code(out)
 
 

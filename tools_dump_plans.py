@@ -5,8 +5,9 @@ tests/test_plan_quality.py; this dump is the human-auditable twin.
 
 Usage: ``python tools_dump_plans.py [OUT [SF_DIR]]`` (default
 ``PLANS.md`` in the repo root and the test suite's sf0.001).  Plans
-are normalized — expression ids (``#123L``), ``plan_id=N`` and
-``/tmp/...`` paths stripped — so two checkouts' dumps, taken on the
+are normalized — expression ids (``#123L``), ``plan_id=N``,
+``/tmp/...`` paths and the per-partition offsets of range-partitioned
+row numbers stripped — so two checkouts' dumps, taken on the
 same host with the same ``SPARK_GRAFT_CPUS``, can be diffed.  The
 code imported is the checkout this script lives in."""
 
@@ -38,6 +39,11 @@ _RUN_SPECIFIC = [
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/…"),
+    # operators.ordering bakes per-partition offsets, read from that
+    # build's range partitions, into a map literal indexed by the
+    # partition id; the range sampler draws different boundaries per
+    # build, so only those map values are blanked
+    (re.compile(r"values: \[[^\]]*\](?=\)\[[^\]]*_pid)"), "values: […]"),
 ]
 
 
