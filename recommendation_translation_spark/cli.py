@@ -17,7 +17,9 @@ and raw inputs are only meaningful when the consuming stage runs.
 Artifacts land in a timestamped run directory (JobRunner.scala:31:
 ``<output-dir>/<yyyy-MM-dd_HH_mm_ss>/{parsed-data,feature-data,models,
 predictions}``) with ``errorifexists`` semantics, so re-runs never
-clobber.
+clobber.  No stage reads back what an earlier stage of the same run
+wrote, so ``run`` writes the artifacts in the background while the
+next stage computes.
 """
 
 from __future__ import annotations
@@ -25,15 +27,22 @@ from __future__ import annotations
 import argparse
 import logging
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .session import inherit_local_properties
 
 log = logging.getLogger(__name__)
 
 __all__ = ["Params", "build_parser", "check_config", "run", "main"]
+
+#: Threads of the background artifact writer.  The sites' fits tend to
+#: finish together, so their model saves, a handful of one-task jobs
+#: each, run side by side.
+WRITER_THREADS = 4
 
 
 @dataclass
@@ -147,13 +156,39 @@ def _run_dir(p: Params) -> str:
     return path
 
 
+def _join_model_saves(models: dict) -> bool:
+    """Wait for every site's model save and log each site's outcome.  A
+    site whose model failed to save becomes a failed site, without a
+    model.  Returns whether any save failed."""
+    failed = False
+    for site, r in sorted(models.items()):
+        save_error = r.saved and r.saved.exception()
+        if save_error:
+            r.model = r.model_path = None
+            r.error = f"model save failed: {save_error}"
+            failed = True
+        if r.error:
+            log.warning("site %s failed: %s", site, r.error)
+        else:
+            log.info("site %s rmse=%.6f", site, r.rmse)
+    return failed
+
+
 def run(spark: SparkSession, p: Params) -> dict[str, str]:
     """Execute the enabled stages; returns artifact name → path.
 
     Mirrors JobRunner.scala:37-73's gating, with the rebuild's fixes:
-    the feature matrix is cached before per-site fan-out, the prediction
-    fold is the single-shuffle union+pivot, and everything stays in the
-    DataFrame API.
+    the feature matrix is computed once into a cache that every consumer
+    reads, the prediction fold is the single-shuffle union+pivot, and
+    everything stays in the DataFrame API.
+
+    Nothing later in a run reads its own artifacts back, so the parsed
+    data, the feature matrix and each site's model are written on a
+    small background writer while the next stage computes from the
+    in-memory frame.  The writer's jobs carry the caller's job group.
+    Every write is joined before this returns: a failed parquet write
+    fails the run, and a site whose model fails to save is reported as
+    failed and scores as an empty column (X2, ScorePredictor.scala:37-44).
     """
     from .operators.features import pivot_features
     from .operators.rank import normalized_rank
@@ -174,73 +209,77 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
 
     out = _run_dir(p)
     artifacts: dict[str, str] = {"run_dir": out}
+    # each writer thread starts with this thread's local properties
+    keep_job_group = inherit_local_properties(spark.sparkContext, lambda: None)
+    with ThreadPoolExecutor(WRITER_THREADS, initializer=keep_job_group) as writer:
+        writes: list[Future] = []
 
-    parsed: DataFrame | None = None
-    if p.parse_raw_data:  # EP1 (DataGatherer.scala:13-61)
-        if p.raw_data:
-            parsed = read_raw_data_tsv(spark, p.raw_data)
-        else:
-            sitelinks = read_sitelinks_tsv(spark, p.raw_sitelinks)
-            pagecounts = read_pagecounts(spark, p.raw_pagecounts)
-            parsed = sitelinks.join(pagecounts, ["site", "title"], "inner").select(
-                "id", "site", "title", "pageviews"
-            )
-        path = os.path.join(out, "parsed-data")
-        write_parquet(parsed, path)
-        artifacts["parsed_data"] = path
-    elif p.parsed_data:
-        parsed = read_parsed_parquet(spark, p.parsed_data)
-
-    features: DataFrame | None = None
-    sites: list[str] = []
-    if p.extract_features:  # EP2, as window + pivot
-        ranked = normalized_rank(parsed, tiebreak_cols=("id", "title"))
-        sites = sorted(r[0] for r in parsed.select("site").distinct().collect())
-        features = pivot_features(
-            ranked.select("id", "site", "pageviews", "rank"), sites
-        )
-        path = os.path.join(out, "feature-data")
-        write_parquet(features, path)
-        artifacts["feature_data"] = path
-    elif p.feature_data:
-        features = read_features_parquet(spark, p.feature_data)
-        sites = sorted(c[len("exists_"):] for c in features.columns
-                       if c.startswith("exists_"))
-
-    targets = p.target_wikis or sites  # JobRunner.scala:47-50
-    if p.build_models or p.score_items:
-        # one cached copy feeds every per-site training and scoring job
-        features = features.cache()
-    models = None
-    if p.build_models:
-        model_dir = os.path.join(out, "models")
-        models = build_models(features, targets, seed=p.seed, model_dir=model_dir)
-        artifacts["model_dir"] = model_dir
-        for site, r in sorted(models.items()):
-            if r.error:
-                log.warning("site %s failed: %s", site, r.error)
+        parsed: DataFrame | None = None
+        if p.parse_raw_data:  # EP1 (DataGatherer.scala:13-61)
+            if p.raw_data:
+                parsed = read_raw_data_tsv(spark, p.raw_data)
             else:
-                log.info("site %s rmse=%.6f", site, r.rmse)
-    elif p.model_dir:
-        from pyspark.ml.regression import RandomForestRegressionModel
+                sitelinks = read_sitelinks_tsv(spark, p.raw_sitelinks)
+                pagecounts = read_pagecounts(spark, p.raw_pagecounts)
+                parsed = sitelinks.join(pagecounts, ["site", "title"], "inner").select(
+                    "id", "site", "title", "pageviews"
+                )
+            path = os.path.join(out, "parsed-data")
+            writes.append(writer.submit(write_parquet, parsed, path))
+            artifacts["parsed_data"] = path
+        elif p.parsed_data:
+            parsed = read_parsed_parquet(spark, p.parsed_data)
 
-        models = {}
-        for site in targets:
-            path = os.path.join(p.model_dir, site)
-            try:
-                models[site] = RandomForestRegressionModel.load(path)  # S9
-            except Exception as exc:
-                # X2: scored as an empty column (ScorePredictor.scala:37-44)
-                log.warning("no model for site %s: %s", site, exc)
-                models[site] = None
+        features: DataFrame | None = None
+        sites: list[str] = []
+        if p.extract_features:  # EP2, as window + pivot
+            ranked = normalized_rank(parsed, tiebreak_cols=("id", "title"))
+            sites = sorted(r[0] for r in parsed.select("site").distinct().collect())
+            features = pivot_features(
+                ranked.select("id", "site", "pageviews", "rank"), sites
+            ).cache()
+            features.count()  # the one computation of the matrix, before any reader
+            path = os.path.join(out, "feature-data")
+            writes.append(writer.submit(write_parquet, features, path))
+            artifacts["feature_data"] = path
+        elif p.feature_data:
+            # one cached copy feeds every per-site training and scoring job
+            features = read_features_parquet(spark, p.feature_data).cache()
+            sites = sorted(c[len("exists_"):] for c in features.columns
+                           if c.startswith("exists_"))
 
-    if p.score_items:  # EP3 scorer
-        scored = score_items(features, models)
-        predictions = assemble_predictions(scored)
-        path = os.path.join(out, "predictions")
-        write_predictions_csv(predictions, path)
-        artifacts["predictions"] = path
+        targets = p.target_wikis or sites  # JobRunner.scala:47-50
+        models = None
+        if p.build_models:
+            model_dir = os.path.join(out, "models")
+            models = build_models(features, targets, seed=p.seed,
+                                  model_dir=model_dir, writer=writer)
+            artifacts["model_dir"] = model_dir
+        elif p.model_dir:
+            from pyspark.ml.regression import RandomForestRegressionModel
 
+            models = {}
+            for site in targets:
+                path = os.path.join(p.model_dir, site)
+                try:
+                    models[site] = RandomForestRegressionModel.load(path)  # S9
+                except Exception as exc:
+                    # X2: scored as an empty column (ScorePredictor.scala:37-44)
+                    log.warning("no model for site %s: %s", site, exc)
+                    models[site] = None
+
+        if p.score_items:  # EP3 scorer: lazy plans, built while the saves finish
+            predictions = assemble_predictions(score_items(features, models))
+        if p.build_models and _join_model_saves(models) and p.score_items:
+            # X2: a site whose model failed to save scores as an empty column
+            predictions = assemble_predictions(score_items(features, models))
+        if p.score_items:
+            path = os.path.join(out, "predictions")
+            write_predictions_csv(predictions, path)
+            artifacts["predictions"] = path
+
+        for w in writes:
+            w.result()  # a failed parquet write fails the run
     return artifacts
 
 

@@ -2,16 +2,22 @@
 
 Differences from the reference, all deliberate:
 
-- the feature matrix is persisted by the caller (``.cache()`` in the CLI,
-  ``localCheckpoint`` in the catalog) and materialized here before the
-  per-site fan-out — the reference recomputes the whole feature lineage
-  for every site (SURVEY §3 EP3), its biggest performance bug;
+- the feature matrix is persisted and filled by the caller (``.cache()``
+  plus one action in the CLI, ``localCheckpoint`` in the catalog), so
+  every site's jobs read one computed copy — the reference recomputes
+  the whole feature lineage for every site (SURVEY §3 EP3), its biggest
+  performance bug.  One aggregate over the ``exists_*`` columns gives
+  every site's training row count; no site caches its own slice, since
+  RandomForest persists its own bagged input;
 - ``randomSplit`` and the RandomForest are seeded for reproducibility
   (the reference is unseeded, ModelBuilder.scala:23);
 - per-site concurrency uses a ThreadPoolExecutor over Spark actions
   (PySpark job submission is thread-safe), replacing ``sites.par`` with
   ``ForkJoinPool(8)`` (JobRunner.scala:15,51-54); each site's jobs keep
   the caller's job group;
+- a model is saved on the caller's background writer as soon as it is
+  fitted, so the save runs beside its own evaluation and the other
+  sites' training instead of ahead of them;
 - per-site failures are isolated and reported, not fatal
   (ModelBuilder.scala:35-37).
 """
@@ -20,13 +26,15 @@ from __future__ import annotations
 
 import logging
 import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Executor, Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.regression import RandomForestRegressor, RandomForestRegressionModel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from ..schemas import EXISTS
 from ..session import inherit_local_properties
 from .assemble import get_work_data
 
@@ -59,6 +67,7 @@ class TrainResult:
     rmse: float | None = None
     error: str | None = None
     model_path: str | None = None
+    saved: Future | None = None  # the model's save, running on the writer
 
 
 # Rows per partition for the training set.  The per-site work data is a
@@ -70,26 +79,26 @@ class TrainResult:
 TRAIN_ROWS_PER_PARTITION = 50_000
 
 
-def _train_one(features: DataFrame, site: str, seed: int, model_dir: str | None) -> TrainResult:
-    """ModelBuilder.scala:18-38 for a single target site."""
-    cached = get_work_data(features, site, exists=True).cache()
-    try:
-        n = cached.count()
-        parallelism = features.sparkSession.sparkContext.defaultParallelism
-        target = max(1, min(parallelism, n // TRAIN_ROWS_PER_PARTITION + 1))
-        work = cached.coalesce(target)
-        train, test = work.randomSplit([0.7, 0.3], seed=seed)  # ModelBuilder.scala:23, seeded
-        model = _regressor(seed).fit(train)
-        result = TrainResult(site=site, model=model)
-        if model_dir is not None:
-            path = os.path.join(model_dir, site)  # ModelBuilder.scala:29
-            model.write().overwrite().save(path)
-            result.model_path = path
-        predictions = model.transform(test)  # ModelBuilder.scala:32
-        result.rmse = _evaluator().evaluate(predictions)  # ModelBuilder.scala:33-34
-        return result
-    finally:
-        cached.unpersist()
+def _save_model(model: RandomForestRegressionModel, path: str) -> None:
+    model.write().overwrite().save(path)  # ModelBuilder.scala:29
+
+
+def _train_one(features: DataFrame, site: str, seed: int, n_rows: int,
+               model_dir: str | None, writer: Executor | None) -> TrainResult:
+    """ModelBuilder.scala:18-38 for a single target site with ``n_rows``
+    training rows."""
+    parallelism = features.sparkSession.sparkContext.defaultParallelism
+    target = max(1, min(parallelism, n_rows // TRAIN_ROWS_PER_PARTITION + 1))
+    work = get_work_data(features, site, exists=True).coalesce(target)
+    train, test = work.randomSplit([0.7, 0.3], seed=seed)  # ModelBuilder.scala:23, seeded
+    model = _regressor(seed).fit(train)
+    result = TrainResult(site=site, model=model)
+    if model_dir is not None:
+        result.model_path = os.path.join(model_dir, site)  # ModelBuilder.scala:29
+        result.saved = writer.submit(_save_model, model, result.model_path)
+    predictions = model.transform(test)  # ModelBuilder.scala:32
+    result.rmse = _evaluator().evaluate(predictions)  # ModelBuilder.scala:33-34
+    return result
 
 
 def build_models(
@@ -97,15 +106,22 @@ def build_models(
     sites: list[str],
     seed: int = 42,
     model_dir: str | None = None,
+    writer: Executor | None = None,
 ) -> dict[str, TrainResult]:
     """Train one RandomForest per target site, up to ``SITE_PARALLELISM``
     at a time (X1), isolating per-site failures (X2).
 
-    Callers persist ``features`` first; this function materializes it
-    once and then triggers many actions per site.
+    Callers persist ``features`` and fill it first: every site reads it
+    many times.  With ``model_dir``, each site's model is saved to
+    ``model_dir/<site>`` on ``writer``, which the caller joins; the
+    result's ``saved`` is that save's future.
     """
-    features.count()  # materialize before fan-out: concurrent per-site jobs
-    # would otherwise each compute the feature lineage
+    present = [s for s in sites if f"exists_{s}" in features.columns]
+    # every site's training row count from one job; a site without its
+    # column fails in its own chain below
+    row = features.agg(*[F.count(F.when(F.col(f"exists_{s}") == EXISTS, True))
+                         for s in present]).first() if present else ()
+    counts = dict(zip(present, row))
 
     sc = features.sparkSession.sparkContext
 
@@ -118,7 +134,8 @@ def build_models(
         # another site.  No-op under a FIFO session.
         sc.setLocalProperty("spark.scheduler.pool", f"site-{site}")
         try:
-            return _train_one(features, site, seed, model_dir)
+            return _train_one(features, site, seed, counts.get(site, 0),
+                              model_dir, writer)
         except Exception as exc:  # X2: log & continue (ModelBuilder.scala:35-37)
             log.warning("model build failed for site %s: %s", site, exc)
             return TrainResult(site=site, error=str(exc))

@@ -135,8 +135,11 @@ def get_spark(
         # robins cluster slots across its 8 concurrent sites instead of
         # FIFO-queueing one site's hundreds of tree-depth jobs ahead of
         # the rest; each site thread sets its own spark.scheduler.pool.
-        # Static conf — a no-op on sessions built elsewhere (the pool
-        # local-property degrades gracefully to FIFO there).
+        # The CLI's background artifact writes (parquet and model saves,
+        # cli.run) set no pool, so they run in the default pool and take
+        # their fair share beside the sites instead of queueing behind
+        # them.  Static conf — a no-op on sessions built elsewhere (the
+        # pool local-property degrades gracefully to FIFO there).
         .config("spark.scheduler.mode", "FAIR")
     )
     if extra_conf:

@@ -123,10 +123,8 @@ def test_check_config_valid_resume_from_features():
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def full_run(spark, fixture_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("run")
-    p = Params(
+def _full_params(fixture_dir, out) -> Params:
+    return Params(
         parse_raw_data=True,
         extract_features=True,
         build_models=True,
@@ -135,7 +133,41 @@ def full_run(spark, fixture_dir, tmp_path_factory):
         output_dir=str(out),
         seed=42,
     )
-    return run(spark, p)
+
+
+def _read_predictions(artifacts) -> list[dict]:
+    (path,) = glob.glob(os.path.join(artifacts["predictions"], "*.csv.bz2"))
+    with bz2.open(path, "rt") as f:
+        return list(csv.DictReader(f))
+
+
+#: Spark jobs the first full run over the fixture submits: the reads, one
+#: pivot pass into the feature cache, the per-site training rounds, the
+#: background writes and the CSV write.  A second pass over the pivot
+#: lineage or one count job per site would exceed it (the run submitted
+#: 82 jobs when it had both).
+FULL_RUN_JOB_BUDGET = 70
+
+
+@pytest.fixture(scope="module")
+def full_run_jobs(spark, fixture_dir, tmp_path_factory):
+    """The full pipeline run under a job group: its artifacts, the jobs
+    of its group, and the jobs it ran outside any group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("cli_full_run", "full cli.run")
+    try:
+        artifacts = run(spark, _full_params(fixture_dir, tmp_path_factory.mktemp("run")))
+    finally:
+        sc.setJobGroup(None, None)
+    grouped = tracker.getJobIdsForGroup("cli_full_run")
+    return artifacts, grouped, set(tracker.getJobIdsForGroup()) - before
+
+
+@pytest.fixture(scope="module")
+def full_run(full_run_jobs):
+    return full_run_jobs[0]
 
 
 def test_artifacts_exist(full_run):
@@ -186,6 +218,62 @@ def test_predictions_shape(full_run):
     assert len(ids) == len(set(ids)) and len(ids) > 0
 
 
+def test_full_run_jobs_carry_callers_job_group(full_run_jobs):
+    """Every job of a full run carries the caller's job group, the
+    background parquet writes and model saves included, and the run
+    stays within its job budget."""
+    artifacts, grouped, ungrouped = full_run_jobs
+    assert ungrouped == set()
+    assert len(grouped) <= FULL_RUN_JOB_BUDGET, len(grouped)
+    # the saves ran on the writer: every site's model is complete
+    for site in SITES:
+        assert os.path.isdir(os.path.join(artifacts["model_dir"], site, "metadata"))
+
+
+def test_failed_parquet_write_fails_the_run(spark, fixture_dir, tmp_path, monkeypatch):
+    """A parquet artifact is written in the background, but a failed
+    write still fails the run."""
+    from recommendation_translation_spark.sources import writers
+
+    def broken(df, path, *args, **kwargs):
+        raise OSError(f"cannot write {os.path.basename(path)}")
+
+    monkeypatch.setattr(writers, "write_parquet", broken)
+    p = Params(parse_raw_data=True, extract_features=True,
+               raw_data=str(fixture_dir / "raw.tsv"), output_dir=str(tmp_path))
+    with pytest.raises(OSError, match="cannot write parsed-data"):
+        run(spark, p)
+
+
+def test_failed_model_save_leaves_that_sites_column_empty(
+    spark, fixture_dir, full_run, tmp_path, monkeypatch, caplog
+):
+    """X2 (ScorePredictor.scala:37-44): a site whose model fails to save
+    is logged as failed and keeps its predictions column, all empty; the
+    other sites' scores are those of a run where every save succeeded."""
+    import logging
+
+    from recommendation_translation_spark.pipeline import train
+
+    save = train._save_model
+
+    def flaky(model, path):
+        if os.path.basename(path) == "frwiki":
+            raise OSError("model store unavailable")
+        save(model, path)
+
+    monkeypatch.setattr(train, "_save_model", flaky)
+    with caplog.at_level(logging.WARNING):
+        artifacts = run(spark, _full_params(fixture_dir, tmp_path))
+    assert "frwiki" in caplog.text and "model store unavailable" in caplog.text
+    rows, reference = _read_predictions(artifacts), _read_predictions(full_run)
+    assert list(rows[0]) == ["id"] + SITES
+    assert all(r["frwiki"] == "" for r in rows)
+    for site in ("dewiki", "enwiki", "eswiki"):
+        got = {r["id"]: r[site] for r in rows if r[site] != ""}
+        assert got and got == {r["id"]: r[site] for r in reference if r[site] != ""}, site
+
+
 def test_resume_from_artifacts(spark, full_run, tmp_path_factory):
     """X3: a second run can resume from the first run's parquet + models."""
     out = tmp_path_factory.mktemp("resume")
@@ -219,10 +307,7 @@ def test_resume_with_missing_model_keeps_empty_site_column(
         output_dir=str(tmp_path_factory.mktemp("resume_partial")),
         target_wikis=SITES,
     )
-    artifacts = run(spark, p)
-    (path,) = glob.glob(os.path.join(artifacts["predictions"], "*.csv.bz2"))
-    with bz2.open(path, "rt") as f:
-        rows = list(csv.DictReader(f))
+    rows = _read_predictions(run(spark, p))
     assert list(rows[0]) == ["id"] + SITES
     assert all(r["frwiki"] == "" for r in rows)
     for site in ("dewiki", "enwiki", "eswiki"):
@@ -286,16 +371,18 @@ def test_build_models_jobs_keep_callers_job_group(spark):
         sc.setJobGroup(None, None)
         feats.unpersist()
     assert all(r.error is None for r in results.values()), results
-    # the materializing count plus at least one fit and one evaluation
+    # the row-count aggregate plus at least one fit and one evaluation
     # per site; none of them may fall outside the group
     assert len(tracker.getJobIdsForGroup("build_models_probe")) > 4
     assert set(tracker.getJobIdsForGroup()) <= before
     assert sc.getLocalProperty("spark.scheduler.pool") is None
 
 
-def test_failed_site_releases_its_training_cache(spark):
+def test_failed_site_is_isolated_and_caches_nothing(spark):
     """A site whose training rows raise at execution is reported as
-    failed, and its per-site cache is released, not left registered."""
+    failed with its error while the other site trains, and
+    ``build_models`` leaves the cache manager as it found it: no site
+    caches its own training slice."""
     from pyspark.sql import functions as F
 
     from recommendation_translation_spark.pipeline.train import build_models
@@ -305,14 +392,17 @@ def test_failed_site_releases_its_training_cache(spark):
         F.col("id").cast("double").alias("pageviews_a"),
         (F.col("id") / 12.0).alias("rank_a"),
         F.lit(1.0).alias("exists_a"),
-        # a feature of site a's training set only: build_models'
-        # materializing count() prunes it, the per-site count() does not
+        # a feature of site a's training set only: the row-count
+        # aggregate and site b's training prune it
         F.when(F.col("id") >= 0, F.raise_error(F.lit("bad feature")))
         .cast("double").alias("pageviews_b"),
+        ((12 - F.col("id")) / 12.0).alias("rank_b"),
+        F.lit(1.0).alias("exists_b"),
     )
     spark.catalog.clearCache()
-    results = build_models(feats, ["a"], seed=1)
+    results = build_models(feats, ["a", "b"], seed=1)
     assert results["a"].error and "bad feature" in results["a"].error
+    assert results["b"].error is None and results["b"].model is not None
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
