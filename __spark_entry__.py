@@ -6,8 +6,10 @@ extension surface) to a (spark, sf_dir) → DataFrame builder; and
 ``oracle_sql()`` gives the DuckDB-equivalent SQL for EVERY query —
 since round 6 the catalog has zero rows-only entries: the ML queries
 emit exact deterministic skeletons + invariant flags (training itself
-still runs; its outcome is hash-checked).  Implementation lives in
-``recommendation_translation_spark.queries``.
+still runs; its outcome is hash-checked).  The registry is
+``recommendation_translation_spark.queries``; the builders and their
+oracles live in the family modules of
+``recommendation_translation_spark.catalog``.
 
 Note on the ml_* invariant flags (rmse_le_2x_label_sd,
 cost_le_total_ss, acc_ge_majority, auc_ge_half): these are

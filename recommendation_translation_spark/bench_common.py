@@ -369,7 +369,7 @@ def measure_rows(
     ``wall_sec`` (that attempt's raw wall time), ``attempts`` (every
     attempt's steal-adjusted time, -1.0 for a failure), ``rows`` and
     ``remeasured``."""
-    from . import queries
+    from .catalog import ml
 
     out: dict[str, dict] = {}
     memo_at: dict[str, set] = {}  # ML memo keys when the kept time began
@@ -380,7 +380,7 @@ def measure_rows(
                                     "remeasured": False})
         for _ in range(2):
             timer = Timer(cpu, clock)
-            memo = set(queries._ML_CACHE)
+            memo = set(ml._ML_CACHE)
             try:
                 rows = run(name, timer)
             except Exception as exc:  # noqa: BLE001 — recorded, never fatal
@@ -405,8 +405,8 @@ def measure_rows(
     over = [n for n in names if out[n]["sec"] > 0 and n in reference
             and fence_row_outcome(out[n]["sec"], reference[n]) != "ok"]
     for name in over:
-        for key in set(queries._ML_CACHE) - memo_at[name]:
-            del queries._ML_CACHE[key]
+        for key in set(ml._ML_CACHE) - memo_at[name]:
+            del ml._ML_CACHE[key]
         before = out[name]["sec"]
         out[name]["remeasured"] = True
         time_row(name)

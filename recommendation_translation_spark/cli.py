@@ -179,7 +179,7 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
 
     Mirrors JobRunner.scala:37-73's gating, with the rebuild's fixes:
     the feature matrix is computed once into a cache that every consumer
-    reads, the prediction fold is the single-shuffle union+pivot, and
+    reads (released when the run ends), the prediction fold is the single-shuffle union+pivot, and
     everything stays in the DataFrame API.
 
     Nothing later in a run reads its own artifacts back, so the parsed
@@ -211,75 +211,82 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
     artifacts: dict[str, str] = {"run_dir": out}
     # each writer thread starts with this thread's local properties
     keep_job_group = inherit_local_properties(spark.sparkContext, lambda: None)
-    with ThreadPoolExecutor(WRITER_THREADS, initializer=keep_job_group) as writer:
-        writes: list[Future] = []
+    features: DataFrame | None = None
+    try:
+        with ThreadPoolExecutor(WRITER_THREADS, initializer=keep_job_group) as writer:
+            writes: list[Future] = []
 
-        parsed: DataFrame | None = None
-        if p.parse_raw_data:  # EP1 (DataGatherer.scala:13-61)
-            if p.raw_data:
-                parsed = read_raw_data_tsv(spark, p.raw_data)
-            else:
-                sitelinks = read_sitelinks_tsv(spark, p.raw_sitelinks)
-                pagecounts = read_pagecounts(spark, p.raw_pagecounts)
-                parsed = sitelinks.join(pagecounts, ["site", "title"], "inner").select(
-                    "id", "site", "title", "pageviews"
-                )
-            path = os.path.join(out, "parsed-data")
-            writes.append(writer.submit(write_parquet, parsed, path))
-            artifacts["parsed_data"] = path
-        elif p.parsed_data:
-            parsed = read_parsed_parquet(spark, p.parsed_data)
+            parsed: DataFrame | None = None
+            if p.parse_raw_data:  # EP1 (DataGatherer.scala:13-61)
+                if p.raw_data:
+                    parsed = read_raw_data_tsv(spark, p.raw_data)
+                else:
+                    sitelinks = read_sitelinks_tsv(spark, p.raw_sitelinks)
+                    pagecounts = read_pagecounts(spark, p.raw_pagecounts)
+                    parsed = sitelinks.join(pagecounts, ["site", "title"], "inner").select(
+                        "id", "site", "title", "pageviews"
+                    )
+                path = os.path.join(out, "parsed-data")
+                writes.append(writer.submit(write_parquet, parsed, path))
+                artifacts["parsed_data"] = path
+            elif p.parsed_data:
+                parsed = read_parsed_parquet(spark, p.parsed_data)
 
-        features: DataFrame | None = None
-        sites: list[str] = []
-        if p.extract_features:  # EP2, as window + pivot
-            ranked = normalized_rank(parsed, tiebreak_cols=("id", "title"))
-            sites = sorted(r[0] for r in parsed.select("site").distinct().collect())
-            features = pivot_features(
-                ranked.select("id", "site", "pageviews", "rank"), sites
-            ).cache()
-            features.count()  # the one computation of the matrix, before any reader
-            path = os.path.join(out, "feature-data")
-            writes.append(writer.submit(write_parquet, features, path))
-            artifacts["feature_data"] = path
-        elif p.feature_data:
-            # one cached copy feeds every per-site training and scoring job
-            features = read_features_parquet(spark, p.feature_data).cache()
-            sites = sorted(c[len("exists_"):] for c in features.columns
-                           if c.startswith("exists_"))
+            sites: list[str] = []
+            if p.extract_features:  # EP2, as window + pivot
+                ranked = normalized_rank(parsed, tiebreak_cols=("id", "title"))
+                sites = sorted(r[0] for r in parsed.select("site").distinct().collect())
+                features = pivot_features(
+                    ranked.select("id", "site", "pageviews", "rank"), sites
+                ).cache()
+                features.count()  # the one computation of the matrix, before any reader
+                path = os.path.join(out, "feature-data")
+                writes.append(writer.submit(write_parquet, features, path))
+                artifacts["feature_data"] = path
+            elif p.feature_data:
+                # one cached copy feeds every per-site training and scoring job
+                features = read_features_parquet(spark, p.feature_data).cache()
+                sites = sorted(c[len("exists_"):] for c in features.columns
+                               if c.startswith("exists_"))
 
-        targets = p.target_wikis or sites  # JobRunner.scala:47-50
-        models = None
-        if p.build_models:
-            model_dir = os.path.join(out, "models")
-            models = build_models(features, targets, seed=p.seed,
-                                  model_dir=model_dir, writer=writer)
-            artifacts["model_dir"] = model_dir
-        elif p.model_dir:
-            from pyspark.ml.regression import RandomForestRegressionModel
+            targets = p.target_wikis or sites  # JobRunner.scala:47-50
+            models = None
+            if p.build_models:
+                model_dir = os.path.join(out, "models")
+                models = build_models(features, targets, seed=p.seed,
+                                      model_dir=model_dir, writer=writer)
+                artifacts["model_dir"] = model_dir
+            elif p.model_dir:
+                from pyspark.ml.regression import RandomForestRegressionModel
 
-            models = {}
-            for site in targets:
-                path = os.path.join(p.model_dir, site)
-                try:
-                    models[site] = RandomForestRegressionModel.load(path)  # S9
-                except Exception as exc:
-                    # X2: scored as an empty column (ScorePredictor.scala:37-44)
-                    log.warning("no model for site %s: %s", site, exc)
-                    models[site] = None
+                models = {}
+                for site in targets:
+                    path = os.path.join(p.model_dir, site)
+                    try:
+                        models[site] = RandomForestRegressionModel.load(path)  # S9
+                    except Exception as exc:
+                        # X2: scored as an empty column (ScorePredictor.scala:37-44)
+                        log.warning("no model for site %s: %s", site, exc)
+                        models[site] = None
 
-        if p.score_items:  # EP3 scorer: lazy plans, built while the saves finish
-            predictions = assemble_predictions(score_items(features, models))
-        if p.build_models and _join_model_saves(models) and p.score_items:
-            # X2: a site whose model failed to save scores as an empty column
-            predictions = assemble_predictions(score_items(features, models))
-        if p.score_items:
-            path = os.path.join(out, "predictions")
-            write_predictions_csv(predictions, path)
-            artifacts["predictions"] = path
+            if p.score_items:  # EP3 scorer: lazy plans, built while the saves finish
+                predictions = assemble_predictions(score_items(features, models))
+            if p.build_models and _join_model_saves(models) and p.score_items:
+                # X2: a site whose model failed to save scores as an empty column
+                predictions = assemble_predictions(score_items(features, models))
+            if p.score_items:
+                path = os.path.join(out, "predictions")
+                write_predictions_csv(predictions, path)
+                artifacts["predictions"] = path
 
-        for w in writes:
-            w.result()  # a failed parquet write fails the run
+            for w in writes:
+                w.result()  # a failed parquet write fails the run
+    finally:
+        # the matrix is this run's alone: left cached, a later run over
+        # an input rewritten at the same path would match its plan and
+        # read this run's rows
+        if features is not None:
+            features.unpersist()
     return artifacts
 
 

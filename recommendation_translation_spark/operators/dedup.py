@@ -787,7 +787,7 @@ def minhash_bands(
     Signatures split into ``bands`` bands of ``k/bands`` rows each;
     docs sharing a (band, band_hash) are LSH candidates.  Shared by
     :func:`minhash_lsh_pairs` (candidate join) and the bucket-size
-    skew diagnostic (queries.q_dedup_band_histogram)."""
+    skew diagnostic (catalog.dedup.q_dedup_band_histogram)."""
     banded = minhash_bands_wide(df, k=k, bands=bands, n=n, text_col=text_col,
                                 id_col=id_col)
     return banded.selectExpr(
@@ -1279,7 +1279,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3, bits: int = 32,
     # doc → one rep pair or the twins leg, never both) and the Manku
     # completeness argument applies unchanged at the signature level,
     # so the output SET is identical — pinned by the ORACLE, which is
-    # the brute-force all-pairs scan (queries.q_dedup_simhash_pairs):
+    # the brute-force all-pairs scan (catalog.dedup.q_dedup_simhash_pairs):
     # parity proves zero recall loss for the collapse, not just for
     # the banding.
     sigs = s.select("simhash").distinct()

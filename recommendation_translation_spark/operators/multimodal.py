@@ -372,7 +372,7 @@ def chunk_audio_windows(media: DataFrame, sample_rate: int = 16_000,
     is the deterministic stand-in; a real pipeline passes 2 for s16le
     and a real resampler as a decoder stage before this).  Window
     bounds are pure integer math on the payload length, so the
-    oracle-gated query (queries.q_mm_audio_windows) reproduces every
+    oracle-gated query (catalog.sources.q_mm_audio_windows) reproduces every
     column except the digest in portable SQL; the digest path is
     pytest-pinned (DuckDB cannot substring a BLOB).  An empty payload
     yields ONE zero-sample window, mirroring the frame sampler's

@@ -299,7 +299,7 @@ def ann_lsh_topk(
     )
 
 
-#: embedding-LSH sizing shared with the DuckDB oracle (queries.py):
+#: embedding-LSH sizing shared with the DuckDB oracle (catalog.embeddings):
 #: buckets target ~TARGET_BUCKET_ROWS vectors each, bit width capped at
 #: MAX_LSH_BITS, recall recovered with N_LSH_TABLES independent
 #: OR-banded hyperplane tables (seeds "hp0", "hp1", ...).

@@ -1,9946 +1,33 @@
-"""The query catalog: every implemented operator as a (spark, sf_dir) →
-DataFrame builder plus, where SQL-expressible, a DuckDB oracle SQL string
-computing the identical relation (same column names, same types, same
-rounding) — the driver hash-compares the two at sf0.01.
-
-Cross-engine conventions (learned the hard way; keep them):
-
-- integer outputs are ``long`` in Spark / ``CAST(... AS BIGINT)`` in
-  DuckDB (DuckDB ``sum(int)`` is HUGEINT, ``len(list)`` is BIGINT,
-  Spark ``size`` is INT — normalize everything);
-- double aggregates are ``round``-ed identically on both sides, with
-  the decimal count chosen so cross-engine summation-order noise
-  (≲1e-10 relative) cannot straddle a rounding boundary;
-- values that feed an ORDER BY are rounded *before* ranking so tie
-  order can't diverge between engines; every ranking has an explicit
-  id tie-break;
-- timestamps are exported as epoch seconds (BIGINT), never as raw
-  timestamps, to dodge rendering/precision differences;
-- DuckDB ``regexp_replace`` needs the ``'g'`` flag to match Spark's
-  replace-all semantics.
-
-The reference-semantics queries (rank / pivot / exists / fold) treat
-``lineitem`` as the long table with ``site := l_returnflag``,
-``id := l_partkey``, ``pageviews := sum(l_extendedprice)``
-(FIXTURES.md §B) — the same operator DAG the reference runs on
-sitelink/pageview data (FeatureExtractor.scala:50-104).
+"""The query registry: every catalog row as a ``(spark, sf_dir) →
+DataFrame`` builder (``QUERIES``) and its DuckDB oracle SQL
+(``ORACLES``), assembled from the family modules in ``catalog``.  The
+cross-engine conventions every oracle follows are in ``catalog``'s
+docstring.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from .operators.dedup import (
-    dedup_exact,
-    minhash_bands,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_pairs,
-)
-from .operators.curation import (
-    EMAIL_RE,
-    PHONE_RE,
-    dup_clusters,
-    hash_split,
-    pii_redact,
-    quality_flags,
-    repetition_stats,
-    token_budget_sample,
-)
-from .operators.events import resample_ffill, sessionize, sliding_agg, tumbling_agg
-from .operators.features import pivot_features
-from .operators.joins import asof_join, range_count, salted_join
-from .operators.multimodal import attach_fake_media, decode_image_meta
-from .operators.rank import normalized_rank
-from .operators.similarity import (
-    ann_lsh_topk,
-    cosine_topk_np,
-    centroids_by_label,
-    cosine_topk,
-    embedding_cosine_pairs,
-    hyperplane_weight,
-    ivf_topk,
-)
-from .operators.text import LANG_MARKERS, STOPWORDS, fingerprint, lang_id, quality_score, token_stats, tokens
-from .sources.readers import read_events, read_table, table_row_count
-from . import queries_analytics as _qa
-
-# ---------------------------------------------------------------------------
-# shared plan fragments
-# ---------------------------------------------------------------------------
-
-SITES = ["A", "N", "R"]  # l_returnflag domain (TPC-H)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, sf_dir)
-    return read_table(spark, sf_dir, name)
-
-
-def long_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem → the reference's long form (site, id, pageviews).
-
-    pageviews is rounded to 2dp BEFORE any ranking so downstream order
-    is engine-independent."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy(
-        F.col("l_returnflag").alias("site"),
-        F.col("l_partkey").cast("string").alias("id"),
-    ).agg(F.round(F.sum("l_extendedprice"), 2).alias("pageviews"))
-
-
-_LONG_SQL = """
-    SELECT l_returnflag AS site,
-           CAST(l_partkey AS VARCHAR) AS id,
-           ROUND(SUM(l_extendedprice), 2) AS pageviews
-    FROM lineitem
-    GROUP BY 1, 2
-"""
-
-_RANKED_SQL = f"""
-    SELECT site, id, pageviews,
-           CAST(ROW_NUMBER() OVER (PARTITION BY site ORDER BY pageviews, id) AS DOUBLE)
-             / COUNT(*) OVER (PARTITION BY site) AS rank
-    FROM ({_LONG_SQL})
-"""
-
-
-def ranked_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return normalized_rank(long_table(spark, sf_dir))
-
-
-_PIVOT_SQL = f"""
-    SELECT id,
-           {', '.join(
-               f'''COALESCE(MAX(CASE WHEN site = '{s}' THEN pageviews END), 0.0) AS "pageviews_{s}",
-           COALESCE(MAX(CASE WHEN site = '{s}' THEN rank END), 0.0) AS "rank_{s}",
-           COALESCE(MAX(CASE WHEN site = '{s}' THEN 1.0 END), 0.0) AS "exists_{s}"'''
-               for s in SITES)}
-    FROM ({_RANKED_SQL})
-    GROUP BY id
-"""
-
-
-def feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pivot_features(ranked_table(spark, sf_dir), SITES)
-
-
-# normalized text + tokens, shared by the text/dedup oracles.  Blank
-# text maps to an EMPTY list — DuckDB's string_split_regex('') yields
-# [''] while operators.text.tokens yields [], and list_sum over the
-# empty result must fold to 0 like Spark's F.aggregate(init 0), so the
-# array oracles guard with CASE/COALESCE (round-2 ADVICE).
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"CASE WHEN {_NORM} = '' THEN [] ELSE string_split_regex({_NORM}, '\\s+') END"
-
-
-def _hash_sql(expr: str, seed: str = "") -> str:
-    """DuckDB side of operators.text.cross_engine_hash."""
-    inner = f"concat('{seed}:', {expr})" if seed else expr
-    return f"('0x' || substr(md5({inner}), 1, 8))::BIGINT"
-
-
-def _count_token_sql(word: str) -> str:
-    if word.isascii():
-        return f"CAST(len(regexp_extract_all(text, '\\b{word}\\b')) AS BIGINT)"
-    return (
-        f"CAST((length(text) - length(replace(text, '{word}', ''))) // length('{word}') AS BIGINT)"
-    )
-
-
-# ---------------------------------------------------------------------------
-# reference-core queries (SURVEY §2)
-# ---------------------------------------------------------------------------
-
-
-def q_rank_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1/W2 — FeatureExtractor.scala:50-75 as window functions."""
-    return ranked_table(spark, sf_dir)
-
-
-def q_feature_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/A5 — FeatureExtractor.scala:80-103 as groupBy().pivot()."""
-    return feature_table(spark, sf_dir)
-
-
-def q_feature_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverse of A5: wide feature matrix back to long form via
-    ``stack`` (Spark's unpivot) — one Generate per row, no shuffle at
-    all; the wide→long direction is pure row-local expansion.  At scale
-    this is how a 1+3·|sites| column matrix re-enters long-format
-    processing without a per-column union of scans."""
-    wide = feature_table(spark, sf_dir)
-    stack_args = ", ".join(
-        f"'{s}', pageviews_{s}, rank_{s}, exists_{s}" for s in SITES
-    )
-    return wide.select(
-        "id",
-        F.expr(
-            f"stack({len(SITES)}, {stack_args}) AS (site, pageviews, rank, exists)"
-        ),
-    )
-
-
-def q_customer_balance_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/upsert shape: per-customer order spend merged into a
-    customer target (restricted to nationkey < 13 so all three MERGE
-    branches fire): matched rows update the balance, target-only rows
-    keep it, source-only rows insert.  Expressed as one FULL OUTER
-    join + CASE — a single shuffle on the merge key; at 100 TB the
-    same plan under AQE, with the source side broadcast when small."""
-    target = _t(spark, sf_dir, "customer").filter(F.col("c_nationkey") < 13)
-    spend = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("spend"))
-    )
-    merged = target.join(spend, target["c_custkey"] == spend["o_custkey"], "full_outer")
-    return merged.select(
-        F.coalesce("c_custkey", "o_custkey").alias("custkey"),
-        F.when(F.col("c_custkey").isNotNull() & F.col("o_custkey").isNotNull(), "update")
-        .when(F.col("o_custkey").isNull(), "keep")
-        .otherwise("insert")
-        .alias("action"),
-        F.round("c_acctbal", 2).alias("balance_before"),
-        F.col("spend"),
-        F.round(F.coalesce("c_acctbal", F.lit(0.0)) + F.coalesce("spend", F.lit(0.0)), 2).alias(
-            "balance_after"
-        ),
-    )
-
-
-def q_exists_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 — Utils.scala:30-32 exists-predicate as a native expression;
-    (id, label) training projection for target site 'A'."""
-    feats = feature_table(spark, sf_dir)
-    return feats.filter(F.col("exists_A") == 1.0).select(
-        "id", F.col("rank_A").alias("label")
-    )
-
-
-def q_predictions_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 — ScorePredictor.scala:47 chained full-outer join fold."""
-    ranked = ranked_table(spark, sf_dir)
-    frames = [
-        ranked.filter(F.col("site") == s).select("id", F.col("rank").alias(f"score_{s}"))
-        for s in SITES
-    ]
-    from functools import reduce
-
-    return reduce(lambda l, r: l.join(r, ["id"], "outer"), frames)
-
-
-def q_ingest_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 — DataGatherer.scala:48 inner equi-join USING, on the star
-    schema: orders ⋈ customer ⋈ nation ⋈ region, revenue per region.
-    The DOMAIN-bounded dimensions (nation 25 rows, region 5 rows) are
-    broadcast; customer is SF-scaled (150k × SF — ~TB at 100 TB), so it
-    carries NO hint: AQE broadcasts it when it measures small and falls
-    back to a shuffled hash join when it doesn't (round-3 verdict #2)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    return (
-        orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 — sum + GROUP BY (DataGatherer.scala:70-73), in its classic
-    TPC-H Q1 shape: one scan, map-side partial agg, one shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_pricing_summary_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-frontend form of pricing_summary: the base table registered
-    as a temp view and the ORACLE's own ANSI-SQL text submitted through
-    spark.sql — one dialect-neutral query string runs unchanged on both
-    engines, and Catalyst plans it identically to the DataFrame form
-    (same pushdown, same single shuffle)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(ORACLES["pricing_summary_sql"])
-
-
-def q_count_by_site(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 — countByValue kept distributed (FeatureExtractor.scala:51)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy(F.col("l_returnflag").alias("site")).agg(
-        F.count("*").alias("n_rows")
-    )
-
-
-def q_distinct_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 — distinct site list (JobRunner.scala:50)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(F.col("l_returnflag").alias("site")).distinct()
-
-
-def q_suffix_filter_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1/P2/F1/F2 — endsWith filter + regex rewrite
-    (DataGatherer.scala:94-98) on the part table."""
-    part = _t(spark, sf_dir, "part")
-    return (
-        part.filter(F.col("p_type").endswith("O"))
-        .withColumn("brand_code", F.regexp_replace("p_brand", r"^Brand#", "B-"))
-        .select("p_partkey", "p_type", "brand_code", "p_retailprice")
-    )
-
-
-def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 parts by revenue within each returnflag — window top-k
-    (extension of §2.6; the reference has no top-k)."""
-    li = _t(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_returnflag", "l_partkey").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "revenue"
-        )
-    )
-    w = Window.partitionBy("l_returnflag").orderBy(
-        F.col("revenue").desc(), F.col("l_partkey").asc()
-    )
-    return (
-        rev.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("l_returnflag", "l_partkey", "revenue", "rk")
-    )
-
-
-def q_median_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running-sum window: per supplier, the first lineitem (by shipdate)
-    at which cumulative quantity reaches half the supplier's total."""
-    li = _t(spark, sf_dir, "lineitem")
-    w_order = Window.partitionBy("l_suppkey").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber"
-    )
-    w_all = Window.partitionBy("l_suppkey")
-    run = (
-        li.select("l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-        .withColumn(
-            "run_qty",
-            F.sum("l_quantity").over(w_order.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .withColumn("tot_qty", F.sum("l_quantity").over(w_all))
-    )
-    crossed = run.filter(F.col("run_qty") >= F.col("tot_qty") / 2)
-    w_first = Window.partitionBy("l_suppkey").orderBy(
-        "run_qty", "l_orderkey", "l_linenumber"
-    )
-    return (
-        crossed.withColumn("rn", F.row_number().over(w_first))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_suppkey",
-            "l_orderkey",
-            "l_linenumber",
-            F.round(F.col("run_qty"), 2).alias("run_qty"),
-            F.round(F.col("tot_qty"), 2).alias("tot_qty"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# events (windowed aggregations; §2.9 extension)
-# ---------------------------------------------------------------------------
-
-
-def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_agg(_t(spark, sf_dir, "events"))
-
-
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_agg(_t(spark, sf_dir, "events"))
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessionize(_t(spark, sf_dir, "events"))
-
-
-def q_events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resampling: hourly grid per event type with gap-fill
-    (sequence+explode dense grid) and forward-filled running value
-    (last ignorenulls over a per-type window)."""
-    return resample_ffill(_t(spark, sf_dir, "events"))
-
-
-def q_lineitem_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostic: the 10 heaviest l_orderkey values with
-    their row counts and share of the table (in 10⁻⁶ units, exact
-    integer div) — the measurement behind choosing a salting factor
-    (operators.joins.salted_join) or trusting AQE skew splitting.  One
-    hash aggregate + a 1-row broadcast total + TakeOrdered."""
-    li = _t(spark, sf_dir, "lineitem")
-    per_key = li.groupBy("l_orderkey").agg(F.count("*").alias("n_rows"))
-    total = per_key.agg(F.sum("n_rows").cast("long").alias("t_rows"))
-    return (
-        per_key.crossJoin(F.broadcast(total))
-        .select(
-            "l_orderkey",
-            "n_rows",
-            F.expr("(n_rows * 1000000) div t_rows").alias("share_ppm"),
-        )
-        .orderBy(F.col("n_rows").desc(), "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_events_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resampling with LINEAR interpolation across gaps
-    (nearest observed neighbours; head backfill, tail carry-forward) —
-    operators.events.resample_interpolate."""
-    from .operators.events import resample_interpolate
-
-    return resample_interpolate(_t(spark, sf_dir, "events"))
-
-
-def q_events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream join (errors ⋈ same-user clicks in the
-    preceding 30 min), drained from a bounded replay — equals the batch
-    time-bounded join, so the oracle is exact."""
-    from .streaming.events_stream import run_stream_to_memory, stream_stream_join
-
-    return run_stream_to_memory(stream_stream_join(spark, sf_dir), output_mode="append")
-
-
-def q_events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming replay of the tumbling aggregation — same
-    relation as q_events_tumbling, computed incrementally."""
-    from .streaming.events_stream import run_stream_to_memory, stream_tumbling_agg
-
-    return run_stream_to_memory(stream_tumbling_agg(spark, sf_dir))
-
-
-def q_events_stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming hopping (overlapping) windows: 2-hour totals per
-    event type refreshed hourly — each event lands in width/slide = 2
-    windows.  The oracle reproduces the overlap by unnesting each
-    event into its 2 hour-aligned window starts."""
-    from .streaming.events_stream import run_stream_to_memory, stream_hopping_agg
-
-    return run_stream_to_memory(stream_hopping_agg(spark, sf_dir))
-
-
-# ---------------------------------------------------------------------------
-# documents: text analysis + dedup (extension)
-# ---------------------------------------------------------------------------
-
-
-def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = token_stats(_t(spark, sf_dir, "documents"))
-    return df.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_bpe_tokens").cast("long").alias("n_bpe_tokens"),
-        F.col("n_distinct_tokens").cast("long").alias("n_distinct_tokens"),
-        "avg_token_len",
-    )
-
-
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = lang_id(_t(spark, sf_dir, "documents"))
-    casts = [F.col(f"score_{lang}").cast("long").alias(f"score_{lang}") for lang in sorted(LANG_MARKERS)]
-    return df.select("doc_id", "lang_pred", *casts)
-
-
-def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = quality_score(_t(spark, sf_dir, "documents"))
-    return df.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "punct_ratio",
-        "stopword_ratio",
-        "quality",
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_exact(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.readers import collapse_dial
-
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), n=3, threshold=0.05,
-        # footer gate (round 12): the pairwise audit's COMPUTE runs at
-        # the distinct-text level on big corpora; output unchanged
-        collapse_distinct=collapse_dial(spark, sf_dir),
-    )
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), k=16, bands=8, n=3, threshold=0.02
-    )
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL pairs within hamming ≤ 3 of the 32-bit simhash, via complete
-    multi-block banding (operators.dedup.simhash_pairs).  The oracle is
-    the brute-force all-pairs scan, so parity here *proves* the banding
-    loses no pairs."""
-    return simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=3).select(
-        "a_id", "b_id", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-def q_dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 64-bit signature variant — the 100 TB default (round-3
-    verdict #5): twice the hamming resolution and ~26-bit two-block
-    band keys at k=3, so LSH buckets stay sparse as the corpus grows
-    where the 32-bit keys would go hot.  Same complete Manku banding;
-    the oracle is again the brute-force all-pairs scan, proving zero
-    recall loss for the widened signature too."""
-    return simhash_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, bits=64
-    ).select("a_id", "b_id", F.col("hamming").cast("long").alias("hamming"))
-
-
-def q_dedup_band_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH bucket-size distribution (bucket_size → n_buckets) for the
-    MinHash banding — the skew diagnostic for dedup planning, the
-    companion of lineitem_skew_profile for joins: a candidate join on
-    (band, band_hash) emits C(size, 2) pairs per bucket, so one hot
-    bucket of 10⁵ docs is 5·10⁹ pairs.  Run this BEFORE the pair join
-    at a new scale to size k/bands (wider bands → smaller buckets).
-    Costs the signature pass (shared with the LSH pipeline) plus two
-    hash aggregates — crucially, NO pair join: the diagnostic never
-    risks the blowup it measures."""
-    stacked = minhash_bands(_t(spark, sf_dir, "documents"), k=16, bands=8)
-    sizes = stacked.groupBy("band", "band_hash").agg(
-        F.count("*").alias("bucket_size")
-    )
-    return (
-        sizes.groupBy("bucket_size")
-        .agg(F.count("*").alias("n_buckets"))
-        .select(F.col("bucket_size").cast("long").alias("bucket_size"), "n_buckets")
-    )
-
-
-# ---------------------------------------------------------------------------
-# embeddings: similarity search (extension)
-# ---------------------------------------------------------------------------
-
-
-def _queries_frame(emb: DataFrame) -> DataFrame:
-    """Deterministic BOUNDED query panel: every 50th vector with
-    vec_id < 4000.
-
-    The id cap is the round-6 scale fix: an unbounded modulus sample
-    scales the panel WITH the corpus, which turns every brute-force
-    leg (cosine_topk truth, the IVF recall audit) into O(N²/50) — the
-    sf0.1→sf1 sweep measured exponent 1.32 on emb_ivf_recall_report
-    before the cap and 0.71 after (SCALE.md round-6 table).  At the
-    driver/bench scale factors (max vec_id 1999) the cap is inert, so
-    every hash-checked relation is unchanged; beyond it the panel is
-    a fixed 80 queries — top-k quality audits are estimates over a
-    query SAMPLE, so a bounded panel is the statistically correct
-    posture at 100 TB, not a concession."""
-    return emb.filter(
-        (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 4000)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
-#: Target sub-corpus size for the SAMPLED recall audits (round-9
-#: verdict #3).  Canonical value lives in sources.readers (round-11:
-#: shared with queries_analytics' sampled LSH audit, cycle-free).
-from .sources.readers import AUDIT_SAMPLE_TARGET as _AUDIT_SAMPLE_TARGET
-
-
-def _audit_sample_modulus(sf_dir: str) -> int:
-    """Deterministic corpus-sample modulus s = ceil(n / target): the
-    audit sub-corpus is ``vec_id % s == 0``.  n comes from parquet
-    FOOTER metadata (sources.readers.table_row_count — no Spark job at
-    plan build, the dedup_emb_cosine discipline), and the DuckDB
-    oracle recomputes the identical s from COUNT(*) in SQL, so the
-    sample membership — hence every audited number — is bit-identical
-    across engines at any scale factor."""
-    from .sources.readers import audit_sample_modulus
-
-    return audit_sample_modulus(sf_dir, "embeddings")
-
-
-def _audit_sample_cte(src: str = "embeddings", id_col: str = "vec_id") -> str:
-    """The oracle-side twin of :func:`_audit_sample_modulus`: a CTE
-    body selecting the deterministic audit sub-corpus."""
-    return (
-        f"SELECT * FROM {src} WHERE {id_col} % (SELECT GREATEST(CAST("
-        f"CEIL(COUNT(*) / {_AUDIT_SAMPLE_TARGET}.0) AS BIGINT), 1) "
-        f"FROM {src}) = 0"
-    )
-
-
-def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk(emb, _queries_frame(emb), k=5)
-    return out.select("query_id", "cand_id", "cosine", F.col("rk").cast("long").alias("rk"))
-
-
-def q_emb_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-vectorized brute-force cosine top-k (mapInPandas + BLAS
-    matmul with per-batch local top-k) — same relation as
-    emb_cosine_topk at 4dp rounding."""
-    emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk_np(emb, _queries_frame(emb), k=5, decimals=4)
-    return out.select("query_id", "cand_id", "cosine", F.col("rk").cast("long").alias("rk"))
-
-
-def q_emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ann_lsh_topk(emb, _queries_frame(emb), k=5, n_bits=4, dim=64)
-    return out.select("query_id", "cand_id", "cosine", F.col("rk").cast("long").alias("rk"))
-
-
-def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: per-label centroid lists, nprobe=2, exact top-k within
-    the probed lists."""
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ivf_topk(emb, _queries_frame(emb), k=5, nprobe=2)
-    return out.select("query_id", "cand_id", "cosine", F.col("rk").cast("long").alias("rk"))
-
-
-def q_dedup_emb_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, LSH-bucketed (dedup surface).
-    Bucket width adapts to the corpus count (adaptive_n_bits) with
-    recall recovered by OR-banded independent hyperplane tables —
-    candidate volume O(N·TARGET_BUCKET_ROWS), not O(N²/2^const).
-    The count comes from parquet footer METADATA (table stats), not a
-    blocking ``emb.count()`` Spark job at plan build (round-7 verdict
-    watch item); the DuckDB oracle's COUNT(*) CASE ladder sees the
-    same number, so the effective bit width is bit-identical."""
-    from .sources.readers import table_row_count
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_cosine_pairs(
-        emb, threshold=0.3, dim=64, n_rows=table_row_count(sf_dir, "embeddings")
-    )
-
-
-def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming session_window sessionization (append mode); emits the
-    watermark-finalized subset of the batch sessions."""
-    from .streaming.events_stream import run_stream_to_memory, stream_sessionize
-
-    return run_stream_to_memory(stream_sessionize(spark, sf_dir), output_mode="append")
-
-
-def q_events_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHAINED stateful streaming operators (Spark 4): the watermarked
-    stream-stream join feeds an hourly tumbling aggregation in the
-    SAME query — two state stores, one append-mode sink (pre-Spark-4
-    this took two queries bridged by a sink).  Emits the
-    watermark-finalized windows; the oracle reproduces the join, the
-    hourly rollup, and the finalization cutoff (window end ≤ min of
-    both sides' max event time − the 30-minute delay)."""
-    from .streaming.events_stream import run_stream_to_memory, stream_join_then_agg
-
-    return run_stream_to_memory(
-        stream_join_then_agg(spark, sf_dir), output_mode="append"
-    )
-
-
-def q_events_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState per-user running stats (update mode)."""
-    from .streaming.events_stream import run_stream_to_memory, stream_user_stats
-
-    return run_stream_to_memory(stream_user_stats(spark, sf_dir), output_mode="update")
-
-
-def q_emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = centroids_by_label(_t(spark, sf_dir, "embeddings"))
-    return out.select(
-        F.col("label").cast("long").alias("label"),
-        F.col("pos").cast("long").alias("pos"),
-        "centroid",
-    )
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing (extension)
-# ---------------------------------------------------------------------------
-
-
-def q_mm_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column plumbing: payload size + digest via column exprs."""
-    media = attach_fake_media(_t(spark, sf_dir, "documents"))
-    return media.select(
-        "sample_id",
-        "media_type",
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.content_md5").alias("content_md5"),
-    )
-
-
-def q_mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched mapInPandas decode (deterministic fake decoder);
-    the oracle reproduces the md5-derived dimensions in SQL."""
-    media = attach_fake_media(_t(spark, sf_dir, "documents"))
-    out = decode_image_meta(media)
-    return out.select(
-        "sample_id",
-        "n_bytes",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "mode",
-    )
-
-
-def q_mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec round trip, hash-gated (round-6 verdict #7): every
-    document becomes a well-formed grayscale PNG (stdlib zlib+CRC
-    encoder, dimensions closed-form in doc_id), then ``best_decoder()``
-    — the container-header parser here, PIL where available — re-reads
-    (width, height, mode) from the actual byte structure.  The oracle
-    states the same dims in SQL, so a hash match proves the encoder
-    emitted and the parser recovered the true container metadata for
-    every row; n_bytes is zlib-dependent and deliberately excluded.
-    Parser errors on any payload fail the whole query (no fake
-    fallback)."""
-    from .operators.multimodal import attach_png_media, best_decoder
-
-    media = attach_png_media(_t(spark, sf_dir, "documents"))
-    out = decode_image_meta(media, decoder=best_decoder())
-    return out.select(
-        "sample_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "mode",
-    )
-
-
-# ---------------------------------------------------------------------------
-# ML pipeline (rows-only checks — RF internals aren't SQL-expressible)
-# ---------------------------------------------------------------------------
-
-
-# Trained models memoized per (app id, sf_dir): ml_score_topk reuses
-# ml_train_rmse's models instead of re-fitting 3 RandomForests — in a real
-# deployment scoring loads models from the model sink (S8/S9), it never
-# retrains.  Keyed on applicationId so a fresh session invalidates.
-_ML_CACHE: dict = {}
-
-
-def _trained(spark: SparkSession, sf_dir: str):
-    from .pipeline.train import build_models
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ML_CACHE:
-        # localCheckpoint, NOT cache: the bench harnesses clearCache()
-        # between queries (dead-frame hygiene), which would silently
-        # evict a cached feats and make every later ml_* query
-        # recompute the pivot lineage per action.  Checkpoint blocks
-        # are keyed to this concrete frame (held here for the session,
-        # exactly like the memoized models), so the shared-one-copy
-        # design survives any cache clearing.  Eager: materializes
-        # BEFORE the threaded fan-out so the per-site trainers share
-        # one copy instead of racing to compute the pivot concurrently
-        # (SURVEY §3 EP3 fix).
-        feats = feature_table(spark, sf_dir).localCheckpoint()
-        _ML_CACHE[key] = (feats, build_models(feats, SITES, seed=42))
-    return _ML_CACHE[key]
-
-
-def q_ml_train_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1-M4 — per-site seeded RF train/eval (ModelBuilder.scala:23-34),
-    graduated to a hash-checked relation (round-5 verdict #1): one row
-    per site carrying the EXACT labeled-row count (= the site's row
-    count in the long table, which the oracle recomputes) plus
-    deterministic invariant flags on the trained model that the oracle
-    pins as TRUE literals:
-
-    - ``trained``: the per-site fit completed without the X2 error path;
-    - ``rmse_finite``: the held-out RMSE evaluated to a finite ≥ 0 value;
-    - ``rmse_lt_1``: guaranteed BY CONSTRUCTION — labels are normalized
-      ranks in (0,1] and RF predictions are averages of training
-      labels, so every residual is < 1 strictly;
-    - ``rmse_le_2x_label_sd``: the model is no worse than 2× the
-      label's own spread.  A mean-predictor scores ≈ 1× sd and a
-      worst-case overfit approaches √2× sd (predicting an independent
-      draw), so 2× holds with margin; measured 0.98-1.10× sd across
-      sf0.001/0.01 (the synthetic sites are nearly independent, so the
-      reference's cross-site features genuinely can't beat sd here).
-
-    The raw RMSE values stay observable through ``pipeline.train``
-    (pinned by the CLI pipeline tests); the driver hash now checks that
-    training RAN and landed inside its deterministic envelope."""
-    import math
-
-    feats, results = _trained(spark, sf_dir)
-    sites = sorted(results)
-    # One agg over the cached feature matrix returns every site's
-    # (n, sd) pair in a single job — a per-site agg+collect loop costs
-    # one scheduler round-trip per site for a frame already in memory.
-    st = feats.agg(
-        *[
-            F.sum((F.col(f"exists_{s}") == 1.0).cast("long")).alias(f"n_{s}")
-            for s in sites
-        ],
-        *[
-            F.stddev(
-                F.when(F.col(f"exists_{s}") == 1.0, F.col(f"rank_{s}"))
-            ).alias(f"sd_{s}")
-            for s in sites
-        ],
-    ).collect()[0]
-    rows = []
-    for site in sites:
-        r = results[site]
-        n, sd = st[f"n_{site}"], st[f"sd_{site}"]
-        ok = r.error is None and r.model is not None
-        rmse = r.rmse
-        fin = rmse is not None and math.isfinite(rmse) and rmse >= 0.0
-        rows.append(
-            (
-                site,
-                int(n),
-                ok,
-                fin,
-                fin and rmse < 1.0,
-                # degenerate guard (ADVICE r6 #2): a site with <2
-                # labeled rows has NULL sample sd, and zero sd means
-                # constant labels — the spread bound is vacuous there,
-                # not failed
-                fin and (sd is None or sd == 0.0 or rmse <= 2.0 * sd),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "site string, n_labeled long, trained boolean, rmse_finite boolean, "
-        "rmse_lt_1 boolean, rmse_le_2x_label_sd boolean",
-    )
-
-
-def q_ml_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M3 + J2 — score the full candidate set per target site, rank
-    missing-items-first (exists asc, score desc, id), keep the top 10.
-
-    Scores the reference's scoring set — items MISSING on the target
-    site (ScorePredictor.scala:22-34) — whenever any exist.  At scale
-    factors whose exists-matrix is dense (sf0.01: no item is missing
-    anywhere) the reference semantics yield an empty frame, which made
-    the driver's rows-only check vacuous (round-2 verdict #7); there we
-    fall back to ranking the full candidate set so a real train→score
-    round-trip is always asserted.  The branch is one count on the
-    already-cached feature matrix, so the common sparse case costs
-    exactly the reference path.
-
-    Graduated to a hash-checked relation (round-5 verdict #1): the
-    model-chosen ids/scores collapse into per-site invariants the
-    oracle can pin — the EXACT ranked-row count (min(10, population),
-    where the population size and the dense-vs-sparse branch are both
-    recomputable from the long table in SQL) plus TRUE-literal flags
-    that the ranked ids are distinct, drawn from the correct scoring
-    population, and carry finite scores.  The raw (id, score) ranking
-    stays observable through ``pipeline.score`` (CLI pipeline tests).
-    """
-    from .pipeline.score import score_items
-    from .schemas import NOT_EXISTS
-
-    feats, models = _trained(spark, sf_dir)
-    any_missing = (
-        feats.filter(
-            sum(
-                (F.col(f"exists_{s}") == NOT_EXISTS).cast("int")
-                for s in models
-            )
-            > 0
-        )
-        .limit(1)
-        .count()
-        > 0
-    )
-    scored = score_items(feats, models, exists=False if any_missing else None)
-    frames = []
-    for site, df in scored.items():
-        flag = feats.select("id", F.col(f"exists_{site}").alias("exists_flag"))
-        frames.append(
-            df.join(flag, "id").select(
-                F.lit(site).alias("site"), "id",
-                F.col(site).alias("score"), "exists_flag",
-            )
-        )
-    from functools import reduce
-
-    melted = reduce(DataFrame.unionByName, frames)
-    w = Window.partitionBy("site").orderBy(
-        F.col("exists_flag").asc(), F.col("score").desc(), F.col("id").asc()
-    )
-    topk = melted.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 10
-    )
-    in_pop = (
-        (F.col("exists_flag") == NOT_EXISTS) if any_missing else F.lit(True)
-    )
-    return topk.groupBy("site").agg(
-        F.count(F.lit(1)).cast("long").alias("n_ranked"),
-        (F.count_distinct("id") == F.count(F.lit(1))).alias("ids_distinct"),
-        F.bool_and(in_pop).alias("in_population"),
-        F.bool_and(
-            F.col("score").isNotNull() & ~F.isnan("score")
-        ).alias("scores_finite"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# temporal joins + TPC-H-style analytics (extension; operators.joins)
-# ---------------------------------------------------------------------------
-
-
-def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each purchase event picks up the latest same-user
-    click at-or-before it (pandas merge_asof semantics, distributed via
-    union+window — ONE shuffle, no join blowup; operators.joins)."""
-    ev = _t(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "event_id")
-    wdup = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    right = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumn("rn", F.row_number().over(wdup))
-        .filter(F.col("rn") == 1)  # unique (user, ts) ⇒ deterministic match
-        .select("user_id", "ts", "value")
-    )
-    joined = asof_join(left, right, on="user_id", value_cols=["value"])
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.round("asof_value", 4).alias("asof_value"),
-        F.unix_micros(F.col("asof_ts")).alias("asof_ts_us"),
-    )
-
-
-def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (interval) join: per error event, how many same-user events
-    landed in the preceding 5 minutes — bucketed equi-join, bounded
-    fan-out (operators.joins.range_count)."""
-    ev = _t(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error")
-    out = range_count(errors, ev, on="user_id", window_seconds=300)
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("n_in_range").cast("long").alias("n_in_range"),
-    )
-
-
-def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join + agg + rounded-revenue top-10.
-    Filters sit directly on the scans (pushdown), the dims stay
-    broadcast-able, and AQE picks the join strategy."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-01-01")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-01-01")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("o_date_us"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
-
-
-def q_tpch_q5_regional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join through region→nation→(customer,
-    supplier)→orders→lineitem.  region/nation are broadcast explicitly —
-    their domains are bounded at ANY scale factor, so the hint is safe
-    at 100 TB where the fact-side joins shuffle."""
-    region = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(supp, (li["l_suppkey"] == supp["s_suppkey"])
-              & (cust["c_nationkey"] == supp["s_nationkey"]))
-        .join(nation, supp["s_nationkey"] == nation["n_nationkey"])
-        .join(region, nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# corpus curation (extension; operators.curation)
-# ---------------------------------------------------------------------------
-
-
-def q_doc_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/C4-style per-rule quality gates + the keep conjunction."""
-    return quality_flags(_t(spark, sf_dir, "documents"))
-
-
-def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram repetition metrics (top-gram share, distinct ratio)."""
-    return repetition_stats(_t(spark, sf_dir, "documents"), n=2)
-
-
-def q_doc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction exercised on synthesized spans: every document gets
-    a deterministic email + phone appended, then redacted; output is the
-    md5 of the redacted text + per-kind counts."""
-    docs = _t(spark, sf_dir, "documents")
-    aug = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or +1 (555) 123-4567 now"),
-        ),
-    )
-    red = pii_redact(aug)
-    return red.select(
-        "doc_id", F.md5("text").alias("fp_redacted"), "n_emails", "n_phones"
-    )
-
-
-def q_corpus_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic md5 train/val/test split; output = per-split doc
-    counts (split assignment is stable under corpus growth)."""
-    out = hash_split(_t(spark, sf_dir, "documents"))
-    return out.groupBy("split").agg(F.count("*").alias("n_docs"))
-
-
-def q_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-ranked selection under a global token budget (running-sum
-    window over (quality desc, doc_id))."""
-    q = quality_score(_t(spark, sf_dir, "documents"))
-    # output needs only the narrow checkpointed columns — skip the
-    # join-back's wasted corpus re-scan (round-11, see the operator)
-    sel = token_budget_sample(q, budget_tokens=100_000, join_back=False)
-    return sel.select(
-        "doc_id", "n_tokens", "quality", F.col("running_tokens").cast("long").alias("running_tokens")
-    )
-
-
-def q_corpus_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-ranked selection under a global TOKENIZER-FAITHFUL
-    budget (round-9 verdict #7): the budget counts exact BPE pieces
-    under the fixed merge table (operators.text.BPE_MERGES), not
-    whitespace words — the unit an LLM training pipeline actually
-    budgets in, where the ~1.2-1.5× piece-to-word drift flips keep/cut
-    decisions near the boundary.  Same selection mechanism as
-    corpus_token_budget (two-pass range-partitioned running sum, no
-    SinglePartition window), with the piece count computed in the SAME
-    corpus scan as the quality score (quality_score keep_cols — no
-    id self-join), and the piece counter itself pure JVM expressions:
-    lower → 33-rule literal replace chain → translate → length, every
-    rule a real BPE merge (pair of tokens → one private-use symbol,
-    cascades included).  The oracle replays the identical chain in
-    DuckDB, so every count — and therefore the keep set — is
-    bit-exact.
-
-    Round-11 (verdict #5): above readers.COLLAPSE_MIN_ROWS (footer row
-    count, no Spark job) the WHOLE text-functional stage — the BPE
-    chain AND the quality score, both pure functions of the text —
-    collapses to once-per-DISTINCT-text via
-    operators.text.per_distinct_text (sha2-fingerprint join-back):
-    hash-identical by text-functionality, and expression work scales
-    with distinct texts instead of rows (sf10 measured in SCALE.md).
-    Driver/bench SFs keep the exchange-free direct plan."""
-    from .operators.text import bpe_piece_count, per_distinct_text
-    from .sources.readers import collapse_dial
-
-    docs = _t(spark, sf_dir, "documents")
-    if collapse_dial(spark, sf_dir):
-        q = per_distinct_text(
-            docs.select("doc_id", "text"),
-            lambda reps, key: quality_score(
-                reps.withColumn(
-                    "n_bpe_pieces", bpe_piece_count("text").cast("long")
-                ),
-                id_col=key,
-                keep_cols=("n_bpe_pieces",),
-            ),
-        )
-    else:
-        q = quality_score(
-            docs.withColumn(
-                "n_bpe_pieces", bpe_piece_count("text").cast("long")
-            ),
-            keep_cols=("n_bpe_pieces",),
-        )
-    sel = token_budget_sample(
-        q,
-        budget_tokens=50_000,
-        tokens_col="n_bpe_pieces",
-        # ride the whitespace count inside the ordering checkpoint: the
-        # corpus text is then evaluated exactly once (sf3: 50.5 -> ~19 s)
-        carry_cols=("n_tokens",),
-        # every output column lives in the checkpointed narrow
-        # selection — the join-back would re-execute the collapsed
-        # fingerprint join over the whole corpus (sf3: ~24 -> ~7 s)
-        join_back=False,
-    )
-    return sel.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "n_bpe_pieces",
-        "quality",
-        F.col("running_tokens").cast("long").alias("running_pieces"),
-    )
-
-
-# Shard count for the training-order manifest, shared by the Spark
-# query and its DuckDB oracle so retuning cannot desynchronize them.
-_MANIFEST_SHARDS = 16
-
-
-def q_corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global training-order shuffle + shard manifest —
-    the step between curation and the training job: every document gets
-    a pseudo-random but REPRODUCIBLE order key (md5 of its id under a
-    fixed salt), a shard assignment derived from the same digest, its
-    1-based position within the shard, and its exclusive token offset
-    (where the doc starts if the shard is written as one token stream).
-    A shard writer needs exactly (shard, pos, offset); re-running on
-    the same corpus reproduces the same bytes.
-
-    Spark-first: both ordered measures — position AND running token
-    offset — come from ONE range shuffle via
-    ``operators.ordering.range_partitioned_measures`` (the multi-
-    measure form of the two-pass zipWithIndex formulation): no
-    ``Exchange SinglePartition``, no second corpus pass for the second
-    measure, and the per-shard ordering never funnels a shard through
-    one reducer the way a plain ``Window.partitionBy(shard)`` would at
-    16 shards × terabytes.  The md5 order key is the cross-engine hash
-    family (operators.text), so the DuckDB oracle reproduces order,
-    shards, and offsets bit-exactly.
-
-    No counterpart in the reference (its outputs are per-site CSVs,
-    JobRunner.scala:31-73); this is the LLM-pipeline extension's
-    shard-layout op."""
-    docs = _t(spark, sf_dir, "documents")
-    return _shard_manifest_frame(_shard_keys_frame(docs))
-
-
-def _shard_keys_frame(docs: DataFrame) -> DataFrame:
-    """Narrow (doc_id, n_tokens, order_key, shard) projection shared by
-    the manifest queries: one md5 per doc serves both the training-
-    order key and (via its first 8 hex chars, the cross-engine 32-bit
-    slice) the shard assignment."""
-    from .operators.text import tokens
-
-    order_key = F.md5(
-        F.concat(F.lit("shuffle:"), F.col("doc_id").cast("string"))
-    )
-    shard = (
-        F.conv(F.substring(order_key, 1, 8), 16, 10).cast("long")
-        % _MANIFEST_SHARDS
-    )
-    return docs.select(
-        "doc_id",
-        F.size(tokens("text")).cast("long").alias("n_tokens"),
-        order_key.alias("order_key"),
-        shard.alias("shard"),
-    )
-
-
-def _shard_manifest_frame(narrow: DataFrame) -> DataFrame:
-    """(doc_id, shard, pos, n_tokens, offset_tokens) from a
-    _shard_keys_frame projection: both ordered measures via ONE range
-    shuffle (range_partitioned_measures)."""
-    from .operators.ordering import range_partitioned_measures
-
-    out = range_partitioned_measures(
-        narrow,
-        [F.col("order_key"), F.col("doc_id")],
-        [
-            ("row_number", None, "pos"),
-            ("running_sum", "n_tokens", "_run_tokens"),
-        ],
-        group_cols=["shard"],
-        # the narrow lineage tokenizes every document body — evaluate
-        # it once, not once per ordering job (see token_budget_sample)
-        materialize_input=True,
-    )
-    return out.select(
-        "doc_id",
-        F.col("shard").cast("long").alias("shard"),
-        F.col("pos").cast("long").alias("pos"),
-        "n_tokens",
-        (F.col("_run_tokens") - F.col("n_tokens"))
-        .cast("long")
-        .alias("offset_tokens"),
-    )
-
-
-def q_corpus_shard_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard-manifest APPEND: extend an existing sharded corpus layout
-    with a new batch WITHOUT touching the base shards — the property a
-    production training-data store actually needs, because re-running
-    the full shuffle on corpus growth would rewrite every shard and
-    invalidate the training order already consumed.
-
-    Semantics (mirrors the emb_ivfpq_append_topk discipline — append
-    must not reshuffle what it extends): base docs (``doc_id % 10 !=
-    0``, standing in for the persisted corpus) keep their manifest
-    verbatim; batch docs (``% 10 == 0``) are ordered among THEMSELVES
-    by the same md5 key and appended after each shard's tail —
-    ``pos += base_count(shard)``, ``offset += base_tokens(shard)``.
-
-    The scale story is the cost shape: the ordering machinery (range
-    shuffle + window) runs over the BATCH ONLY, and the base corpus
-    contributes exactly one 16-row aggregate (count + token sum per
-    shard — at 100 TB that aggregate is a footer read of the persisted
-    manifest, not even a scan; here it is computed so the oracle can
-    pin the math).  Append cost ∝ batch, never ∝ corpus.  Output: the
-    batch's manifest rows with their global (shard, pos, offset)."""
-    docs = _t(spark, sf_dir, "documents")
-    keys = _shard_keys_frame(docs)
-    is_batch = F.col("doc_id") % 10 == 0
-    # per-shard tails of the base layout: a bounded 16-row relation —
-    # no ordering pass over the base (pos_max ≡ count; offset_end ≡
-    # token sum), broadcast onto the batch manifest
-    tails = (
-        keys.filter(~is_batch)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("_base_n"),
-            F.sum("n_tokens").alias("_base_tokens"),
-        )
-    )
-    batch = _shard_manifest_frame(keys.filter(is_batch))
-    out = batch.join(F.broadcast(tails), "shard", "left")
-    return out.select(
-        "doc_id",
-        F.col("shard").cast("long").alias("shard"),
-        (F.col("pos") + F.coalesce(F.col("_base_n"), F.lit(0)))
-        .cast("long")
-        .alias("pos"),
-        "n_tokens",
-        (
-            F.col("offset_tokens")
-            + F.coalesce(F.col("_base_tokens"), F.lit(0))
-        )
-        .cast("long")
-        .alias("offset_tokens"),
-    )
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over SimHash near-dup pairs → (doc_id,
-    cluster_id).  The Spark side is iterative pointer jumping
-    (operators/curation.py); the driver oracle is an exact DuckDB
-    recursive-CTE transitive closure over the same pairs — min
-    reachable id per member — so this is a full hash-checked row,
-    plus a union-find property oracle in tests/.
-
-    Round-8: runs through ``simhash_clusters_collapsed`` — exact-dup
-    collapse (sha2 fingerprint → min-id rep), CC over distinct-text
-    representatives, members mapped back — after the sf3 octave caught
-    the direct composition's cliff (signatures are text-functional, so
-    the verified pair set grew ∝ clone-group² — 69.9M pairs at sf3's
-    K≈30; output proven identical, boundary in SCALE.md round 8)."""
-    from .operators.dedup import simhash_clusters_collapsed
-
-    return simhash_clusters_collapsed(
-        _t(spark, sf_dir, "documents"), max_hamming=2
-    )
-
-
-# ---------------------------------------------------------------------------
-# multi-level aggregation, set ops, semi/anti joins, skew salting, JSON
-# (extension breadth; the reference has none of these — SURVEY.md §2.4/§2.7)
-# ---------------------------------------------------------------------------
-
-
-def q_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus): per-group, per-flag, and
-    grand totals in ONE pass — Catalyst expands the grouping sets into
-    a single Expand + aggregate, not three scans."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "sum_price",
-            "n_rows",
-        )
-    )
-
-
-def q_customer_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation customer counts split by has-orders: LEFT SEMI and
-    LEFT ANTI joins against orders (both plan as one-sided hash joins —
-    the orders side ships only its join key, never its payload)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    with_orders = (
-        cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left_semi")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n_with_orders"))
-    )
-    without = (
-        cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n_without_orders"))
-    )
-    return (
-        with_orders.join(without, "c_nationkey", "outer")
-        .select(
-            F.col("c_nationkey").cast("long").alias("nationkey"),
-            F.coalesce("n_with_orders", F.lit(0)).alias("n_with_orders"),
-            F.coalesce("n_without_orders", F.lit(0)).alias("n_without_orders"),
-        )
-    )
-
-
-def q_nation_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT over the customer-nation and
-    supplier-nation key sets, tagged by operation."""
-    cn = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk")).distinct()
-    sn = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk")).distinct()
-    return (
-        cn.union(sn).distinct().withColumn("op", F.lit("union"))
-        .union(cn.intersect(sn).withColumn("op", F.lit("intersect")))
-        .union(cn.exceptAll(sn).withColumn("op", F.lit("except")))
-        .select("op", F.col("nk").cast("long").alias("nationkey"))
-    )
-
-
-def q_orders_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-resistant salted join: lineitem ⋈ orders on orderkey with
-    an 8-way salt (operators.joins.salted_join), aggregated to revenue
-    per order priority.  Result is EXACTLY the unsalted join — the
-    oracle is the plain SQL join — but each hot orderkey's rows spread
-    over 8 shuffle partitions instead of one reducer (the salt factor
-    scales with the observed skew, not the data size)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount", "l_linenumber")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    j = salted_join(li, orders, "l_orderkey", "o_orderkey", salt=8)
-    return (
-        j.groupBy("o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click→purchase conversion funnel: per user, the first click, the
-    first purchase at-or-after it, and whether it converted within 30
-    minutes.  Two conditional aggregations over one shuffle by user —
-    no self-join."""
-    ev = _t(spark, sf_dir, "events")
-    per_user = (
-        ev.groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("first_click"),
-        )
-    )
-    purch = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(per_user, "user_id")
-        .filter(F.col("ts") >= F.col("first_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_purchase"))
-    )
-    return (
-        per_user.filter(F.col("first_click").isNotNull())
-        .join(purch, "user_id", "left")
-        .select(
-            "user_id",
-            F.unix_micros("first_click").alias("first_click_us"),
-            F.unix_micros("first_purchase").alias("first_purchase_us"),
-            (
-                F.col("first_purchase").isNotNull()
-                & (F.unix_micros("first_purchase") - F.unix_micros("first_click")
-                   <= 1800 * 1_000_000)
-            ).alias("converted_30m"),
-        )
-    )
-
-
-def q_events_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based aggregates — the 100 TB path where exact distinct
-    counts / quantiles would shuffle every value: HyperLogLog++ distinct
-    users and approximate value percentiles per event type, fixed-size
-    state per group regardless of data volume.  Output = exact twins
-    plus per-estimate 5%-relative-error bound flags (the estimates
-    themselves are engine-specific; the flags are deterministic for a
-    given dataset), so the driver hash-checks the sketch accuracy
-    instead of recording rows-only (round-4 verdict #6).
-    tests/test_curation.py additionally bounds the raw errors."""
-    ev = _t(spark, sf_dir, "events")
-    # exact interpolated quantiles at p and p∓0.02: the flag is
-    # "within 5% of the interpolated value OR inside the exact
-    # [p−0.02, p+0.02] window".  The window term matters: the sketch
-    # returns an ACTUAL data value (rank-exact for n < accuracy), and
-    # in a sparse tail the nearest order statistic can sit >5% in
-    # VALUE from the interpolated quantile while being rank-identical
-    # — the pure value bound flipped p99 at sf0.001 (round-5 sweep).
-    ps = [0.48, 0.50, 0.52, 0.93, 0.95, 0.97, 0.97, 0.99, 1.00]
-    prof = ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
-        F.count_distinct("user_id").alias("exact_users"),
-        F.percentile_approx(
-            "value", F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)), F.lit(10_000)
-        ).alias("apcts"),
-        F.percentile("value", F.array(*[F.lit(p) for p in ps])).alias("epcts"),
-        F.count("*").alias("n"),
-    )
-
-    def bound(a, lo, mid, hi):
-        return (F.abs(a - mid) / F.abs(mid) < 0.05) | a.between(lo, hi)
-
-    e = F.col("epcts")
-    a = F.col("apcts")
-    return prof.select(
-        "event_type",
-        "exact_users",
-        F.round(e[1], 2).alias("p50"),
-        F.round(e[4], 2).alias("p95"),
-        F.round(e[7], 2).alias("p99"),
-        "n",
-        (
-            F.abs(F.col("approx_users") - F.col("exact_users"))
-            / F.col("exact_users")
-            < 0.05
-        ).alias("users_err_lt_5pct"),
-        bound(a[0], e[0], e[1], e[2]).alias("p50_err_lt_5pct"),
-        bound(a[1], e[3], e[4], e[5]).alias("p95_err_lt_5pct"),
-        bound(a[2], e[6], e[7], e[8]).alias("p99_err_lt_5pct"),
-    )
-
-
-def q_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregate family per return flag: sample stddev,
-    Pearson correlation, sample covariance, and the exact interpolated
-    median (percentile 0.5) — all JVM-side aggregates in one pass, one
-    shuffle with map-side partials."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.round(F.covar_samp("l_quantity", "l_discount"), 6).alias("cov_qty_disc"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("median_price"),
-        )
-    )
-
-
-def q_events_user_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-function family over the event stream: per user-ordered
-    event, gap since the previous event (lag), position (row_number),
-    value decile within its event type (ntile) and cumulative
-    distribution (cume_dist) — one shuffle per distinct partitioning,
-    both partitioned (a global ORDER BY window would single-thread at
-    scale; per-type deciles keep every window parallel)."""
-    ev = _t(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wv = Window.partitionBy("event_type").orderBy(F.round("value", 4), F.col("event_id"))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.row_number().over(wu).alias("pos_in_user"),
-        (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(wu))).alias("gap_us"),
-        F.ntile(10).over(wv).alias("value_decile"),
-        F.round(F.cume_dist().over(wv), 8).alias("value_cume"),
-    )
-
-
-def q_events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type z-score outlier detection (|z| > 3): one pass computes
-    the per-type mean/stddev (map-side partials), broadcast back onto
-    the stream, and the z filter runs scan-side — the stats side is
-    |types| rows at ANY scale factor, so the join never shuffles the
-    facts.  Stats are rounded before the division so the z boundary is
-    engine-deterministic."""
-    ev = _t(spark, sf_dir, "events")
-    stats = ev.groupBy("event_type").agg(
-        F.round(F.avg("value"), 6).alias("mu"),
-        F.round(F.stddev_samp("value"), 6).alias("sd"),
-    )
-    z = (F.col("value") - F.col("mu")) / F.col("sd")
-    return (
-        ev.join(F.broadcast(stats), "event_type")
-        .filter(F.abs(z) > 3)
-        .select(
-            "event_id",
-            "event_type",
-            F.round("value", 4).alias("value"),
-            F.round(z, 4).alias("zscore"),
-        )
-    )
-
-
-def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the events props column (get_json_object —
-    codegen'd, no UDF): distribution of the k property by event type."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .filter(F.col("k").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# TPC-H shape breadth (Q6/Q10/Q13/Q14/Q18/Q22 adapted to the testdata
-# schema), CUBE, and a decorrelated correlated-subquery shape.  The
-# reference has no SQL surface (SURVEY.md §2.7) — these extend the
-# engine's analytic coverage with standard warehouse query patterns.
-# ---------------------------------------------------------------------------
-
-
-def q_tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: scan → conjunctive filter → global agg.  Every
-    predicate is a native Column expr, so all four reach the parquet
-    reader as PushedFilters and row groups outside the shipdate range
-    never leave disk — the 100 TB case reads a fraction of the table."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-def q_tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: returned-item revenue per customer, top 20.
-    The returnflag/orderdate filters cut both fact tables at the scan;
-    nation broadcasts; the customer join shuffles only the filtered
-    survivors."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(nation, cust["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .select(
-            "c_custkey",
-            "c_name",
-            "revenue",
-            F.round("c_acctbal", 2).alias("acctbal"),
-            "n_name",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
-
-
-def q_tpch_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: orders-per-customer distribution via a LEFT
-    OUTER join with a compound join condition (the priority predicate
-    must ride the join, not a WHERE, to keep order-less customers).
-    Two aggregations but only the first shuffles on a wide key; the
-    second groups on the tiny count domain."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    per_cust = (
-        cust.join(
-            orders,
-            (cust["c_custkey"] == orders["o_custkey"])
-            & (orders["o_orderpriority"] != "1-URGENT"),
-            "left_outer",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .select(F.col("c_count").cast("long").alias("c_count"), "custdist")
-    )
-
-
-def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo revenue share per ship-month —
-    conditional aggregation (sum of CASE) over a fact⋈dim join.  part
-    is SF-scaled (200k × SF rows), so it carries NO broadcast hint:
-    AQE broadcasts the 2-column projection while it measures small and
-    switches to a shuffled join at scale (round-3 verdict #2 class)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", disc_price).otherwise(F.lit(0.0))
-    return (
-        li.join(part, li["l_partkey"] == part["p_partkey"])
-        .groupBy(F.unix_timestamp(F.date_trunc("month", "l_shipdate")).alias("month_epoch"))
-        .agg(
-            F.round(F.sum(promo), 2).alias("promo_rev"),
-            F.round(F.sum(disc_price), 2).alias("total_rev"),
-            F.round(F.lit(100.0) * F.sum(promo) / F.sum(disc_price), 4).alias("promo_share"),
-        )
-    )
-
-
-def q_tpch_q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: large-volume orders — HAVING SUM(qty) > 250
-    computed once on lineitem (map-side partials), then joined back to
-    orders/customer.  The having-filter runs BEFORE the joins, so only
-    qualifying orderkeys enter the join — a selective but still
-    SF-scaled set, so no forced broadcast hint: AQE converts to a
-    broadcast join when the filtered aggregate measures small."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-        .filter(F.col("sum_qty") > 250)
-    )
-    return (
-        orders.join(big, orders["o_orderkey"] == big["l_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("totalprice"),
-            "sum_qty",
-        )
-        .orderBy(F.col("sum_qty").desc(), F.col("o_orderkey"))
-        .limit(100)
-    )
-
-
-def q_tpch_q22_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: positive-balance customers above the global
-    average balance with no orders, counted per nation.  The scalar
-    subquery becomes a 1-row broadcast cross join (no driver collect);
-    the NOT EXISTS becomes a LEFT ANTI join that ships only o_custkey."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("avg_bal"))
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(orders, cust["c_custkey"] == orders["o_custkey"], "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count("*").alias("n_cust"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-        )
-        .select(F.col("c_nationkey").cast("long").alias("nationkey"), "n_cust", "total_bal")
-    )
-
-
-def q_pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus): all four grouping-set
-    levels in ONE pass (Catalyst Expand + single aggregate, same as
-    rollup but with the extra per-linestatus marginal).  grouping_id
-    disambiguates levels exactly — no sentinel-collision risk."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.count("*").alias("n_rows"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "gid",
-            "sum_qty",
-            "sum_disc_price",
-            "n_rows",
-        )
-    )
-
-
-def q_orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated-scalar-subquery shape (orders above their customer's
-    average order value), decorrelated into a single window pass: the
-    per-customer average rides an AVG() OVER (PARTITION BY custkey)
-    instead of a self-join — one shuffle on custkey, no second scan."""
-    orders = _t(spark, sf_dir, "orders")
-    # prices are 2-decimal values stored as doubles; integer cents make
-    # every comparison and the avg exact (no float summation-order or
-    # ROUND-at-.5 divergence between engines)
-    w = Window.partitionBy("o_custkey")
-    with_cents = orders.withColumn(
-        "tp_cents", F.round(F.col("o_totalprice") * 100).cast("long")
-    )
-    sum_cents = F.sum("tp_cents").over(w)
-    n = F.count("*").over(w)
-    return (
-        with_cents.select(
-            "o_custkey",
-            "o_orderkey",
-            F.col("tp_cents"),
-            F.floor(sum_cents / n).cast("long").alias("cust_avg_cents"),
-            n.cast("long").alias("n_orders"),
-            sum_cents.alias("_sum"),
-        )
-        .filter(F.col("tp_cents") * F.col("n_orders") > F.col("_sum"))
-        .drop("_sum")
-    )
-
-
-# ---------------------------------------------------------------------------
-# window-function + scalar-function breadth
-# ---------------------------------------------------------------------------
-
-
-def q_orders_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking/navigation window-function breadth over each customer's
-    order history: ntile, cume_dist, percent_rank, lag/lead,
-    first/last_value — all six share ONE (custkey, date) sort, so the
-    whole family costs a single exchange.  Money rides integer cents;
-    cume_dist/percent_rank are exact rank ratios (identical doubles
-    cross-engine, no rounding needed)."""
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.ntile(4).over(w).cast("long").alias("quartile"),
-        F.cume_dist().over(w).alias("cd"),
-        F.percent_rank().over(w).alias("pr"),
-        F.lag(cents).over(w).alias("prev_cents"),
-        F.lead(cents).over(w).alias("next_cents"),
-        F.first(cents).over(w).alias("first_cents"),
-        F.last(cents).over(wfull).alias("last_cents"),
-    )
-
-
-def q_lineitem_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-based window breadth: per-part moving sum (ROWS 3
-    PRECEDING) and running cumulative sum over ship order.  Both
-    frames share one (partkey, shipdate) sort; sums are integer cents
-    so frame arithmetic is exact at any accumulation order."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_partkey").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber"
-    )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    mov = w.rowsBetween(-3, Window.currentRow)
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return li.select(
-        F.col("l_partkey").cast("long").alias("partkey"),
-        "l_orderkey",
-        F.col("l_linenumber").cast("long").alias("linenumber"),
-        F.sum(cents).over(mov).alias("mov_cents"),
-        F.sum(cents).over(cum).alias("cum_cents"),
-    )
-
-
-def q_orders_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/time scalar-function breadth: trunc-to-month, calendar
-    extracts, day-of-week/yr, interval add (month-end clamped), day
-    diff, last-day — every one a native expression (codegen, zero
-    shuffle) exported as epoch-µs/long for engine-neutral compare.
-    Spark dayofweek is 1=Sunday; −1 aligns it to DuckDB's 0=Sunday."""
-    orders = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate")
-    return orders.select(
-        "o_orderkey",
-        F.unix_micros(F.date_trunc("month", d)).alias("month_us"),
-        F.year(d).cast("long").alias("yr"),
-        F.quarter(d).cast("long").alias("qtr"),
-        (F.dayofweek(d) - 1).cast("long").alias("dow"),
-        F.dayofyear(d).cast("long").alias("doy"),
-        F.unix_micros(F.add_months(d, 3).cast("timestamp")).alias("plus3m_us"),
-        F.datediff(F.lit("1998-01-01").cast("date"), d).cast("long").alias("days_to_98"),
-        F.unix_micros(F.last_day(d).cast("timestamp")).alias("month_end_us"),
-    )
-
-
-def q_doc_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array higher-order-function breadth over document tokens:
-    transform/filter/aggregate (fold)/distinct/slice — all lambda
-    expressions compiled into the row pipeline (NOT Python UDFs), so
-    per-document token analytics stay shuffle-free and codegen'd."""
-    from .operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = _tokens(F.lower(F.col("text")))
-    return docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_toks"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
-        F.size(F.filter(toks, lambda x: F.length(x) > 4)).cast("long").alias("n_long"),
-        F.aggregate(toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)).alias(
-            "total_chars"
-        ),
-        F.concat_ws("|", F.slice(toks, 1, 3)).alias("first3"),
-        F.array_max(F.transform(toks, F.length)).cast("long").alias("max_len"),
-    )
-
-
-def q_lineitem_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (quartiles of quantity + p95 of
-    price-in-cents) per return flag — Spark ``percentile`` and DuckDB
-    ``quantile_cont`` share the linear-interpolation definition, so
-    the comparison is exact.  One aggregate pass; at 100 TB swap to
-    ``percentile_approx`` (t-digest sketch, same call shape, bounded
-    memory per group)."""
-    li = _t(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    return li.groupBy("l_returnflag").agg(
-        F.percentile("l_quantity", 0.25).alias("q_p25"),
-        F.percentile("l_quantity", 0.5).alias("q_p50"),
-        F.percentile("l_quantity", 0.75).alias("q_p75"),
-        F.percentile(cents, 0.95).alias("cents_p95"),
-    )
-
-
-def q_pricing_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS ((returnflag), (linestatus), ()) — the
-    asymmetric grouping-set shape rollup/cube can't express.  Same
-    physical plan family: ONE Expand + one aggregate, one shuffle.
-    Runs through the SQL frontend to keep that surface exercised."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("li_gsets")
-    return spark.sql(
-        """
-        SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-               COALESCE(l_linestatus, 'ALL') AS linestatus,
-               CAST(COUNT(*) AS BIGINT) AS n_rows,
-               ROUND(SUM(l_quantity), 2) AS sum_qty
-        FROM li_gsets
-        WHERE l_shipdate <= '1998-09-02'
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
-
-
-def q_events_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar heat-map aggregation: events bucketed by (day-of-week,
-    hour-of-day) — the time-profile rollup of an event pipeline.  Pure
-    extracts feeding one aggregate (one shuffle of 168 groups)."""
-    ev = read_events(spark, sf_dir)
-    return (
-        ev.groupBy(
-            (F.dayofweek("ts") - 1).cast("long").alias("dow"),
-            F.hour("ts").cast("long").alias("hod"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-def q_doc_chunks_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window document chunking via a Python UDTF (the Spark 4
-    UDTF surface: one row in, N rows out through a lateral join):
-    split each document into 32-token chunks and report each chunk's
-    token/char size — the chunking step in front of a tokenizer.
-
-    A UDTF is Arrow-batched but still Python-side; the docstring-cited
-    equivalent exists as pure exprs (sequence+slice, see doc_ngrams) —
-    this entry deliberately exercises the UDTF path itself."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx: bigint, n_tokens: bigint, n_chars: bigint")
-    class ChunkDoc:
-        def eval(self, text):
-            toks = (text or "").strip().lower().split()
-            if not toks:
-                return
-            for i in range(0, len(toks), 32):
-                chunk = toks[i : i + 32]
-                yield i // 32, len(chunk), len(" ".join(chunk))
-
-    spark.udtf.register("chunk_doc", ChunkDoc)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("docs_for_chunking")
-    return spark.sql(
-        "SELECT doc_id, c.chunk_idx, c.n_tokens, c.n_chars "
-        "FROM docs_for_chunking, LATERAL chunk_doc(text) c"
-    )
-
-
-def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-frame-sampling plumbing: mapInPandas explodes each media
-    payload into per-frame digest rows (1 row in → ⌈len/64⌉ rows out)
-    — the Arrow batch shape of a real ffmpeg frame sampler, with the
-    codec stubbed deterministically (operators.multimodal)."""
-    from .operators.multimodal import sample_video_frames
-
-    media = attach_fake_media(_t(spark, sf_dir, "documents"))
-    frames = sample_video_frames(media, every_n=64, unit="chars")
-    return frames.select(
-        "sample_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        "frame_md5",
-    )
-
-
-def q_supplier_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution fuzzy join (operators.dedup.fuzzy_pairs_ed1):
-    all supplier-name pairs within Levenshtein distance 1, via the
-    SymSpell deletion-neighborhood equi-join — complete at distance ≤1
-    by the deletion-variant argument, candidates verified with exact
-    levenshtein on both engines, never an all-pairs scan."""
-    from .operators.dedup import fuzzy_pairs_ed1
-
-    sup = _t(spark, sf_dir, "supplier")
-    return fuzzy_pairs_ed1(sup, text_col="s_name", id_col="s_suppkey")
-
-
-def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer PageRank over the part co-purchase graph
-    (operators.graph.pagerank_integer): edges = ordered part pairs
-    sharing an order (weight = co-occurrence count), 6 damped
-    iterations in 10¹² fixed-point.  Because every step is integer
-    arithmetic (associative sums, truncating division mirrored by
-    DuckDB's ``//`` on nonnegative operands), the iterative algorithm
-    is hash-checked against an oracle that UNROLLS the same six
-    iterations as chained CTEs — an exact cross-engine fixture for a
-    class of computation (iterative graph analytics) that floating
-    point would make unverifiable."""
-    from .operators.graph import pagerank_integer
-
-    # distinct first: a part appearing on several lines of one order
-    # must count that order once, and the pair self-join runs over the
-    # deduped (order, part) relation — smaller fan-out, same graph.
-    # r14 (guide §2.4 share one exchange): repartition by l_orderkey
-    # BEFORE the distinct — hash(l_orderkey) clusters every (o, p)
-    # duplicate into one partition, so it satisfies the distinct's
-    # ClusteredDistribution([o, p]) AND is exactly the partitioning the
-    # self-join needs; the former plan shuffled by (o, p) for the
-    # distinct and then re-shuffled both aliases by o for the join
-    # (plan diff: 2 Exchange subtrees on the big relation -> 1,
-    # plans/r14/part_pagerank_edges_{before,after}.txt).
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    return pagerank_integer(edges, n_iter=6, damping_pct=85)
-
-
-def _pagerank_sql(n_iter: int = 6, damping_pct: int = 85,
-                  scale: int = 10**12) -> str:
-    """DuckDB twin of q_part_pagerank: the same integer fixed-point
-    iterations unrolled as chained CTEs (aggregates are not allowed in
-    a recursive CTE's recursive term, so a fixed iteration count
-    unrolls instead — same shape as the minhash SQL builders)."""
-    tp = 100 - damping_pct
-    iters = []
-    for i in range(n_iter):
-        iters.append(f"""r{i + 1} AS (
-      SELECT n.node,
-             ({tp} * p.base) // 100 + ({damping_pct} * COALESCE(c.s, 0)) // 100
-               AS rank_int
-      FROM nodes n CROSS JOIN p
-      LEFT JOIN (
-        SELECT e.dst AS node, SUM(r{i}.rank_int * e.w // o.w_out) AS s
-        FROM edges e
-        JOIN r{i} ON r{i}.node = e.src
-        JOIN outw o ON o.src = e.src
-        GROUP BY e.dst) c ON c.node = n.node)""")
-    return f"""
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS (
-      SELECT a.l_partkey AS src, b.l_partkey AS dst, COUNT(*) AS w
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      GROUP BY 1, 2),
-    nodes AS (SELECT src AS node FROM edges
-              UNION SELECT dst FROM edges),
-    p AS (SELECT {scale} // COUNT(*) AS base FROM nodes),
-    outw AS (SELECT src, SUM(w) AS w_out FROM edges GROUP BY 1),
-    r0 AS (SELECT node, p.base AS rank_int FROM nodes CROSS JOIN p),
-    {",".join(iters)}
-    SELECT node, CAST(rank_int AS BIGINT) AS rank_int FROM r{n_iter}
-"""
-
-
-def q_mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-windowing plumbing (operators.multimodal.chunk_audio_windows):
-    each opaque PCM payload explodes into fixed 400 ms windows with
-    integer sample spans and millisecond bounds — the fbank-style
-    front end, stubbed deterministically (1 byte/sample, 16 kHz).  The
-    digest column is dropped here (DuckDB cannot slice BLOBs; the
-    digest path is pytest-pinned) so every remaining column is exact
-    integer math the oracle reproduces from octet_length alone."""
-    from .operators.multimodal import chunk_audio_windows
-
-    media = attach_fake_media(_t(spark, sf_dir, "documents"))
-    win = chunk_audio_windows(media, sample_rate=16_000, window_ms=400)
-    return win.select(
-        "sample_id",
-        F.col("window_idx").cast("long").alias("window_idx"),
-        "start_ms",
-        "end_ms",
-        "n_in_window",
-    )
-
-
-def q_events_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based per-type profile: HyperLogLog++ distinct users and
-    approximate median computed side-by-side with their exact twins,
-    and the OUTPUT is the exact values plus boolean relative-error
-    bounds (|est − exact| / exact < 5%).  Sketches are the 100 TB path
-    (bounded memory, mergeable partials); the raw estimates themselves
-    are engine-specific so they can't be hashed against DuckDB — but
-    the bound flags are deterministic functions of this dataset, so
-    the driver NOW range-checks the sketch accuracy (oracle emits the
-    exact twins and TRUE literals): a sketch drifting past 5% flips a
-    flag and fails the hash, which is exactly the check a rows-only
-    row never gave (round-4 verdict #6)."""
-    ev = read_events(spark, sf_dir)
-    prof = ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("hll_users"),
-        F.count_distinct("user_id").alias("exact_users"),
-        F.percentile_approx("value", F.lit(0.5), F.lit(10_000)).alias("td_p50"),
-        F.percentile(
-            "value", F.array(F.lit(0.48), F.lit(0.5), F.lit(0.52))
-        ).alias("epcts"),
-    )
-    # value-5% OR exact [p−0.02, p+0.02] window — see q_events_approx_stats
-    # for why the window term is required (sketches return order
-    # statistics, not interpolations)
-    return prof.select(
-        "event_type",
-        "exact_users",
-        F.round(F.col("epcts")[1], 4).alias("exact_p50"),
-        (
-            F.abs(F.col("hll_users") - F.col("exact_users"))
-            / F.col("exact_users")
-            < 0.05
-        ).alias("users_err_lt_5pct"),
-        (
-            (
-                F.abs(F.col("td_p50") - F.col("epcts")[1])
-                / F.abs(F.col("epcts")[1])
-                < 0.05
-            )
-            | F.col("td_p50").between(F.col("epcts")[0], F.col("epcts")[2])
-        ).alias("p50_err_lt_5pct"),
-    )
-
-
-def q_events_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGEABLE-sketch workflow (Spark 4 Apache DataSketches surface):
-    one HLL sketch per (event_type, day) partial, then
-    ``hll_union_agg`` merges the partials per type — the actual 100 TB
-    pattern, where per-partition/per-day sketches are precomputed at
-    ingest and unioned at query time without touching raw data again.
-    Output = exact distinct users + day count + a deterministic
-    5%-relative-error bound flag on the MERGED estimate (the estimate
-    itself is engine-specific, the flag is not — same contract as
-    events_sketch_stats).  Day keys derive from epoch microseconds
-    (``unix_micros div 86.4e9``), timezone-free on both engines."""
-    ev = read_events(spark, sf_dir)
-    day = F.expr("unix_micros(ts) div 86400000000")
-    daily = ev.groupBy("event_type", day.alias("d")).agg(
-        F.expr("hll_sketch_agg(user_id)").alias("sk")
-    )
-    merged = daily.groupBy("event_type").agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_users")
-    )
-    return merged.join(exact, "event_type").select(
-        "event_type",
-        F.col("exact_users").cast("long").alias("exact_users"),
-        F.col("n_days").cast("long").alias("n_days"),
-        (
-            F.abs(F.col("est") - F.col("exact_users")) / F.col("exact_users")
-            < 0.05
-        ).alias("merged_err_lt_5pct"),
-    )
-
-
-def q_doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent-items sketch audit: ``approx_top_k`` heavy hitters over
-    the exploded token stream, joined against the exact per-term counts
-    — per term: exact count + a flag that the sketch, IF it reported
-    the term, reported exactly the true count.  Tokens outside the
-    sketch's k-row output coalesce to TRUE (vacuous — the sketch makes
-    no claim about them), so the relation is deterministic at ANY
-    vocabulary size, not just ≤ k: while distinct terms ≤
-    maxItemsTracked (pinned to 10000 here) every tracked count is
-    exact by construction, and which ties straddle the k-boundary no
-    longer matters (round-5 ADVICE).  At corpus scale the same plan
-    reports the sketch's error on the true heavy hitters — the
-    token-distribution profile a tokenizer-training run reads."""
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
-    sk = (
-        tok.agg(F.expr("approx_top_k(tok, 100, 10000)").alias("tk"))
-        .select(F.explode("tk").alias("s"))
-        .select(F.col("s.item").alias("tok"), F.col("s.count").alias("sk_cnt"))
-    )
-    exact = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    return exact.join(sk, "tok", "left").select(
-        "tok",
-        F.col("cnt").cast("long").alias("cnt"),
-        F.coalesce(F.col("sk_cnt") == F.col("cnt"), F.lit(True)).alias(
-            "sketch_count_exact"
-        ),
-    )
-
-
-def q_emb_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8 scalar-quantized ANN top-k (operators.similarity.sq8_topk):
-    integer dot products over [-127,127] codes — exact arithmetic, no
-    float-summation ambiguity, 4-8× less vector bandwidth at scale."""
-    from .operators.similarity import sq8_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = sq8_topk(emb, _queries_frame(emb), k=5)
-    return out.select("query_id", "cand_id", "dot_q8", F.col("rk").cast("long").alias("rk"))
-
-
-def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming at-least-once dedup: the doubled event stream restored
-    to unique events by dropDuplicatesWithinWatermark, drained, then
-    profiled per type — must converge to the batch relation."""
-    from .streaming.events_stream import run_stream_to_memory, stream_dedup_counts
-
-    deduped = run_stream_to_memory(
-        stream_dedup_counts(spark, sf_dir), output_mode="append"
-    )
-    return deduped.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-
-
-def q_events_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming enrichment against a static dimension (user tiers),
-    aggregated per tier — the stream-STATIC join surface next to the
-    watermarked stream-stream join."""
-    from .streaming.events_stream import run_stream_to_memory, stream_static_enrich
-
-    return run_stream_to_memory(stream_static_enrich(spark, sf_dir))
-
-
-def q_doc_rarity_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-relative token-rarity score per document — the
-    perplexity-proxy quality signal of LLM curation (a document whose
-    tokens are all corpus-frequent reads like boilerplate; one made of
-    corpus-rare tokens is either informative or garbage, and both
-    tails get routed to closer inspection).  Score is the exact
-    rational ``Σ tf·(N_total div cf)`` — the unigram surprisal shape
-    with integer division replacing the libm-dependent log, bit-exact
-    cross-engine; rarity_avg is the per-token mean (integer div).
-
-    Plan: explode → (doc, term) tf aggregate → term cf aggregate →
-    shuffle join back on term.  The (doc,term) pre-aggregation bounds
-    the hot-stopword key at |docs| rows (not |occurrences|), and AQE
-    skew-split handles the rest; the corpus total is a 1-row broadcast
-    scalar."""
-    docs = _t(spark, sf_dir, "documents")
-    from .operators.text import tokens as _tokens
-
-    par = spark.sparkContext.defaultParallelism
-    toks = docs.repartition(par).select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    cf = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-    tot = cf.agg(F.sum("cf").alias("n_total"))
-    return (
-        tf.join(cf, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_tokens"),
-            F.sum(F.col("tf") * F.expr("n_total div cf")).cast("long").alias("rarity_sum"),
-        )
-        .withColumn("rarity_avg", F.expr("rarity_sum div n_tokens"))
-    )
-
-
-def q_doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 salient terms by a df-normalized tf score —
-    the tf-idf retrieval shape (tf aggregate ⋈ document-frequency
-    aggregate ⋈ corpus-size scalar, window top-k per doc).
-
-    Scoring uses the exact rational ``tf·10⁶·(N+1) div (df+1)``
-    instead of ``tf·ln((N+1)/(df+1))``: within a document the ranking
-    differs only across ties the log would compress, and the integer
-    form is bit-exact cross-engine (ln is libm-dependent).  Swap the
-    log form in production if score VALUES (not ranks) matter."""
-    docs = _t(spark, sf_dir, "documents")
-    from .operators.text import tokens as _tokens
-
-    par = spark.sparkContext.defaultParallelism
-    toks = docs.repartition(par).select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n = docs.agg(F.count("*").alias("n_docs"))
-    scored = (
-        tf.join(df_t, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn("score_e6", F.expr("(tf * 1000000 * (n_docs + 1)) div (df + 1)"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score_e6").desc(), F.col("term"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "term", "tf", "df", "score_e6", "rk")
-    )
-
-
-def q_lineitem_yearly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue growth per return flag: exact-integer
-    yearly revenue (10^-4 dollars) + a lag window; growth is the raw
-    IEEE quotient of two exact longs (identical cross-engine without
-    any rounding step).  First year is NULL."""
-    li = _t(spark, sf_dir, "lineitem")
-    rev_unit = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.round(F.col("l_discount") * 100).cast("long")
-    )
-    yearly = li.groupBy(
-        "l_returnflag", F.year("l_shipdate").cast("long").alias("yr")
-    ).agg(F.sum(rev_unit).alias("rev_e4"))
-    w = Window.partitionBy("l_returnflag").orderBy("yr")
-    prev = F.lag("rev_e4").over(w)
-    return yearly.select(
-        "l_returnflag",
-        "yr",
-        (F.col("rev_e4") / 10000.0).alias("revenue"),
-        ((F.col("rev_e4") - prev).cast("double") * 10000.0 / prev).alias("growth_bp"),
-    )
-
-
-def q_events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDAF (§2.10 surface): 10%-trimmed mean
-    of value per event type.  The UDAF receives each group's column as
-    one Arrow-backed pandas Series — the right escape hatch for
-    order-statistics aggregates the built-ins lack.  Values ride as
-    integer cents; the final mean is one IEEE division of exact
-    operands, so the SQL oracle (rank-window trim) matches bit-for-bit."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit GROUPED_AGG functionType: the module's `from __future__
-    # import annotations` turns type hints into strings, which the
-    # hint-based pandas_udf inference can't read
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def trimmed_mean_cents(v):
-        s = v.sort_values().to_numpy()
-        k = len(s) // 10
-        t = s[k : len(s) - k]
-        return float(t.sum()) / len(t)
-
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def trimmed_n(v):
-        k = len(v) // 10
-        return len(v) - 2 * k
-
-    ev = read_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
-    return ev.groupBy("event_type").agg(
-        trimmed_mean_cents("cents").alias("trimmed_mean_cents"),
-        trimmed_n("cents").alias("n_used"),
-    )
-
-
-def q_pysource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom Python DataSource scan (Spark 4 DataSource API): a
-    partitioned deterministic generator source, aggregated per bucket.
-    The oracle regenerates the identical relation from range() with
-    the same md5-derived values — proving the source surface, the
-    partitioning, and the rows all line up.  (sf_dir is unused: the
-    source IS the data.)"""
-    from .sources.pysource import register_synthetic_source
-
-    register_synthetic_source(spark)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("rows", "2000")
-        .option("partitions", "8")
-        .load()
-    )
-    return df.groupBy("bucket").agg(
-        F.count("*").alias("n_rows"),
-        F.round(F.sum("score"), 2).alias("sum_score"),
-        F.min("id").alias("min_id"),
-        F.max("id").alias("max_id"),
-    )
-
-
-def _run_dir(name: str, sf_dir: str) -> str:
-    """Addressable per-(query, sf) scratch dir under /tmp, CLEARED at
-    the start of each invocation (round-6 ADVICE #3: mkdtemp leaked a
-    full artifact tree per bench/parity run).  Later invocations
-    overwrite the same path, so nothing accumulates across runs."""
-    import os
-    import shutil
-    import tempfile
-
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_runs",
-        f"{name}_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    return d
-
-
-def q_pysource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python DataSource WRITER driver row (round-6 verdict #8): the
-    per-priority orders rollup is written through the two-phase-commit
-    jsonl writer (sources.pysource._JsonlTwoPhaseWriter — tasks stage
-    private files, only the driver's commit() publishes them + a
-    _SUCCESS marker), then read BACK from the published files and
-    returned.  The oracle recomputes the rollup straight from orders,
-    so a lost row, a double-published staging file, or a botched
-    rename all hash-mismatch; the _SUCCESS marker rides as a checked
-    flag."""
-    import os
-
-    from .sources.pysource import register_synthetic_source
-
-    register_synthetic_source(spark)
-    d = _run_dir("pysource_write", sf_dir)
-    out = os.path.join(d, "out")
-    rollup = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-        )
-    )
-    rollup.write.format("synthetic_events").mode("append").save(out)
-    back = (
-        spark.read.schema(
-            "o_orderpriority string, n_orders long, total_cents long"
-        )
-        .option("pathGlobFilter", "part-*.jsonl")
-        .json(out)
-    )
-    return back.withColumn(
-        "committed", F.lit(os.path.exists(os.path.join(out, "_SUCCESS")))
-    )
-
-
-def q_parquet_prune_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitioned-parquet sink driver row (round-6 verdict #8): orders
-    is written through sources.writers.write_parquet with
-    ``partition_by=o_orderpriority`` (S5/S7 — the layout that buys
-    partition pruning downstream), read back with a single-partition
-    filter, and rolled up per month.  The oracle computes the same
-    rollup from the unpartitioned source, so partition-value mangling,
-    row loss in the sink, or a filter that reads the wrong partition
-    all hash-mismatch.  The pruning itself (only the one partition
-    directory scanned) is asserted plan-side in pytest."""
-    import os
-
-    from .sources.writers import write_parquet
-
-    d = _run_dir("parquet_prune", sf_dir)
-    out = os.path.join(d, "orders_by_prio")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        F.col("o_orderpriority").alias("prio"),
-    )
-    write_parquet(orders, out, partition_by=["prio"])
-    back = spark.read.parquet(out).filter(F.col("prio") == "1-URGENT")
-    return back.groupBy(
-        F.col("prio").cast("string").alias("prio"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-    ).agg(
-        F.count("*").alias("n_orders"),
-        F.sum("cents").alias("total_cents"),
-        F.min("o_orderkey").alias("min_orderkey"),
-    )
-
-
-def q_ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 RandomForest feature importances per site, mapped back to
-    feature-column names — the model-inspection surface of the ML
-    pipeline (M2's models, reused from the memoized train cache; no
-    re-fit).
-
-    Graduated to a hash-checked relation (round-5 verdict #1): the
-    exact (site × rank 1..5) grid — the oracle recomputes it from the
-    site domain — plus TRUE-literal invariant flags on the RF
-    internals: each ranked feature is a real feature-matrix column
-    (the Utils.scala:41-44 projection), its importance is in [0,1],
-    and the full importance vector sums to 1 within 1e-6 (Spark
-    normalizes featureImportances; Breiman/Gini importances are
-    non-negative by construction).  The named top-5 list itself stays
-    observable on the TrainResult models."""
-    feats, results = _trained(spark, sf_dir)
-    from .pipeline.assemble import numeric_feature_columns
-
-    rows = []
-    for site, r in sorted(results.items()):
-        if r.model is None:
-            continue
-        cols = numeric_feature_columns(feats.columns, site)
-        imps = list(r.model.featureImportances.toArray())
-        sum_ok = bool(abs(sum(imps) - 1.0) <= 1e-6)
-        # feature_valid pins name↔importance ALIGNMENT, so it must
-        # compare vector length to column count — `name in cols` over
-        # a zip of cols is vacuously true even when zip truncates a
-        # mismatched assembler.
-        aligned = len(imps) == len(cols)
-        top = sorted(zip(cols, imps), key=lambda t: (-t[1], t[0]))[:5]
-        rows += [
-            (
-                site,
-                rank + 1,
-                aligned,
-                bool(0.0 <= w <= 1.0),
-                sum_ok,
-            )
-            for rank, (name, w) in enumerate(top)
-        ]
-    return spark.createDataFrame(
-        rows,
-        "site string, rank long, feature_valid boolean, "
-        "imp_in_unit boolean, sum_imps_eq_1 boolean",
-    )
-
-
-def q_ml_cv_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperparameter search the reference never had: 2-fold
-    CrossValidator over a small maxDepth grid for one target site,
-    returning one row per grid point — the MLlib tuning surface.
-    Seeded fold assignment keeps the result deterministic; the feature
-    matrix is the memoized cached copy, so no re-pivot.
-
-    Graduated to a hash-checked relation (round-5 verdict #1): the
-    exact (site, maxDepth) grid — both config literals the oracle
-    repeats — plus TRUE-literal flags from the CV internals: every
-    fold-mean RMSE is finite and the selected model's depth is the
-    grid argmin of mean RMSE (CrossValidator minimizes RMSE because
-    RegressionEvaluator.isLargerBetter=false — true by construction,
-    so a regression here means the tuning loop itself broke)."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.regression import RandomForestRegressor
-    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
-
-    from .pipeline.assemble import get_work_data
-
-    feats, _ = _trained(spark, sf_dir)
-    site = SITES[0]
-    work = get_work_data(feats, site, exists=True).cache()
-    rf = RandomForestRegressor(
-        labelCol="label", featuresCol="features", seed=42, numTrees=10
-    )
-    grid = ParamGridBuilder().addGrid(rf.maxDepth, [3, 5]).build()
-    cv = CrossValidator(
-        estimator=rf,
-        estimatorParamMaps=grid,
-        evaluator=RegressionEvaluator(
-            labelCol="label", predictionCol="prediction", metricName="rmse"
-        ),
-        numFolds=2,
-        seed=42,
-        # 4 = the full fold×grid fit count: all fits run concurrently
-        # (guide §2.6 — independent jobs back-fill each other's
-        # straggler tails).  parallelism only schedules; each fit's
-        # data/seed/params are unchanged, so metrics are identical.
-        parallelism=4,
-    )
-    model = cv.fit(work)
-    best_depth = model.bestModel.getMaxDepth()
-    import math
-
-    metrics = list(model.avgMetrics)
-    depths = [int(g[rf.maxDepth]) for g in grid]
-    argmin_ok = (
-        best_depth in depths
-        and metrics[depths.index(best_depth)] == min(metrics)
-    )
-    rows = [
-        (site, d, bool(math.isfinite(m) and m >= 0.0), bool(argmin_ok))
-        for d, m in zip(depths, metrics)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "site string, max_depth long, rmse_finite boolean, "
-        "chosen_is_argmin boolean",
-    )
-
-
-def q_lineitem_udaf_wavg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate Pandas UDAF (the Arrow GROUPED_AGG surface,
-    completing the UDF/UDTF/UDAF triple next to doc_chunks_udtf):
-    quantity-weighted average price per return flag, computed INSIDE
-    the worker in exact int64 cents so the result is bit-identical to
-    the SQL oracle.  Like the UDTF entry, this deliberately exercises
-    the UDAF path itself — the native equivalent (sum/sum of the same
-    integer exprs) is one line and preferred in a real pipeline
-    (SURVEY §2.10 rule: Python only where the surface, not the math,
-    is the point)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit functionType: this module's `from __future__ import
-    # annotations` stringifies type hints, which defeats pandas_udf's
-    # signature inference for the GROUPED_AGG eval type
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def wavg_cents(price, qty):
-        cents = (price * 100).round().astype("int64")
-        q = qty.round().astype("int64")
-        return int((cents * q).sum() // q.sum())
-
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(wavg_cents("l_extendedprice", "l_quantity").alias("wavg_cents"))
-    )
-
-
-def q_emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-list TRAINING: seeded k-means over the embedding column —
-    the step that produces the centroid lists emb_ivf_topk assigns
-    against (there the centroids ride as literals; here they are
-    learned).  Distributed Lloyd's via Spark ML.
-
-    Graduated to a hash-checked relation (round-5 verdict #1): one row
-    per cluster id 0..k-1 (exact — KMeans labels clusters densely)
-    carrying the EXACT corpus size (the oracle recounts it) and
-    TRUE-literal invariant flags on the training outcome: cluster
-    sizes partition the corpus (Σ sizes = N), every centroid has
-    positive norm (continuous data cannot average to exactly 0⃗), and
-    the final within-cluster SS is ≤ the TOTAL SS around the global
-    mean — the k=1 optimum, which any useful k=8 fit must beat
-    (measured 0.93-0.94× on the near-isotropic synthetic embeddings;
-    Lloyd's monotone-descent makes bigger ratios a real training
-    failure).  Total SS is computed distributed via the per-dimension
-    Σv/Σv² identity — one scan, 64 bounded rows out.  The centroid
-    grid itself stays observable on the fitted model."""
-    import math
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = _t(spark, sf_dir, "embeddings")
-    arr = emb.select(F.col("embedding").cast("array<double>").alias("e"))
-    dim_stats = (
-        arr.select(F.posexplode("e").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("ss"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    n_points = int(dim_stats[0].n) if dim_stats else 0
-    total_ss = sum(r.ss - (r.s * r.s) / r.n for r in dim_stats)
-
-    feats = arr.select(array_to_vector("e").alias("features"))
-    k = 8
-    model = KMeans(k=k, seed=42, maxIter=5).fit(feats)
-    sizes = model.summary.clusterSizes
-    cost = float(model.summary.trainingCost)
-    sizes_ok = sum(int(s) for s in sizes) == n_points
-    # degenerate guard (ADVICE r6 #2): identical points give total_ss≈0
-    # where float noise could put cost a hair above it — the k=1 bound
-    # is vacuous, not failed
-    cost_ok = math.isfinite(cost) and 0.0 <= cost and (
-        total_ss <= 0.0 or cost <= total_ss
-    )
-    rows = [
-        (
-            ci,
-            n_points,
-            sizes_ok,
-            float(sum(v * v for v in center)) > 0.0,
-            cost_ok,
-        )
-        for ci, center in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "cluster_id long, n_points long, sizes_sum_to_n boolean, "
-        "norm_positive boolean, cost_le_total_ss boolean",
-    )
-
-
-def q_emb_pq_train_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization training + encode + ADC audit (Jégou et
-    al. 2011) — the memory-compressed ANN tier that completes the
-    family (brute / LSH / IVF / SQ8 / PQ): m=4 subspaces × k=16
-    seeded k-means codebooks (operators.similarity.pq_codebooks), the
-    full corpus encoded to 4 small ints per vector via literal
-    codebooks (pq_code_expr — a pure zero-shuffle projection, the same
-    scale mechanism as IVF assignment: at 100 TB the codes column is
-    written once and scanned instead of the floats), and an
-    asymmetric-distance consistency audit.
-
-    Hash-checked via the ML invariant pattern (exact skeleton the
-    oracle recomputes + flags on the training outcome that CAN fail):
-    one row per subspace with the EXACT corpus count, plus
-    - ``sizes_sum_to_n``: each subspace's cluster sizes partition the
-      corpus (checked inside pq_codebooks, surfaced as a flag);
-    - ``cost_le_subspace_ss``: the subspace fit's within-cluster SS is
-      ≤ that subspace's TOTAL SS around its mean — the k=1 optimum any
-      useful k=16 fit must beat (the q_emb_kmeans_centroids invariant,
-      per subspace, with the same degenerate-input guard);
-    - ``adc_lookup_consistent``: over a bounded query panel (every
-      50th vector, ≤ 20), the ADC per-subspace-lookup formulation
-      (pq_adc_expr) equals a direct whole-vector decode-and-fold
-      within 1e-6 — the two compute the same quantity in DIFFERENT
-      float addition orders, so agreement verifies the lookup path's
-      indexing (a wrong element_at offset or subspace slice fails it).
-    """
-    import math
-
-    from .operators.similarity import (
-        _as_double,
-        pq_adc_expr,
-        pq_code_expr,
-        pq_codebooks,
-        pq_decode_expr,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    m, k = 4, 16
-    codebooks, costs, sub_ss, n_points, sizes_ok = pq_codebooks(
-        emb, m=m, k=k, dim=64, seed=42, vec_col="embedding"
-    )
-    # bounded audit panel (the ANN-audit convention: strided + capped)
-    panel = (
-        emb.filter(F.col("vec_id") % 50 == 0)
-        .orderBy("vec_id")
-        .limit(20)
-        .select(F.col("vec_id"), _as_double("embedding").alias("vec"))
-        .withColumn("code", pq_code_expr("vec", codebooks))
-    )
-    direct = F.aggregate(
-        F.zip_with(
-            F.col("vec"),
-            pq_decode_expr("code", codebooks),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    audit = panel.select(
-        F.max(
-            F.abs(pq_adc_expr("vec", "code", codebooks) - direct)
-        ).alias("max_err")
-    ).collect()[0]
-    adc_ok = audit["max_err"] is not None and audit["max_err"] < 1e-6
-    rows = [
-        (
-            s,
-            n_points,
-            k,
-            sizes_ok[s],
-            math.isfinite(costs[s]) and 0.0 <= costs[s] and (
-                sub_ss[s] <= 0.0 or costs[s] <= sub_ss[s]
-            ),
-            adc_ok,
-        )
-        for s in range(m)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "subspace long, n_points long, k long, sizes_sum_to_n boolean, "
-        "cost_le_subspace_ss boolean, adc_lookup_consistent boolean",
-    )
-
-
-def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ SEARCH, hash-exact end-to-end: the corpus is encoded to m=4
-    codes against DETERMINISTIC md5-derived codebooks
-    (similarity.pq_det_codebooks — learned codebooks cannot be rebuilt
-    in SQL, so the searched path is verified with fixed ones while
-    training quality lives in q_emb_pq_train_report), and each panel
-    query ranks candidates by asymmetric distance: the query's RAW
-    vector against each candidate's RECONSTRUCTED code, per-subspace
-    lookup terms summed left-to-right.  ADC runs as Jégou et al. run
-    it: each query builds its m·k lookup table ONCE (pq_lut_expr,
-    before the broadcast), and every candidate pair is then m array
-    lookups (pq_adc_from_lut) — bit-identical to the inline per-pair
-    fold, ~d_sub× fewer flops per pair.  The oracle rebuilds codes
-    and distances bit-for-bit from the same literals (_pq_topk_sql),
-    so the driver hash covers quantization, code assignment
-    tie-breaks, the LUT indexing, AND the final ranking.
-
-    Scale shape: encode is a zero-shuffle projection over literal
-    codebooks; the bounded query panel broadcasts its precomputed
-    LUTs; candidates stream through one stage carrying 4 small ints
-    instead of 64 floats — the PQ promise (scan codes, not vectors)
-    made literal.  Output: (query_id, cand_id, adc, rk ≤ 5), ADC
-    ascending, cand_id tie-break."""
-    from .operators.similarity import (
-        _as_double,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-
-    m = 4
-    cb = pq_det_codebooks(m=m)
-    emb = _t(spark, sf_dir, "embeddings")
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        pq_code_expr("cast(embedding as array<double>)", cb).alias("code"),
-    )
-    q_lut = _queries_frame(emb).select(
-        "query_id",
-        pq_lut_expr("cast(query_vec as array<double>)", cb).alias("lut"),
-    )
-    return pq_adc_rank(cand, q_lut, m, k_nn=5)
-
-
-def q_emb_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ index PERSIST-then-SEARCH (round-7 verdict #4): the
-    build-once/reuse path the 100 TB story promises.  BUILD writes the
-    encoded corpus — (cand_id, code array<int>), 4 small ints per
-    vector — through the parquet sink plus a JSON codebook MANIFEST
-    beside it, making the index self-describing.  SEARCH then reads
-    ONLY the persisted form: codebooks come from the manifest (JSON
-    float round-trip is exact in Python, so the reloaded literals are
-    bit-identical and the driver hash still covers them) and
-    candidates stream from the codes table — the scan carries 4 ints
-    per row, never the 64-float vectors (asserted plan-side in
-    pytest: the codes scan's ReadSchema has no embedding column; the
-    raw-vector scan appears only under the bounded broadcast query
-    panel, which is the asymmetric half of ADC by definition).
-
-    Same deterministic codebooks, panel, ranking, and oracle
-    (_pq_topk_sql) as emb_pq_topk, so any row lost or mangled by the
-    sink round-trip — or a manifest/codes version skew — is a hash
-    mismatch, not a silent recall drop."""
-    import json
-    import os
-
-    from .operators.similarity import (
-        _as_double,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-    from .sources.writers import write_parquet
-
-    m, k, d_sub = 4, 16, 16
-    d = _run_dir("pq_index", sf_dir)
-    codes_path = os.path.join(d, "codes")
-    manifest_path = os.path.join(d, "codebook_manifest.json")
-    emb = _t(spark, sf_dir, "embeddings")
-    # ---- BUILD: encode (zero-shuffle projection) + persist ----
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    write_parquet(
-        emb.select(
-            F.col("vec_id").alias("cand_id"),
-            pq_code_expr("cast(embedding as array<double>)", cb).alias("code"),
-        ),
-        codes_path,
-    )
-    with open(manifest_path, "w") as f:
-        json.dump(
-            {"m": m, "k": k, "d_sub": d_sub, "metric": "adc_l2sq",
-             "codebooks": cb},
-            f,
-        )
-    # ---- SEARCH: only the persisted index from here on ----
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    cb_loaded = manifest["codebooks"]
-    cand = spark.read.parquet(codes_path)
-    q_lut = _queries_frame(emb).select(
-        "query_id",
-        pq_lut_expr("cast(query_vec as array<double>)", cb_loaded).alias("lut"),
-    )
-    return pq_adc_rank(cand, q_lut, m, k_nn=5)
-
-
-def _align_partition_key(probe: DataFrame, table: DataFrame, col: str) -> DataFrame:
-    """Cast ``probe[col]`` to the partition column's read-back type so
-    the dynamic-pruning subquery lands on the BARE partition column —
-    partition discovery infers its own (usually narrower) type, and a
-    cast on the scan side would defeat DPP.  Shared by the persisted
-    IVF/IVFPQ searches."""
-    return probe.withColumn(col, F.col(col).cast(table.schema[col].dataType))
-
-
-def q_emb_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF index PERSIST-then-SEARCH: the list-partitioned layout that
-    makes nprobe PHYSICAL at 100 TB.  BUILD assigns every corpus
-    vector its nearest coarse list (the same zero-shuffle
-    literal-centroid projection as emb_ivf_topk), then writes the
-    inverted lists through the parquet sink PARTITIONED BY list_label
-    — one directory per list — plus a JSON centroid manifest beside
-    them, so the index is self-describing and the vector norms are
-    computed once at build.  SEARCH touches only the persisted form:
-    centroids reload from the manifest (Python JSON float round-trip
-    is exact, so the rebuilt assignment literals are bit-identical)
-    and candidates stream from the lists table, where the broadcast
-    equi-join on the PARTITION column hands Spark a
-    dynamic-partition-pruning subquery — at scale, probing nprobe=2
-    of L lists reads 2/L of the index as a partition-directory skip,
-    which the flat layout (emb_ivf_topk re-assigns the corpus per
-    query) cannot express.  Plan-asserted in pytest: the lists scan
-    carries a dynamicpruning PartitionFilter, and no corpus-side scan
-    reads the raw embedding column (the only raw-vector read is the
-    bounded strided query panel).
-
-    Same centroids, panel, nprobe, ranking, and oracle
-    (_ivf_topk_sql) as emb_ivf_topk, so sink round-trip loss, manifest
-    skew, or an over-pruned partition is a hash mismatch, not a
-    silent recall drop."""
-    import json
-    import os
-
-    from .operators.similarity import (
-        _as_double,
-        assign_lists,
-        centroid_rows,
-        centroid_rows_literal,
-        centroids_from_manifest,
-        ivf_rank_topk,
-        l2_norm,
-    )
-    from .sources.writers import write_parquet
-
-    nprobe, k = 2, 5
-    d = _run_dir("ivf_index", sf_dir)
-    lists_path = os.path.join(d, "lists")
-    manifest_path = os.path.join(d, "centroid_manifest.json")
-    emb = _t(spark, sf_dir, "embeddings")
-    # ---- BUILD: coarse-assign (zero shuffle) + persist per-list ----
-    cents = centroid_rows(emb)
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("nrm", l2_norm(F.col("cvec")))
-    cand_lists = assign_lists(
-        cand, centroid_rows_literal(cents), "cand_id", "cvec", 1
-    ).withColumnRenamed("nrm", "cnrm")
-    write_parquet(cand_lists, lists_path, partition_by=["list_label"])
-    with open(manifest_path, "w") as f:
-        json.dump(
-            {"metric": "cosine", "nlist": len(cents),
-             "centroids": [
-                 {"label": lbl, "vec": vec, "norm": nrm}
-                 for lbl, vec, nrm in cents
-             ]},
-            f,
-        )
-    # ---- SEARCH: only the persisted index from here on ----
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    cent_arr = centroid_rows_literal(centroids_from_manifest(manifest))
-    lists = spark.read.parquet(lists_path)
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("nrm", l2_norm(F.col("qvec")))
-    q_lists = assign_lists(q, cent_arr, "query_id", "qvec", nprobe).withColumnRenamed(
-        "nrm", "qnrm"
-    )
-    q_lists = _align_partition_key(q_lists, lists, "list_label")
-    return ivf_rank_topk(lists, q_lists, k=k)
-
-
-def q_emb_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL persisted IVFPQ index — the FAISS IndexIVFPQ on-disk
-    layout re-expressed as a lakehouse table: one BUILD pass assigns
-    every vector its coarse list AND encodes it to m=4 PQ ints, then
-    writes (cand_id, code) PARTITIONED BY list_label with a combined
-    JSON manifest (centroids + codebooks).  SEARCH touches only the
-    persisted form and gets BOTH scale levers at once: the broadcast
-    probe join on the partition column plants the dynamic-partition-
-    pruning subquery (read nprobe/L of the index as a directory skip,
-    as in emb_ivf_persisted_topk) and the rows it does read carry
-    4 small ints instead of 64 floats (as in emb_pq_persisted_topk).
-    Plan-asserted in pytest: dynamicpruning on the codes scan, no
-    float-vector column anywhere on the candidate side.
-
-    Same panel, nprobe, deterministic codebooks, ranking, and oracle
-    (_ivfpq_topk_sql) as emb_ivfpq_topk, so index-build loss, manifest
-    skew, or over-pruning is a hash mismatch."""
-    import json
-    import os
-
-    from .operators.similarity import (
-        _as_double,
-        assign_lists,
-        centroid_rows,
-        centroid_rows_literal,
-        centroids_from_manifest,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-    from .sources.writers import write_parquet
-
-    nprobe, k_nn, m = 2, 5, 4
-    d = _run_dir("ivfpq_index", sf_dir)
-    codes_path = os.path.join(d, "codes")
-    manifest_path = os.path.join(d, "index_manifest.json")
-    emb = _t(spark, sf_dir, "embeddings")
-    # ---- BUILD: one pass — coarse-assign + PQ-encode + persist ----
-    cents = centroid_rows(emb)
-    cb = pq_det_codebooks(m=m)
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("nrm", l2_norm(F.col("cvec")))
-    cand_lists = assign_lists(cand, centroid_rows_literal(cents), "cand_id", "cvec", 1)
-    write_parquet(
-        cand_lists.select(
-            "cand_id", pq_code_expr("cvec", cb).alias("code"), "list_label"
-        ),
-        codes_path,
-        partition_by=["list_label"],
-    )
-    with open(manifest_path, "w") as f:
-        json.dump(
-            {"metric": "adc_l2sq", "nlist": len(cents), "m": m,
-             "centroids": [
-                 {"label": lbl, "vec": vec, "norm": nrm}
-                 for lbl, vec, nrm in cents
-             ],
-             "codebooks": cb},
-            f,
-        )
-    # ---- SEARCH: only the persisted index from here on ----
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    cent_arr = centroid_rows_literal(centroids_from_manifest(manifest))
-    cb_loaded = manifest["codebooks"]
-    codes = spark.read.parquet(codes_path)
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("nrm", l2_norm(F.col("qvec")))
-    q_lut = q.select(
-        "query_id", pq_lut_expr("qvec", cb_loaded).alias("lut")
-    )
-    q_probe = assign_lists(q, cent_arr, "query_id", "qvec", nprobe).select(
-        "query_id", "list_label"
-    ).join(q_lut, "query_id")
-    q_probe = _align_partition_key(q_probe, codes, "list_label")
-    return pq_adc_rank(codes, q_probe, m, k_nn=k_nn, on="list_label")
-
-
-def q_emb_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ search WITH REFINEMENT (Jégou et al. 2011 §V, "IVFADC+R"):
-    ADC ranks the code table to a short list of R=50 candidates per
-    query, then the EXACT cosine re-ranks only those 50 to the final
-    top-5.  This is the production answer to the quantizer's recall
-    ceiling that emb_ivfpq_recall_report measures honestly (ADC@5 at
-    m=4/k=16 sits at 10-20% recall; the refined short list recovers
-    most of it — measured in SCALE.md): the corpus-wide scan still
-    touches only the 4-int codes, and the raw vectors are fetched for
-    |Q|·R rows ONLY — the bounded random-access read every refine
-    stage pays, here a broadcast of the 4k-row short list onto the
-    vectors scan (never a corpus shuffle).
-
-    Fully deterministic (det codebooks, ADC ties broken by cand_id
-    before the cut), so the oracle reproduces the short list AND the
-    re-rank bit-for-bit — recall gained by refinement is hash-covered,
-    not estimated.  Output: (query_id, cand_id, cosine, rk ≤ 5)."""
-    from .operators.similarity import (
-        _as_double,
-        dot,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-
-    m, r_short, k_nn = 4, 50, 5
-    cb = pq_det_codebooks(m=m)
-    emb = _t(spark, sf_dir, "embeddings")
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        pq_code_expr("cast(embedding as array<double>)", cb).alias("code"),
-    )
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("qnrm", l2_norm(F.col("qvec")))
-    q_lut = q.select(
-        "query_id", pq_lut_expr("qvec", cb).alias("lut")
-    )
-    coarse = pq_adc_rank(cand, q_lut, m, k_nn=r_short).select(
-        "query_id", "cand_id"
-    )
-    vecs = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("cnrm", l2_norm(F.col("cvec")))
-    refined = (
-        vecs.join(F.broadcast(coarse), "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm")),
-                8,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        refined.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k_nn)
-        .select(
-            "query_id", "cand_id", "cosine",
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
-
-
-def q_emb_pq_refine_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The refinement WIN, hash-covered: recall@5 of raw ADC vs the
-    R=50-refined search against brute-force truth, ONE row — so the
-    claim 'refinement recovers the quantizer's recall' is a driver-hash
-    fact, not SCALE.md prose.  Everything is deterministic, so the
-    oracle recomputes all five numbers exactly.
-
-    One corpus pass serves both legs: the codes are encoded once, the
-    ADC ranking is cut at R=50 (checkpointed), ADC@5 is the HEAD of
-    that same ranked frame (rk ≤ 5 — by construction the top-5 of a
-    top-50 cut), and the refined leg exact-cosine-re-ranks the 50.
-    Same cost discipline as the other recall audits; at 100 TB this
-    runs on a query sample while production serves the refined path."""
-    from .operators.similarity import (
-        _as_double,
-        dot,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-
-    m, r_short, k_nn = 4, 50, 5
-    cb = pq_det_codebooks(m=m)
-    emb = _t(spark, sf_dir, "embeddings")
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("qnrm", l2_norm(F.col("qvec")))
-    truth = (
-        cosine_topk(emb, _queries_frame(emb), k=k_nn)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        pq_code_expr("cast(embedding as array<double>)", cb).alias("code"),
-    )
-    q_lut = q.select("query_id", pq_lut_expr("qvec", cb).alias("lut"))
-    short = pq_adc_rank(cand, q_lut, m, k_nn=r_short).localCheckpoint(
-        eager=False
-    )
-    adc5 = short.filter(F.col("rk") <= k_nn).select("query_id", "cand_id")
-    vecs = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("cnrm", l2_norm(F.col("cvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    refined5 = (
-        vecs.join(F.broadcast(short.select("query_id", "cand_id")), "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm")),
-                8,
-            ),
-        )
-        .withColumn("rrk", F.row_number().over(w))
-        .filter(F.col("rrk") <= k_nn)
-        .select("query_id", "cand_id")
-    )
-    s_t = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    s_a = truth.join(adc5, ["query_id", "cand_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_hit_adc")
-    )
-    s_r = truth.join(refined5, ["query_id", "cand_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_hit_refined")
-    )
-    return (
-        s_t.crossJoin(F.broadcast(s_a))
-        .crossJoin(F.broadcast(s_r))
-        .select(
-            "n_truth",
-            "n_hit_adc",
-            F.round(F.col("n_hit_adc") / F.col("n_truth"), 6).alias(
-                "recall_adc_at_5"
-            ),
-            "n_hit_refined",
-            F.round(F.col("n_hit_refined") / F.col("n_truth"), 6).alias(
-                "recall_refined_at_5"
-            ),
-        )
-    )
-
-
-#: Short-list sizes for the refinement R-sweep: 50 is the production
-#: emb_pq_refine_topk setting; 200 is the "size R with the corpus"
-#: operating point (round-9 verdict #4 — recall@5 at fixed R=50 drops
-#: 0.46 → 0.225 as the corpus grows 10×, so the production dial R ∝
-#: corpus/k needs a second measured, hash-checked point).
-_REFINE_R_GRID = (50, 200)
-
-
-def q_emb_pq_refine_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The refinement DIAL, measured: recall@5 of the ADC+exact-re-rank
-    search at every short-list size R in the sweep grid — one row per
-    R with the raw-ADC leg carried for reference — so the production
-    guidance "size R with the corpus" rests on hash-checked numbers at
-    two operating points, not one fixed constant (round-9 verdict #4).
-
-    Cost discipline: ONE code-table ADC ranking cut at max(R)
-    (checkpointed), each R leg is a filter (rk ≤ R) + exact re-rank of
-    |Q|·R broadcast-fetched raw vectors; truth is computed once.  The
-    whole audit runs on the deterministic bounded sub-corpus of
-    :func:`_audit_sample_modulus` — inert (s=1, bit-exact full audit)
-    at every driver/bench SF, capped at ~20k vectors beyond sf1 so the
-    row's cost stops growing with the corpus (the round-9 verdict #3
-    posture, measured in SCALE.md)."""
-    from .operators.similarity import (
-        _as_double,
-        dot,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-
-    m, k_nn = 4, 5
-    r_max = max(_REFINE_R_GRID)
-    cb = pq_det_codebooks(m=m)
-    s = _audit_sample_modulus(sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % s == 0)
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("qnrm", l2_norm(F.col("qvec")))
-    truth = (
-        cosine_topk(emb, _queries_frame(emb), k=k_nn)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        pq_code_expr("cast(embedding as array<double>)", cb).alias("code"),
-    )
-    q_lut = q.select("query_id", pq_lut_expr("qvec", cb).alias("lut"))
-    short = pq_adc_rank(cand, q_lut, m, k_nn=r_max).localCheckpoint(
-        eager=False
-    )
-    vecs = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("cnrm", l2_norm(F.col("cvec")))
-    s_t = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    adc5 = short.filter(F.col("rk") <= k_nn).select("query_id", "cand_id")
-    s_a = truth.join(adc5, ["query_id", "cand_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_hit_adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    legs = []
-    for r in _REFINE_R_GRID:
-        refined5 = (
-            vecs.join(
-                F.broadcast(
-                    short.filter(F.col("rk") <= r).select(
-                        "query_id", "cand_id"
-                    )
-                ),
-                "cand_id",
-            )
-            .join(F.broadcast(q), "query_id")
-            .withColumn(
-                "cosine",
-                F.round(
-                    dot(F.col("qvec"), F.col("cvec"))
-                    / (F.col("qnrm") * F.col("cnrm")),
-                    8,
-                ),
-            )
-            .withColumn("rrk", F.row_number().over(w))
-            .filter(F.col("rrk") <= k_nn)
-            .select("query_id", "cand_id")
-        )
-        s_r = truth.join(refined5, ["query_id", "cand_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hit_refined")
-        )
-        legs.append(
-            s_t.crossJoin(F.broadcast(s_a))
-            .crossJoin(F.broadcast(s_r))
-            .select(
-                F.lit(r).cast("long").alias("r_short"),
-                "n_truth",
-                "n_hit_adc",
-                F.round(F.col("n_hit_adc") / F.col("n_truth"), 6).alias(
-                    "recall_adc_at_5"
-                ),
-                "n_hit_refined",
-                F.round(F.col("n_hit_refined") / F.col("n_truth"), 6).alias(
-                    "recall_refined_at_5"
-                ),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
-
-
-def _pq_refine_r_sweep_sql(rs: tuple = _REFINE_R_GRID, k_nn: int = 5,
-                           m: int = 4, k: int = 16, d_sub: int = 16,
-                           dim: int = 64) -> str:
-    """Exact oracle for the refinement R-sweep: _pq_refine_recall_sql's
-    CTEs over the deterministic audit sub-corpus (s from COUNT(*)),
-    the short list cut once at max(rs), one refined CTE per R, and one
-    count leg per R UNION ALL'd with the r_short column carried."""
-    from .operators.similarity import pq_det_codebooks
-
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cb, k, d_sub)} AS c{s}" for s in range(m)
-    )
-    r_max = max(rs)
-    refined_ctes = ",\n".join(
-        f"""refined5_{r} AS (
-          SELECT query_id, cand_id FROM (
-            SELECT s.query_id, s.cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY s.query_id
-                                      ORDER BY cosine DESC, s.cand_id) AS rrk
-            FROM (
-              SELECT s.query_id, s.cand_id,
-                     ROUND({_dot_sql('qv', 'cvv', dim)} / (qnorm * cnorm), 8) AS cosine
-              FROM short s
-              JOIN vtab ON vtab.cand_id = s.cand_id
-              JOIN qpanel ON qpanel.query_id = s.query_id
-              WHERE s.rk <= {r}
-            ) s
-          ) WHERE rrk <= {k_nn})"""
-        for r in rs
-    )
-    legs = "\nUNION ALL\n".join(
-        f"""SELECT CAST({r} AS BIGINT) AS r_short,
-           (SELECT COUNT(*) FROM truth) AS n_truth,
-           (SELECT COUNT(*) FROM truth t JOIN adc5 a
-             ON t.query_id = a.query_id AND t.cand_id = a.cand_id) AS n_hit_adc,
-           ROUND((SELECT COUNT(*) FROM truth t JOIN adc5 a
-                   ON t.query_id = a.query_id AND t.cand_id = a.cand_id)
-                 / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_adc_at_5,
-           (SELECT COUNT(*) FROM truth t JOIN refined5_{r} r
-             ON t.query_id = r.query_id AND t.cand_id = r.cand_id) AS n_hit_refined,
-           ROUND((SELECT COUNT(*) FROM truth t JOIN refined5_{r} r
-                   ON t.query_id = r.query_id AND t.cand_id = r.cand_id)
-                 / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_refined_at_5"""
-        for r in rs
-    )
-    return f"""
-        WITH emb_s AS MATERIALIZED ({_audit_sample_cte()}),
-        codes_t AS MATERIALIZED (
-          SELECT vec_id AS cand_id, {code_cols} FROM emb_s
-        ),
-        qpanel AS (
-          SELECT vec_id AS query_id, embedding AS qv,
-                 {_norm_sql('embedding', dim)} AS qnorm
-          FROM emb_s WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        short AS MATERIALIZED (
-          SELECT query_id, cand_id, rk FROM (
-            SELECT query_id, cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc, cand_id) AS rk
-            FROM (
-              SELECT qpanel.query_id, codes_t.cand_id,
-                     ROUND({_pq_adc_sql('qv', 'c', cb, m, k, d_sub)}, 6) AS adc
-              FROM qpanel JOIN codes_t ON cand_id <> query_id
-            )
-          ) WHERE rk <= {r_max}
-        ),
-        adc5 AS (SELECT query_id, cand_id FROM short WHERE rk <= {k_nn}),
-        vtab AS (
-          SELECT vec_id AS cand_id, embedding AS cvv,
-                 {_norm_sql('embedding', dim)} AS cnorm
-          FROM emb_s
-        ),
-        {refined_ctes},
-        truth AS MATERIALIZED (SELECT query_id, cand_id FROM ({_cosine_topk_sql(src='emb_s')}) t)
-        {legs}
-    """
-
-
-def _pq_refine_recall_sql(k_nn: int = 5, r_short: int = 50, m: int = 4,
-                          k: int = 16, d_sub: int = 16, dim: int = 64) -> str:
-    """Exact oracle for the refinement recall row: the
-    _pq_refine_topk_sql CTEs widened to keep the ADC rank, plus truth
-    and three count legs."""
-    from .operators.similarity import pq_det_codebooks
-
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cb, k, d_sub)} AS c{s}" for s in range(m)
-    )
-    # outer CTE names deliberately avoid `c`/`q`: the nested
-    # _cosine_topk_sql defines its own WITH c/q, and DuckDB binds a
-    # same-named MATERIALIZED outer CTE in preference to the inner
-    # definition (observed: `cv` resolving against the codes table)
-    return f"""
-        WITH codes_t AS MATERIALIZED (
-          SELECT vec_id AS cand_id, {code_cols} FROM embeddings
-        ),
-        qpanel AS (
-          SELECT vec_id AS query_id, embedding AS qv,
-                 {_norm_sql('embedding', dim)} AS qnorm
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        short AS MATERIALIZED (
-          SELECT query_id, cand_id, rk FROM (
-            SELECT query_id, cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc, cand_id) AS rk
-            FROM (
-              SELECT qpanel.query_id, codes_t.cand_id,
-                     ROUND({_pq_adc_sql('qv', 'c', cb, m, k, d_sub)}, 6) AS adc
-              FROM qpanel JOIN codes_t ON cand_id <> query_id
-            )
-          ) WHERE rk <= {r_short}
-        ),
-        adc5 AS (SELECT query_id, cand_id FROM short WHERE rk <= {k_nn}),
-        vtab AS (
-          SELECT vec_id AS cand_id, embedding AS cvv,
-                 {_norm_sql('embedding', dim)} AS cnorm
-          FROM embeddings
-        ),
-        refined5 AS (
-          SELECT query_id, cand_id FROM (
-            SELECT s.query_id, s.cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY s.query_id
-                                      ORDER BY cosine DESC, s.cand_id) AS rrk
-            FROM (
-              SELECT s.query_id, s.cand_id,
-                     ROUND({_dot_sql('qv', 'cvv', dim)} / (qnorm * cnorm), 8) AS cosine
-              FROM short s
-              JOIN vtab ON vtab.cand_id = s.cand_id
-              JOIN qpanel ON qpanel.query_id = s.query_id
-            ) s
-          ) WHERE rrk <= {k_nn}
-        ),
-        truth AS MATERIALIZED (SELECT query_id, cand_id FROM ({_cosine_topk_sql()}) t)
-        SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
-               (SELECT COUNT(*) FROM truth t JOIN adc5 a
-                 ON t.query_id = a.query_id AND t.cand_id = a.cand_id) AS n_hit_adc,
-               ROUND((SELECT COUNT(*) FROM truth t JOIN adc5 a
-                       ON t.query_id = a.query_id AND t.cand_id = a.cand_id)
-                     / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_adc_at_5,
-               (SELECT COUNT(*) FROM truth t JOIN refined5 r
-                 ON t.query_id = r.query_id AND t.cand_id = r.cand_id) AS n_hit_refined,
-               ROUND((SELECT COUNT(*) FROM truth t JOIN refined5 r
-                       ON t.query_id = r.query_id AND t.cand_id = r.cand_id)
-                     / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_refined_at_5
-    """
-
-
-def _pq_refine_topk_sql(k_nn: int = 5, r_short: int = 50, m: int = 4,
-                        k: int = 16, d_sub: int = 16, dim: int = 64) -> str:
-    """Refined-PQ oracle: the _pq_topk_sql code/ADC expressions cut a
-    deterministic R-candidate short list (ADC asc, cand_id tie-break),
-    the exact cosine re-ranks it."""
-    from .operators.similarity import pq_det_codebooks
-
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cb, k, d_sub)} AS c{s}" for s in range(m)
-    )
-    return f"""
-        WITH c AS (
-          SELECT vec_id AS cand_id, {code_cols} FROM embeddings
-        ),
-        q AS (
-          SELECT vec_id AS query_id, embedding AS qv,
-                 {_norm_sql('embedding', dim)} AS qnorm
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        coarse AS (
-          SELECT query_id, cand_id FROM (
-            SELECT query_id, cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc, cand_id) AS rk
-            FROM (
-              SELECT q.query_id, c.cand_id,
-                     ROUND({_pq_adc_sql('qv', 'c', cb, m, k, d_sub)}, 6) AS adc
-              FROM q JOIN c ON cand_id <> query_id
-            )
-          ) WHERE rk <= {r_short}
-        ),
-        v AS (
-          SELECT vec_id AS cand_id, embedding AS cv,
-                 {_norm_sql('embedding', dim)} AS cnorm
-          FROM embeddings
-        ),
-        refined AS (
-          SELECT co.query_id, co.cand_id,
-                 ROUND({_dot_sql('qv', 'cv', dim)} / (qnorm * cnorm), 8) AS cosine
-          FROM coarse co
-          JOIN v ON v.cand_id = co.cand_id
-          JOIN q ON q.query_id = co.query_id
-        )
-        SELECT query_id, cand_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY cosine DESC, cand_id) AS BIGINT) AS rk
-        FROM refined QUALIFY rk <= {k_nn}
-    """
-
-
-def q_emb_ivfpq_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index APPEND for the persisted IVFPQ path (round-8 verdict #5):
-    a NEW embedding batch is encoded against the PERSISTED manifest and
-    its codes are appended to the list-partitioned table — no rebuild —
-    then the search scans base + appended codes as one index.  The ANN
-    twin of dedup_incremental_persisted's write-once story: at 100 TB
-    the index is built once, each arriving batch pays only its own
-    coarse-assign + encode (both zero-shuffle projections over the
-    manifest's literal centroids/codebooks, with the batch predicate
-    pushed into the scan), and the nightly append is an additive
-    partition-directory write (``mode=append`` under
-    PARTITIONED BY list_label — existing files are never rewritten,
-    new files land inside the matching list directories).
-
-    BUILD uses the BASE split only (vec_id % 10 != 7): its centroids
-    are the base's per-label means, which is the honest append
-    semantic — appending must NOT retrain the coarse quantizer, or
-    every previously written code would be invalidated.  The batch
-    (vec_id % 10 == 7) is encoded purely from the reloaded manifest.
-    SEARCH is byte-identical to emb_ivfpq_persisted_topk's half and
-    keeps both scale levers (plan-asserted in pytest: dynamicpruning
-    on the codes scan, the scan reading base AND appended files, no
-    float-vector column on the candidate side).
-
-    The oracle recomputes the same relation with base-only centroids
-    (cent_where) over the FULL corpus — base and batch assignments are
-    the same deterministic function of the manifest, so a batch row
-    lost by the append, a manifest skew, or an accidental centroid
-    retrain is a hash mismatch."""
-    import json
-    import os
-
-    from .operators.similarity import (
-        _as_double,
-        assign_lists,
-        centroid_rows,
-        centroid_rows_literal,
-        centroids_from_manifest,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-    from .sources.writers import write_parquet
-
-    nprobe, k_nn, m = 2, 5, 4
-    d = _run_dir("ivfpq_append_index", sf_dir)
-    codes_path = os.path.join(d, "codes")
-    manifest_path = os.path.join(d, "index_manifest.json")
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 10 != 7)
-    batch = emb.filter(F.col("vec_id") % 10 == 7)
-    # ---- BUILD (base only): coarse-assign + encode + persist ----
-    cents = centroid_rows(base)
-    cb = pq_det_codebooks(m=m)
-    bcand = base.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("nrm", l2_norm(F.col("cvec")))
-    base_lists = assign_lists(bcand, centroid_rows_literal(cents), "cand_id", "cvec", 1)
-    write_parquet(
-        base_lists.select(
-            "cand_id", pq_code_expr("cvec", cb).alias("code"), "list_label"
-        ),
-        codes_path,
-        partition_by=["list_label"],
-    )
-    with open(manifest_path, "w") as f:
-        json.dump(
-            {"metric": "adc_l2sq", "nlist": len(cents), "m": m,
-             "centroids": [
-                 {"label": lbl, "vec": vec, "norm": nrm}
-                 for lbl, vec, nrm in cents
-             ],
-             "codebooks": cb},
-            f,
-        )
-    # ---- APPEND: the new batch sees ONLY the persisted manifest ----
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    cent_arr = centroid_rows_literal(centroids_from_manifest(manifest))
-    cb_loaded = manifest["codebooks"]
-    ncand = batch.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("nrm", l2_norm(F.col("cvec")))
-    batch_lists = assign_lists(ncand, cent_arr, "cand_id", "cvec", 1)
-    write_parquet(
-        batch_lists.select(
-            "cand_id",
-            pq_code_expr("cvec", cb_loaded).alias("code"),
-            "list_label",
-        ),
-        codes_path,
-        mode="append",
-        partition_by=["list_label"],
-    )
-    # ---- SEARCH: base + appended codes as one persisted index ----
-    codes = spark.read.parquet(codes_path)
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("nrm", l2_norm(F.col("qvec")))
-    q_lut = q.select(
-        "query_id", pq_lut_expr("qvec", cb_loaded).alias("lut")
-    )
-    q_probe = assign_lists(q, cent_arr, "query_id", "qvec", nprobe).select(
-        "query_id", "list_label"
-    ).join(q_lut, "query_id")
-    q_probe = _align_partition_key(q_probe, codes, "list_label")
-    return pq_adc_rank(codes, q_probe, m, k_nn=k_nn, on="list_label")
-
-
-def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-ADC — the COMBINED coarse+fine ANN tier (Jégou et al. 2011
-    §IV; FAISS IndexIVFPQ with by_residual=False): candidates are
-    pruned to the query's nprobe=2 coarse lists (the emb_ivf_topk
-    literal-centroid assignment, zero shuffle), then ranked by
-    asymmetric distance between the RAW query vector and each
-    candidate's PQ code (the emb_pq_topk deterministic codebooks and
-    LUT fold).  Composing the two verified mechanisms — rather than
-    residual-encoding against the coarse centroid — keeps every
-    distance bit-reconstructable in SQL, so the driver hash covers
-    coarse assignment, code assignment, LUT indexing, list pruning,
-    AND the final ranking in one relation.
-
-    This is the shape a 100 TB ANN service actually runs: both the
-    list assignment and the 4-ints-per-vector encode are one-pass
-    zero-shuffle projections (written once, scanned thereafter — the
-    persisted variants of each half exist as emb_ivf_persisted_topk /
-    emb_pq_persisted_topk); the search scans nprobe/L of the codes,
-    carries 4 small ints per candidate instead of 64 floats, and the
-    bounded query panel broadcasts into an equi-join on list_label —
-    no shuffle of the corpus side at all.
-    Output: (query_id, cand_id, adc, rk ≤ 5), ADC ascending, cand_id
-    tie-break; oracle _ivfpq_topk_sql."""
-    from .operators.similarity import (
-        _as_double,
-        assign_lists,
-        centroid_literal_array,
-        l2_norm,
-        pq_adc_rank,
-        pq_code_expr,
-        pq_det_codebooks,
-        pq_lut_expr,
-    )
-
-    nprobe, k_nn, m = 2, 5, 4
-    emb = _t(spark, sf_dir, "embeddings")
-    cb = pq_det_codebooks(m=m)
-    cent_arr = centroid_literal_array(emb)
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cvec")
-    ).withColumn("nrm", l2_norm(F.col("cvec")))
-    cand_codes = assign_lists(cand, cent_arr, "cand_id", "cvec", 1).select(
-        "cand_id", "list_label", pq_code_expr("cvec", cb).alias("code")
-    )
-    q = _queries_frame(emb).select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qvec")
-    ).withColumn("nrm", l2_norm(F.col("qvec")))
-    # the LUT builds ONCE per query (before the nprobe explode), then
-    # rides the probe rows through a panel-sized equi-join
-    q_lut = q.select("query_id", pq_lut_expr("qvec", cb).alias("lut"))
-    q_probe = assign_lists(q, cent_arr, "query_id", "qvec", nprobe).select(
-        "query_id", "list_label"
-    ).join(q_lut, "query_id")
-    return pq_adc_rank(cand_codes, q_probe, m, k_nn=k_nn, on="list_label")
-
-
-def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier-based quality filtering (the fastText-style stage of
-    LLM curation): train LogisticRegression on cheap text statistics
-    with the rule-based Gopher/C4 gates as WEAK LABELS, then score
-    every document — the heuristic gate bootstraps its own smooth
-    replacement, which generalizes past the hard thresholds.  The
-    feature pass and the scoring pass are both one distributed scan;
-    only the (tiny) LBFGS state lives on the driver.
-
-    Graduated to a hash-checked relation (round-5 verdict #1): one
-    summary row with the EXACT corpus size and weak-keep count (the
-    oracle recomputes the min_words=20 gate conjunction in SQL) plus
-    TRUE-literal flags from the fitted model that CAN fail: in-sample
-    accuracy against the weak labels beats the majority-class baseline
-    (a broken scorer — wrong coefficient signs, misaligned features —
-    fails it; measured ≈0.999 accuracy vs ≈0.9 majority: three
-    rule-aligned features make the gate nearly separable) and the
-    in-sample AUC is ≥ 0.5 (random or inverted ranking fails it).
-    Earlier probs-in-unit / preds-binary flags were dropped when
-    scoring moved to the native sigmoid projection: they became true
-    BY CONSTRUCTION and verified nothing.  Per-doc scores stay
-    observable through the projection.
-
-    Scoring is a NATIVE sigmoid projection from the fitted
-    coefficients (margin = Σ wᵢ·featureᵢ + b, all whole-stage
-    codegen), not ``model.transform``: the MLlib transform wraps the
-    model in a ScalaUDF, the LogisticRegressionModel carries its
-    ``trainingSummary``, and the summary holds the SparkSession —
-    whose ObservationManager is not serializable once any prior
-    ``df.observe`` in the session registered an Observation, so task
-    serialization of the transform closure dies (a real
-    shared-session hazard, found by the round-6 full-suite run; the
-    same chain kills ``BinaryClassificationEvaluator``).  AUC is
-    computed directly as the Mann-Whitney U over 6dp-BUCKETED
-    probabilities (per-bucket pos/neg counts, one running-sum window
-    over ≤10⁶+1 buckets — a bounded-domain fold, same class as
-    lineitem_price_histogram); bucketing bounds the fold where raw
-    scores would be corpus-cardinality."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    from .operators.curation import quality_flags as _qflags
-    from .operators.text import quality_score as _qscore
-
-    # r13 note: a gated spread_small of the 1-split corpus scan was
-    # tried here and reverted — cold it wins (4.2 vs 6.2 s: the
-    # feature pass parallelizes), but with warm codegen the 10 LBFGS
-    # iterations over 5k cached rows run FASTER on one task than on
-    # 32 (0.6 vs 1.9 s: per-iteration task overhead × 32 dwarfs the
-    # row work), and the bench measures the warm regime.  At real
-    # corpus scale the scan has real splits and nothing here pins it.
-    docs = _t(spark, sf_dir, "documents")
-    feats = _qscore(docs)
-    labels = _qflags(docs, min_words=20).select(
-        "doc_id", F.col("keep").cast("double").alias("label")
-    )
-    feature_cols = ["n_tokens", "punct_ratio", "stopword_ratio"]
-    data = VectorAssembler(
-        inputCols=feature_cols, outputCol="features"
-    ).transform(feats.join(labels, "doc_id")).cache()
-    model = LogisticRegression(
-        maxIter=10, regParam=0.01, labelCol="label", featuresCol="features"
-    ).fit(data)
-    margin = F.lit(float(model.intercept))
-    for c, w in zip(feature_cols, model.coefficients.toArray().tolist()):
-        margin = margin + F.col(c) * float(w)
-    pred = data.select(
-        "label",
-        # MLlib's binary prediction at the default threshold 0.5 is
-        # exactly margin > 0
-        F.when(margin > 0.0, F.lit(1.0)).otherwise(F.lit(0.0))
-        .alias("prediction"),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("p1"),
-    ).cache()
-    buckets = pred.groupBy(F.round("p1", 6).alias("b")).agg(
-        F.sum("label").alias("np_"),
-        F.sum(F.lit(1.0) - F.col("label")).alias("nn_"),
-    )
-    wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    u_row = buckets.select(
-        (
-            F.col("np_")
-            * (F.coalesce(F.sum("nn_").over(wb), F.lit(0.0))
-               + 0.5 * F.col("nn_"))
-        ).alias("u"),
-        "np_",
-        "nn_",
-    ).agg(
-        F.sum("u").alias("u"),
-        F.sum("np_").alias("n_pos"),
-        F.sum("nn_").alias("n_neg"),
-    ).collect()[0]
-    auc = (
-        u_row.u / (u_row.n_pos * u_row.n_neg)
-        if u_row.n_pos and u_row.n_neg
-        else 1.0  # degenerate single-class corpus: nothing to mis-rank
-    )
-    agg = pred.agg(
-        F.count(F.lit(1)).cast("long").alias("n_scored"),
-        F.sum(F.col("label").cast("long")).cast("long").alias("n_weak_keep"),
-        F.sum((F.col("prediction") == F.col("label")).cast("long"))
-        .cast("long")
-        .alias("n_correct"),
-    ).collect()[0]
-    data.unpersist()
-    pred.unpersist()
-    majority = max(agg.n_weak_keep, agg.n_scored - agg.n_weak_keep)
-    # degenerate guard (ADVICE r6 #2): on a single-class corpus both
-    # flags assert nothing (majority baseline = perfect; AUC already
-    # defaults) — vacuous TRUE, not a training-envelope failure
-    single_class = not (u_row.n_pos and u_row.n_neg)
-    return spark.createDataFrame(
-        [
-            (
-                int(agg.n_scored),
-                int(agg.n_weak_keep),
-                single_class or int(agg.n_correct) >= majority,
-                float(auc) >= 0.5,
-            )
-        ],
-        "n_docs long, n_weak_keep long, acc_ge_majority boolean, "
-        "auc_ge_half boolean",
-    )
-
-
-def q_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket pair affinity: the 20 part pairs most often bought
-    in the same order, with per-part support — the pairwise
-    frequent-itemset shape.  Same inverted-index discipline as the
-    dedup joins: self-equi-join on the order key (never all parts ×
-    all parts), count per pair, exact integer supports.  At scale the
-    hot keys are huge orders — cap basket size upstream exactly like
-    the shingle doc-frequency cap."""
-    # both join sides reference the distinct basket relation —
-    # materialize it once (same discipline as the simhash signatures)
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct().localCheckpoint()
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(b, "ok")
-        .filter(F.col("a.pk") < F.col("b.pk"))
-        .groupBy(F.col("a.pk").alias("part_a"), F.col("b.pk").alias("part_b"))
-        .agg(F.count("*").alias("n_orders"))
-    )
-    return (
-        pairs.orderBy(F.col("n_orders").desc(), "part_a", "part_b")
-        .limit(20)
-        .select("part_a", "part_b", "n_orders")
-    )
-
-
-def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-of-total: each nation's share of global revenue — the
-    ratio-to-report window shape.  The share window runs over the
-    ALREADY-AGGREGATED 25-row nation relation (bounded by the domain,
-    not the data), so its single-partition exchange moves 25 rows; the
-    data-sized work is one broadcast join + one hash aggregate.
-    Revenue rides as exact integer 10⁻⁴ dollars; the share is one IEEE
-    division of exact longs.  customer is SF-scaled so it carries no
-    broadcast hint (AQE decides); only the 25-row nation is hinted."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    rev_e2 = F.round(F.col("o_totalprice") * 100).cast("long")
-    per_nation = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.sum(rev_e2).alias("rev_e2"))
-    )
-    total = F.sum("rev_e2").over(Window.partitionBy())
-    return per_nation.select(
-        "n_name",
-        (F.col("rev_e2") / 100.0).alias("revenue"),
-        F.round(F.col("rev_e2") / total * 100, 6).alias("share_pct"),
-    )
-
-
-def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event-type transition matrix (Markov bigrams): one lag
-    window per user (ts, event_id total order) then a count per
-    (prev → cur) pair — the path-analysis shape behind funnel and
-    next-action models.  Window and aggregate share the user
-    partitioning; no self-join of the event stream."""
-    ev = read_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    return (
-        ev.withColumn("prev_type", prev)
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("cur_type"))
-        .agg(F.count("*").alias("n_transitions"))
-    )
-
-
-def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING custom Python DataSource (Spark 4
-    SimpleDataSourceStreamReader): the same deterministic generator
-    relation as pysource_scan arrives in 500-row micro-batches, drains
-    through a memory sink, and aggregates per bucket — so it shares
-    pysource_scan's exact SQL oracle.  Offsets are {"i": next_id} dicts
-    and readBetweenOffsets regenerates any span, the replay contract a
-    recoverable streaming source must honor.  (sf_dir unused: the
-    source IS the data.)
-
-    Robustness: the stream's FIRST Python worker spawn can exceed the
-    fixed `spark.python.authenticate.socketTimeout` (15 s, a core conf
-    a running session cannot change) on a loaded host — the round-3
-    bench hit exactly that.  So (a) a trivial batch scan of the same
-    source warms the worker daemon BEFORE the stream starts (with
-    spark.python.worker.reuse the micro-batches then draw from the
-    warm pool), and (b) the drain retries once from scratch on
-    failure."""
-    import uuid as _uuid
-
-    from .sources.pysource import register_synthetic_source
-
-    register_synthetic_source(spark)
-    spark.read.format("synthetic_events").option("rows", "1").load().count()
-    last_exc = None
-    for _ in range(2):
-        stream = (
-            spark.readStream.format("synthetic_events")
-            .option("rows", "2000")
-            .option("batch", "500")
-            .load()
-        )
-        name = f"pysource_stream_{_uuid.uuid4().hex[:8]}"
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()  # returns once read() reports caught-up
-            last_exc = None
-            break
-        except Exception as exc:  # cold-start socket timeout: retry once
-            last_exc = exc
-        finally:
-            q.stop()
-    if last_exc is not None:
-        raise last_exc
-    return (
-        spark.table(name)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("score"), 2).alias("sum_score"),
-            F.min("id").alias("min_id"),
-            F.max("id").alias("max_id"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# corpus mixing / hygiene (extension; operators.curation)
-# ---------------------------------------------------------------------------
-
-# per-language sampling rates (percent) for the stratified-sample query:
-# downsample dominant English, keep the tail languages whole.
-STRAT_RATES = {"en": 30, "de": 80, "fr": 80, "es": 80, "zh": 100}
-MIX_WEIGHTS = {"src0": 8, "src1": 4, "src2": 2}  # everything else weight 1
-
-
-def q_corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language downsampling (hash-mod gate, no RNG):
-    the language-rebalancing step of a pretraining mix.  Keep decision
-    is a pure scan-side filter — zero shuffle at any corpus size."""
-    from .operators.curation import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stratified_sample(docs, "lang", STRAT_RATES, default_rate=50)
-
-
-def q_corpus_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted round-robin source interleaving into one global
-    training order (integer virtual positions — engine-exact)."""
-    from .operators.curation import interleave_sources
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return interleave_sources(docs, "source", MIX_WEIGHTS)
-
-
-def q_corpus_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate resolution, GROUP-shaped (round-6 verdict #3):
-    star edges against shingle-bucket representatives
-    (dedup.ngram_rep_edges — Θ(N) candidates at any duplication level)
-    → connected components (curation.dup_clusters, pointer jumping) →
-    keep ONE best document per component (longest text; id tie-break).
-    Unclustered documents keep themselves.  Only a narrow
-    (doc_id, q_len, cluster) relation ever shuffles — never the text.
-    ``corpus_keep_best_pairs`` is the exact-pairwise audit variant."""
-    from .operators.curation import dup_clusters
-    from .operators.dedup import ngram_rep_edges
-    from .sources.readers import collapse_dial
-
-    docs = _t(spark, sf_dir, "documents")
-    edges = ngram_rep_edges(
-        docs, n=3, threshold=0.05,
-        # shared dial (footer row count + memoized duplication probe,
-        # round-12 verdict #5) — above it the shingle leg runs once per
-        # distinct normalized text (round-11 verdict #5); driver/bench
-        # SFs keep the exchange-free direct plan
-        collapse_distinct=collapse_dial(spark, sf_dir),
-        spread_rows=table_row_count(sf_dir, "documents"),
-    )
-    clusters = dup_clusters(edges)
-    narrow = docs.select("doc_id", F.length("text").cast("long").alias("q_len"))
-    labeled = narrow.join(clusters, "doc_id", "left").withColumn(
-        "cl", F.coalesce("cluster_id", F.col("doc_id"))
-    )
-    w = Window.partitionBy("cl").orderBy(F.col("q_len").desc(), F.col("doc_id"))
-    return (
-        labeled.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "q_len")
-    )
-
-
-def q_corpus_keep_best_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-pairwise keep-best (the AUDIT variant of corpus_keep_best):
-    drop every document dominated by an n-gram-Jaccard pair partner of
-    higher quality (longer text; id tie-break).  The corpus is
-    LEFT-ANTI filtered by a broadcast of the tiny dominated set — facts
-    never shuffle.  Pair enumeration is Θ(K²) per K-clone group, so on
-    a duplication-heavy corpus prefer the group-shaped default."""
-    from .operators.curation import keep_best_per_pair
-
-    docs = _t(spark, sf_dir, "documents")
-    with_q = docs.withColumn("q_len", F.length("text").cast("long"))
-    from .sources.readers import collapse_dial
-
-    pairs = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.05,
-        # same footer gate as dedup_ngram_jaccard (round 12)
-        collapse_distinct=collapse_dial(spark, sf_dir),
-    )
-    kept = keep_best_per_pair(with_q, pairs, "q_len")
-    return kept.select("doc_id", "q_len")
-
-
-def q_corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test benchmark-contamination scan: train docs sharing any
-    8-gram with a test doc (GPT-3 app. C methodology), via the
-    deterministic hash split.  Grams are pre-hashed to 60-bit digests
-    before the join (operators.curation.doc_ngrams hashed=True — the
-    oracle hashes identically, so parity holds, collisions included;
-    at 10⁶ grams the odds of one are ~4·10⁻⁷)."""
-    from .operators.curation import hash_split, ngram_contamination_split
-
-    docs = hash_split(_t(spark, sf_dir, "documents"))
-    return ngram_contamination_split(docs, n=8)
-
-
-# Bloom-decontamination sizing, shared by the Spark query AND its
-# DuckDB oracle f-string below — ONE definition, so retuning the
-# filter cannot desynchronize the two engines' bit layouts.
-_BLOOM_M = 1 << 18  # bits (power of two; KM shift = log2)
-_BLOOM_K = 5        # positions per gram
-
-
-def q_corpus_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter benchmark decontamination
-    (operators.curation.bloom_decontaminate): the test split's 8-grams
-    set k=5 Kirsch-Mitzenmacher positions in a 2¹⁸-bit space; train
-    docs are probed against the broadcast SET-BIT table (≤ 2¹⁸ rows —
-    bounded by a CONSTANT, not by data), so at 100 TB the huge train
-    side never joins test text, only a fixed-size filter.  Per train
-    doc: exact_hit (the verification twin the oracle also computes),
-    bloom_hit (the filter's verdict), and the per-row one-sided-error
-    invariant no_false_negative.  The filter is deterministic integer
-    arithmetic on both engines, so the DuckDB oracle reproduces it
-    EXACTLY — the hash check covers the false-positive behaviour too,
-    not just an invariant flag."""
-    from .operators.curation import bloom_decontaminate, hash_split
-
-    docs = hash_split(_t(spark, sf_dir, "documents"))
-    return bloom_decontaminate(docs, n=8, m_bits=_BLOOM_M, k=_BLOOM_K)
-
-
-# ---------------------------------------------------------------------------
-# TPC-H completion (shapes adapted to the driver's schema: no partsupp
-# table, no l_shipmode/commit/receipt dates — substitutes noted per query)
-# ---------------------------------------------------------------------------
-
-
-def q_tpch_q4_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: order-priority checking.  The EXISTS subquery
-    (a lineitem shipped after the order date — substitute for
-    commitdate<receiptdate) becomes a LEFT SEMI join that ships only
-    (l_orderkey, l_shipdate); the date filter prunes orders at the
-    scan before the join."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        orders.join(
-            li,
-            (orders["o_orderkey"] == li["l_orderkey"])
-            & (li["l_shipdate"] > orders["o_orderdate"]),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-def q_tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by
-    year.  The nation dimension joins twice (supplier side + customer
-    side) — both broadcast, with the two-nation filter applied to each
-    broadcast copy BEFORE the pair predicate, so the fact shuffle only
-    carries rows touching either nation."""
-    pair = ("NATION_2", "NATION_7")
-    n1 = (
-        _t(spark, sf_dir, "nation")
-        .filter(F.col("n_name").isin(*pair))
-        .select(F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation"))
-    )
-    n2 = (
-        _t(spark, sf_dir, "nation")
-        .filter(F.col("n_name").isin(*pair))
-        .select(F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation"))
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(supp, li["l_suppkey"] == supp["s_suppkey"])
-        .join(F.broadcast(n1), supp["s_nationkey"] == n1["s_nkey"])
-        .join(F.broadcast(n2), cust["c_nationkey"] == n2["c_nkey"])
-        .filter(
-            ((F.col("supp_nation") == pair[0]) & (F.col("cust_nation") == pair[1]))
-            | ((F.col("supp_nation") == pair[1]) & (F.col("cust_nation") == pair[0]))
-        )
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-def q_tpch_q8_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: a nation's market share of PROMO-type parts
-    sold to ASIA customers, by year.  share = conditional-sum /
-    total-sum in ONE aggregate pass (no self-join); region/nation
-    broadcast."""
-    region = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
-    n_cust = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
-    )
-    n_supp = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li["l_partkey"] == part["p_partkey"])
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(n_cust), cust["c_nationkey"] == n_cust["c_nkey"])
-        .join(region, n_cust["c_rkey"] == region["r_regionkey"])
-        .join(supp, li["l_suppkey"] == supp["s_suppkey"])
-        .join(F.broadcast(n_supp), supp["s_nationkey"] == n_supp["s_nkey"])
-        .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("supp_nation") == "NATION_7", vol).otherwise(F.lit(0.0)))
-                / F.sum(vol),
-                4,
-            ).alias("mkt_share")
-        )
-    )
-
-
-def q_tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit by supplier nation and year over parts
-    whose name contains 'widget'.  Without a partsupp table the cost
-    term is p_retailprice·quantity·0.1 instead of
-    ps_supplycost·quantity — same operator DAG (3 fact-dim joins +
-    derived-column aggregate)."""
-    part = (
-        _t(spark, sf_dir, "part")
-        .filter(F.col("p_name").contains("widget"))
-        .select("p_partkey", "p_retailprice")
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = F.broadcast(
-        _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
-    # exact integer 10^-4 dollars: ext_cents·(100−disc_bp) − retail_cents·qty·10.
-    # float SUM order noise straddled a round-2 boundary here cross-engine.
-    amount_e4 = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.round(F.col("l_discount") * 100).cast("long")
-    ) - F.round(F.col("p_retailprice") * 100).cast("long") * F.col("l_quantity").cast(
-        "long"
-    ) * 10
-    return (
-        li.join(part, li["l_partkey"] == part["p_partkey"])
-        .join(supp, li["l_suppkey"] == supp["s_suppkey"])
-        .join(nation, supp["s_nationkey"] == nation["n_nationkey"])
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("nation", F.year("o_orderdate").cast("long").alias("o_year"))
-        .agg((F.sum(amount_e4) / 10000.0).alias("sum_profit"))
-    )
-
-
-def q_tpch_q11_important(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: parts whose ASIA-supplied inventory value
-    exceeds 2× the average part's value.  (TPC-H uses a fixed
-    fraction-of-total cutoff, which silently empties as the part count
-    grows — the relative-to-average form is scale-invariant and equals
-    the 0.1%-of-total cutoff exactly at sf0.01.)  partsupp value is
-    substituted by Σ retailprice·quantity over ASIA-supplier
-    lineitems.  All money math is integer cents so the
-    HAVING-vs-global-scalar comparison is exact cross-engine; the
-    global (total, count) is a 1-row broadcast (no driver collect)."""
-    region = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
-    nation = _t(spark, sf_dir, "nation")
-    asia_supp = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation["n_nationkey"])
-        .join(region, nation["n_regionkey"] == region["r_regionkey"])
-        .select("s_suppkey")
-    )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    value_cents = F.sum(
-        F.round(F.col("p_retailprice") * 100).cast("long") * F.col("l_quantity").cast("long")
-    )
-    per_part = (
-        li.join(asia_supp, li["l_suppkey"] == asia_supp["s_suppkey"], "left_semi")
-        .join(part, li["l_partkey"] == part["p_partkey"])
-        .groupBy(F.col("l_partkey").alias("p_partkey"))
-        .agg(value_cents.alias("value_cents"))
-    )
-    total = per_part.agg(
-        F.sum("value_cents").alias("total_cents"),
-        F.count("*").alias("n_parts"),
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("value_cents") * F.col("n_parts") > 2 * F.col("total_cents"))
-        .select(
-            "p_partkey",
-            F.round(F.col("value_cents") / 100.0, 2).alias("value"),
-        )
-        .orderBy(F.col("value").desc(), F.col("p_partkey"))
-    )
-
-
-def q_tpch_q12_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: high- vs low-priority order counts by line
-    status (substitute for ship mode) for 1997 shipments.  The
-    CASE-sum pair runs in one aggregate; only (o_orderkey,
-    o_orderpriority) crosses the join."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("long").alias("low_line_count"),
-        )
-    )
-
-
-def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) with maximum revenue in 1996Q1.
-    The revenue view is one aggregate; the MAX scalar is a 1-row
-    broadcast cross join compared in exact integer 10^-4 dollars
-    (cents × (100−discount_bp)), so max-equality can't be broken by
-    float noise."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    rev_unit = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.round(F.col("l_discount") * 100).cast("long")
-    )
-    revenue = (
-        li.groupBy("l_suppkey").agg(F.sum(rev_unit).alias("rev_e4"))
-    )
-    max_rev = revenue.agg(F.max("rev_e4").alias("max_e4"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        revenue.crossJoin(F.broadcast(max_rev))
-        .filter(F.col("rev_e4") == F.col("max_e4"))
-        .join(supp, F.col("l_suppkey") == supp["s_suppkey"])
-        .select(
-            F.col("s_suppkey").cast("long").alias("s_suppkey"),
-            "s_name",
-            F.round(F.col("rev_e4") / 10000.0, 2).alias("total_revenue"),
-        )
-    )
-
-
-def q_tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: distinct supplier count per (brand, type,
-    size) over selected part attrs, excluding flagged suppliers
-    (negative balance, substitute for the complaints NOT IN) — the
-    NOT IN is a LEFT ANTI join.  The flagged-supplier side is a
-    filtered slice of the SF-scaled supplier table, so it carries no
-    forced broadcast hint (AQE picks broadcast while it fits)."""
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & (F.col("p_type") != "PROMO")
-        & (F.col("p_size").isin(1, 5, 10, 15, 20, 25))
-    )
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(bad_supp, li["l_suppkey"] == bad_supp["s_suppkey"], "left_anti")
-        .join(part, li["l_partkey"] == part["p_partkey"])
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
-    )
-
-
-def q_tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: revenue loss from small-quantity Brand#3
-    orders.  The correlated per-part AVG subquery decorrelates into a
-    grouped aggregate joined back to the fact.  The per-part aggregate
-    is SF-scaled (one row per Brand#3 part), so it carries no forced
-    broadcast hint — AQE broadcasts while small, and at 100 TB the two
-    sides co-partition on l_partkey for a shuffle-reusing sort-merge
-    join.  The final scalar is exact integer cents with
-    floor-division by 7."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity", "l_extendedprice")
-    li_b3 = li.join(part, li["l_partkey"] == part["p_partkey"], "left_semi")
-    avg_qty = li_b3.groupBy(F.col("l_partkey").alias("ap_key")).agg(
-        F.avg("l_quantity").alias("avg_qty")
-    )
-    return (
-        li_b3.join(avg_qty, li_b3["l_partkey"] == F.col("ap_key"))
-        .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
-        .agg(
-            F.floor(
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / 7.0
-            )
-            .cast("long")
-            .alias("avg_yearly_cents")
-        )
-    )
-
-
-def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue under three OR-ed brand/size/quantity
-    conjunctions.  The disjunction stays one native predicate on the
-    joined relation — Catalyst extracts the common l_partkey=p_partkey
-    equi-condition so the join is hash, not nested-loop."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    j = li.join(part, li["l_partkey"] == part["p_partkey"])
-    clause = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return j.filter(clause).agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-    )
-
-
-def q_tpch_q20_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: suppliers who shipped more than half of a
-    red part's 1996 volume.  partsupp availqty is substituted by the
-    per-(supplier, part) shipped-quantity sum vs the per-part total —
-    a grouped aggregate on (part, supplier) then a window sum on part
-    (one narrower re-exchange of the aggregated rows, not the facts),
-    compared in exact integer units."""
-    part = (
-        _t(spark, sf_dir, "part")
-        .filter(F.col("p_name").startswith("red"))
-        .select("p_partkey")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    sp = (
-        li.join(part, li["l_partkey"] == part["p_partkey"], "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("supp_qty"))
-    )
-    total = F.sum("supp_qty").over(Window.partitionBy("l_partkey"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        sp.withColumn("part_qty", total)
-        .filter(F.col("supp_qty") * 2 > F.col("part_qty"))
-        .select("l_suppkey")
-        .distinct()
-        .join(supp, F.col("l_suppkey") == supp["s_suppkey"])
-        .select(F.col("s_suppkey").cast("long").alias("s_suppkey"), "s_name")
-        .orderBy("s_suppkey")
-    )
-
-
-def q_tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape: suppliers whose late line was the ONLY late
-    line in a finished multi-supplier order.  lateness = shipped after
-    order date (substitute for receipt>commit).  EXISTS → LEFT SEMI on
-    (same order, other supplier); NOT EXISTS → LEFT ANTI on (same
-    order, other supplier, late) — both ship two narrow columns."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    lif = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "o_orderdate"
-    )
-    late = lif.filter(F.col("l_shipdate") > F.col("o_orderdate"))
-    others = li.select(
-        F.col("l_orderkey").alias("o2_key"), F.col("l_suppkey").alias("o2_supp")
-    )
-    late2 = late.select(
-        F.col("l_orderkey").alias("l2_key"), F.col("l_suppkey").alias("l2_supp")
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    waiting = (
-        late.join(
-            others,
-            (F.col("l_orderkey") == F.col("o2_key"))
-            & (F.col("l_suppkey") != F.col("o2_supp")),
-            "left_semi",
-        )
-        .join(
-            late2,
-            (F.col("l_orderkey") == F.col("l2_key"))
-            & (F.col("l_suppkey") != F.col("l2_supp")),
-            "left_anti",
-        )
-    )
-    return (
-        waiting.join(supp, waiting["l_suppkey"] == supp["s_suppkey"])
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(20)
-    )
-
-
-def q_tpch_q2_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: for each size-10 part, the EUROPE supplier(s)
-    achieving the minimum unit price.  The correlated MIN subquery is
-    a window MIN over the part key — one shuffle, no join-back.  Unit
-    price is exact integer 10^-4 dollars via cents·100 div quantity,
-    so min-equality is float-safe."""
-    region = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE"))
-    nation = _t(spark, sf_dir, "nation")
-    eu_supp = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation["n_nationkey"])
-        .join(region, nation["n_regionkey"] == region["r_regionkey"])
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 10).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
-    )
-    unit_e4 = F.expr(
-        "(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * 100) div CAST(l_quantity AS BIGINT)"
-    )
-    offers = (
-        li.join(part, li["l_partkey"] == part["p_partkey"], "left_semi")
-        .join(eu_supp, li["l_suppkey"] == eu_supp["s_suppkey"])
-        .withColumn("unit_e4", unit_e4)
-    )
-    min_unit = F.min("unit_e4").over(Window.partitionBy("l_partkey"))
-    return (
-        offers.withColumn("min_e4", min_unit)
-        .filter(F.col("unit_e4") == F.col("min_e4"))
-        .select(
-            F.round("s_acctbal", 2).alias("acctbal"),
-            "s_name",
-            "n_name",
-            F.col("l_partkey").cast("long").alias("p_partkey"),
-            F.col("unit_e4").alias("unit_e4"),
-        )
-        # same (part, supplier) can hit the min with several identical
-        # lineitems — collapse to one offer row
-        .distinct()
-        .orderBy(F.col("acctbal").desc(), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
-
-
-# ---------------------------------------------------------------------------
-# oracle SQL (DuckDB dialect; views pre-registered by the driver)
-# ---------------------------------------------------------------------------
-
-
-def _lang_id_sql() -> str:
-    langs = sorted(LANG_MARKERS)
-    score_exprs = {
-        lang: "(" + " + ".join(_count_token_sql(w) for w in LANG_MARKERS[lang]) + ")"
-        for lang in langs
-    }
-    # same fold as operators.text.lang_id: reverse-alphabetical with >=
-    pred = "'und'"
-    best = "CAST(0 AS BIGINT)"
-    for lang in reversed(langs):
-        s = f"s_{lang}"
-        pred = f"CASE WHEN {s} > 0 AND {s} >= {best} THEN '{lang}' ELSE {pred} END"
-        best = f"GREATEST({s}, {best})"
-    selects = ", ".join(f"{score_exprs[lang]} AS s_{lang}" for lang in langs)
-    outer = ", ".join(f"s_{lang} AS score_{lang}" for lang in langs)
-    return f"""
-        WITH scored AS (SELECT doc_id, {selects} FROM documents)
-        SELECT doc_id, {pred} AS lang_pred, {outer} FROM scored
-    """
-
-
-def _quality_sql() -> str:
-    n_stop = " + ".join(_count_token_sql(w) for w in STOPWORDS)
-    return f"""
-        WITH base AS (
-          SELECT doc_id,
-                 CAST(len({_TOKS.replace('text', 'text')}) AS BIGINT) AS n_tokens,
-                 length(text) AS n_chars,
-                 length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
-                 ({n_stop}) AS n_stop
-          FROM documents
-        )
-        SELECT doc_id, n_tokens,
-               ROUND(n_punct / GREATEST(n_chars, 1)::DOUBLE, 4) AS punct_ratio,
-               ROUND(n_stop / GREATEST(n_tokens, 1)::DOUBLE, 4) AS stopword_ratio,
-               ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
-                     + 0.3 * LEAST(n_stop / GREATEST(n_tokens, 1)::DOUBLE * 4, 1.0)
-                     + 0.3 * (1.0 - LEAST(n_punct / GREATEST(n_chars, 1)::DOUBLE * 4, 1.0)),
-                     4) AS quality
-        FROM base
-    """
-
-
-_SHINGLES_SQL = f"""
-    SELECT DISTINCT doc_id,
-           concat_ws(' ', w[i], w[i + 1], w[i + 2]) AS shingle
-    FROM (SELECT doc_id, {_TOKS} AS w FROM documents),
-         LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) t
-    WHERE len(w) >= 3
-"""
-
-
-def _minhash_sigs_sql(k: int = 16) -> str:
-    # Kirsch-Mitzenmacher permutations from ONE md5 per shingle —
-    # mirrors operators.dedup.minhash_signatures exactly (same digest
-    # slices, same affine combine, same modulus)
-    x1 = "('0x' || substr(d, 1, 8))::BIGINT"
-    x2 = "('0x' || substr(d, 9, 8))::BIGINT"
-    aggs = ", ".join(
-        f"MIN(({x1} + {i} * {x2}) % 4294967291) AS sig_{i}" for i in range(k)
-    )
-    return (
-        f"SELECT doc_id, {aggs} FROM ("
-        f"SELECT doc_id, md5(concat('mh:', shingle)) AS d FROM ({_SHINGLES_SQL})"
-        f") GROUP BY doc_id"
-    )
-
-
-def _minhash_stacked_sql(k: int = 16, bands: int = 8) -> str:
-    """Shared CTE prefix: sigs → banded → stacked (doc_id, band,
-    band_hash).  Band digests are md5 strings here vs xxhash64 longs in
-    Spark — different VALUES, identical GROUPING, which is all the
-    pair join and the bucket histogram depend on."""
-    rows = k // bands
-    band_exprs = ", ".join(
-        "md5(concat_ws('_', {})) AS band_{}".format(
-            ", ".join(f"CAST(sig_{bi * rows + j} AS VARCHAR)" for j in range(rows)), bi
-        )
-        for bi in range(bands)
-    )
-    stack_union = " UNION ALL ".join(
-        f"SELECT doc_id, '{bi}' AS band, band_{bi} AS band_hash FROM banded"
-        for bi in range(bands)
-    )
-    return f"""sigs AS ({_minhash_sigs_sql(k)}),
-        banded AS (SELECT doc_id, {band_exprs} FROM sigs),
-        stacked AS ({stack_union})"""
-
-
-def _minhash_lsh_sql(k: int = 16, bands: int = 8, threshold: float = 0.02) -> str:
-    return f"""
-        WITH {_minhash_stacked_sql(k, bands)},
-        cand AS (
-          SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          FROM stacked a JOIN stacked b
-            ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-        ),
-        sh AS ({_SHINGLES_SQL}),
-        sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.a_id, c.b_id, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.a_id
-          JOIN sh sb ON sb.doc_id = c.b_id AND sb.shingle = sa.shingle
-          GROUP BY c.a_id, c.b_id
-        )
-        SELECT i.a_id, i.b_id,
-               ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) AS jaccard
-        FROM inter i
-        JOIN sizes na ON na.doc_id = i.a_id
-        JOIN sizes nb ON nb.doc_id = i.b_id
-        WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) >= {threshold}
-    """
-
-
-def _simhash_sql(bits: int = 32) -> str:
-    # bits 0..31 come from hex chars 1-8 of the md5, bits 32..63 from
-    # chars 9-16 (operators.text.cross_engine_hash / _hi); bit 63 is
-    # the long's sign bit, so its weight is the signed value −2⁶³
-    h_lo = _hash_sql("tok", seed="sh")
-    h_hi = "('0x' || substr(md5(concat('sh:', tok)), 9, 8))::BIGINT"
-    votes = ", ".join(
-        "CAST(SUM(CASE WHEN ({h} >> {s}) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT)"
-        " AS v_{b}".format(h=h_lo if b < 32 else h_hi, s=b % 32, b=b)
-        for b in range(bits)
-    )
-    sim = " + ".join(
-        "CASE WHEN v_{b} > 0 THEN {w} ELSE CAST(0 AS BIGINT) END".format(
-            b=b,
-            w="(-9223372036854775807 - 1)" if b == 63 else f"CAST({2 ** b} AS BIGINT)",
-        )
-        for b in range(bits)
-    )
-    return f"""
-        WITH toks AS (
-          SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
-        ),
-        votes AS (SELECT doc_id, {votes} FROM toks GROUP BY doc_id)
-        SELECT doc_id, ({sim}) AS simhash FROM votes
-    """
-
-
-def _dot_sql(a: str, b: str, dim: int = 64) -> str:
-    """Left-to-right fold matching operators.similarity.dot exactly."""
-    expr = "0.0"
-    for i in range(1, dim + 1):
-        expr = f"({expr} + CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
-    return expr
-
-
-def _norm_sql(a: str, dim: int = 64) -> str:
-    expr = "0.0"
-    for i in range(1, dim + 1):
-        expr = f"({expr} + CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE))"
-    return f"sqrt({expr})"
-
-
-def _pq_sub_dist_sql(vec: str, s: int, j: int, cb: list, d_sub: int) -> str:
-    """Left-to-right fold of ||vec_sub − codebook[s][j]||², matching
-    similarity.pq_adc_expr / pq_code_expr bit-for-bit (same literals
-    via pq_det_codebooks, same addition order)."""
-    expr = "0.0"
-    for t in range(d_sub):
-        i = s * d_sub + t + 1
-        c = cb[s][j][t]
-        term = f"(CAST({vec}[{i}] AS DOUBLE) - {c!r})"
-        expr = f"({expr} + ({term} * {term}))"
-    return expr
-
-
-def _pq_code_sql(vec: str, s: int, cb: list, k: int, d_sub: int) -> str:
-    """Subspace code: argmin over the k literal centroids with index
-    tie-break — DuckDB sorts structs lexicographically by field order,
-    exactly the (d, j) comparator pq_code_expr uses."""
-    items = ", ".join(
-        "{'d': " + _pq_sub_dist_sql(vec, s, j, cb, d_sub) + f", 'j': {j}" + "}"
-        for j in range(k)
-    )
-    return f"(list_sort([{items}]))[1].j"
-
-
-def _pq_adc_sql(qvec: str, code_col: str, cb: list, m: int, k: int,
-                d_sub: int) -> str:
-    """ADC: Σ_s LUT_s[code_s] with the subspace partials added
-    left-to-right, mirroring pq_adc_expr's fold order."""
-    expr = "0.0"
-    for s in range(m):
-        case = (
-            f"CASE {code_col}{s} "
-            + " ".join(
-                f"WHEN {j} THEN {_pq_sub_dist_sql(qvec, s, j, cb, d_sub)}"
-                for j in range(k)
-            )
-            + " END"
-        )
-        expr = f"({expr} + ({case}))"
-    return expr
-
-
-def _pq_topk_sql(k_nn: int = 5, m: int = 4, k: int = 16, d_sub: int = 16) -> str:
-    from .operators.similarity import pq_det_codebooks
-
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cb, k, d_sub)} AS c{s}" for s in range(m)
-    )
-    return f"""
-        WITH c AS (
-          SELECT vec_id AS cand_id, {code_cols} FROM embeddings
-        ),
-        q AS (
-          SELECT vec_id AS query_id, embedding AS qv
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        scored AS (
-          SELECT query_id, cand_id,
-                 ROUND({_pq_adc_sql('qv', 'c', cb, m, k, d_sub)}, 6) AS adc
-          FROM q JOIN c ON cand_id <> query_id
-        )
-        SELECT query_id, cand_id, adc,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS BIGINT) AS rk
-        FROM scored
-        QUALIFY rk <= {k_nn}
-    """
-
-
-def _ivfpq_topk_sql(k_nn: int = 5, nprobe: int = 2, dim: int = 64,
-                    m: int = 4, k: int = 16, d_sub: int = 16,
-                    cent_src: str = "embeddings") -> str:
-    """IVF-ADC oracle: the _ivf_topk_sql coarse assignment CTEs feed
-    the _pq_topk_sql code/ADC expressions — candidates rank by ADC
-    within the query's nprobe probed lists only.  ``cent_src`` is the
-    relation the coarse centroids average over — the append-path twin
-    (emb_ivfpq_append_topk) trains them on the base split only while
-    candidates/queries still span the full corpus."""
-    from .operators.similarity import pq_det_codebooks
-
-    cb = pq_det_codebooks(m=m, k=k, d_sub=d_sub)
-    cdot = ("list_sum(list_transform(list_zip(CAST({v} AS DOUBLE[]), {c}), t -> t[1] * t[2]))")
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cb, k, d_sub)} AS c{s}" for s in range(m)
-    )
-    return f"""
-        WITH cent AS (
-          SELECT list_label, list(c ORDER BY pos) AS cvec
-          FROM (
-            SELECT CAST(label AS INT) AS list_label, i AS pos,
-                   ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 8) AS c
-            FROM {cent_src}, (SELECT unnest(range(1, {dim + 1})) AS i) t
-            GROUP BY 1, 2
-          ) GROUP BY list_label
-        ),
-        centn AS (
-          SELECT list_label, cvec,
-                 sqrt(list_sum(list_transform(cvec, x -> x * x))) AS cnorm2
-          FROM cent
-        ),
-        cand AS (
-          SELECT vec_id AS cand_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM embeddings
-        ),
-        cassign AS (
-          SELECT cand_id, embedding, list_label FROM (
-            SELECT c.cand_id, c.embedding, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY c.cand_id
-                     ORDER BY ROUND({cdot.format(v='c.embedding', c='n.cvec')} / (c.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM cand c CROSS JOIN centn n
-          ) WHERE crn = 1
-        ),
-        codes AS (
-          SELECT cand_id, list_label, {code_cols} FROM cassign
-        ),
-        q AS (
-          SELECT vec_id AS query_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        qassign AS (
-          SELECT query_id, embedding AS qv, list_label FROM (
-            SELECT qq.query_id, qq.embedding, qq.nrm, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY qq.query_id
-                     ORDER BY ROUND({cdot.format(v='qq.embedding', c='n.cvec')} / (qq.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM q qq CROSS JOIN centn n
-          ) WHERE crn <= {nprobe}
-        ),
-        scored AS (
-          SELECT qa.query_id, codes.cand_id,
-                 ROUND({_pq_adc_sql('qv', 'c', cb, m, k, d_sub)}, 6) AS adc
-          FROM qassign qa JOIN codes
-            ON qa.list_label = codes.list_label AND codes.cand_id <> qa.query_id
-        )
-        SELECT query_id, cand_id, adc,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS BIGINT) AS rk
-        FROM scored QUALIFY rk <= {k_nn}
-    """
-
-
-def _cosine_topk_sql(k: int = 5, decimals: int = 8,
-                     src: str = "embeddings") -> str:
-    return f"""
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qv, {_norm_sql('embedding')} AS qnorm
-          FROM {src} WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        c AS (
-          SELECT vec_id AS cand_id, embedding AS cv, {_norm_sql('embedding')} AS cnorm
-          FROM {src}
-        ),
-        scored AS (
-          SELECT query_id, cand_id,
-                 ROUND({_dot_sql('qv', 'cv')} / (qnorm * cnorm), {decimals}) AS cosine
-          FROM q JOIN c ON cand_id <> query_id
-        )
-        SELECT query_id, cand_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS BIGINT) AS rk
-        FROM scored
-        QUALIFY rk <= {k}
-    """
-
-
-def _hyperplane_proj_sql(vec: str, i: int, dim: int = 64, seed: str = "hp") -> str:
-    expr = "0.0"
-    for j in range(dim):
-        w = hyperplane_weight(i, j, seed)
-        expr = f"({expr} + CAST({vec}[{j + 1}] AS DOUBLE) * {w!r})"
-    return expr
-
-
-def _bucket_sql(vec: str, n_bits: int = 4, dim: int = 64, seed: str = "hp") -> str:
-    terms = [
-        f"CASE WHEN {_hyperplane_proj_sql(vec, i, dim, seed)} > 0 THEN CAST({2 ** i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        for i in range(n_bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _ann_lsh_sql(k: int = 5, n_bits: int = 4, dim: int = 64) -> str:
-    return f"""
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qv,
-                 {_norm_sql('embedding', dim)} AS qnorm,
-                 {_bucket_sql('embedding', n_bits, dim)} AS bucket
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        c AS (
-          SELECT vec_id AS cand_id, embedding AS cv,
-                 {_norm_sql('embedding', dim)} AS cnorm,
-                 {_bucket_sql('embedding', n_bits, dim)} AS bucket
-          FROM embeddings
-        ),
-        scored AS (
-          SELECT query_id, cand_id,
-                 ROUND({_dot_sql('qv', 'cv', dim)} / (qnorm * cnorm), 8) AS cosine
-          FROM q JOIN c ON q.bucket = c.bucket AND cand_id <> query_id
-        )
-        SELECT query_id, cand_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS BIGINT) AS rk
-        FROM scored
-        QUALIFY rk <= {k}
-    """
-
-
-def _emb_cosine_pairs_sql(threshold: float = 0.3, dim: int = 64) -> str:
-    """Mirror of the scale-adaptive multi-table embedding LSH
-    (operators.similarity.embedding_cosine_pairs): the effective bit
-    width is the same integer CASE ladder adaptive_n_bits computes,
-    each table's full MAX_LSH_BITS-bit bucket is masked down to the
-    effective width (bit i contributes 2^i, so the low-bit mask equals
-    computing only the first nb hyperplanes), and OR-banded candidates
-    dedup via DISTINCT over the surviving pairs."""
-    from .operators.similarity import (
-        MAX_LSH_BITS, N_LSH_TABLES, TARGET_BUCKET_ROWS,
-    )
-
-    ladder = " ".join(
-        f"WHEN n >= {TARGET_BUCKET_ROWS * (1 << b)} THEN {b}"
-        for b in range(MAX_LSH_BITS, 1, -1)
-    )
-    tables = " UNION ALL ".join(
-        f"""SELECT vec_id, embedding, nrm, {t} AS t,
-               ({_bucket_sql('embedding', MAX_LSH_BITS, dim, seed=f'hp{t}')})
-               & ((CAST(1 AS BIGINT) << nb) - 1) AS bkt
-            FROM v CROSS JOIN eff"""
-        for t in range(N_LSH_TABLES)
-    )
-    return f"""
-        WITH eff AS (
-          SELECT CASE {ladder} ELSE 1 END AS nb
-          FROM (SELECT COUNT(*) AS n FROM embeddings)
-        ),
-        v AS (
-          SELECT vec_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM embeddings
-        ),
-        tb AS ({tables}),
-        cand AS (
-          SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                 ROUND({_dot_sql('a.embedding', 'b.embedding', dim)} / (a.nrm * b.nrm), 8) AS cosine
-          FROM tb a JOIN tb b ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id
-        )
-        SELECT DISTINCT a_id, b_id, cosine FROM cand WHERE cosine >= {threshold}
-    """
-
-
-def _ivf_topk_sql(k: int = 5, nprobe: int = 2, dim: int = 64) -> str:
-    # list-based centroid dot products: both engines fold the 64 elements
-    # left-to-right; the coarse cosine is rounded to 6dp before ranking.
-    cdot = ("list_sum(list_transform(list_zip(CAST({v} AS DOUBLE[]), {c}), t -> t[1] * t[2]))")
-    return f"""
-        WITH cent AS (
-          SELECT list_label, list(c ORDER BY pos) AS cvec
-          FROM (
-            SELECT CAST(label AS INT) AS list_label, i AS pos,
-                   ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 8) AS c
-            FROM embeddings, (SELECT unnest(range(1, {dim + 1})) AS i) t
-            GROUP BY 1, 2
-          ) GROUP BY list_label
-        ),
-        centn AS (
-          SELECT list_label, cvec,
-                 sqrt(list_sum(list_transform(cvec, x -> x * x))) AS cnorm2
-          FROM cent
-        ),
-        cand AS (
-          SELECT vec_id AS cand_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM embeddings
-        ),
-        cassign AS (
-          SELECT cand_id, embedding, nrm, list_label FROM (
-            SELECT c.cand_id, c.embedding, c.nrm, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY c.cand_id
-                     ORDER BY ROUND({cdot.format(v='c.embedding', c='n.cvec')} / (c.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM cand c CROSS JOIN centn n
-          ) WHERE crn = 1
-        ),
-        q AS (
-          SELECT vec_id AS query_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        qassign AS (
-          SELECT query_id, embedding, nrm, list_label FROM (
-            SELECT qq.query_id, qq.embedding, qq.nrm, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY qq.query_id
-                     ORDER BY ROUND({cdot.format(v='qq.embedding', c='n.cvec')} / (qq.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM q qq CROSS JOIN centn n
-          ) WHERE crn <= {nprobe}
-        ),
-        scored AS (
-          SELECT qa.query_id, ca.cand_id,
-                 ROUND({_dot_sql('qa.embedding', 'ca.embedding', dim)} / (qa.nrm * ca.nrm), 8) AS cosine
-          FROM qassign qa JOIN cassign ca
-            ON qa.list_label = ca.list_label AND ca.cand_id <> qa.query_id
-        )
-        SELECT query_id, cand_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS BIGINT) AS rk
-        FROM scored QUALIFY rk <= {k}
-    """
-
-
-# streaming sessionize: the batch gap-sessions whose window end
-# (last event + gap) the final watermark (max ts − gap) has passed.
-_STREAM_SESSIONIZE_SQL = """
-    WITH ev AS (SELECT user_id, event_id, ts::TIMESTAMP AS ts, value FROM events),
-    mx AS (SELECT max(ts) AS mts FROM ev),
-    flagged AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL THEN 1
-                  WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1
-                  ELSE 0 END AS new_session
-      FROM ev
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessioned AS (
-      SELECT *, SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                       ROWS UNBOUNDED PRECEDING) AS session_seq
-      FROM flagged
-    ),
-    sess AS (
-      SELECT user_id, session_seq, MIN(ts) AS st, MAX(ts) AS en,
-             COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-      FROM sessioned GROUP BY 1, 2
-    )
-    SELECT user_id,
-           CAST(floor(epoch(st)) AS BIGINT) AS session_start_epoch,
-           n_events, sum_value
-    FROM sess, mx
-    WHERE en + INTERVAL 30 MINUTE <= mts - INTERVAL 30 MINUTE
-"""
-
-
-# Shared Gopher/C4 weak-label gate CTEs (base → m), used by BOTH the
-# doc_quality_flags oracle and the doc_quality_classifier oracle (which
-# re-applies the same conjunction at min_words=20): one definition, so
-# a gate tweak — a regex, a ratio threshold — cannot desynchronize the
-# classifier's weak-keep count from the Spark weak labels it trains on.
-_QUALITY_GATE_CTES = r"""base AS (
-          SELECT doc_id, n_chars, text,
-                 CASE WHEN trim(text) = '' THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END AS n_words,
-                 length(regexp_replace(text, '\s+', '', 'g')) AS n_nospace,
-                 len(regexp_extract_all(text, '#|\.\.\.')) AS n_symbols,
-                 string_split(text, chr(10)) AS lines
-          FROM documents
-        ), m AS (
-          SELECT doc_id, n_chars, n_words,
-                 n_nospace / GREATEST(n_words, 1)::DOUBLE AS mwl_raw,
-                 n_symbols / GREATEST(n_words, 1)::DOUBLE AS sym_ratio,
-                 len(list_filter(lines, l -> regexp_matches(trim(l), '^([-*•])')))
-                   / GREATEST(len(lines), 1)::DOUBLE AS bullet_ratio,
-                 len(list_filter(lines, l -> regexp_matches(trim(l), '\.\.\.$')))
-                   / GREATEST(len(lines), 1)::DOUBLE AS ell_ratio,
-                 NOT contains(lower(text), 'lorem ipsum') AS ok_no_lorem,
-                 NOT contains(text, '{') AS ok_no_braces
-          FROM base
-        )"""
-
-
-def _quality_keep_sql(min_words: int) -> str:
-    """The gate conjunction over _QUALITY_GATE_CTES's m columns."""
-    return (
-        f"(n_words >= {min_words} AND n_words <= 100000)"
-        " AND (mwl_raw >= 2.0 AND mwl_raw <= 12.0)"
-        " AND (sym_ratio <= 0.1) AND (bullet_ratio <= 0.9)"
-        " AND (ell_ratio <= 0.3) AND ok_no_lorem AND ok_no_braces"
-    )
-
-
-ORACLES: dict[str, str] = {
-    "rank_normalized": _RANKED_SQL,
-    "feature_pivot": _PIVOT_SQL,
-    "exists_filter": f"""
-        SELECT id, "rank_A" AS label FROM ({_PIVOT_SQL}) WHERE "exists_A" = 1.0
-    """,
-    "predictions_fold": f"""
-        WITH ranked AS ({_RANKED_SQL}),
-        a AS (SELECT id, rank AS score_A FROM ranked WHERE site = 'A'),
-        n AS (SELECT id, rank AS score_N FROM ranked WHERE site = 'N'),
-        r AS (SELECT id, rank AS score_R FROM ranked WHERE site = 'R')
-        SELECT id, score_A, score_N, score_R
-        FROM a FULL JOIN n USING (id) FULL JOIN r USING (id)
-    """,
-    "ingest_join": """
-        SELECT r_name,
-               COUNT(*) AS n_orders,
-               ROUND(SUM(o_totalprice), 2) AS total_price
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """,
-    "pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               ROUND(SUM(l_quantity), 2) AS sum_qty,
-               ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               ROUND(AVG(l_quantity), 4) AS avg_qty,
-               ROUND(AVG(l_discount), 4) AS avg_disc,
-               COUNT(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "count_by_site": """
-        SELECT l_returnflag AS site, COUNT(*) AS n_rows FROM lineitem GROUP BY 1
-    """,
-    "distinct_sites": """
-        SELECT DISTINCT l_returnflag AS site FROM lineitem
-    """,
-    "suffix_filter_rewrite": """
-        SELECT p_partkey, p_type,
-               regexp_replace(p_brand, '^Brand#', 'B-') AS brand_code,
-               p_retailprice
-        FROM part WHERE p_type LIKE '%O'
-    """,
-    "topk_per_group": """
-        WITH rev AS (
-          SELECT l_returnflag, l_partkey,
-                 ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-          FROM lineitem GROUP BY 1, 2
-        )
-        SELECT l_returnflag, l_partkey, revenue,
-               CAST(ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                                       ORDER BY revenue DESC, l_partkey) AS BIGINT) AS rk
-        FROM rev QUALIFY rk <= 5
-    """,
-    "median_crossing": """
-        WITH run AS (
-          SELECT l_suppkey, l_orderkey, l_linenumber,
-                 SUM(l_quantity) OVER (PARTITION BY l_suppkey
-                                       ORDER BY l_shipdate, l_orderkey, l_linenumber
-                                       ROWS UNBOUNDED PRECEDING) AS run_qty,
-                 SUM(l_quantity) OVER (PARTITION BY l_suppkey) AS tot_qty
-          FROM lineitem
-        ),
-        crossed AS (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY l_suppkey
-                                       ORDER BY run_qty, l_orderkey, l_linenumber) AS rn
-          FROM run WHERE run_qty >= tot_qty / 2
-        )
-        SELECT l_suppkey, l_orderkey, l_linenumber,
-               ROUND(run_qty, 2) AS run_qty, ROUND(tot_qty, 2) AS tot_qty
-        FROM crossed WHERE rn = 1
-    """,
-    "events_tumbling": """
-        SELECT CAST(floor(epoch(time_bucket(INTERVAL '1 hour', ts::TIMESTAMP))) AS BIGINT)
-                 AS window_start_epoch,
-               event_type,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM events GROUP BY 1, 2
-    """,
-    "events_sliding": """
-        SELECT CAST(floor(epoch(time_bucket(INTERVAL '30 minutes', ts::TIMESTAMP)))
-                    AS BIGINT) - k.k * 1800 AS window_start_epoch,
-               event_type,
-               COUNT(*) AS n_events,
-               ROUND(AVG(value), 4) AS avg_value
-        FROM events, (SELECT unnest([0, 1]) AS k) k
-        GROUP BY 1, 2
-    """,
-    "events_sessionize": """
-        WITH flagged AS (
-          SELECT user_id, event_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL THEN 1
-                      WHEN CAST(floor(epoch(ts::TIMESTAMP)) AS BIGINT)
-                           - CAST(floor(epoch(CAST(lag(ts) OVER w AS TIMESTAMP))) AS BIGINT)
-                           > 1800 THEN 1
-                      ELSE 0 END AS new_session
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ),
-        sessioned AS (
-          SELECT *, SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                           ROWS UNBOUNDED PRECEDING) AS session_seq
-          FROM flagged
-        )
-        SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-               CAST(floor(epoch(MIN(ts)::TIMESTAMP)) AS BIGINT) AS session_start_epoch,
-               CAST(floor(epoch(MAX(ts)::TIMESTAMP)) AS BIGINT) AS session_end_epoch,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM sessioned GROUP BY user_id, session_seq
-    """,
-    "doc_token_stats": f"""
-        SELECT doc_id,
-               CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-               CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)
-                 AS n_bpe_tokens,
-               CAST(len(list_distinct({_TOKS})) AS BIGINT) AS n_distinct_tokens,
-               ROUND(length(regexp_replace(text, '\\s+', '', 'g'))
-                     / GREATEST(len({_TOKS}), 1)::DOUBLE, 4) AS avg_token_len
-        FROM documents
-    """,
-    "doc_lang_id": _lang_id_sql(),
-    "doc_quality": _quality_sql(),
-    "doc_fingerprint": f"""
-        SELECT doc_id, md5({_NORM}) AS fp_md5,
-               {_hash_sql(_NORM)} AS fp_hash
-        FROM documents
-    """,
-    "dedup_exact": f"""
-        SELECT md5({_NORM}) AS fp_md5,
-               MIN(doc_id) AS keep_id,
-               COUNT(*) AS n_dups
-        FROM documents GROUP BY 1
-    """,
-    "dedup_ngram_jaccard": f"""
-        WITH sh0 AS ({_SHINGLES_SQL}),
-        freq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
-        sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0
-               JOIN freq ON sh0.shingle = freq.shingle WHERE freq.df <= 1000),
-        sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
-          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT a_id, b_id,
-               ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) AS jaccard
-        FROM inter
-        JOIN sizes na ON na.doc_id = a_id
-        JOIN sizes nb ON nb.doc_id = b_id
-        WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) >= 0.05
-    """,
-    "dedup_minhash_lsh": _minhash_lsh_sql(k=16, bands=8, threshold=0.02),
-    "dedup_simhash": _simhash_sql(),
-    "dedup_simhash_pairs": f"""
-        WITH s AS ({_simhash_sql()})
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """,
-    "dedup_simhash64_pairs": f"""
-        WITH s AS ({_simhash_sql(bits=64)})
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """,
-    "dedup_band_histogram": f"""
-        WITH {_minhash_stacked_sql(16, 8)},
-        sizes AS (
-          SELECT band, band_hash, CAST(COUNT(*) AS BIGINT) AS bucket_size
-          FROM stacked GROUP BY 1, 2
-        )
-        SELECT bucket_size, COUNT(*) AS n_buckets
-        FROM sizes GROUP BY 1
-    """,
-    "doc_rarity_quality": f"""
-        WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-               FROM toks GROUP BY 1, 2),
-        cf AS (SELECT term, SUM(tf) AS cf FROM tf GROUP BY 1),
-        tot AS (SELECT SUM(cf) AS n_total FROM cf)
-        SELECT doc_id,
-               CAST(SUM(tf) AS BIGINT) AS n_tokens,
-               CAST(SUM(tf * (n_total // cf)) AS BIGINT) AS rarity_sum,
-               CAST(SUM(tf * (n_total // cf)) // SUM(tf) AS BIGINT) AS rarity_avg
-        FROM tf JOIN cf USING (term) CROSS JOIN tot
-        GROUP BY doc_id
-    """,
-    "events_stream_static": """
-        SELECT CASE CAST(user_id AS BIGINT) % 3
-                 WHEN 0 THEN 'bronze' WHEN 1 THEN 'silver' ELSE 'gold'
-               END AS tier,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM events GROUP BY 1
-    """,
-    "lineitem_udaf_wavg": """
-        SELECT l_returnflag,
-               CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                        * CAST(ROUND(l_quantity) AS BIGINT))
-                    // SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT)
-                 AS wavg_cents
-        FROM lineitem GROUP BY 1
-    """,
-    "events_stream_hopping": """
-        SELECT CAST(floor(epoch(time_bucket(INTERVAL '1 hour', ts::TIMESTAMP)))
-                    AS BIGINT) - k.k * 3600 AS window_start_epoch,
-               event_type,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM events, (SELECT unnest([0, 1]) AS k) k
-        GROUP BY 1, 2
-    """,
-    "emb_cosine_topk": _cosine_topk_sql(),
-    "emb_pq_topk": _pq_topk_sql(),
-    # persisted-index search: same relation as the in-flight PQ search
-    # (the sink round-trip and manifest reload must be value-invisible)
-    "emb_pq_persisted_topk": _pq_topk_sql(),
-    "emb_pq_refine_topk": _pq_refine_topk_sql(),
-    "emb_pq_refine_recall_report": _pq_refine_recall_sql(),
-    "emb_pq_refine_r_sweep": _pq_refine_r_sweep_sql(),
-    "emb_cosine_topk_np": _cosine_topk_sql(decimals=4),
-    "emb_ann_lsh": _ann_lsh_sql(),
-    "emb_ivf_topk": _ivf_topk_sql(),
-    "emb_ivf_persisted_topk": _ivf_topk_sql(),
-    "emb_ivfpq_topk": _ivfpq_topk_sql(),
-    "emb_ivfpq_persisted_topk": _ivfpq_topk_sql(),
-    # append path: coarse centroids average the BASE split only (the
-    # quantizer must not retrain on append); candidates + queries span
-    # the full corpus, exactly base-build + batch-encode-and-append
-    "emb_ivfpq_append_topk": _ivfpq_topk_sql(
-        cent_src="(SELECT * FROM embeddings WHERE vec_id % 10 <> 7)"
-    ),
-    "dedup_emb_cosine": _emb_cosine_pairs_sql(),
-    "events_stream_sessionize": _STREAM_SESSIONIZE_SQL,
-    "events_stream_stateful": """
-        SELECT CAST(user_id AS BIGINT) AS user_id,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value,
-               MAX(value) AS max_value
-        FROM events GROUP BY user_id
-    """,
-    "emb_centroids": """
-        SELECT CAST(label AS BIGINT) AS label,
-               CAST(i - 1 AS BIGINT) AS pos,
-               ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 8) AS centroid
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY 1, 2
-    """,
-    "mm_media_meta": """
-        SELECT doc_id AS sample_id,
-               'image/fake' AS media_type,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-               md5(text) AS content_md5
-        FROM documents
-    """,
-    "mm_decode_meta": """
-        SELECT doc_id AS sample_id,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-               CAST(16 + ('0x' || substr(md5(text), 1, 2))::BIGINT % 240 AS BIGINT) AS width,
-               CAST(16 + ('0x' || substr(md5(text), 3, 2))::BIGINT % 240 AS BIGINT) AS height,
-               'RGB' AS mode
-        FROM documents
-    """,
-    # mm_decode_png: dims are closed-form in doc_id by construction
-    # (attach_png_media), so SQL can assert what the real PNG
-    # encode->header-parse round trip must recover.
-    "mm_decode_png": """
-        SELECT doc_id AS sample_id,
-               CAST(1 + doc_id % 64 AS BIGINT) AS width,
-               CAST(1 + (doc_id // 64) % 64 AS BIGINT) AS height,
-               'L' AS mode
-        FROM documents
-    """,
-    # events_stream_tumbling shares the tumbling oracle — the streaming
-    # replay must converge to the batch relation.
-    "events_stream_tumbling": """
-        SELECT CAST(floor(epoch(time_bucket(INTERVAL '1 hour', ts::TIMESTAMP))) AS BIGINT)
-                 AS window_start_epoch,
-               event_type,
-               COUNT(*) AS n_events,
-               ROUND(SUM(value), 4) AS sum_value
-        FROM events GROUP BY 1, 2
-    """,
-    # ml_* queries: training itself is not SQL-expressible, but since
-    # round 6 each emits an exact deterministic skeleton + invariant
-    # flags (the round-5 sketch-graduation pattern) so the driver
-    # hash-checks that training RAN and landed inside its envelope.
-    "ml_train_rmse": f"""
-        SELECT site, CAST(COUNT(*) AS BIGINT) AS n_labeled,
-               TRUE AS trained, TRUE AS rmse_finite, TRUE AS rmse_lt_1,
-               TRUE AS rmse_le_2x_label_sd
-        FROM ({_LONG_SQL}) GROUP BY site
-    """,
-    "ml_score_topk": f"""
-        WITH lng AS ({_LONG_SQL}),
-        site_n AS (SELECT site, COUNT(*) AS n_exist FROM lng GROUP BY site),
-        tot AS (SELECT COUNT(DISTINCT id) AS n_ids FROM lng),
-        m AS (SELECT site, n_ids - n_exist AS n_missing, n_ids
-              FROM site_n, tot),
-        anym AS (SELECT SUM(n_missing) > 0 AS any_missing FROM m)
-        SELECT site,
-               CAST(LEAST(10, CASE WHEN any_missing THEN n_missing
-                                   ELSE n_ids END) AS BIGINT) AS n_ranked,
-               TRUE AS ids_distinct, TRUE AS in_population,
-               TRUE AS scores_finite
-        FROM m, anym
-        WHERE (CASE WHEN any_missing THEN n_missing ELSE n_ids END) > 0
-    """,
-    "ml_feature_importance": """
-        SELECT site, CAST(rank AS BIGINT) AS rank, TRUE AS feature_valid,
-               TRUE AS imp_in_unit, TRUE AS sum_imps_eq_1
-        FROM (SELECT DISTINCT l_returnflag AS site FROM lineitem)
-        CROSS JOIN (SELECT unnest(range(1, 6)) AS rank)
-    """,
-    "ml_cv_tuning": f"""
-        SELECT '{SITES[0]}' AS site, CAST(d AS BIGINT) AS max_depth,
-               TRUE AS rmse_finite, TRUE AS chosen_is_argmin
-        FROM (VALUES (3), (5)) t(d)
-    """,
-    "emb_kmeans_centroids": """
-        SELECT CAST(ci AS BIGINT) AS cluster_id,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_points,
-               TRUE AS sizes_sum_to_n, TRUE AS norm_positive,
-               TRUE AS cost_le_total_ss
-        FROM (SELECT unnest(range(8)) AS ci)
-    """,
-    "emb_pq_train_report": """
-        SELECT CAST(s AS BIGINT) AS subspace,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_points,
-               CAST(16 AS BIGINT) AS k,
-               TRUE AS sizes_sum_to_n, TRUE AS cost_le_subspace_ss,
-               TRUE AS adc_lookup_consistent
-        FROM (SELECT unnest(range(4)) AS s)
-    """,
-    "doc_quality_classifier": f"""
-        WITH {_QUALITY_GATE_CTES}
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN {_quality_keep_sql(20)}
-                             THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_weak_keep,
-               TRUE AS acc_ge_majority, TRUE AS auc_ge_half
-        FROM m
-    """,
-    "events_asof_join": """
-        WITH r AS (
-          SELECT user_id, ts, value FROM (
-            SELECT user_id, ts, value,
-                   ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-            FROM events WHERE event_type = 'click')
-          WHERE rn = 1),
-        l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-               ROUND(r.value, 4) AS asof_value, epoch_us(r.ts) AS asof_ts_us
-        FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-    """,
-    "events_range_join": """
-        SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-               CAST(COUNT(a.event_id) AS BIGINT) AS n_in_range
-        FROM (SELECT * FROM events WHERE event_type = 'error') e
-        LEFT JOIN events a
-          ON a.user_id = e.user_id
-         AND a.ts >= e.ts - INTERVAL 5 MINUTE AND a.ts < e.ts
-        GROUP BY e.event_id, e.user_id, e.ts
-    """,
-    "tpch_q3_shipping": """
-        SELECT l_orderkey,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               epoch_us(o_orderdate) AS o_date_us,
-               o_orderpriority
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-01-01'
-          AND l_shipdate > TIMESTAMP '1998-01-01'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey
-        LIMIT 10
-    """,
-    "tpch_q5_regional": """
-        SELECT n_name,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM customer, orders, lineitem, supplier, nation, region
-        WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-          AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-          AND r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1998-01-01'
-        GROUP BY n_name
-    """,
-    "doc_quality_flags": f"""
-        WITH {_QUALITY_GATE_CTES}
-        SELECT doc_id, n_chars, CAST(n_words AS BIGINT) AS n_words,
-               ROUND(mwl_raw, 4) AS mean_word_len,
-               (n_words >= 50 AND n_words <= 100000) AS ok_words,
-               (mwl_raw >= 2.0 AND mwl_raw <= 12.0) AS ok_mean_word_len,
-               (sym_ratio <= 0.1) AS ok_symbol_ratio,
-               (bullet_ratio <= 0.9) AS ok_bullet_lines,
-               (ell_ratio <= 0.3) AS ok_ellipsis_lines,
-               ok_no_lorem, ok_no_braces,
-               ({_quality_keep_sql(50)}) AS keep
-        FROM m
-    """,
-    "doc_repetition": r"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        ), g AS (
-          SELECT doc_id, w[i] || ' ' || w[i + 1] AS gram
-          FROM t, LATERAL (SELECT unnest(range(1, len(w))) AS i) r
-          WHERE len(w) >= 2
-        ), pg AS (
-          SELECT doc_id, gram, COUNT(*) AS c FROM g GROUP BY 1, 2
-        )
-        SELECT doc_id,
-               CAST(SUM(c) AS BIGINT) AS n_grams,
-               CAST(COUNT(*) AS BIGINT) AS n_distinct_grams,
-               ROUND(MAX(c)::DOUBLE / SUM(c), 6) AS top_gram_ratio,
-               ROUND(COUNT(*)::DOUBLE / SUM(c), 6) AS distinct_ratio
-        FROM pg GROUP BY doc_id
-    """,
-    "doc_pii_redact": f"""
-        WITH aug AS (
-          SELECT doc_id,
-                 text || ' contact user' || CAST(doc_id AS VARCHAR)
-                      || '@example.com or +1 (555) 123-4567 now' AS text
-          FROM documents
-        ), e AS (
-          SELECT doc_id,
-                 len(regexp_extract_all(text, '{EMAIL_RE}')) AS n_emails,
-                 regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g') AS text
-          FROM aug
-        ), p AS (
-          SELECT doc_id, n_emails,
-                 len(regexp_extract_all(text, '{PHONE_RE}')) AS n_phones,
-                 regexp_replace(text, '{PHONE_RE}', '<PHONE>', 'g') AS text
-          FROM e
-        )
-        SELECT doc_id, md5(text) AS fp_redacted,
-               CAST(n_emails AS BIGINT) AS n_emails,
-               CAST(n_phones AS BIGINT) AS n_phones
-        FROM p
-    """,
-    "corpus_hash_split": """
-        WITH b AS (
-          SELECT ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
-                   AS bucket
-          FROM documents
-        )
-        SELECT CASE WHEN bucket < 80 THEN 'train'
-                    WHEN bucket < 90 THEN 'val'
-                    ELSE 'test' END AS split,
-               COUNT(*) AS n_docs
-        FROM b GROUP BY 1
-    """,
-    # corpus_token_budget appended below (needs _quality_sql());
-    # dedup_clusters: iterative fixpoint, not SQL-expressible — rows-only.
-    "pricing_rollup": """
-        SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-               COALESCE(l_linestatus, 'ALL') AS linestatus,
-               ROUND(SUM(l_quantity), 2) AS sum_qty,
-               ROUND(SUM(l_extendedprice), 2) AS sum_price,
-               COUNT(*) AS n_rows
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    "customer_semi_anti": """
-        SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-               COUNT(*) FILTER (WHERE EXISTS (
-                   SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_with_orders,
-               COUNT(*) FILTER (WHERE NOT EXISTS (
-                   SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_without_orders
-        FROM customer
-        GROUP BY c_nationkey
-    """,
-    "nation_set_ops": """
-        WITH cn AS (SELECT DISTINCT c_nationkey AS nk FROM customer),
-             sn AS (SELECT DISTINCT s_nationkey AS nk FROM supplier)
-        SELECT 'union' AS op, CAST(nk AS BIGINT) AS nationkey
-          FROM (SELECT nk FROM cn UNION SELECT nk FROM sn)
-        UNION ALL
-        SELECT 'intersect', CAST(nk AS BIGINT)
-          FROM (SELECT nk FROM cn INTERSECT SELECT nk FROM sn)
-        UNION ALL
-        SELECT 'except', CAST(nk AS BIGINT)
-          FROM (SELECT nk FROM cn EXCEPT SELECT nk FROM sn)
-    """,
-    "orders_salted_join": """
-        SELECT o_orderpriority,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               COUNT(*) AS n_items
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority
-    """,
-    "events_funnel": """
-        WITH pu AS (
-          SELECT user_id,
-                 MIN(ts) FILTER (WHERE event_type = 'click') AS first_click
-          FROM events GROUP BY user_id
-        ), pp AS (
-          SELECT e.user_id, MIN(e.ts) AS first_purchase
-          FROM events e JOIN pu ON e.user_id = pu.user_id
-          WHERE e.event_type = 'purchase' AND e.ts >= pu.first_click
-          GROUP BY e.user_id
-        )
-        SELECT pu.user_id,
-               epoch_us(pu.first_click) AS first_click_us,
-               epoch_us(pp.first_purchase) AS first_purchase_us,
-               (pp.first_purchase IS NOT NULL
-                AND epoch_us(pp.first_purchase) - epoch_us(pu.first_click)
-                    <= 1800 * 1000000) AS converted_30m
-        FROM pu LEFT JOIN pp ON pu.user_id = pp.user_id
-        WHERE pu.first_click IS NOT NULL
-    """,
-    "lineitem_stats": """
-        SELECT l_returnflag,
-               ROUND(STDDEV_SAMP(l_quantity), 4) AS sd_qty,
-               ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-               ROUND(COVAR_SAMP(l_quantity, l_discount), 6) AS cov_qty_disc,
-               ROUND(QUANTILE_CONT(l_extendedprice, 0.5), 4) AS median_price
-        FROM lineitem
-        GROUP BY l_returnflag
-    """,
-    "events_user_lag": """
-        SELECT event_id, user_id,
-               CAST(ROW_NUMBER() OVER wu AS INT) AS pos_in_user,
-               epoch_us(ts) - epoch_us(LAG(ts) OVER wu) AS gap_us,
-               CAST(NTILE(10) OVER wv AS INT) AS value_decile,
-               ROUND(CUME_DIST() OVER wv, 8) AS value_cume
-        FROM events
-        WINDOW wu AS (PARTITION BY user_id ORDER BY ts, event_id),
-               wv AS (PARTITION BY event_type ORDER BY ROUND(value, 4), event_id)
-    """,
-    "events_json_props": """
-        WITH k AS (
-          SELECT event_type,
-                 CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) AS k
-          FROM events
-          WHERE regexp_extract(props, '"k": ([0-9]+)', 1) <> ''
-        )
-        SELECT event_type, COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS sum_k,
-               MIN(k) AS min_k, MAX(k) AS max_k
-        FROM k GROUP BY event_type
-    """,
-}
-
-ORACLES["corpus_token_budget"] = f"""
-    WITH q AS ({_quality_sql()}),
-    r AS (
-      SELECT doc_id, n_tokens, quality,
-             SUM(n_tokens) OVER (ORDER BY quality DESC, doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS running_tokens
-      FROM q
-    )
-    SELECT doc_id, n_tokens, quality, CAST(running_tokens AS BIGINT) AS running_tokens
-    FROM r WHERE running_tokens <= 100000 OR running_tokens = n_tokens
-"""
-
-
-def _bpe_count_sql(expr: str) -> str:
-    """DuckDB twin of operators.text.bpe_piece_count: the SAME merge
-    table expanded into the same lower → replace chain → translate →
-    length, generated from one source of truth so the engines cannot
-    drift."""
-    from .operators.text import BPE_MERGES, BPE_WHITESPACE
-
-    s = f"lower({expr})"
-    for pair, sym in BPE_MERGES:
-        s = f"replace({s}, '{pair}', '{sym}')"
-    ws = " || ".join(f"chr({ord(c)})" for c in BPE_WHITESPACE)
-    return f"length(translate({s}, {ws}, ''))"
-
-
-ORACLES["corpus_bpe_budget"] = f"""
-    WITH q AS ({_quality_sql()}),
-    b AS (
-      SELECT doc_id, {_bpe_count_sql('text')} AS n_bpe_pieces FROM documents
-    ),
-    j AS (
-      SELECT q.doc_id, q.n_tokens, b.n_bpe_pieces, q.quality
-      FROM q JOIN b ON q.doc_id = b.doc_id
-    ),
-    r AS (
-      SELECT doc_id, n_tokens, n_bpe_pieces, quality,
-             SUM(n_bpe_pieces) OVER (ORDER BY quality DESC, doc_id
-                                     ROWS UNBOUNDED PRECEDING) AS running_pieces
-      FROM j
-    )
-    SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_bpe_pieces AS BIGINT) AS n_bpe_pieces, quality,
-           CAST(running_pieces AS BIGINT) AS running_pieces
-    FROM r WHERE running_pieces <= 50000 OR running_pieces = n_bpe_pieces
-"""
-
-# Training-order shuffle + shard manifest: the order key and shard come
-# from the same md5 as the Spark side (cross-engine hash family), so
-# order, shard assignment, positions, and token offsets are bit-exact.
-ORACLES["corpus_shard_manifest"] = f"""
-    WITH t AS (
-      SELECT doc_id,
-             CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-             md5(concat('shuffle:', CAST(doc_id AS VARCHAR))) AS order_key
-      FROM documents
-    ),
-    s AS (
-      SELECT *,
-             ('0x' || substr(order_key, 1, 8))::BIGINT % {_MANIFEST_SHARDS}
-               AS shard
-      FROM t
-    )
-    SELECT doc_id,
-           CAST(shard AS BIGINT) AS shard,
-           CAST(row_number() OVER (
-               PARTITION BY shard ORDER BY order_key, doc_id
-           ) AS BIGINT) AS pos,
-           n_tokens,
-           CAST(COALESCE(SUM(n_tokens) OVER (
-               PARTITION BY shard ORDER BY order_key, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0) AS BIGINT) AS offset_tokens
-    FROM s
-"""
-
-# Append = the batch's own per-shard manifest shifted by the base
-# layout's per-shard tails (count ≡ max pos, token sum ≡ end offset) —
-# the base is never re-ordered, pinning the "append must not reshuffle
-# what it extends" contract in the hash.
-ORACLES["corpus_shard_append"] = f"""
-    WITH t AS (
-      SELECT doc_id,
-             CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-             md5(concat('shuffle:', CAST(doc_id AS VARCHAR))) AS order_key
-      FROM documents
-    ),
-    s AS (
-      SELECT *,
-             ('0x' || substr(order_key, 1, 8))::BIGINT % {_MANIFEST_SHARDS}
-               AS shard
-      FROM t
-    ),
-    tails AS (
-      SELECT shard, COUNT(*) AS base_n, SUM(n_tokens) AS base_tokens
-      FROM s WHERE doc_id % 10 != 0 GROUP BY shard
-    ),
-    m AS (
-      SELECT doc_id, shard, n_tokens,
-             row_number() OVER (
-               PARTITION BY shard ORDER BY order_key, doc_id
-             ) AS pos,
-             COALESCE(SUM(n_tokens) OVER (
-               PARTITION BY shard ORDER BY order_key, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ), 0) AS off
-      FROM s WHERE doc_id % 10 = 0
-    )
-    SELECT m.doc_id,
-           CAST(m.shard AS BIGINT) AS shard,
-           CAST(m.pos + COALESCE(tails.base_n, 0) AS BIGINT) AS pos,
-           m.n_tokens,
-           CAST(m.off + COALESCE(tails.base_tokens, 0) AS BIGINT)
-             AS offset_tokens
-    FROM m LEFT JOIN tails ON m.shard = tails.shard
-"""
-
-
-ORACLES["events_resample_ffill"] = """
-    WITH hourly AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '1 hour', ts::TIMESTAMP) AS bucket,
-             COUNT(*) AS n_events,
-             ROUND(SUM(value), 4) AS sum_value
-      FROM events GROUP BY 1, 2
-    ), grid AS (
-      SELECT event_type,
-             unnest(generate_series(MIN(bucket), MAX(bucket),
-                                    INTERVAL '1 hour')) AS bucket
-      FROM hourly GROUP BY event_type
-    )
-    SELECT g.event_type,
-           CAST(floor(epoch(g.bucket)) AS BIGINT) AS bucket_epoch,
-           COALESCE(h.n_events, 0) AS n_events,
-           last_value(h.sum_value IGNORE NULLS)
-             OVER (PARTITION BY g.event_type ORDER BY g.bucket
-                   ROWS UNBOUNDED PRECEDING) AS sum_value_filled,
-           CAST(CASE WHEN h.n_events IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_gap
-    FROM grid g
-    LEFT JOIN hourly h ON g.event_type = h.event_type AND g.bucket = h.bucket
-"""
-
-ORACLES["events_resample_interp"] = """
-    WITH hourly AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '1 hour', ts::TIMESTAMP) AS bucket,
-             ROUND(SUM(value), 4) AS sum_value
-      FROM events GROUP BY 1, 2
-    ), grid AS (
-      SELECT event_type,
-             unnest(generate_series(MIN(bucket), MAX(bucket),
-                                    INTERVAL '1 hour')) AS bucket
-      FROM hourly GROUP BY event_type
-    ), j AS (
-      SELECT g.event_type, g.bucket,
-             CAST(floor(epoch(g.bucket)) AS BIGINT) * 1000000 AS ue,
-             h.sum_value
-      FROM grid g
-      LEFT JOIN hourly h ON g.event_type = h.event_type AND g.bucket = h.bucket
-    ), n AS (
-      SELECT event_type, bucket, ue, sum_value,
-             last_value(sum_value IGNORE NULLS)
-               OVER (PARTITION BY event_type ORDER BY bucket
-                     ROWS UNBOUNDED PRECEDING) AS prev_v,
-             first_value(sum_value IGNORE NULLS)
-               OVER (PARTITION BY event_type ORDER BY bucket
-                     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_v,
-             last_value(CASE WHEN sum_value IS NOT NULL
-                             THEN ue // 1000000 END IGNORE NULLS)
-               OVER (PARTITION BY event_type ORDER BY bucket
-                     ROWS UNBOUNDED PRECEDING) AS pes,
-             first_value(CASE WHEN sum_value IS NOT NULL
-                              THEN ue // 1000000 END IGNORE NULLS)
-               OVER (PARTITION BY event_type ORDER BY bucket
-                     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nes
-      FROM j
-    ), fx AS (
-      SELECT *,
-             CAST(ROUND(prev_v * 10000) AS BIGINT) AS prev_i,
-             CAST(ROUND(next_v * 10000) AS BIGINT) AS next_i
-      FROM n
-    )
-    -- gap values in EXACT 1e-4 fixed-point with integer HALF-UP:
-    -- float interpolation of 4-dp inputs at rational grid fractions
-    -- lands on exact decimal halves where Spark's string-HALF_UP round
-    -- and a binary-double ROUND disagree (see resample_interpolate)
-    SELECT event_type,
-           CAST(ue // 1000000 AS BIGINT) AS bucket_epoch,
-           CAST(CASE WHEN sum_value IS NOT NULL THEN 0 ELSE 1 END AS BIGINT)
-             AS is_gap,
-           CASE WHEN sum_value IS NOT NULL THEN sum_value
-                WHEN prev_v IS NULL THEN next_v
-                WHEN next_v IS NULL THEN prev_v
-                ELSE ((2 * (prev_i * (nes - pes)
-                            + (next_i - prev_i) * (ue // 1000000 - pes))
-                       + (nes - pes)) // (2 * (nes - pes))) / 10000.0
-           END AS sum_value_interp
-    FROM fx
-"""
-
-ORACLES["events_stream_join"] = """
-    SELECT e.event_id AS err_id,
-           c.event_id AS click_id,
-           e.user_id,
-           epoch_us(e.ts) AS err_ts_us,
-           epoch_us(c.ts) AS click_ts_us
-    FROM events e JOIN events c
-      ON e.user_id = c.user_id
-     AND e.event_type = 'error' AND c.event_type = 'click'
-     AND c.ts >= e.ts - INTERVAL '30 minutes' AND c.ts <= e.ts
-"""
-
-ORACLES["pricing_summary_sql"] = ORACLES["pricing_summary"]
-
-ORACLES["events_zscore_outliers"] = """
-    WITH stats AS (
-      SELECT event_type,
-             ROUND(AVG(value), 6) AS mu,
-             ROUND(STDDEV_SAMP(value), 6) AS sd
-      FROM events GROUP BY 1
-    )
-    SELECT e.event_id, e.event_type,
-           ROUND(e.value, 4) AS value,
-           ROUND((e.value - mu) / sd, 4) AS zscore
-    FROM events e JOIN stats USING (event_type)
-    WHERE ABS((e.value - mu) / sd) > 3
-"""
-
-ORACLES["feature_unpivot"] = f"""
-    WITH wide AS ({_PIVOT_SQL})
-    SELECT id, 'A' AS site, "pageviews_A" AS pageviews, "rank_A" AS rank,
-           "exists_A" AS "exists" FROM wide
-    UNION ALL
-    SELECT id, 'N', "pageviews_N", "rank_N", "exists_N" FROM wide
-    UNION ALL
-    SELECT id, 'R', "pageviews_R", "rank_R", "exists_R" FROM wide
-"""
-
-ORACLES["customer_balance_merge"] = """
-    WITH target AS (SELECT * FROM customer WHERE c_nationkey < 13),
-    spend AS (
-      SELECT o_custkey, ROUND(SUM(o_totalprice), 2) AS spend
-      FROM orders GROUP BY 1
-    )
-    SELECT COALESCE(c_custkey, o_custkey) AS custkey,
-           CASE WHEN c_custkey IS NOT NULL AND o_custkey IS NOT NULL THEN 'update'
-                WHEN o_custkey IS NULL THEN 'keep'
-                ELSE 'insert' END AS action,
-           ROUND(c_acctbal, 2) AS balance_before,
-           spend,
-           ROUND(COALESCE(c_acctbal, 0.0) + COALESCE(spend, 0.0), 2) AS balance_after
-    FROM target FULL OUTER JOIN spend ON c_custkey = o_custkey
-"""
-
-ORACLES["tpch_q6_forecast"] = """
-    SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-           COUNT(*) AS n_lines
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-"""
-
-ORACLES["tpch_q10_returns"] = """
-    SELECT c_custkey, c_name,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           ROUND(c_acctbal, 2) AS acctbal,
-           n_name
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1997-01-01'
-    GROUP BY c_custkey, c_name, c_acctbal, n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-"""
-
-ORACLES["tpch_q13_custdist"] = """
-    WITH per_cust AS (
-      SELECT c_custkey, COUNT(o_orderkey) AS c_count
-      FROM customer
-      LEFT JOIN orders ON c_custkey = o_custkey
-                       AND o_orderpriority <> '1-URGENT'
-      GROUP BY c_custkey
-    )
-    SELECT CAST(c_count AS BIGINT) AS c_count, COUNT(*) AS custdist
-    FROM per_cust GROUP BY 1
-"""
-
-ORACLES["tpch_q14_promo"] = """
-    SELECT CAST(floor(epoch(date_trunc('month', l_shipdate::TIMESTAMP))) AS BIGINT)
-             AS month_epoch,
-           ROUND(SUM(CASE WHEN p_type = 'PROMO'
-                          THEN l_extendedprice * (1 - l_discount) ELSE 0 END), 2)
-             AS promo_rev,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_rev,
-           ROUND(100.0 * SUM(CASE WHEN p_type = 'PROMO'
-                                  THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
-                 / SUM(l_extendedprice * (1 - l_discount)), 4) AS promo_share
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY 1
-"""
-
-ORACLES["tpch_q18_bigorders"] = """
-    WITH big AS (
-      SELECT l_orderkey, ROUND(SUM(l_quantity), 2) AS sum_qty
-      FROM lineitem GROUP BY 1 HAVING SUM(l_quantity) > 250
-    )
-    SELECT c_custkey, c_name, o_orderkey,
-           ROUND(o_totalprice, 2) AS totalprice, sum_qty
-    FROM orders
-    JOIN big      ON o_orderkey = l_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    ORDER BY sum_qty DESC, o_orderkey
-    LIMIT 100
-"""
-
-ORACLES["tpch_q22_acctbal"] = """
-    SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-           COUNT(*) AS n_cust,
-           ROUND(SUM(c_acctbal), 2) AS total_bal
-    FROM customer
-    WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
-      AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    GROUP BY 1
-"""
-
-ORACLES["pricing_cube"] = """
-    SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-           COALESCE(l_linestatus, 'ALL') AS linestatus,
-           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-           ROUND(SUM(l_quantity), 2) AS sum_qty,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           COUNT(*) AS n_rows
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-ORACLES["orders_above_cust_avg"] = """
-    WITH c AS (
-      SELECT o_custkey, o_orderkey,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS tp_cents
-      FROM orders
-    ), w AS (
-      SELECT *,
-             SUM(tp_cents) OVER (PARTITION BY o_custkey) AS sum_cents,
-             COUNT(*) OVER (PARTITION BY o_custkey) AS n_orders
-      FROM c
-    )
-    SELECT o_custkey, o_orderkey, tp_cents,
-           CAST(FLOOR(sum_cents * 1.0 / n_orders) AS BIGINT) AS cust_avg_cents,
-           CAST(n_orders AS BIGINT) AS n_orders
-    FROM w WHERE tp_cents * n_orders > sum_cents
-"""
-
-
-ORACLES["orders_window_funcs"] = """
-    SELECT o_custkey, o_orderkey,
-           CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-           cume_dist() OVER w AS cd,
-           percent_rank() OVER w AS pr,
-           lag(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER w AS prev_cents,
-           lead(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER w AS next_cents,
-           first_value(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER w AS first_cents,
-           last_value(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_cents
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-"""
-
-ORACLES["lineitem_moving_sum"] = """
-    SELECT CAST(l_partkey AS BIGINT) AS partkey, l_orderkey,
-           CAST(l_linenumber AS BIGINT) AS linenumber,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-             OVER (PARTITION BY l_partkey
-                   ORDER BY l_shipdate, l_orderkey, l_linenumber
-                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS BIGINT) AS mov_cents,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-             OVER (PARTITION BY l_partkey
-                   ORDER BY l_shipdate, l_orderkey, l_linenumber
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents
-    FROM lineitem
-"""
-
-ORACLES["orders_date_funcs"] = """
-    SELECT o_orderkey,
-           epoch_us(date_trunc('month', o_orderdate)) AS month_us,
-           CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
-           CAST(EXTRACT(quarter FROM o_orderdate) AS BIGINT) AS qtr,
-           CAST(dayofweek(o_orderdate) AS BIGINT) AS dow,
-           CAST(dayofyear(o_orderdate) AS BIGINT) AS doy,
-           epoch_us(o_orderdate + INTERVAL 3 MONTH) AS plus3m_us,
-           CAST(date_diff('day', o_orderdate, TIMESTAMP '1998-01-01') AS BIGINT)
-             AS days_to_98,
-           epoch_us(CAST(last_day(o_orderdate) AS TIMESTAMP)) AS month_end_us
-    FROM orders
-"""
-
-ORACLES["doc_array_funcs"] = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents)
-    SELECT doc_id,
-           CAST(len(t) AS BIGINT) AS n_toks,
-           CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct,
-           CAST(len(list_filter(t, x -> length(x) > 4)) AS BIGINT) AS n_long,
-           CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT)
-             AS total_chars,
-           COALESCE(array_to_string(t[1:3], '|'), '') AS first3,
-           CAST(list_max(list_transform(t, x -> length(x))) AS BIGINT) AS max_len
-    FROM toks
-"""
-
-_STRAT_RATE_SQL = (
-    "CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 80 WHEN 'fr' THEN 80 "
-    "WHEN 'es' THEN 80 WHEN 'zh' THEN 100 ELSE 50 END"
+from .catalog import (
+    core,
+    corpus,
+    dedup,
+    embeddings,
+    events,
+    ml,
+    pq,
+    sources,
+    text,
+    tpch,
+    warehouse,
 )
 
-ORACLES["corpus_stratified_sample"] = f"""
-    SELECT doc_id, lang FROM documents
-    WHERE {_hash_sql("CAST(doc_id AS VARCHAR)", seed="strat")} % 100
-          < {_STRAT_RATE_SQL}
-"""
-
-ORACLES["corpus_interleave"] = """
-    WITH w AS (
-      SELECT doc_id, source,
-             CASE source WHEN 'src0' THEN 8 WHEN 'src1' THEN 4
-                         WHEN 'src2' THEN 2 ELSE 1 END AS wt,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-      FROM documents),
-    v AS (SELECT doc_id, source,
-                 CAST((rn - 1) * 720720 // wt AS BIGINT) AS vpos FROM w)
-    SELECT doc_id, source, vpos,
-           CAST(ROW_NUMBER() OVER (ORDER BY vpos, source, doc_id) AS BIGINT) AS mix_rank
-    FROM v
-"""
-
-# Shared CTE block mirroring dedup.ngram_rep_edges + curation.dup_clusters:
-# df-capped shingles → per-shingle min-id representative → star
-# candidates → exact capped-set Jaccard verify → transitive closure
-# (recursive CTE; fine at oracle scale — the SPARK side runs pointer
-# jumping) → (doc_id, cluster_id = min reachable).  Used by
-# corpus_keep_best and corpus_dedup_report.
-_REP_CLUSTER_CTES = f"""
-    sh0 AS ({_SHINGLES_SQL}),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0
-           JOIN freq ON sh0.shingle = freq.shingle WHERE freq.df <= 1000),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    reps AS (SELECT shingle, MIN(doc_id) AS rep FROM sh GROUP BY shingle),
-    cand AS (SELECT DISTINCT r2.rep AS a_id, s.doc_id AS b_id
-             FROM sh s JOIN reps r2 ON s.shingle = r2.shingle
-             WHERE s.doc_id > r2.rep),
-    inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS n_inter
-              FROM cand c JOIN sh a ON a.doc_id = c.a_id
-                          JOIN sh b ON b.doc_id = c.b_id
-                                   AND b.shingle = a.shingle
-              GROUP BY 1, 2),
-    vedges AS (SELECT i.a_id, i.b_id FROM inter i
-               JOIN sizes sa ON i.a_id = sa.doc_id
-               JOIN sizes sb ON i.b_id = sb.doc_id
-               WHERE ROUND(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter),
-                           6) >= 0.05),
-    e AS (SELECT a_id AS u, b_id AS v FROM vedges
-          UNION SELECT b_id, a_id FROM vedges),
-    r(u, v) AS (SELECT u, v FROM e
-                UNION
-                SELECT r.u, e.v FROM r JOIN e ON r.v = e.u),
-    labels AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-               FROM r GROUP BY u)
-"""
-
-ORACLES["corpus_keep_best"] = f"""
-    WITH RECURSIVE {_REP_CLUSTER_CTES},
-    q AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q_len FROM documents),
-    lab AS (SELECT q.doc_id, q.q_len, COALESCE(l.cluster_id, q.doc_id) AS cl
-            FROM q LEFT JOIN labels l ON q.doc_id = l.doc_id)
-    SELECT doc_id, q_len FROM (
-      SELECT doc_id, q_len,
-             ROW_NUMBER() OVER (PARTITION BY cl ORDER BY q_len DESC, doc_id) AS rn
-      FROM lab)
-    WHERE rn = 1
-"""
-
-ORACLES["corpus_keep_best_pairs"] = f"""
-    WITH sh0 AS ({{shingles}}),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0
-           JOIN freq ON sh0.shingle = freq.shingle WHERE freq.df <= 1000),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a_id, b_id FROM (
-        SELECT i.a_id, i.b_id,
-               ROUND(i.n_inter * 1.0 / (sa.n_sh + sb.n_sh - i.n_inter), 6) AS j
-        FROM (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
-              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2) i
-        JOIN sizes sa ON i.a_id = sa.doc_id
-        JOIN sizes sb ON i.b_id = sb.doc_id)
-      WHERE j >= 0.05),
-    edges AS (SELECT a_id AS u, b_id AS v FROM pairs
-              UNION ALL SELECT b_id, a_id FROM pairs),
-    q AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q_len FROM documents),
-    dominated AS (
-      SELECT DISTINCT e.u AS doc_id FROM edges e
-      JOIN q qu ON e.u = qu.doc_id
-      JOIN q qv ON e.v = qv.doc_id
-      WHERE qv.q_len > qu.q_len OR (qv.q_len = qu.q_len AND e.v < e.u))
-    SELECT doc_id, CAST(length(text) AS BIGINT) AS q_len FROM documents
-    WHERE doc_id NOT IN (SELECT doc_id FROM dominated)
-""".format(shingles=_SHINGLES_SQL)
-
-ORACLES["corpus_contamination"] = f"""
-    WITH split AS (
-      SELECT doc_id, text,
-             {_hash_sql("CAST(doc_id AS VARCHAR)", seed="split")} % 100 AS b
-      FROM documents),
-    toks AS (SELECT doc_id, b, {_TOKS} AS w FROM split),
-    grams AS (
-      SELECT DISTINCT doc_id, b,
-             ('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15))::BIGINT AS gram
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) t
-      WHERE len(w) >= 8),
-    tr AS (SELECT doc_id, gram FROM grams WHERE b < 80),
-    te AS (SELECT doc_id AS test_id, gram FROM grams WHERE b >= 90)
-    SELECT tr.doc_id,
-           CAST(COUNT(DISTINCT tr.gram) AS BIGINT) AS n_shared_grams,
-           CAST(COUNT(DISTINCT te.test_id) AS BIGINT) AS n_test_docs
-    FROM tr JOIN te ON tr.gram = te.gram
-    GROUP BY tr.doc_id
-"""
-
-# The bloom oracle REBUILDS the filter: same 60-bit gram digests, same
-# Kirsch-Mitzenmacher positions ((g % m + i*(((g >> 18) % (m/2))*2+1)) % m,
-# all positive-integer shifts/mods — see operators.curation._km_positions),
-# so bloom_hit matches Spark bit-for-bit, false positives included.
-ORACLES["corpus_bloom_decontaminate"] = f"""
-    WITH split AS (
-      SELECT doc_id, text,
-             {_hash_sql("CAST(doc_id AS VARCHAR)", seed="split")} % 100 AS b
-      FROM documents),
-    toks AS (SELECT doc_id, b, {_TOKS} AS w FROM split),
-    grams AS (
-      SELECT DISTINCT doc_id, b,
-             ('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15))::BIGINT AS gram
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) t
-      WHERE len(w) >= 8),
-    tr AS (SELECT doc_id, gram FROM grams WHERE b < 80),
-    te AS (SELECT DISTINCT gram FROM grams WHERE b >= 90),
-    bits AS (
-      SELECT DISTINCT
-             (gram % {_BLOOM_M}
-              + i * (((gram >> {_BLOOM_M.bit_length() - 1}) % {_BLOOM_M // 2}) * 2 + 1)
-             ) % {_BLOOM_M} AS pos
-      FROM te, LATERAL (SELECT unnest(range({_BLOOM_K})) AS i) x),
-    hits AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT p.doc_id, p.gram
-        FROM (SELECT tr.doc_id, tr.gram,
-                     (tr.gram % {_BLOOM_M}
-                      + i * (((tr.gram >> {_BLOOM_M.bit_length() - 1})
-                              % {_BLOOM_M // 2}) * 2 + 1)
-                     ) % {_BLOOM_M} AS pos
-              FROM tr, LATERAL (SELECT unnest(range({_BLOOM_K})) AS i) x) p
-        JOIN bits USING (pos)
-        GROUP BY p.doc_id, p.gram
-        HAVING COUNT(*) = {_BLOOM_K})),
-    exact AS (SELECT DISTINCT tr.doc_id FROM tr JOIN te USING (gram)),
-    ng AS (SELECT doc_id, COUNT(*) AS n_grams FROM tr GROUP BY doc_id)
-    SELECT s.doc_id,
-           CAST(COALESCE(ng.n_grams, 0) AS BIGINT) AS n_grams,
-           (e.doc_id IS NOT NULL) AS exact_hit,
-           (h.doc_id IS NOT NULL) AS bloom_hit,
-           ((h.doc_id IS NOT NULL) OR e.doc_id IS NULL) AS no_false_negative
-    FROM (SELECT doc_id FROM split WHERE b < 80) s
-    LEFT JOIN ng USING (doc_id)
-    LEFT JOIN exact e USING (doc_id)
-    LEFT JOIN hits h USING (doc_id)
-"""
-
-ORACLES["lineitem_percentiles"] = """
-    SELECT l_returnflag,
-           quantile_cont(l_quantity, 0.25) AS q_p25,
-           quantile_cont(l_quantity, 0.5) AS q_p50,
-           quantile_cont(l_quantity, 0.75) AS q_p75,
-           quantile_cont(CAST(ROUND(l_extendedprice * 100) AS BIGINT), 0.95) AS cents_p95
-    FROM lineitem GROUP BY 1
-"""
-
-ORACLES["pricing_grouping_sets"] = """
-    SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-           COALESCE(l_linestatus, 'ALL') AS linestatus,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           ROUND(SUM(l_quantity), 2) AS sum_qty
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-ORACLES["events_hourly_heatmap"] = """
-    SELECT CAST(dayofweek(ts::TIMESTAMP) AS BIGINT) AS dow,
-           CAST(hour(ts::TIMESTAMP) AS BIGINT) AS hod,
-           COUNT(*) AS n_events,
-           ROUND(SUM(value), 4) AS sum_value
-    FROM events GROUP BY 1, 2
-"""
-
-ORACLES["doc_chunks_udtf"] = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS w FROM documents),
-    chunks AS (
-      SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-             w[i*32+1 : least((i+1)*32, len(w))] AS chunk
-      FROM toks,
-           LATERAL (SELECT unnest(range(0, (len(w) + 31) // 32)) AS i) t
-      WHERE len(w) >= 1)
-    SELECT doc_id, chunk_idx,
-           CAST(len(chunk) AS BIGINT) AS n_tokens,
-           CAST(length(array_to_string(chunk, ' ')) AS BIGINT) AS n_chars
-    FROM chunks
-"""
-
-ORACLES["mm_frame_sample"] = """
-    SELECT doc_id AS sample_id,
-           CAST(i AS BIGINT) AS frame_idx,
-           md5(substring(text, i*64+1, 64)) AS frame_md5
-    FROM documents,
-         LATERAL (SELECT unnest(range(0, greatest((length(text)+63)//64, 1))) AS i) t
-"""
-
-_SQ8_Q = (
-    "CAST(FLOOR(GREATEST(-1.0, LEAST(1.0, CAST({v}[{i}] AS DOUBLE))) * 127 + 0.5) AS BIGINT)"
-)
-
-ORACLES["emb_sq8_topk"] = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qv
-      FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 4000
-    ),
-    c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-    scored AS (
-      SELECT query_id, cand_id,
-             CAST(list_sum(list_transform(range(1, 65), i ->
-               {_SQ8_Q.format(v='qv', i='i')} * {_SQ8_Q.format(v='cv', i='i')}
-             )) AS BIGINT) AS dot_q8
-      FROM q JOIN c ON cand_id <> query_id
-    )
-    SELECT query_id, cand_id, dot_q8,
-           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY dot_q8 DESC, cand_id) AS BIGINT) AS rk
-    FROM scored QUALIFY rk <= 5
-"""
-
-# the streaming dedup of the doubled stream must converge to the plain
-# batch per-type profile
-ORACLES["events_stream_dedup"] = """
-    SELECT event_type, COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-    FROM events GROUP BY 1
-"""
-
-ORACLES["doc_tfidf_topterms"] = f"""
-    WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM toks GROUP BY 1, 2),
-    dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-    scored AS (
-      SELECT doc_id, term, tf, df,
-             CAST(tf * 1000000 * (n_docs + 1) AS BIGINT) // (df + 1) AS score_e6
-      FROM tf JOIN dfq USING (term) CROSS JOIN n)
-    SELECT doc_id, term, tf, df, score_e6,
-           CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-                ORDER BY score_e6 DESC, term) AS BIGINT) AS rk
-    FROM scored QUALIFY rk <= 3
-"""
-
-ORACLES["lineitem_yearly_growth"] = """
-    WITH yearly AS (
-      SELECT l_returnflag,
-             CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                 * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS rev_e4
-      FROM lineitem GROUP BY 1, 2)
-    SELECT l_returnflag, yr,
-           rev_e4 / 10000.0 AS revenue,
-           CAST(rev_e4 - lag(rev_e4) OVER w AS DOUBLE) * 10000.0
-             / lag(rev_e4) OVER w AS growth_bp
-    FROM yearly
-    WINDOW w AS (PARTITION BY l_returnflag ORDER BY yr)
-"""
-
-ORACLES["events_trimmed_mean"] = """
-    WITH c AS (SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
-               FROM events),
-    r AS (SELECT event_type, cents,
-                 ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY cents) AS rn,
-                 COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM c)
-    SELECT event_type,
-           CAST(SUM(cents) AS DOUBLE) / COUNT(*) AS trimmed_mean_cents,
-           CAST(COUNT(*) AS BIGINT) AS n_used
-    FROM r
-    WHERE rn > n // 10 AND rn <= n - n // 10
-    GROUP BY 1
-"""
-
-ORACLES["pysource_scan"] = """
-    WITH gen AS (
-      SELECT i AS id,
-             ('0x' || substr(md5('b:' || i), 1, 8))::BIGINT % 10 AS bucket,
-             (('0x' || substr(md5('s:' || i), 1, 8))::BIGINT % 10000) / 100.0 AS score
-      FROM (SELECT unnest(range(0, 2000)) AS i))
-    SELECT bucket, COUNT(*) AS n_rows, ROUND(SUM(score), 2) AS sum_score,
-           MIN(id) AS min_id, MAX(id) AS max_id
-    FROM gen GROUP BY 1
-"""
-
-# the streaming form emits the identical relation — same oracle
-ORACLES["pysource_stream"] = ORACLES["pysource_scan"]
-
-ORACLES["pysource_write_roundtrip"] = """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-             AS total_cents,
-           TRUE AS committed
-    FROM orders GROUP BY o_orderpriority
-"""
-
-ORACLES["parquet_prune_roundtrip"] = """
-    SELECT o_orderpriority AS prio,
-           strftime(o_orderdate, '%Y-%m') AS month,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-             AS total_cents,
-           MIN(o_orderkey) AS min_orderkey
-    FROM orders
-    WHERE o_orderpriority = '1-URGENT'
-    GROUP BY 1, 2
-"""
-
-ORACLES["events_transitions"] = """
-    WITH seq AS (
-      SELECT user_id, event_type,
-             LAG(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_type
-      FROM events)
-    SELECT prev_type, event_type AS cur_type, COUNT(*) AS n_transitions
-    FROM seq WHERE prev_type IS NOT NULL
-    GROUP BY prev_type, event_type
-"""
-
-ORACLES["nation_revenue_share"] = """
-    WITH per AS (
-      SELECT n_name,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_e2
-      FROM orders
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY n_name)
-    SELECT n_name,
-           rev_e2 / 100.0 AS revenue,
-           ROUND(rev_e2 / SUM(rev_e2) OVER () * 100, 6) AS share_pct
-    FROM per
-"""
-
-ORACLES["lineitem_skew_profile"] = """
-    WITH per AS (SELECT l_orderkey, COUNT(*) AS n_rows
-                 FROM lineitem GROUP BY l_orderkey),
-    tot AS (SELECT CAST(SUM(n_rows) AS BIGINT) AS t_rows FROM per)
-    SELECT l_orderkey, n_rows,
-           CAST((n_rows * 1000000) // t_rows AS BIGINT) AS share_ppm
-    FROM per CROSS JOIN tot
-    ORDER BY n_rows DESC, l_orderkey
-    LIMIT 10
-"""
-
-ORACLES["basket_part_pairs"] = """
-    WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                FROM lineitem)
-    SELECT a.pk AS part_a, b.pk AS part_b, COUNT(*) AS n_orders
-    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-    GROUP BY a.pk, b.pk
-    ORDER BY n_orders DESC, part_a, part_b
-    LIMIT 20
-"""
-
-ORACLES["tpch_q4_priority"] = """
-    SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate < TIMESTAMP '1997-01-01'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-    GROUP BY o_orderpriority
-"""
-
-ORACLES["tpch_q7_volume"] = """
-    SELECT supp_nation, cust_nation, l_year, ROUND(SUM(volume), 2) AS revenue
-    FROM (
-      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-             CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-             l_extendedprice * (1 - l_discount) AS volume
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation n1 ON s_nationkey = n1.n_nationkey
-      JOIN nation n2 ON c_nationkey = n2.n_nationkey
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1998-01-01'
-        AND ((n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_7')
-          OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_2'))
-    ) GROUP BY 1, 2, 3
-"""
-
-ORACLES["tpch_q8_share"] = """
-    SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-           ROUND(SUM(CASE WHEN ns.n_name = 'NATION_7'
-                          THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
-                 / SUM(l_extendedprice * (1 - l_discount)), 4) AS mkt_share
-    FROM lineitem
-    JOIN part     ON l_partkey = p_partkey
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation nc ON c_nationkey = nc.n_nationkey
-    JOIN region   ON nc.n_regionkey = r_regionkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation ns ON s_nationkey = ns.n_nationkey
-    WHERE p_type = 'PROMO' AND r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate < TIMESTAMP '1998-01-01'
-    GROUP BY 1
-"""
-
-ORACLES["tpch_q9_profit"] = """
-    SELECT n_name AS nation,
-           CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-           SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                 * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-               - CAST(ROUND(p_retailprice * 100) AS BIGINT)
-                 * CAST(l_quantity AS BIGINT) * 10) / 10000.0 AS sum_profit
-    FROM lineitem
-    JOIN part     ON l_partkey = p_partkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation   ON s_nationkey = n_nationkey
-    JOIN orders   ON l_orderkey = o_orderkey
-    WHERE p_name LIKE '%widget%'
-    GROUP BY 1, 2
-"""
-
-ORACLES["tpch_q11_important"] = """
-    WITH per_part AS (
-      SELECT l_partkey AS p_partkey,
-             SUM(CAST(ROUND(p_retailprice * 100) AS BIGINT)
-                 * CAST(l_quantity AS BIGINT)) AS value_cents
-      FROM lineitem
-      JOIN part ON l_partkey = p_partkey
-      WHERE l_suppkey IN (
-        SELECT s_suppkey FROM supplier
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA')
-      GROUP BY 1)
-    SELECT p_partkey, ROUND(value_cents / 100.0, 2) AS value
-    FROM per_part
-    WHERE value_cents * (SELECT COUNT(*) FROM per_part)
-          > 2 * (SELECT SUM(value_cents) FROM per_part)
-    ORDER BY value DESC, p_partkey
-"""
-
-ORACLES["tpch_q12_priority"] = """
-    SELECT l_linestatus,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l_linestatus
-"""
-
-ORACLES["tpch_q15_top_supplier"] = """
-    WITH revenue AS (
-      SELECT l_suppkey,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                 * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS rev_e4
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1996-04-01'
-      GROUP BY 1)
-    SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name,
-           ROUND(rev_e4 / 10000.0, 2) AS total_revenue
-    FROM revenue JOIN supplier ON l_suppkey = s_suppkey
-    WHERE rev_e4 = (SELECT MAX(rev_e4) FROM revenue)
-"""
-
-ORACLES["tpch_q16_supplier_cnt"] = """
-    SELECT p_brand, p_type, p_size,
-           CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-      AND p_size IN (1, 5, 10, 15, 20, 25)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY 1, 2, 3
-    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-"""
-
-ORACLES["tpch_q17_small_qty"] = """
-    SELECT CAST(FLOOR(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) / 7.0)
-                AS BIGINT) AS avg_yearly_cents
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    WHERE p_brand = 'Brand#3'
-      AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity) FROM lineitem l2
-                        WHERE l2.l_partkey = lineitem.l_partkey)
-"""
-
-ORACLES["tpch_q19_disjunctive"] = """
-    SELECT ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-           AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-           AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-           AND l_quantity BETWEEN 20 AND 30)
-"""
-
-ORACLES["tpch_q20_excess"] = """
-    WITH sp AS (
-      SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS BIGINT)) AS supp_qty
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1997-01-01'
-        AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-      GROUP BY 1, 2),
-    marked AS (
-      SELECT l_suppkey, supp_qty,
-             SUM(supp_qty) OVER (PARTITION BY l_partkey) AS part_qty
-      FROM sp)
-    SELECT DISTINCT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name
-    FROM marked JOIN supplier ON l_suppkey = s_suppkey
-    WHERE supp_qty * 2 > part_qty
-    ORDER BY s_suppkey
-"""
-
-ORACLES["tpch_q21_waiting"] = """
-    SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-    FROM lineitem l1
-    JOIN orders   ON l1.l_orderkey = o_orderkey
-    JOIN supplier ON l1.l_suppkey = s_suppkey
-    WHERE o_orderstatus = 'F'
-      AND l1.l_shipdate > o_orderdate
-      AND EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      JOIN orders o3 ON l3.l_orderkey = o3.o_orderkey
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey
-                        AND o3.o_orderstatus = 'F'
-                        AND l3.l_shipdate > o3.o_orderdate)
-    GROUP BY s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 20
-"""
-
-ORACLES["tpch_q2_min_cost"] = """
-    WITH offers AS (
-      SELECT DISTINCT ROUND(s_acctbal, 2) AS acctbal, s_name, n_name,
-             CAST(l_partkey AS BIGINT) AS p_partkey,
-             (CAST(ROUND(l_extendedprice * 100) AS BIGINT) * 100)
-               // CAST(l_quantity AS BIGINT) AS unit_e4,
-             MIN((CAST(ROUND(l_extendedprice * 100) AS BIGINT) * 100)
-                 // CAST(l_quantity AS BIGINT))
-               OVER (PARTITION BY l_partkey) AS min_e4
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-      WHERE r_name = 'EUROPE'
-        AND l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 10))
-    SELECT acctbal, s_name, n_name, p_partkey, unit_e4
-    FROM offers WHERE unit_e4 = min_e4
-    ORDER BY acctbal DESC, n_name, s_name, p_partkey
-    LIMIT 100
-"""
-
-
-# ---------------------------------------------------------------------------
-# round-3 additions: sequence packing, per-source quota, corpus profile,
-# string-function breadth (operators.curation / function surface)
-# ---------------------------------------------------------------------------
-
-
-def q_corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contiguous-fill sequence packing into 512-token training
-    sequences (operators.curation.pack_sequences; two-pass partitioned
-    running sum — no single-reducer window)."""
-    from .operators.curation import pack_sequences
-    from .operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.size(_tokens(F.col("text"))).cast("long")
-    narrow = docs.select("doc_id", toks.alias("n_tokens"))
-    out = pack_sequences(narrow, seq_len=512)
-    return out.select("doc_id", "n_tokens", "pack_id", "pack_offset", "n_spanned")
-
-
-def q_corpus_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing in TOKENIZER-FAITHFUL units: the contiguous-fill
-    concat-and-chunk layout of corpus_pack_sequences, but budgeted in
-    exact BPE pieces (operators.text.bpe_piece_count, the round-10
-    merge chain) instead of whitespace words — the packer's boundary
-    decisions are what a 1.2-1.5× piece-to-word drift actually moves,
-    so the training-shard layout must be computed in the unit the
-    model consumes.  Same two-pass range-partitioned running sum (no
-    SinglePartition window); the oracle replays the identical merge
-    chain, so every pack boundary is bit-exact.  Same size-gated
-    collapse-before-count as corpus_bpe_budget (round-11 verdict #5):
-    beyond the footer-count gate the chain runs once per distinct
-    text."""
-    from .operators.curation import pack_sequences
-    from .operators.text import with_bpe_piece_count
-    from .sources.readers import collapse_dial
-
-    docs = _t(spark, sf_dir, "documents")
-    narrow = with_bpe_piece_count(
-        docs.select("doc_id", "text"),
-        collapse=collapse_dial(spark, sf_dir),
-    ).select("doc_id", "n_pieces")
-    out = pack_sequences(narrow, seq_len=512, tokens_col="n_pieces")
-    return out.select(
-        "doc_id", "n_pieces", "pack_id", "pack_offset", "n_spanned"
-    )
-
-
-def q_corpus_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quota cap (≤ 50 docs per source, longest-text-first) —
-    the anti-domination guard of a data-mixing pipeline."""
-    from .operators.curation import source_quota
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.length("text").cast("long").alias("q_len")
-    )
-    return source_quota(docs, per_source=50, quality_col="q_len")
-
-
-def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dataset card: doc counts, char/token volume, length
-    bounds, language spread — ONE aggregation pass."""
-    from .operators.curation import corpus_profile
-
-    return corpus_profile(_t(spark, sf_dir, "documents"))
-
-
-def q_doc_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function breadth over documents: reverse/substring, pad,
-    repeat, position, translate, levenshtein — all native Column
-    expressions with engine-identical semantics (function surface)."""
-    docs = _t(spark, sf_dir, "documents")
-    low = F.lower(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.reverse(F.substring(low, 1, 16)).alias("rev16"),
-        F.lpad("lang", 5, "_").alias("lang_pad"),
-        F.repeat(F.col("lang"), 2).alias("lang_rep"),
-        F.instr(low, "the").cast("long").alias("pos_the"),
-        F.translate("lang", "aeiou", "AEIOU").alias("lang_tr"),
-        F.levenshtein("lang", "source").cast("long").alias("lev_ls"),
-    )
-
-
-def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval: top-20 documents for the query {join, scan,
-    vector} (k1=1.2, b=0.75) — the ranked-retrieval shape over the
-    inverted-index aggregates (tf ⋈ df ⋈ doc-length ⋈ corpus scalars).
-
-    All-integer fixed point, bit-exact cross-engine: the k1/b fractions
-    clear to ``44·tf·T div (20·tf·T + 6·T + 18·dl·N)`` (×10³) and idf
-    uses the exact rational ``(2(N−df)+1)·10⁶ div (2·df+1)`` instead of
-    its log — per-term ranking is identical (log is monotone) and no
-    libm call enters the plan; swap the log form in production if score
-    VALUES matter.  The factors stay < 2⁶³ for corpora ≤ ~10⁹ docs ×
-    10³ tokens (docstring bound, checked in the derivation).
-
-    Plan shape: the token stream is NEVER exploded — per-term tf and
-    the document length are array expressions on the scan (a bounded
-    query has bounded tf columns), unpivoted with ``stack``.  The only
-    aggregates are the two tiny broadcast scalars (df per query term,
-    corpus totals) and the per-doc score sum; global top-k compiles to
-    TakeOrderedAndProject — per-partition heaps, no global sort."""
-    from .operators.text import tokens as _tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = ["join", "scan", "vector"]
-    base = docs.select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("toks")
-    ).select(
-        "doc_id",
-        F.size("toks").cast("long").alias("dl"),
-        *[
-            F.size(F.filter("toks", (lambda term: lambda x: x == term)(t)))
-            .cast("long")
-            .alias(f"tf_{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    stack_expr = "stack({}, {}) AS (term, tf)".format(
-        len(terms), ", ".join(f"'{t}', tf_{i}" for i, t in enumerate(terms))
-    )
-    tf = base.selectExpr("doc_id", "dl", stack_expr).filter(F.col("tf") > 0)
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    tot = base.agg(
-        F.sum("dl").cast("long").alias("t_tokens"), F.count("*").alias("n_docs")
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "idf_e6", F.expr("(((n_docs - df) * 2 + 1) * 1000000) div (2 * df + 1)")
-        )
-        .withColumn(
-            "tfc_e3",
-            F.expr(
-                "(44 * tf * t_tokens * 1000) div "
-                "(20 * tf * t_tokens + 6 * t_tokens + 18 * dl * n_docs)"
-            ),
-        )
-        .withColumn("score_e6", F.expr("(idf_e6 * tfc_e3) div 1000"))
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("score_e6").cast("long").alias("bm25_e6"),
-            F.count("*").alias("n_terms"),
-        )
-        .orderBy(F.col("bm25_e6").desc(), F.col("doc_id"))
-        .limit(20)
-    )
-
-
-ORACLES["doc_bm25_topk"] = f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    dl AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS dl FROM documents),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
-           WHERE term IN ('join', 'scan', 'vector') GROUP BY doc_id, term),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    tot AS (SELECT CAST(SUM(dl) AS BIGINT) AS t_tokens, COUNT(*) AS n_docs
-            FROM dl),
-    scored AS (
-      SELECT tf.doc_id,
-             (((n_docs - df) * 2 + 1) * 1000000) // (2 * df + 1) AS idf_e6,
-             (44 * tf * t_tokens * 1000)
-               // (20 * tf * t_tokens + 6 * t_tokens + 18 * dl.dl * n_docs)
-               AS tfc_e3
-      FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-      JOIN dfreq ON tf.term = dfreq.term
-      CROSS JOIN tot)
-    SELECT doc_id,
-           CAST(SUM((idf_e6 * tfc_e3) // 1000) AS BIGINT) AS bm25_e6,
-           COUNT(*) AS n_terms
-    FROM scored GROUP BY doc_id
-    ORDER BY bm25_e6 DESC, doc_id
-    LIMIT 20
-"""
-
-
-def q_corpus_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style blocklist gate over documents (whole-token match) —
-    per-doc flags; zero shuffle, the list rides the plan as a literal
-    array (operators.curation.blocklist_filter)."""
-    from .operators.curation import blocklist_filter
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = blocklist_filter(docs, ["slow", "error", "big"])
-    return out.select("doc_id", "n_blocked_terms", "blocked")
-
-
-ORACLES["corpus_blocklist"] = f"""
-    SELECT doc_id,
-           CAST(len(list_intersect(list_distinct({_TOKS}),
-                                   ['slow', 'error', 'big'])) AS BIGINT)
-             AS n_blocked_terms,
-           len(list_intersect(list_distinct({_TOKS}),
-                              ['slow', 'error', 'big'])) > 0 AS blocked
-    FROM documents
-"""
-
-
-def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard near-dup pairs with the document-frequency skew
-    cap ACTIVE (max_doc_freq=50): shingles in more than 50 documents
-    are dropped before the inverted-index self-join — the guard that
-    bounds the worst bucket at corpus scale (a stopword shingle in 10⁶
-    docs would emit 10¹² join rows).  Sizes and intersections are
-    computed AFTER the cap on both engines, so the oracle mirrors the
-    exact capped relation."""
-    from .sources.readers import collapse_dial
-
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), n=3, threshold=0.05, max_doc_freq=50,
-        # same footer gate as dedup_ngram_jaccard (round 12)
-        collapse_distinct=collapse_dial(spark, sf_dir),
-    ).select("a_id", "b_id", "jaccard")
-
-
-ORACLES["dedup_ngram_capped"] = """
-    WITH sh0 AS ({shingles}),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0
-           JOIN freq ON sh0.shingle = freq.shingle WHERE freq.df <= 50),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT a_id, b_id,
-           ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) AS jaccard
-    FROM inter
-    JOIN sizes na ON na.doc_id = a_id
-    JOIN sizes nb ON nb.doc_id = b_id
-    WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) >= 0.05
-""".format(shingles=_SHINGLES_SQL)
-
-
-def q_orders_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: customers grouped by first-order month
-    (the cohort), counted by months-since-first-order — the classic
-    product-analytics shape.  The cohort assignment is a per-customer
-    min window; months_since is exact integer month arithmetic
-    (months_between over date_trunc'd months), so the matrix is
-    engine-exact."""
-    orders = _t(spark, sf_dir, "orders")
-    month = F.date_trunc("month", F.col("o_orderdate"))
-    w = Window.partitionBy("o_custkey")
-    base = orders.select(
-        F.col("o_custkey"), month.alias("order_month")
-    ).withColumn("cohort_month", F.min("order_month").over(w))
-    out = (
-        base.withColumn(
-            "months_since",
-            F.months_between("order_month", "cohort_month").cast("long"),
-        )
-        .groupBy("cohort_month", "months_since")
-        .agg(F.count_distinct("o_custkey").alias("n_customers"))
-        .select(
-            F.unix_micros("cohort_month").alias("cohort_us"),
-            "months_since",
-            "n_customers",
-        )
-    )
-    return out
-
-
-ORACLES["orders_cohort_retention"] = """
-    WITH base AS (
-      SELECT o_custkey,
-             date_trunc('month', o_orderdate) AS order_month,
-             MIN(date_trunc('month', o_orderdate))
-               OVER (PARTITION BY o_custkey) AS cohort_month
-      FROM orders)
-    SELECT CAST(floor(epoch(cohort_month)) AS BIGINT) * 1000000 AS cohort_us,
-           CAST(datediff('month', cohort_month, order_month) AS BIGINT)
-             AS months_since,
-           COUNT(DISTINCT o_custkey) AS n_customers
-    FROM base
-    GROUP BY cohort_month, datediff('month', cohort_month, order_month)
-"""
-
-
-def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-granularity time rollup in ONE pass: per (type, day),
-    per (type) and grand totals via GROUPING SETS over date_trunc —
-    Catalyst expands to a single Expand + hash aggregate, not three
-    scans (the OLAP time-dimension companion of pricing_rollup)."""
-    ev = read_events(spark, sf_dir)
-    day = F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us")
-    base = ev.select(F.col("event_type"), day, F.col("value"))
-    rolled = base.rollup("event_type", "day_us").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-    return rolled.select(
-        F.coalesce("event_type", F.lit("ALL")).alias("event_type"),
-        F.coalesce("day_us", F.lit(-1)).cast("long").alias("day_us"),
-        "n_events",
-        "sum_value",
-    )
-
-
-def q_lineitem_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width 20-bin histogram of extended price — the profiling
-    shape: min/max come from a 1-row broadcast scalar aggregate, bin
-    assignment is pure arithmetic on the scan, and the final count is
-    one hash aggregate on a ≤ 21-key space.  Exact integer cents avoid
-    float boundary jitter cross-engine."""
-    li = _t(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    base = li.select(cents.alias("c"))
-    bounds = base.agg(
-        F.min("c").alias("lo"), F.max("c").alias("hi")
-    )
-    binned = base.crossJoin(F.broadcast(bounds)).withColumn(
-        "bin",
-        F.expr("least(((c - lo) * 20) div greatest(hi - lo + 1, 1), 19)").cast("long"),
-    )
-    return (
-        binned.groupBy("bin")
-        .agg(F.count("*").alias("n_rows"))
-        .select("bin", "n_rows")
-    )
-
-
-def q_corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end dedup pipeline summary — the per-stage dataset-card a
-    curation run prints: corpus size, distinct normalized contents,
-    exact-duplicate rows to drop, near-dup component count, documents
-    in components, and the keep-one-per-component drop set size.
-
-    GROUP-shaped (round-6 verdict #3): near-dup structure is reported
-    as connected components over star edges against shingle-bucket
-    representatives (dedup.ngram_rep_edges → curation.dup_clusters) —
-    Θ(N + groups), never the Θ(K² per group) pair enumeration a
-    duplication-heavy corpus explodes under.  The exact pairwise audit
-    lives in corpus_keep_best_pairs / dedup_ngram_capped.
-
-    One row; the scalars fold together with broadcast cross joins (the
-    decorrelated-scalar-subquery shape) — no driver-side counts."""
-    docs = _t(spark, sf_dir, "documents")
-    from .operators.curation import dup_clusters
-    from .operators.dedup import ngram_rep_edges
-    from .sources.readers import collapse_dial
-
-    edges = ngram_rep_edges(
-        docs, n=3, threshold=0.05,
-        # same footer gate as corpus_keep_best (round-11 verdict #5)
-        collapse_distinct=collapse_dial(spark, sf_dir),
-        spread_rows=table_row_count(sf_dir, "documents"),
-    )
-    clusters = dup_clusters(edges)
-    # r14 (guide §1.2 — don't scan twice for one pass's worth of
-    # answers): n_docs and n_distinct_contents fold into ONE aggregate
-    # over one md5(normalized-text) projection.  The former shape ran
-    # dedup_exact (scan + md5 + groupBy(fp)) just to count its groups,
-    # plus a separate count(*) scan; count-of-groups ==
-    # COUNT(DISTINCT fp), which is exactly the oracle's own
-    # formulation (`COUNT(DISTINCT fp) FROM norm`).  Plan diff: the
-    # dedup_exact Exchange+HashAggregate subtree is gone
-    # (plans/r14/corpus_dedup_report_{before,after}.txt).
-    # The projection comes from content_fingerprints so its analyzed
-    # plan is IDENTICAL to the collapse prelude's cached fpmap — above
-    # the collapse dial (sf1+) the scalar aggregate reads the same
-    # cache entry the rep-edges legs fill, and the corpus text+md5
-    # pass runs ONCE for the whole report (r13 verdict #4).
-    from .operators.dedup import content_fingerprints
-
-    s_docs_contents = content_fingerprints(docs).agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("__fp").alias("n_distinct_contents"),
-    )
-    s_cl = clusters.agg(
-        F.countDistinct("cluster_id").alias("n_dup_clusters"),
-        F.count("*").alias("n_clustered_docs"),
-    )
-    return (
-        s_docs_contents
-        .crossJoin(F.broadcast(s_cl))
-        .select(
-            "n_docs",
-            "n_distinct_contents",
-            (F.col("n_docs") - F.col("n_distinct_contents")).alias("n_exact_dup_rows"),
-            "n_dup_clusters",
-            "n_clustered_docs",
-            (F.col("n_clustered_docs") - F.col("n_dup_clusters")).alias("n_dominated"),
-        )
-    )
-
-
-ORACLES["events_time_rollup"] = """
-    SELECT COALESCE(event_type, 'ALL') AS event_type,
-           COALESCE(CAST(floor(epoch(date_trunc('day', ts::TIMESTAMP)))
-                    AS BIGINT) * 1000000, -1) AS day_us,
-           COUNT(*) AS n_events,
-           ROUND(SUM(value), 4) AS sum_value
-    FROM events
-    GROUP BY ROLLUP (event_type, date_trunc('day', ts::TIMESTAMP))
-"""
-
-ORACLES["lineitem_price_histogram"] = """
-    WITH c AS (SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS c
-               FROM lineitem),
-    b AS (SELECT MIN(c) AS lo, MAX(c) AS hi FROM c)
-    SELECT CAST(LEAST(((c - lo) * 20) // GREATEST(hi - lo + 1, 1), 19)
-                AS BIGINT) AS bin,
-           COUNT(*) AS n_rows
-    FROM c CROSS JOIN b
-    GROUP BY 1
-"""
-
-ORACLES["corpus_dedup_report"] = f"""
-    WITH RECURSIVE {_REP_CLUSTER_CTES},
-    norm AS (
-      SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-      FROM documents)
-    SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-           (SELECT COUNT(DISTINCT fp) FROM norm) AS n_distinct_contents,
-           (SELECT COUNT(*) FROM documents)
-             - (SELECT COUNT(DISTINCT fp) FROM norm) AS n_exact_dup_rows,
-           (SELECT COUNT(DISTINCT cluster_id) FROM labels) AS n_dup_clusters,
-           (SELECT COUNT(*) FROM labels) AS n_clustered_docs,
-           (SELECT COUNT(*) FROM labels)
-             - (SELECT COUNT(DISTINCT cluster_id) FROM labels) AS n_dominated
-"""
-
-
-ORACLES["corpus_pack_sequences"] = f"""
-    WITH t AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
-               FROM documents),
-    r AS (SELECT doc_id, n_tokens,
-                 SUM(n_tokens) OVER (ORDER BY doc_id
-                                     ROWS UNBOUNDED PRECEDING) AS run
-          FROM t)
-    SELECT doc_id, n_tokens,
-           CAST((run - n_tokens) // 512 AS BIGINT) AS pack_id,
-           CAST((run - n_tokens) % 512 AS BIGINT) AS pack_offset,
-           CAST(CASE WHEN n_tokens <= 0 THEN 0
-                     ELSE ((run - 1) // 512) - ((run - n_tokens) // 512) + 1
-                END AS BIGINT) AS n_spanned
-    FROM r
-"""
-
-ORACLES["corpus_bpe_pack"] = f"""
-    WITH t AS (SELECT doc_id, {_bpe_count_sql('text')} AS n_pieces
-               FROM documents),
-    r AS (SELECT doc_id, n_pieces,
-                 SUM(n_pieces) OVER (ORDER BY doc_id
-                                     ROWS UNBOUNDED PRECEDING) AS run
-          FROM t)
-    SELECT doc_id, CAST(n_pieces AS BIGINT) AS n_pieces,
-           CAST((run - n_pieces) // 512 AS BIGINT) AS pack_id,
-           CAST((run - n_pieces) % 512 AS BIGINT) AS pack_offset,
-           CAST(CASE WHEN n_pieces <= 0 THEN 0
-                     ELSE ((run - 1) // 512) - ((run - n_pieces) // 512) + 1
-                END AS BIGINT) AS n_spanned
-    FROM r
-"""
-
-ORACLES["corpus_source_quota"] = """
-    SELECT doc_id, source, q_len, source_rank FROM (
-      SELECT doc_id, source, CAST(length(text) AS BIGINT) AS q_len,
-             CAST(ROW_NUMBER() OVER (PARTITION BY source
-                                     ORDER BY length(text) DESC, doc_id)
-                  AS BIGINT) AS source_rank
-      FROM documents)
-    WHERE source_rank <= 50
-"""
-
-ORACLES["corpus_profile"] = f"""
-    SELECT source,
-           COUNT(*) AS n_docs,
-           CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-           CAST(SUM(len({_TOKS})) AS BIGINT) AS total_tokens,
-           CAST(MIN(length(text)) AS BIGINT) AS min_chars,
-           CAST(MAX(length(text)) AS BIGINT) AS max_chars,
-           ROUND(AVG(length(text)), 4) AS avg_chars,
-           COUNT(DISTINCT lang) AS n_langs,
-           CAST(SUM(CASE WHEN length(text) = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_empty
-    FROM documents GROUP BY source
-"""
-
-ORACLES["doc_string_funcs"] = """
-    SELECT doc_id,
-           reverse(substr(lower(text), 1, 16)) AS rev16,
-           lpad(lang, 5, '_') AS lang_pad,
-           repeat(lang, 2) AS lang_rep,
-           CAST(instr(lower(text), 'the') AS BIGINT) AS pos_the,
-           translate(lang, 'aeiou', 'AEIOU') AS lang_tr,
-           CAST(levenshtein(lang, source) AS BIGINT) AS lev_ls
-    FROM documents
-"""
-
-
-ORACLES.update(_qa.ANALYTICS_ORACLES)
-
-# Connected components ARE SQL-expressible after all: the transitive
-# closure via a recursive CTE with UNION (distinct) terminates on the
-# finite reachable-pair set, and min-over-reachable is the cluster id.
-# O(Σ component²) pairs — fine at oracle scale (sf0.01), which is
-# exactly why the SPARK side runs pointer jumping instead (the closure
-# materializes every reachable pair; the CC loop never does).  This
-# upgrades dedup_clusters from rows-only to hash-checked (the round-3
-# verdict listed it as the weakest check in the dedup family).
-ORACLES["dedup_clusters"] = f"""
-    WITH RECURSIVE s AS ({_simhash_sql()}),
-    p AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM s a JOIN s b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 2),
-    e AS (SELECT a_id AS u, b_id AS v FROM p
-          UNION SELECT b_id, a_id FROM p),
-    r(u, v) AS (
-      SELECT u, v FROM e
-      UNION
-      SELECT r.u, e.v FROM r JOIN e ON r.v = e.u
-    )
-    SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-    FROM r GROUP BY u
-"""
-
-ORACLES["events_stream_chained"] = """
-    WITH ev AS (SELECT event_id, user_id, event_type, ts::TIMESTAMP AS ts
-                FROM events),
-    err AS (SELECT event_id AS err_id, user_id, ts AS err_ts
-            FROM ev WHERE event_type = 'error'),
-    clk AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-            FROM ev WHERE event_type = 'click'),
-    wm AS (SELECT least((SELECT max(err_ts) FROM err),
-                        (SELECT max(click_ts) FROM clk))
-                  - INTERVAL 30 MINUTE AS w),
-    j AS (SELECT err_id, click_id, err.user_id, err_ts, click_ts
-          FROM err JOIN clk ON err.user_id = clk.user_id
-           AND click_ts >= err_ts - INTERVAL 30 MINUTE
-           AND click_ts <= err_ts),
-    agg AS (SELECT time_bucket(INTERVAL '1 hour', err_ts) AS ws,
-                   COUNT(*) AS n_pairs,
-                   ROUND(AVG((epoch_us(err_ts) - epoch_us(click_ts)) / 1e6),
-                         4) AS avg_lag_s
-            FROM j GROUP BY 1)
-    SELECT CAST(epoch_us(ws) AS BIGINT) AS window_start_us,
-           n_pairs, avg_lag_s
-    FROM agg, wm
-    WHERE ws + INTERVAL 1 HOUR <= w
-"""
-
-
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingest dedup (operators.dedup.incremental_dedup_flags):
-    the deterministic hash split plays 'corpus' (buckets < 90, ~90%)
-    vs 'new batch' (buckets ≥ 90, ~10%); each batch doc is flagged
-    against the corpus and against earlier batch docs via MinHash-LSH
-    candidates + exact-Jaccard verification (k=16, bands=8,
-    threshold=0.02 — the same operating point as dedup_minhash_lsh).
-
-    This is the 100 TB shape the one-shot pair queries can't serve:
-    the corpus is never self-joined — it contributes its (precomputable)
-    band table to the candidate join and only candidate docs' shingles
-    to verification."""
-    from .operators.dedup import incremental_dedup_flags
-
-    docs = hash_split(_t(spark, sf_dir, "documents"))
-    corpus = docs.filter(F.col("split") != "test").select("doc_id", "text")
-    batch = docs.filter(F.col("split") == "test").select("doc_id", "text")
-    return incremental_dedup_flags(
-        corpus, batch, k=16, bands=8, n=3, threshold=0.02
-    )
-
-
-def q_docs_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest dedup gate
-    (streaming.events_stream.stream_docs_dedup_gate): the incoming
-    'test'-split documents replay as a STREAM, MinHash-band against
-    the static corpus band table in a left-outer stream-static join,
-    and the one stateful operator (dropDuplicates on the pair) emits
-    each (new doc, corpus candidate) once.  The drained pairs roll up
-    per document in batch: (doc_id, n_cand_corpus, is_clean) — every
-    batch doc present, clean ones with 0 (documents shorter than n
-    tokens emit no bands in-stream and re-enter through the left join
-    below, mirroring the oracle's all-batch-docs frame).  Same banding
-    operating point as dedup_incremental (k=16, bands=8, n=3);
-    candidates only, exact-Jaccard verification is the downstream
-    batch job by design."""
-    from .streaming.events_stream import run_stream_to_memory, stream_docs_dedup_gate
-
-    pairs = run_stream_to_memory(
-        stream_docs_dedup_gate(spark, sf_dir), output_mode="append"
-    )
-    per_doc = pairs.groupBy("doc_id").agg(
-        F.count("old_id").alias("n_hit")
-    )
-    all_batch = (
-        hash_split(_t(spark, sf_dir, "documents"))
-        .filter(F.col("split") == "test")
-        .select("doc_id")
-    )
-    return (
-        all_batch.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_cand_corpus"),
-        )
-        .withColumn("is_clean", F.col("n_cand_corpus") == 0)
-    )
-
-
-def q_docs_stream_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming dedup gate CLOSED INTO ONE ROW with its verifier
-    (round-8 verdict #7): the gate's docstring used to defer
-    exact-Jaccard verification to "the downstream batch job" — this IS
-    that composition.  The stream half is byte-identical to
-    docs_stream_dedup_gate (row-local MinHash banding, stream-static
-    band join, one stateful dropDuplicates, append mode); the drained
-    candidate pairs then flow through the batch verifier continuation:
-    shingles are fetched for the batch plus ONLY the corpus docs the
-    gate surfaced (left-semi pushdown — the verify stays proportional
-    to the stream, the incremental_dedup_flags discipline), exact
-    Jaccard ≥ 0.02 confirms or clears each pair, and every batch doc
-    emits (doc_id, n_cand_corpus, n_dup_corpus, is_clean_verified).
-
-    The oracle is dedup_incremental's verification relation RESTRICTED
-    to the gate's candidates (batch×corpus band collisions — no
-    batch×batch leg), so the hash covers the stream gate, the drain,
-    the semi-join scoping, AND the verifier in one relation: a pair
-    the gate dropped, a verification run against the wrong shingle
-    sets, or a threshold drift all mismatch."""
-    from .operators.dedup import verify_batch_candidates
-    from .streaming.events_stream import (
-        run_stream_to_memory,
-        stream_docs_dedup_gate,
-    )
-
-    pairs = run_stream_to_memory(
-        stream_docs_dedup_gate(spark, sf_dir), output_mode="append"
-    )
-    cand = pairs.filter(F.col("old_id").isNotNull()).select("doc_id", "old_id")
-    docs = hash_split(_t(spark, sf_dir, "documents"))
-    corpus = docs.filter(F.col("split") != "test").select("doc_id", "text")
-    batch = docs.filter(F.col("split") == "test").select("doc_id", "text")
-    verified = verify_batch_candidates(
-        cand, batch, corpus, n=3, threshold=0.02, new_col="doc_id"
-    )
-    cagg = cand.groupBy("doc_id").agg(F.count("*").alias("n_cand_corpus"))
-    vagg = verified.groupBy("doc_id").agg(F.count("*").alias("n_dup_corpus"))
-    return (
-        batch.select("doc_id")
-        .join(cagg, "doc_id", "left")
-        .join(vagg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_cand_corpus", F.lit(0)).cast("long").alias("n_cand_corpus"),
-            F.coalesce("n_dup_corpus", F.lit(0)).cast("long").alias("n_dup_corpus"),
-            (F.coalesce("n_dup_corpus", F.lit(0)) == 0).alias("is_clean_verified"),
-        )
-    )
-
-
-def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup against a PERSISTED corpus band table — the
-    index-build-then-reuse path q_dedup_incremental's docstring
-    promises ("in production that table is computed once at ingest
-    and stored").  BUILD shingles + bands the corpus ONCE and writes
-    the narrow (doc_id, band, band_hash) relation through the parquet
-    sink; SEARCH hands the read-back to incremental_dedup_flags, so
-    the candidate join's corpus side is a 3-column parquet scan — the
-    corpus TEXT is read only for the candidate-semi-joined Jaccard
-    verification, proportional to the batch.  At 100 TB the band
-    table is ~24 bytes/doc vs re-tokenizing every document per
-    arriving batch.  Same split, operating point, output, and oracle
-    as dedup_incremental, so a band table lost or mangled by the sink
-    round-trip is a hash mismatch (plan-asserted in pytest: the band
-    join's corpus side scans the persisted table, no text column)."""
-    import os
-
-    from .operators.dedup import incremental_dedup_flags, minhash_bands
-    from .sources.writers import write_parquet
-
-    d = _run_dir("minhash_band_index", sf_dir)
-    bands_path = os.path.join(d, "corpus_bands")
-    docs = hash_split(_t(spark, sf_dir, "documents"))
-    corpus = docs.filter(F.col("split") != "test").select("doc_id", "text")
-    batch = docs.filter(F.col("split") == "test").select("doc_id", "text")
-    # ---- BUILD: band the corpus once, persist the narrow table ----
-    write_parquet(minhash_bands(corpus, k=16, bands=8, n=3), bands_path)
-    # ---- SEARCH: candidates come from the persisted band table ----
-    return incremental_dedup_flags(
-        corpus, batch, k=16, bands=8, n=3, threshold=0.02,
-        corpus_bands=spark.read.parquet(bands_path),
-    )
-
-
-def q_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 + S3 CSV option semantics under the driver's hash check.
-
-    Writes a deterministic TSV/pagecounts fixture pair (content derived
-    from the ``nation`` keys — a fixed 25-row domain, same bounded
-    posture as the reference's site list) laced with malformed lines,
-    then reads it back through the EXACT reference option sets
-    (readers.py:68 sitelinks — header/inferSchema/DROPMALFORMED/tab,
-    DataGatherer.scala:37-44; readers.py:100 pagecounts — \\u0000
-    quote/escape, explicit schema, DROPMALFORMED, space sep,
-    DataGatherer.scala:78-92) and full-outer joins the two on title.
-
-    Every option is load-bearing for the hash: the under- and
-    over-length lines must be DROPPED (DROPMALFORMED), the embedded
-    ``"`` must survive literally (quote disabled via \\u0000), the
-    ``.z``-suffix filter must drop the ``.y`` row and rewrite the
-    suffix to ``wiki`` — the oracle reconstructs the clean relation
-    straight from ``nation``, so any deviation in reader semantics
-    mismatches.
-
-    The projection deliberately keeps EVERY fixture column: Spark's
-    CSV column pruning (``spark.sql.csv.parser.columnPruning.enabled``,
-    default on) parses only the referenced columns, and a row is only
-    flagged malformed against the columns actually parsed — select a
-    subset and DROPMALFORMED silently keeps wrong-arity rows.  The
-    reference binds the full row type (DataGatherer.scala:44), so
-    full-width is both the faithful and the correctly-dropping read."""
-    import tempfile
-
-    from .sources.readers import read_pagecounts, read_sitelinks_tsv
-
-    keys = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    d = tempfile.mkdtemp(prefix="tsv_roundtrip_")
-    sl_path = f"{d}/sitelinks.tsv"
-    pc_path = f"{d}/pagecounts.txt"
-    with open(sl_path, "w") as f:
-        f.write("id\tsite\ttitle\n")
-        for k in keys:
-            f.write(f"Q{k}\tsite{k}.z\tTitle_{k}\n")
-        f.write("Q900\tsolo.z\tOnly_in_sitelinks\n")  # no pagecounts twin
-        f.write("malformed_single_token_line\n")  # under-length → dropped
-        f.write("QX\ttoo\tmany\tfields\there\n")  # over-length → dropped
-    with open(pc_path, "w") as f:
-        for k in keys:
-            f.write(f"site{k}.z Title_{k} {k * 10 + 7}\n")
-        f.write('zz.z "Anarchism"_(book) 42\n')  # literal quote char
-        f.write("keep.y Dropped_by_suffix 5\n")  # fails the .z filter
-        f.write("xx.z four token line 9\n")  # over-length → dropped
-        f.write("yy.z only_two\n")  # under-length → dropped
-    sl = read_sitelinks_tsv(spark, sl_path).select(
-        "id", F.col("site").alias("sl_site"), "title"
-    )
-    pc = read_pagecounts(spark, pc_path)
-    # outer-join misses surface as explicit sentinels, not NULLs: a NULL
-    # in a leading sort column breaks order-insensitive row comparison
-    out = pc.join(sl, "title", "full").select(
-        "title",
-        F.coalesce("site", F.lit("-")).alias("site"),
-        F.coalesce("pageviews", F.lit(-1.0)).alias("pageviews"),
-        F.coalesce("id", F.lit("-")).alias("id"),
-        F.coalesce("sl_site", F.lit("-")).alias("sl_site"),
-    )
-    # Eagerly materialize the (≤ |nation|+2 row) result: a bare
-    # ``count()`` on a CSV plan prunes ALL columns, and DROPMALFORMED
-    # only drops rows whose PARSED columns misparse (SPARK-21610) — so
-    # an unmaterialized plan would count the malformed lines it is
-    # supposed to drop.  The checkpoint pins the fully-parsed relation
-    # for every downstream action.
-    return out.localCheckpoint(eager=True)
-
-
-ORACLES["tsv_roundtrip"] = """
-    WITH sl AS (
-      SELECT 'Q' || CAST(n_nationkey AS VARCHAR) AS id,
-             'site' || CAST(n_nationkey AS VARCHAR) || '.z' AS sl_site,
-             'Title_' || CAST(n_nationkey AS VARCHAR) AS title
-      FROM nation
-      UNION ALL SELECT 'Q900', 'solo.z', 'Only_in_sitelinks'),
-    pc AS (
-      SELECT 'site' || CAST(n_nationkey AS VARCHAR) || 'wiki' AS site,
-             'Title_' || CAST(n_nationkey AS VARCHAR) AS title,
-             CAST(n_nationkey * 10 + 7 AS DOUBLE) AS pageviews
-      FROM nation
-      UNION ALL SELECT 'zzwiki', '"Anarchism"_(book)', CAST(42 AS DOUBLE))
-    SELECT COALESCE(pc.title, sl.title) AS title,
-           COALESCE(pc.site, '-') AS site,
-           COALESCE(pc.pageviews, -1.0) AS pageviews,
-           COALESCE(sl.id, '-') AS id,
-           COALESCE(sl.sl_site, '-') AS sl_site
-    FROM pc FULL JOIN sl ON pc.title = sl.title
-"""
-
-
-ORACLES["dedup_incremental"] = f"""
-    WITH {_minhash_stacked_sql(16, 8)},
-    lab AS (
-      SELECT doc_id,
-             CASE WHEN {_hash_sql("CAST(doc_id AS VARCHAR)", seed="split")}
-                       % 100 >= 90
-                  THEN 'batch' ELSE 'corpus' END AS part
-      FROM documents),
-    st AS (SELECT s.doc_id, s.band, s.band_hash, lab.part
-           FROM stacked s JOIN lab USING (doc_id)),
-    cand AS (
-      SELECT DISTINCT nw.doc_id AS new_id, old.doc_id AS old_id,
-             old.part AS src
-      FROM st nw JOIN st old
-        ON nw.band = old.band AND nw.band_hash = old.band_hash
-      WHERE nw.part = 'batch'
-        AND (old.part = 'corpus'
-             OR (old.part = 'batch' AND old.doc_id < nw.doc_id))),
-    sh AS ({_SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.new_id, c.old_id, c.src, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.new_id
-      JOIN sh sb ON sb.doc_id = c.old_id AND sb.shingle = sa.shingle
-      GROUP BY 1, 2, 3),
-    ver AS (
-      SELECT i.new_id, i.src
-      FROM inter i
-      JOIN sizes na ON na.doc_id = i.new_id
-      JOIN sizes nb ON nb.doc_id = i.old_id
-      WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6)
-            >= 0.02),
-    agg AS (
-      SELECT new_id,
-             SUM(CASE WHEN src = 'corpus' THEN 1 ELSE 0 END) AS n_dup_corpus,
-             SUM(CASE WHEN src = 'batch' THEN 1 ELSE 0 END) AS n_dup_batch
-      FROM ver GROUP BY 1)
-    SELECT l.doc_id,
-           CAST(COALESCE(a.n_dup_corpus, 0) AS BIGINT) AS n_dup_corpus,
-           CAST(COALESCE(a.n_dup_batch, 0) AS BIGINT) AS n_dup_batch,
-           COALESCE(a.n_dup_corpus, 0) + COALESCE(a.n_dup_batch, 0) = 0
-             AS is_new
-    FROM lab l LEFT JOIN agg a ON a.new_id = l.doc_id
-    WHERE l.part = 'batch'
-"""
-
-
-ORACLES["dedup_incremental_persisted"] = ORACLES["dedup_incremental"]
-
-ORACLES["docs_stream_dedup_gate"] = f"""
-    WITH {_minhash_stacked_sql(16, 8)},
-    lab AS (
-      SELECT doc_id,
-             CASE WHEN {_hash_sql("CAST(doc_id AS VARCHAR)", seed="split")}
-                       % 100 >= 90
-                  THEN 'batch' ELSE 'corpus' END AS part
-      FROM documents),
-    st AS (SELECT s.doc_id, s.band, s.band_hash, lab.part
-           FROM stacked s JOIN lab USING (doc_id)),
-    cand AS (
-      SELECT DISTINCT nw.doc_id AS doc_id, old.doc_id AS old_id
-      FROM st nw JOIN st old
-        ON nw.band = old.band AND nw.band_hash = old.band_hash
-      WHERE nw.part = 'batch' AND old.part = 'corpus'),
-    agg AS (SELECT doc_id, COUNT(*) AS n FROM cand GROUP BY 1)
-    SELECT l.doc_id,
-           CAST(COALESCE(a.n, 0) AS BIGINT) AS n_cand_corpus,
-           COALESCE(a.n, 0) = 0 AS is_clean
-    FROM lab l LEFT JOIN agg a ON a.doc_id = l.doc_id
-    WHERE l.part = 'batch'
-"""
-
-# gate + verifier composition: dedup_incremental's verification
-# relation RESTRICTED to the gate's candidates (batch x corpus band
-# collisions only — the gate has no batch x batch leg)
-ORACLES["docs_stream_dedup_verified"] = f"""
-    WITH {_minhash_stacked_sql(16, 8)},
-    lab AS (
-      SELECT doc_id,
-             CASE WHEN {_hash_sql("CAST(doc_id AS VARCHAR)", seed="split")}
-                       % 100 >= 90
-                  THEN 'batch' ELSE 'corpus' END AS part
-      FROM documents),
-    st AS (SELECT s.doc_id, s.band, s.band_hash, lab.part
-           FROM stacked s JOIN lab USING (doc_id)),
-    cand AS (
-      SELECT DISTINCT nw.doc_id AS doc_id, old.doc_id AS old_id
-      FROM st nw JOIN st old
-        ON nw.band = old.band AND nw.band_hash = old.band_hash
-      WHERE nw.part = 'batch' AND old.part = 'corpus'),
-    sh AS ({_SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_id, c.old_id, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.doc_id
-      JOIN sh sb ON sb.doc_id = c.old_id AND sb.shingle = sa.shingle
-      GROUP BY 1, 2),
-    ver AS (
-      SELECT i.doc_id
-      FROM inter i
-      JOIN sizes na ON na.doc_id = i.doc_id
-      JOIN sizes nb ON nb.doc_id = i.old_id
-      WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6)
-            >= 0.02),
-    cagg AS (SELECT doc_id, COUNT(*) AS n FROM cand GROUP BY 1),
-    vagg AS (SELECT doc_id, COUNT(*) AS n FROM ver GROUP BY 1)
-    SELECT l.doc_id,
-           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_cand_corpus,
-           CAST(COALESCE(v.n, 0) AS BIGINT) AS n_dup_corpus,
-           COALESCE(v.n, 0) = 0 AS is_clean_verified
-    FROM lab l
-    LEFT JOIN cagg c ON c.doc_id = l.doc_id
-    LEFT JOIN vagg v ON v.doc_id = l.doc_id
-    WHERE l.part = 'batch'
-"""
-
-
-# Bounded-accuracy oracles for the sketch queries (round-4 verdict #6):
-# the raw HLL++/KLL estimates are engine-specific, but the 5% bound
-# flags are deterministic for a given dataset, so the oracle emits the
-# exact twins plus TRUE literals — a sketch drifting past the bound
-# flips a flag and fails the hash.
-ORACLES["events_sketch_stats"] = """
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS exact_users,
-           ROUND(quantile_cont(value, 0.5), 4) AS exact_p50,
-           TRUE AS users_err_lt_5pct,
-           TRUE AS p50_err_lt_5pct
-    FROM events GROUP BY event_type
-"""
-
-ORACLES["part_pagerank"] = _pagerank_sql(n_iter=6, damping_pct=85)
-
-ORACLES["supplier_fuzzy_pairs"] = """
-    WITH s AS (SELECT s_suppkey AS fid, s_name AS fname FROM supplier),
-    var AS (
-      SELECT DISTINCT fid, fname,
-             CASE WHEN i = 0 THEN fname
-                  ELSE substr(fname, 1, i - 1) || substr(fname, i + 1) END AS v
-      FROM s, LATERAL (SELECT unnest(range(0, length(fname) + 1)) AS i) t),
-    cand AS (
-      SELECT DISTINCT a.fid AS a_id, b.fid AS b_id,
-             a.fname AS a_name, b.fname AS b_name
-      FROM var a JOIN var b ON a.v = b.v AND a.fid < b.fid)
-    SELECT a_id, b_id, CAST(levenshtein(a_name, b_name) AS BIGINT) AS dist
-    FROM cand WHERE levenshtein(a_name, b_name) <= 1
-"""
-
-# chunk_audio_windows twin: 6400 samples / window (16 kHz × 400 ms ×
-# 1 byte/sample), ceil via negative-floor trick, ≥1 window per sample
-ORACLES["mm_audio_windows"] = """
-    WITH m AS (
-      SELECT doc_id AS sample_id,
-             octet_length(encode(text)) AS n_samples
-      FROM documents),
-    w AS (
-      SELECT sample_id, n_samples,
-             unnest(range(0, GREATEST(CAST(CEIL(n_samples / 6400.0) AS BIGINT),
-                                      1))) AS widx
-      FROM m)
-    SELECT sample_id,
-           CAST(widx AS BIGINT) AS window_idx,
-           widx * 6400 * 1000 // 16000 AS start_ms,
-           LEAST(n_samples, (widx + 1) * 6400) * 1000 // 16000 AS end_ms,
-           LEAST(n_samples, (widx + 1) * 6400) - widx * 6400 AS n_in_window
-    FROM w
-"""
-
-ORACLES["events_hll_merge"] = """
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS exact_users,
-           COUNT(DISTINCT epoch_us(ts) // 86400000000) AS n_days,
-           TRUE AS merged_err_lt_5pct
-    FROM events GROUP BY event_type
-"""
-
-ORACLES["doc_heavy_hitters"] = f"""
-    SELECT tok, COUNT(*) AS cnt, TRUE AS sketch_count_exact
-    FROM (SELECT unnest({_TOKS}) AS tok FROM documents)
-    GROUP BY tok
-"""
-
-ORACLES["events_approx_stats"] = """
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS exact_users,
-           ROUND(quantile_cont(value, 0.5), 2) AS p50,
-           ROUND(quantile_cont(value, 0.95), 2) AS p95,
-           ROUND(quantile_cont(value, 0.99), 2) AS p99,
-           COUNT(*) AS n,
-           TRUE AS users_err_lt_5pct,
-           TRUE AS p50_err_lt_5pct,
-           TRUE AS p95_err_lt_5pct,
-           TRUE AS p99_err_lt_5pct
-    FROM events GROUP BY event_type
-"""
-
-
-# Oracle for the LSH approximation-quality report (query lives in
-# queries_analytics; the SQL composes this module's minhash/shingle
-# builders, so it registers here).  `truth` mirrors ngram_jaccard_pairs
-# (round-then-compare threshold), `cand` mirrors minhash_bands'
-# band-collision join.
-ORACLES["dedup_lsh_recall_report"] = f"""
-    WITH {_minhash_stacked_sql(16, 8)},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM stacked a JOIN stacked b
-        ON a.band = b.band AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id),
-    sh AS ({{shingles}}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    truth AS (
-      SELECT a_id, b_id FROM inter
-      JOIN sizes na ON na.doc_id = a_id
-      JOIN sizes nb ON nb.doc_id = b_id
-      WHERE ROUND(n_inter / (na.n_sh + nb.n_sh - n_inter)::DOUBLE, 6) >= 0.02),
-    ver AS (SELECT c.a_id FROM cand c
-            JOIN truth t ON c.a_id = t.a_id AND c.b_id = t.b_id)
-    SELECT (SELECT COUNT(*) FROM truth) AS n_true,
-           (SELECT COUNT(*) FROM cand) AS n_candidates,
-           (SELECT COUNT(*) FROM ver) AS n_verified,
-           ROUND((SELECT COUNT(*) FROM ver)
-                 / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall,
-           ROUND((SELECT COUNT(*) FROM ver)
-                 / (SELECT COUNT(*) FROM cand)::DOUBLE, 6) AS cand_precision
-""".format(shingles=_SHINGLES_SQL)
-
-
-# Sampled twin (round-11 verdict #4): the identical audit SQL over the
-# deterministic ``doc_id % s`` sub-corpus, s recomputed from COUNT(*)
-# (the oracle-side mirror of sources.readers.audit_sample_modulus) —
-# at driver/bench SFs s = 1, so the hash gate covers the full
-# mechanism and the sampled report equals the exact one bit-for-bit.
-# Both "FROM documents" sites (the minhash signature CTE and the
-# shingle truth CTE) must redirect, hence the textual rewrite of the
-# exact report's SQL rather than a near-duplicate template.
-ORACLES["dedup_lsh_recall_sampled"] = ORACLES[
-    "dedup_lsh_recall_report"
-].replace("FROM documents", "FROM doc_sample").replace(
-    "WITH ",
-    f"WITH doc_sample AS ({_audit_sample_cte('documents', 'doc_id')}),\n    ",
-    1,
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-5 late additions: duplicate-span corpus measurement, incremental
-# aggregate maintenance, and hash-checked driver rows for the two physical
-# layout claims (Z-order clustering, bucketed exchange-free joins).
-# ---------------------------------------------------------------------------
-
-
-def q_doc_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate n-gram span fraction per document (the Lee et al. 2021
-    'Deduplicating Training Data' / RefinedWeb-style filter): for every
-    doc, the fraction of its distinct 8-gram spans that also appear in
-    at least one OTHER document, plus a removal flag at 30%.
-
-    Plan: one gram pass (operators.curation.doc_ngrams — codegen
-    ``transform``/``slice`` grams pre-hashed to 60-bit longs, distinct
-    per doc), materialized once with a lazy localCheckpoint because it
-    feeds both sides; corpus document frequency is a groupBy on the
-    8-byte gram key; the join back to per-doc rows is an equi-join on
-    that same key (AQE decides the strategy — the df relation is
-    SF-scaled, never force-broadcast).  The duplicated fraction is
-    exact integer ppm (``n_dup*1_000_000 div n_grams``) and the flag
-    compares cross-multiplied integers (``10*n_dup >= 3*n_grams``), so
-    no double ever touches a decision boundary on either engine.
-    At 100 TB this is two shuffles over 8-byte longs — the same
-    posture as the contamination scan (ngram_contamination_split)."""
-    from .operators.curation import duplicate_span_stats
-
-    return duplicate_span_stats(_t(spark, sf_dir, "documents"), n=8)
-
-
-ORACLES["doc_dup_span_fraction"] = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS w FROM documents),
-    grams AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15))::BIGINT AS gram
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) t
-      WHERE len(w) >= 8),
-    dfreq AS (SELECT gram, COUNT(*) AS df FROM grams GROUP BY gram),
-    per AS (
-      SELECT g.doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_grams,
-             CAST(SUM(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_grams
-      FROM grams g JOIN dfreq d ON g.gram = d.gram
-      GROUP BY g.doc_id)
-    SELECT doc_id, n_grams, n_dup_grams,
-           CAST(n_dup_grams * 1000000 // n_grams AS BIGINT) AS dup_ppm,
-           n_dup_grams * 10 >= n_grams * 3 AS flag_dup
-    FROM per
-"""
-
-
-def q_events_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental aggregate maintenance — the 100 TB pattern where a
-    daily rollup is kept current by merging ONLY the new partition's
-    partials into the stored ones instead of rescanning the corpus.
-    Here both legs are computed (base = days before 2024-01-24, delta
-    = days from it) and merged by re-aggregating the mergeable
-    partials: count→sum, sum→sum, min→min, max→max.  Every measure is
-    integer fixed-point (value×10⁴ — the generator emits ≤4-decimal
-    values, so the cast is lossless), making the merge algebra EXACTLY
-    associative: the two-leg result is bit-identical to the oracle's
-    single full GROUP BY, which is the property that lets a real
-    deployment trust incremental maintenance.  Derived mean uses
-    integer ``div`` — no float in any output column.  Per leg this is
-    one map-side-combined shuffle on (day, type); the merge union
-    re-aggregates ~|days×types| rows, not raw events."""
-    # day rides as an ISO string (the catalog's date idiom — DATE
-    # columns stringify differently across engines); ISO sorts/compares
-    # lexicographically, so the cutoff filter stays a string compare
-    ev = _t(spark, sf_dir, "events").select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        "event_type",
-        F.round(F.col("value") * 10000).cast("long").alias("v_fp"),
-    )
-
-    def partials(leg: DataFrame) -> DataFrame:
-        return leg.groupBy("day", "event_type").agg(
-            F.count("*").alias("n"),
-            F.sum("v_fp").alias("sum_fp"),
-            F.min("v_fp").alias("min_fp"),
-            F.max("v_fp").alias("max_fp"),
-        )
-
-    cutoff = "2024-01-24"
-    merged = (
-        partials(ev.filter(F.col("day") < cutoff))
-        .unionByName(partials(ev.filter(F.col("day") >= cutoff)))
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_fp").alias("sum_fp"),
-            F.min("min_fp").alias("min_fp"),
-            F.max("max_fp").alias("max_fp"),
-        )
-    )
-    return merged.select(
-        "day",
-        "event_type",
-        "n",
-        "sum_fp",
-        "min_fp",
-        "max_fp",
-        F.expr("CAST(sum_fp DIV n AS BIGINT)").alias("mean_fp"),
-    )
-
-
-ORACLES["events_incremental_agg"] = """
-    SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS day, event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT) AS sum_fp,
-           MIN(CAST(ROUND(value * 10000) AS BIGINT)) AS min_fp,
-           MAX(CAST(ROUND(value * 10000) AS BIGINT)) AS max_fp,
-           CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT))
-                // COUNT(*) AS BIGINT) AS mean_fp
-    FROM events GROUP BY 1, 2
-"""
-
-
-def q_lineitem_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout under the driver's hash check: lineitem is
-    rewritten Z-ordered on (l_quantity, l_extendedprice) into 32 files
-    (operators.layout.write_zordered — Morton key, range partition,
-    sort within), then a two-dimensional corner rectangle (~2% of
-    rows) is scanned back.  Because the Morton curve keeps BOTH
-    dimensions compact per file, all matching rows land in a handful
-    of files; ``clustered`` asserts at least a 2× reduction
-    (files-with-matches ≤ 16 of 32 — actual is ~1-3; an unclustered
-    layout scatters matches across all 32 w.h.p.).  The same file
-    min/max statistics drive parquet row-group pruning on a real
-    lake, so this is the multi-dimensional scan-reduction claim of
-    SCALE.md measured inside a query.  Revenue folds as per-row
-    integer cents (exact, associative).  The rewrite is the one-off
-    layout cost bucketing/Z-ordering always pays; the measured scan
-    is what repeats at 100 TB."""
-    import tempfile
-
-    from .operators.layout import write_zordered
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    path = tempfile.mkdtemp(prefix="zorder_scan_") + "/lineitem_z"
-    write_zordered(li, path, ["l_quantity", "l_extendedprice"], n_files=32)
-    back = (
-        spark.read.parquet(path)
-        .filter(
-            (F.col("l_quantity") <= 5.0) & (F.col("l_extendedprice") <= 20000.0)
-        )
-        # input_file_name() is non-deterministic to the analyzer, so it
-        # must be projected BEFORE the aggregate, not inside it
-        .withColumn("_file", F.input_file_name())
-    )
-    return back.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-            "price_cents"
-        ),
-        F.count_distinct("_file").alias("_files_hit"),
-    ).select(
-        "n_rows",
-        "price_cents",
-        (F.col("_files_hit") * 2 <= F.lit(32)).alias("clustered"),
-    )
-
-
-ORACLES["lineitem_zorder_pruning"] = """
-    SELECT COUNT(*) AS n_rows,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-             AS price_cents,
-           TRUE AS clustered
-    FROM lineitem
-    WHERE l_quantity <= 5.0 AND l_extendedprice <= 20000.0
-"""
-
-
-def q_orders_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed fact-to-fact join under the driver's hash check: orders
-    and lineitem are written as 8-bucket tables hashed and sorted on
-    the order key (sources.writers.write_bucketed_table), then joined
-    bucket-to-bucket.  Bucketing pays the shuffle ONCE at write time —
-    the join itself plans with ZERO Exchange on either side (pinned by
-    tests/test_plan_quality.py), which at 100 TB is the difference
-    between an hours-long shuffle and a co-located scan for joins too
-    big to broadcast.  Revenue is exact integer 10⁻⁴-dollar units
-    (cents × integer discount-% complement) so the post-join rollup is
-    associative and engine-portable.  Tables are external (temp-dir
-    path) and ``mode=overwrite`` keeps repeat runs idempotent; the
-    bucket count is a stand-in for the 100 TB choice (buckets sized so
-    one bucket ≈ one task's memory)."""
-    import tempfile
-
-    from .sources.writers import write_bucketed_table
-
-    d = tempfile.mkdtemp(prefix="bucketed_join_")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_c"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc_pct"),
-    )
-    write_bucketed_table(
-        orders, "tmp_bkt_orders", ["o_orderkey"], n_buckets=8,
-        sort_cols=["o_orderkey"], path=f"{d}/orders", mode="overwrite",
-    )
-    write_bucketed_table(
-        li, "tmp_bkt_lineitem", ["l_orderkey"], n_buckets=8,
-        sort_cols=["l_orderkey"], path=f"{d}/lineitem", mode="overwrite",
-    )
-    o = spark.table("tmp_bkt_orders")
-    l = spark.table("tmp_bkt_lineitem")
-    return (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(F.col("price_c") * (F.lit(100) - F.col("disc_pct")))
-            .alias("rev_fp4"),
-        )
-    )
-
-
-ORACLES["orders_bucketed_join"] = """
-    SELECT o_orderpriority,
-           COUNT(*) AS n_items,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-                AS BIGINT) AS rev_fp4
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    GROUP BY 1
-"""
-
-
-_IVF_AUDIT_NPROBES = (1, 2, 4)
-
-
-def q_emb_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximation-quality audit of the IVF ANN index against exact
-    brute-force ground truth — the similarity-search twin of
-    dedup_lsh_recall_report: recall@5 of the IVF path at nprobe ∈
-    {1, 2, 4}, one row per setting (truth pairs, IVF pairs, hits,
-    recall).  A recall CURVE, not a single number, is what justifies
-    the nprobe/list-count trade before trusting it at corpus scale —
-    at 100 TB the audit runs on a query SAMPLE while production
-    serves IVF only.  Both legs are existing oracle-green operators;
-    the truth relation is localCheckpoint'd once, and all probe
-    settings come from ONE assignment/scoring pass (ivf_topk_multi —
-    the parameter sweep must not cost |settings| corpus passes)."""
-    from .operators.similarity import ivf_topk_multi, spread_small
-
-    truth_emb = _t(spark, sf_dir, "embeddings")
-    n_rows = table_row_count(sf_dir, "embeddings")
-    q = _queries_frame(truth_emb)
-    truth = (
-        cosine_topk(spread_small(truth_emb, n_rows), q, k=5)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    s_t = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    multi = ivf_topk_multi(
-        truth_emb, q, k=5, nprobes=_IVF_AUDIT_NPROBES, spread_rows=n_rows
-    )
-    # ONE grouped pass instead of |nprobes| scalar legs (r13, same
-    # restructure as the IVFPQ grid): per-setting counts via groupBy
-    # over the nprobe-tagged sweep output, hits via one left join
-    # against the unique truth pairs, n_truth as one broadcast scalar.
-    # Same counts, same rounding, same schema; comparison is
-    # order-insensitive.
-    flagged = multi.join(
-        F.broadcast(truth.withColumn("hit", F.lit(1))),
-        ["query_id", "cand_id"],
-        "left",
-    )
-    return (
-        flagged.groupBy("nprobe")
-        .agg(
-            F.count(F.lit(1)).alias("n_approx"),
-            F.count("hit").alias("n_hit"),
-        )
-        .crossJoin(F.broadcast(s_t))
-        .select(
-            "nprobe",
-            "n_truth",
-            "n_approx",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_truth"), 6).alias("recall_at_5"),
-        )
-    )
-
-
-def _ivf_recall_leg_sql(nprobe: int) -> str:
-    return f"""
-    SELECT CAST({nprobe} AS BIGINT) AS nprobe,
-           (SELECT COUNT(*) FROM truth) AS n_truth,
-           (SELECT COUNT(*) FROM ap{nprobe}) AS n_approx,
-           (SELECT COUNT(*) FROM truth t JOIN ap{nprobe} a
-             ON t.query_id = a.query_id AND t.cand_id = a.cand_id) AS n_hit,
-           ROUND((SELECT COUNT(*) FROM truth t JOIN ap{nprobe} a
-                   ON t.query_id = a.query_id AND t.cand_id = a.cand_id)
-                 / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_at_5
-    """
-
-
-#: (m, nprobe) grid for the IVFPQ recall audit — m=4 is the production
-#: emb_ivfpq_topk setting; m=8 doubles the code budget; nprobe sweeps
-#: the coarse-pruning recall/cost trade.
-_IVFPQ_AUDIT_NPROBES = (1, 2, 4)
-_IVFPQ_AUDIT_MS = (4, 8)
-
-
-def q_emb_ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximation-quality audit of the COMBINED IVF-ADC tier against
-    exact brute-force cosine ground truth (round-8 verdict #4): recall@5
-    of the emb_ivfpq_topk composition at every (m, nprobe) in the audit
-    grid — the one question a user of IVFADC asks before trusting it
-    (how much recall does m=4/nprobe=2 cost?), answered as a measured
-    CURVE over both levers (code budget m and coarse pruning nprobe),
-    not a single point.  One row per setting: (m, nprobe, truth pairs,
-    approx pairs, hits, recall).
-
-    Everything in both legs is deterministic (md5-derived codebooks,
-    literal centroids, fixed panel), so unlike the ML graduations this
-    needs NO invariant envelope: the oracle recomputes the exact same
-    recall numbers bit-for-bit and the driver hash covers the whole
-    audit.  Cost discipline matches emb_ivf_recall_report: the truth
-    relation is checkpointed once and ALL SIX settings come from ONE
-    corpus pass (similarity.ivfpq_topk_multi — coarse-assign once,
-    both m's codes in one projection, one broadcast join scores every
-    pair under every m; each setting is then a filter + window).
-    At 100 TB the audit runs on a bounded sub-corpus —
-    emb_ivfpq_recall_sampled is that form, measured in SCALE.md."""
-    return _ivfpq_recall_grid_frame(
-        _t(spark, sf_dir, "embeddings"),
-        n_rows=table_row_count(sf_dir, "embeddings"),
-    )
-
-
-def _ivfpq_recall_grid_frame(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """The (m, nprobe) recall grid over a given embeddings relation —
-    shared by the exact audit (full corpus) and the sampled audit
-    (deterministic bounded sub-corpus).  ``n_rows`` (parquet footer
-    count) gates the small-corpus spread of the two scoring legs —
-    per-pair cosine and ADC values are row-local, so the exchange
-    cannot perturb any value."""
-    from .operators.similarity import ivfpq_topk_multi, spread_small
-
-    q = _queries_frame(emb)
-    truth = (
-        cosine_topk(spread_small(emb, n_rows), q, k=5)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
-    s_t = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    multi = ivfpq_topk_multi(
-        emb, q, k=5, nprobes=_IVFPQ_AUDIT_NPROBES, ms=_IVFPQ_AUDIT_MS,
-        spread_rows=n_rows,
-    )
-    # ONE grouped pass instead of six scalar legs (r13): the per-leg
-    # form (filter + semi-join + two single-row aggregates + two
-    # broadcasts, x6, unioned) planned ~40 AQE stage-jobs for a 6-row
-    # report — pure scheduling floor at any scale.  Per-setting counts
-    # are a groupBy over the (m, nprobe)-tagged search output, hits
-    # come from one left join against the truth relation (truth pairs
-    # are unique per (query_id, cand_id) — top-k with distinct
-    # candidates — so the join cannot duplicate rows), and n_truth is
-    # one broadcast scalar.  Same counts, same rounding, same schema;
-    # order-insensitive comparison unaffected by groupBy output order.
-    flagged = multi.join(
-        F.broadcast(truth.withColumn("hit", F.lit(1))),
-        ["query_id", "cand_id"],
-        "left",
-    )
-    return (
-        flagged.groupBy("m", "nprobe")
-        .agg(
-            F.count(F.lit(1)).alias("n_approx"),
-            F.count("hit").alias("n_hit"),
-        )
-        .crossJoin(F.broadcast(s_t))
-        .select(
-            "m",
-            "nprobe",
-            "n_truth",
-            "n_approx",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_truth"), 6).alias("recall_at_5"),
-        )
-    )
-
-
-def _ivfpq_recall_report_sql(k_nn: int = 5, dim: int = 64,
-                             n_codes: int = 16, sampled: bool = False) -> str:
-    """Exact oracle for the IVFPQ recall grid: the _ivfpq_topk_sql
-    coarse-assignment CTEs shared once, BOTH m's code columns in one
-    codes CTE, the per-m ADC scored once over the max-nprobe probe set
-    (probe_rank carried), and each (m, nprobe) leg reduced to counts
-    against the brute-force truth — the same one-pass discipline as
-    the Spark plan, in SQL.  With ``sampled`` the whole audit runs over
-    the deterministic bounded sub-corpus (:func:`_audit_sample_cte`) —
-    s is recomputed from COUNT(*) so membership matches the Spark
-    side's footer-count modulus bit-for-bit."""
-    from .operators.similarity import pq_det_codebooks
-
-    nprobes, ms = _IVFPQ_AUDIT_NPROBES, _IVFPQ_AUDIT_MS
-    cdot = ("list_sum(list_transform(list_zip(CAST({v} AS DOUBLE[]), {c}), t -> t[1] * t[2]))")
-    cbs = {m: pq_det_codebooks(m=m, k=n_codes, d_sub=dim // m) for m in ms}
-    code_cols = ", ".join(
-        f"{_pq_code_sql('embedding', s, cbs[m], n_codes, dim // m)} AS c{m}_{s}"
-        for m in ms
-        for s in range(m)
-    )
-    scored_ctes = ",\n".join(
-        f"""sc{m} AS MATERIALIZED (
-          SELECT qa.query_id, codes.cand_id, qa.probe_rank,
-                 ROUND({_pq_adc_sql('qv', f'c{m}_', cbs[m], m, n_codes, dim // m)}, 6) AS adc
-          FROM qassign qa JOIN codes
-            ON qa.list_label = codes.list_label AND codes.cand_id <> qa.query_id
-        )"""
-        for m in ms
-    )
-    ap_ctes = ",\n".join(
-        f"""ap{m}_{n} AS MATERIALIZED (
-          SELECT query_id, cand_id FROM (
-            SELECT query_id, cand_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc, cand_id) AS rk
-            FROM sc{m} WHERE probe_rank <= {n}
-          ) WHERE rk <= {k_nn})"""
-        for m in ms
-        for n in nprobes
-    )
-    legs = "\nUNION ALL\n".join(
-        f"""SELECT CAST({m} AS BIGINT) AS m, CAST({n} AS BIGINT) AS nprobe,
-           (SELECT COUNT(*) FROM truth) AS n_truth,
-           (SELECT COUNT(*) FROM ap{m}_{n}) AS n_approx,
-           (SELECT COUNT(*) FROM truth t JOIN ap{m}_{n} a
-             ON t.query_id = a.query_id AND t.cand_id = a.cand_id) AS n_hit,
-           ROUND((SELECT COUNT(*) FROM truth t JOIN ap{m}_{n} a
-                   ON t.query_id = a.query_id AND t.cand_id = a.cand_id)
-                 / (SELECT COUNT(*) FROM truth)::DOUBLE, 6) AS recall_at_5"""
-        for m in ms
-        for n in nprobes
-    )
-    src = "emb_s" if sampled else "embeddings"
-    sample_cte = (
-        f"emb_s AS MATERIALIZED ({_audit_sample_cte()}),\n        "
-        if sampled
-        else ""
-    )
-    return f"""
-        WITH {sample_cte}cent AS (
-          SELECT list_label, list(c ORDER BY pos) AS cvec
-          FROM (
-            SELECT CAST(label AS INT) AS list_label, i AS pos,
-                   ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 8) AS c
-            FROM {src}, (SELECT unnest(range(1, {dim + 1})) AS i) t
-            GROUP BY 1, 2
-          ) GROUP BY list_label
-        ),
-        centn AS (
-          SELECT list_label, cvec,
-                 sqrt(list_sum(list_transform(cvec, x -> x * x))) AS cnorm2
-          FROM cent
-        ),
-        cand AS (
-          SELECT vec_id AS cand_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM {src}
-        ),
-        cassign AS (
-          SELECT cand_id, embedding, list_label FROM (
-            SELECT c.cand_id, c.embedding, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY c.cand_id
-                     ORDER BY ROUND({cdot.format(v='c.embedding', c='n.cvec')} / (c.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM cand c CROSS JOIN centn n
-          ) WHERE crn = 1
-        ),
-        codes AS MATERIALIZED (
-          SELECT cand_id, list_label, {code_cols} FROM cassign
-        ),
-        q AS (
-          SELECT vec_id AS query_id, embedding, {_norm_sql('embedding', dim)} AS nrm
-          FROM {src} WHERE vec_id % 50 = 0 AND vec_id < 4000
-        ),
-        qassign AS MATERIALIZED (
-          SELECT query_id, embedding AS qv, list_label, crn AS probe_rank FROM (
-            SELECT qq.query_id, qq.embedding, qq.nrm, n.list_label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY qq.query_id
-                     ORDER BY ROUND({cdot.format(v='qq.embedding', c='n.cvec')} / (qq.nrm * n.cnorm2), 6) DESC,
-                              n.list_label
-                   ) AS crn
-            FROM q qq CROSS JOIN centn n
-          ) WHERE crn <= {max(nprobes)}
-        ),
-        truth AS MATERIALIZED (SELECT query_id, cand_id FROM ({_cosine_topk_sql(src=src)}) t),
-        {scored_ctes},
-        {ap_ctes}
-        {legs}
-    """
-
-
-ORACLES["emb_ivfpq_recall_report"] = _ivfpq_recall_report_sql()
-
-
-def q_emb_ivfpq_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVFPQ recall grid on a DETERMINISTIC BOUNDED sub-corpus —
-    the scale form of emb_ivfpq_recall_report (round-9 verdict #3: the
-    exact audit's brute-force truth leg is ∝N·|panel| by definition,
-    e≈0.94 through sf3, which is exactly the cost a 100 TB deployment
-    must not pay per audit).  The sub-corpus is ``vec_id % s == 0``
-    with s = ceil(n / {_AUDIT_SAMPLE_TARGET}) from parquet FOOTER
-    metadata: at every driver/bench SF (n ≤ 2,000) s = 1, so this
-    relation IS the exact audit and the driver hash covers the full
-    mechanism; beyond sf1 the audit corpus — truth leg included — is
-    capped at ~20k vectors, so the row's cost stops growing with the
-    corpus (measured in SCALE.md).  Sampling is the statistically
-    honest posture: recall@5 is an estimate over a query panel either
-    way, and a bounded random-but-deterministic sub-corpus estimates
-    the same curve at O(target²) instead of O(N·|panel|) — with the
-    estimate itself hash-checked, because the DuckDB oracle recomputes
-    s from COUNT(*) and audits the identical sub-corpus."""
-    s = _audit_sample_modulus(sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % s == 0)
-    return _ivfpq_recall_grid_frame(
-        emb, n_rows=table_row_count(sf_dir, "embeddings") // s
-    )
-
-
-ORACLES["emb_ivfpq_recall_sampled"] = _ivfpq_recall_report_sql(sampled=True)
-
-
-def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) over the embeddings table
-    (operators.similarity.semdedup_keep): cluster-bucketed semantic
-    near-dup removal — assign each vector to its nearest per-label-mean
-    centroid (zero-shuffle literal projection), pair within clusters
-    only (salted self-join), keep one representative per near-dup
-    group via the dominated-pair rule.  Complements dedup_emb_cosine:
-    hyperplane-LSH buckets by random projection; SemDeDup buckets by
-    learned cluster structure, which is the published recipe for
-    web-scale pretraining-data pruning."""
-    from .operators.similarity import semdedup_keep
-
-    return semdedup_keep(_t(spark, sf_dir, "embeddings"), threshold=0.3)
-
-
-_SEMDEDUP_CDOT = (
-    "list_sum(list_transform(list_zip(CAST({v} AS DOUBLE[]), {c}),"
-    " t -> t[1] * t[2]))"
-)
-
-ORACLES["dedup_semdedup"] = f"""
-    WITH cent AS (
-      SELECT list_label, list(c ORDER BY pos) AS cvec
-      FROM (
-        SELECT CAST(label AS INT) AS list_label, i AS pos,
-               ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 8) AS c
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY 1, 2
-      ) GROUP BY list_label
-    ),
-    centn AS (
-      SELECT list_label, cvec,
-             sqrt(list_sum(list_transform(cvec, x -> x * x))) AS cnorm2
-      FROM cent
-    ),
-    v AS (
-      SELECT vec_id AS vid, embedding, {_norm_sql('embedding')} AS nrm
-      FROM embeddings
-    ),
-    assigned AS (
-      SELECT vid, embedding, nrm, list_label FROM (
-        SELECT v.vid, v.embedding, v.nrm, n.list_label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY v.vid
-                 ORDER BY ROUND({_SEMDEDUP_CDOT.format(v='v.embedding', c='n.cvec')}
-                                / (v.nrm * n.cnorm2), 6) DESC,
-                          n.list_label
-               ) AS crn
-        FROM v CROSS JOIN centn n
-      ) WHERE crn = 1
-    ),
-    removed AS (
-      SELECT DISTINCT b.vid AS rm_id
-      FROM assigned a JOIN assigned b
-        ON a.list_label = b.list_label AND a.vid < b.vid
-      WHERE ROUND({_dot_sql('a.embedding', 'b.embedding')}
-                  / (a.nrm * b.nrm), 8) >= 0.3
-    )
-    SELECT a.vid AS vec_id, CAST(a.list_label AS INT) AS list_label,
-           r.rm_id IS NULL AS keep
-    FROM assigned a LEFT JOIN removed r ON a.vid = r.rm_id
-"""
-
-
-def q_doc_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The removal stage after doc_dup_span_fraction measures
-    (operators.curation.duplicate_span_removal): every token inside a
-    corpus-duplicated 8-gram is dropped and the SURVIVING TEXT ITSELF
-    is hash-checked (clean_md5 of the space-joined kept tokens), so
-    the oracle verifies the reconstruction byte-for-byte, not just the
-    counts.  Span-coverage removal (both copies go) — the
-    order-free variant that needs no global document precedence at
-    100 TB; document text never shuffles, only (doc_id, start)
-    pairs."""
-    from .operators.curation import duplicate_span_removal
-
-    return duplicate_span_removal(_t(spark, sf_dir, "documents"), n=8)
-
-
-ORACLES["doc_dup_span_removal"] = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS w FROM documents),
-    posgrams AS (
-      SELECT doc_id, i AS start,
-             ('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15))::BIGINT AS gram
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) t
-      WHERE len(w) >= 8),
-    dup AS (
-      SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM posgrams)
-      GROUP BY gram HAVING COUNT(*) >= 2),
-    covered AS (
-      SELECT DISTINCT doc_id, start FROM posgrams JOIN dup USING (gram)),
-    positions AS (
-      SELECT doc_id, j, w[j] AS tok
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) + 1)) AS j) t),
-    kept AS (
-      SELECT p.doc_id, p.j, p.tok
-      FROM positions p
-      WHERE NOT EXISTS (
-        SELECT 1 FROM covered c
-        WHERE c.doc_id = p.doc_id AND p.j BETWEEN c.start AND c.start + 7)),
-    agg AS (
-      SELECT doc_id, COUNT(*) AS n_kept,
-             string_agg(tok, ' ' ORDER BY j) AS txt
-      FROM kept GROUP BY doc_id)
-    SELECT t.doc_id,
-           CAST(len(t.w) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept,
-           md5(COALESCE(a.txt, '')) AS clean_md5
-    FROM toks t LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_doc_dup_span_maximal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lee et al. 2022 exact-substring dedup
-    (operators.curation.duplicate_span_removal_maximal): duplicate
-    8-grams chained into MAXIMAL spans by a per-document
-    gaps-and-islands merge, spans ≥ 50 tokens removed, the surviving
-    text byte-exactly fingerprinted.  The published removal standard
-    next to doc_dup_span_removal's coverage variant: sub-floor
-    duplication stays in the document.  Span lengths in the synthetic
-    corpus straddle the 50-token floor (11-93 tokens at sf0.01), so
-    both the keep and the remove branches are hash-checked."""
-    from .operators.curation import duplicate_span_removal_maximal
-
-    return duplicate_span_removal_maximal(
-        _t(spark, sf_dir, "documents"), n=8, min_tokens=50
-    )
-
-
-ORACLES["doc_dup_span_maximal"] = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS w FROM documents),
-    posgrams AS (
-      SELECT doc_id, i AS start,
-             ('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15))::BIGINT AS gram
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) t
-      WHERE len(w) >= 8),
-    dup AS (
-      SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM posgrams)
-      GROUP BY gram HAVING COUNT(*) >= 2),
-    iv AS (
-      SELECT DISTINCT doc_id, start, start + 7 AS e
-      FROM posgrams JOIN dup USING (gram)),
-    marked AS (
-      SELECT doc_id, start, e,
-             CASE WHEN start > COALESCE(MAX(e) OVER (
-                    PARTITION BY doc_id ORDER BY start
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  -1000000) + 1 THEN 1 ELSE 0 END AS ni
-      FROM iv),
-    isl AS (
-      SELECT doc_id, start, e,
-             SUM(ni) OVER (PARTITION BY doc_id ORDER BY start) AS island
-      FROM marked),
-    spans AS (
-      SELECT doc_id, MIN(start) AS s, MAX(e) AS e2
-      FROM isl GROUP BY doc_id, island
-      HAVING MAX(e) - MIN(start) + 1 >= 50),
-    positions AS (
-      SELECT doc_id, j, w[j] AS tok
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w) + 1)) AS j) t),
-    kept AS (
-      SELECT p.doc_id, p.j, p.tok
-      FROM positions p
-      WHERE NOT EXISTS (
-        SELECT 1 FROM spans c
-        WHERE c.doc_id = p.doc_id AND p.j BETWEEN c.s AND c.e2)),
-    agg AS (
-      SELECT doc_id, COUNT(*) AS n_kept,
-             string_agg(tok, ' ' ORDER BY j) AS txt
-      FROM kept GROUP BY doc_id),
-    nsp AS (SELECT doc_id, COUNT(*) AS n_spans FROM spans GROUP BY doc_id)
-    SELECT t.doc_id,
-           CAST(len(t.w) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(s.n_spans, 0) AS BIGINT) AS n_spans,
-           CAST(len(t.w) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           md5(COALESCE(a.txt, '')) AS clean_md5
-    FROM toks t
-    LEFT JOIN agg a USING (doc_id)
-    LEFT JOIN nsp s USING (doc_id)
-"""
-
-
-def q_pipeline_e2e_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's WHOLE four-stage pipeline as one driver row
-    (JobRunner.scala:37-73): parse-raw-data (S2 TSV) → extract-features
-    (EP2 rank+pivot) → build-models (M1-M4, per-site RF) → score-items
-    (EP3 + the S10 coalesce(1) bzip2 CSV sink), chained through
-    ``cli.run``'s stage gating and artifact directories — then the
-    predictions CSV is read BACK and hashed.
-
-    The raw TSV derives from the long table with a deterministic
-    missingness rule — (site, id) pairs where ``id % 11`` equals the
-    site's index are withheld — so the reference's score-the-missing
-    semantics (ScorePredictor.scala:22-34, exists=False) produce a
-    non-empty prediction set at EVERY scale factor, unlike the natural
-    TPC-H mapping whose sf0.01 exists-matrix is dense (round-2 verdict
-    #7 lesson).  Hash-checked skeleton: the scored id set and each
-    id's missing-site count are exactly the withheld pairs, which the
-    oracle recomputes from lineitem; the RF score values themselves
-    ride under a finiteness flag.  This is the one catalog entry that
-    exercises stage gating, the run-dir artifact layout, model
-    save/load paths and the CSV sink TOGETHER, not as pieces."""
-    from .cli import Params, run as cli_run
-
-    # addressable scratch tree, cleared per invocation (ADVICE r6 #3:
-    # mkdtemp left a full artifact tree in /tmp per bench/parity run)
-    d = _run_dir("pipeline_e2e", sf_dir)
-    lt = long_table(spark, sf_dir)
-    site_idx = (
-        F.when(F.col("site") == SITES[0], 0)
-        .when(F.col("site") == SITES[1], 1)
-        .otherwise(2)
-    )
-    raw = lt.filter(
-        F.pmod(F.col("id").cast("long"), F.lit(11)) != site_idx
-    ).select(
-        "id",
-        "site",
-        F.concat(F.lit("t"), "id").alias("title"),
-        "pageviews",
-    )
-    raw_path = f"{d}/raw"
-    raw.write.option("sep", "\t").option("header", True).csv(raw_path)
-    artifacts = cli_run(
-        spark,
-        Params(
-            parse_raw_data=True,
-            extract_features=True,
-            build_models=True,
-            score_items=True,
-            raw_data=raw_path,
-            output_dir=f"{d}/out",
-            seed=42,
-        ),
-    )
-    preds = (
-        spark.read.option("header", True)
-        .option("inferSchema", True)
-        .csv(artifacts["predictions"])
-    )
-    score_cols = [c for c in preds.columns if c != "id"]
-    from functools import reduce as _reduce
-
-    n_scored = _reduce(
-        lambda a, b: a + b,
-        [F.col(c).isNotNull().cast("int") for c in score_cols],
-    )
-    finite = _reduce(
-        lambda a, b: a & b,
-        [F.col(c).isNull() | ~F.isnan(F.col(c)) for c in score_cols],
-    )
-    return preds.select(
-        F.col("id").cast("long").alias("id"),
-        n_scored.cast("long").alias("n_sites_scored"),
-        finite.alias("scores_finite"),
-    )
-
-
-ORACLES["pipeline_e2e_score"] = f"""
-    WITH lng AS ({_LONG_SQL}),
-    kept AS (
-      SELECT site, CAST(id AS BIGINT) AS idn FROM lng
-      WHERE CAST(id AS BIGINT) % 11 !=
-            CASE site WHEN '{SITES[0]}' THEN 0
-                      WHEN '{SITES[1]}' THEN 1 ELSE 2 END),
-    ids AS (SELECT DISTINCT idn FROM kept),
-    sites AS (SELECT DISTINCT site FROM kept),
-    missing AS (
-      SELECT s.site, i.idn
-      FROM ids i CROSS JOIN sites s
-      WHERE NOT EXISTS (SELECT 1 FROM kept k
-                        WHERE k.site = s.site AND k.idn = i.idn))
-    SELECT idn AS id, CAST(COUNT(*) AS BIGINT) AS n_sites_scored,
-           TRUE AS scores_finite
-    FROM missing GROUP BY idn
-"""
-
-
-def q_events_orders_cogroup(
-    spark: SparkSession, sf_dir: str, _n_shards: int = 64
-) -> DataFrame:
-    """``groupBy().cogroup().applyInPandas`` — the 'two streams per
-    entity' custom-logic shape (events and orders co-partitioned per
-    user, each key's two Arrow batches handed to ONE pandas function).
-    Per user: counts on both sides plus each side's median in EXACT
-    integer form — medians are doubled so the even-count midpoint stays
-    integral (fp4 event values, order cents are integers; numpy's
-    midpoint and DuckDB's quantile_cont(0.5) interpolate identically
-    on exact-integer doubles < 2⁵³, and ×2 removes the only fractional
-    case).  Keys present on one side only keep the other side's stats
-    NULL/0 — cogroup's full-outer semantics, mirrored by the oracle's
-    FULL JOIN of the two group-bys.
-
-    Scale discipline — the part that makes applyInPandas viable at
-    100 TB: the cogroup KEY is a 64-way SHARD of the entity key, not
-    the entity itself.  Grouping on the raw user_id would invoke the
-    Python function once per user (~1.4 ms of interpreter overhead
-    each — measured 21 s for 15k users at sf0.1); sharding invokes it
-    64× and computes ALL of a shard's per-user stats with one
-    vectorized pandas groupby inside (~1.6 s, 13×).  Output and oracle
-    are identical — the shard is purely an execution key
-    (``_n_shards`` is exposed ONLY so the property test can pin that
-    claim: shard count ∈ {1, 7, 64} must produce the identical
-    relation)."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.round(F.col("value") * 10000).cast("long").alias("v_fp")
-    )
-    od = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    n_shards = _n_shards
-    ev = ev.withColumn("shard", F.pmod("user_id", F.lit(n_shards)))
-    od = od.withColumn("shard", F.pmod("user_id", F.lit(n_shards)))
-
-    def per_shard(key, ev_pdf, od_pdf):
-        import pandas as pd
-
-        def side(pdf, val_col, n_name, med_name):
-            if not len(pdf):
-                return pd.DataFrame(
-                    columns=["user_id", n_name, med_name]
-                ).astype({"user_id": "int64", n_name: "int64"})
-            g = pdf.groupby("user_id")[val_col]
-            out = g.agg(n="size", med="median").reset_index()
-            # exact-integer medians: double the midpoint (values are
-            # integers < 2^53, so the .5 cases become exact integers).
-            # Nullable Int64: a user whose values are all NULL medians
-            # to NaN (size still counts the rows, matching the
-            # oracle's COUNT(*) vs quantile_cont NULL split) and must
-            # surface as SQL NULL, not crash the int cast.
-            out[med_name] = (out["med"] * 2).round().astype("Int64")
-            return out.rename(columns={"n": n_name})[
-                ["user_id", n_name, med_name]
-            ]
-
-        e = side(ev_pdf, "v_fp", "n_events", "med2_event_fp4")
-        o = side(od_pdf, "cents", "n_orders", "med2_order_cents")
-        m = e.merge(o, on="user_id", how="outer")
-        m["n_events"] = m["n_events"].fillna(0).astype("int64")
-        m["n_orders"] = m["n_orders"].fillna(0).astype("int64")
-        return m[
-            ["user_id", "n_events", "n_orders",
-             "med2_event_fp4", "med2_order_cents"]
-        ]
-
-    return (
-        ev.groupBy("shard")
-        .cogroup(od.groupBy("shard"))
-        .applyInPandas(
-            per_shard,
-            "user_id long, n_events long, n_orders long, "
-            "med2_event_fp4 long, med2_order_cents long",
-        )
-    )
-
-
-ORACLES["events_orders_cogroup"] = """
-    WITH e AS (
-      SELECT user_id, COUNT(*) AS n_events,
-             CAST(2 * quantile_cont(CAST(ROUND(value * 10000) AS BIGINT), 0.5)
-                  AS BIGINT) AS med2_event_fp4
-      FROM events GROUP BY user_id),
-    o AS (
-      SELECT o_custkey AS user_id, COUNT(*) AS n_orders,
-             CAST(2 * quantile_cont(CAST(ROUND(o_totalprice * 100) AS BIGINT),
-                                    0.5) AS BIGINT) AS med2_order_cents
-      FROM orders GROUP BY o_custkey)
-    SELECT COALESCE(e.user_id, o.user_id) AS user_id,
-           CAST(COALESCE(e.n_events, 0) AS BIGINT) AS n_events,
-           CAST(COALESCE(o.n_orders, 0) AS BIGINT) AS n_orders,
-           e.med2_event_fp4,
-           o.med2_order_cents
-    FROM e FULL JOIN o ON e.user_id = o.user_id
-"""
-
-
-def q_docs_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution across parquet batches under the driver's hash
-    check — the lake-ingestion reality that later batches carry new
-    columns: batch 1 writes (doc_id, lang), batch 2 adds n_chars, and
-    the unified read uses ``mergeSchema`` so batch-1 rows surface the
-    new column as NULL.  The rollup counts rows with/without the
-    evolved column per language — any deviation in merge semantics
-    (column order, NULL fill, type widening) breaks the hash.  At
-    100 TB mergeSchema costs a footer read per FILE, so production
-    pins the evolved schema in a catalog/metastore instead; the READ
-    semantics verified here are identical.  Batch routing is
-    doc_id % 2 — deterministic, no data dependency."""
-    import tempfile
-
-    docs = _t(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="schema_evo_")
-    docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.parquet(
-        f"{d}/batch=1"
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "lang", "n_chars"
-    ).write.parquet(f"{d}/batch=2")
-    back = spark.read.option("mergeSchema", "true").parquet(d)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_rows"),
-        F.count("n_chars").alias("n_evolved"),
-        F.sum(F.when(F.col("n_chars").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_legacy"),
-        F.coalesce(F.sum("n_chars"), F.lit(0)).cast("long").alias("sum_chars"),
-    )
-
-
-ORACLES["docs_schema_evolution"] = """
-    SELECT lang,
-           COUNT(*) AS n_rows,
-           CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_evolved,
-           CAST(SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_legacy,
-           CAST(COALESCE(SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars END), 0)
-                AS BIGINT) AS sum_chars
-    FROM documents
-    GROUP BY lang
-"""
-
-
-def q_corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based language rebalancing (the mC4 / XLM-R
-    multilingual sampling recipe, Conneau et al. 2020): head languages
-    are downsampled toward p_l^α proportions so low-resource languages
-    keep presence in the mix.  α = 0.5 deliberately — the weight is
-    then ``sqrt(n_l)``, and IEEE sqrt (and the following divide) are
-    correctly-rounded on every engine, so the per-language keep rate
-    in exact ppm (``floor(10⁶·sqrt(n_l)/max_l sqrt(n_l))``) is
-    bit-identical cross-engine where a pow(x, 0.7) could diverge in
-    the last ulp and flip a sampling boundary.  Keep decision is the
-    deterministic corpus hash mod 10⁶ against that rate — stable under
-    corpus growth like every sampler here.  The |langs|-row rate table
-    is domain-bounded → broadcast; the corpus is never shuffled."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    counts = docs.groupBy("lang").agg(F.count("*").alias("n_l"))
-    smax = counts.agg(F.max(F.sqrt("n_l")).alias("smax"))
-    rates = (
-        counts.crossJoin(F.broadcast(smax))
-        .select(
-            "lang",
-            "n_l",
-            F.floor(F.lit(1000000.0) * F.sqrt("n_l") / F.col("smax"))
-            .cast("long")
-            .alias("keep_ppm"),
-        )
-    )
-    from .operators.text import cross_engine_hash
-
-    h = cross_engine_hash(F.col("doc_id").cast("string"), seed="temp")
-    return (
-        docs.join(F.broadcast(rates), "lang")
-        .filter(F.pmod(h, F.lit(1000000)) < F.col("keep_ppm"))
-        .select("doc_id", "lang", "n_l", "keep_ppm")
-    )
-
-
-ORACLES["corpus_temperature_sample"] = f"""
-    WITH c AS (SELECT lang, COUNT(*) AS n_l FROM documents GROUP BY lang),
-    m AS (SELECT MAX(sqrt(n_l)) AS smax FROM c),
-    r AS (
-      SELECT lang, n_l,
-             CAST(FLOOR(1000000.0 * sqrt(n_l) / smax) AS BIGINT) AS keep_ppm
-      FROM c, m)
-    SELECT d.doc_id, d.lang, r.n_l, r.keep_ppm
-    FROM documents d JOIN r USING (lang)
-    WHERE {_hash_sql("CAST(doc_id AS VARCHAR)", seed="temp")} % 1000000
-          < r.keep_ppm
-"""
-
-
-def q_docs_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction (sources.writers.compact_parquet — the
-    OPTIMIZE-style maintenance pass) under the driver's hash check: the
-    documents projection is deliberately fragmented into 48 files (the
-    streaming-sink pathology), compacted to byte-sized targets via the
-    staged-rename swap, and read back — the per-language rollup proves
-    the rewrite lost nothing and ``compacted`` pins the file-count
-    reduction.  At 100 TB this is the scheduled job that keeps scan
-    listing/footer cost flat; coalesce-based, so the rewrite itself
-    never shuffles."""
-    import tempfile
-
-    from .sources.writers import compact_parquet
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    d = tempfile.mkdtemp(prefix="compaction_") + "/docs"
-    docs.repartition(48).write.parquet(d)
-    stats = compact_parquet(spark, d, target_file_mb=128)
-    return (
-        spark.read.parquet(d)
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-        .withColumn(
-            "compacted", F.lit(stats["files_after"] < stats["files_before"])
-        )
-    )
-
-
-ORACLES["docs_compaction"] = """
-    SELECT lang, COUNT(*) AS n_rows,
-           CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-           TRUE AS compacted
-    FROM documents GROUP BY lang
-"""
-
-
-def q_orders_capped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer running balance CLAMPED at a credit cap after every
-    order (``LEAST(cap, bal + price)``; credit limits, capacity-clamped
-    inventory).  The clamp makes the fold non-associative, so no window
-    aggregate or two-pass partial-sum trick can express it: the chain
-    is folded in order, per customer, inside one grouped row (see
-    :func:`capped_balance_walk`).  Output is the balance checkpoint
-    after every chunk of 8 orders.  All math is integer cents, so the
-    chain is bit-exact cross-engine; the DuckDB oracle computes the
-    same checkpoints with a recursive CTE and ``list_reduce``.  (The
-    catalog's Spark ``WITH RECURSIVE`` row is ``orders_month_spine``.)"""
-    # the window partitions by the renamed key, so the walk's
-    # GROUP BY custkey reuses its exchange
-    ord_df = spark.sql(
-        """
-        SELECT custkey, cents,
-               ROW_NUMBER() OVER (PARTITION BY custkey
-                                  ORDER BY o_orderdate, o_orderkey) AS rn
-        FROM (SELECT o_custkey AS custkey,
-                     CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-                     o_orderdate, o_orderkey
-              FROM {orders})
-        """,
-        orders=read_table(spark, sf_dir, "orders"),
-    )
-    return capped_balance_walk(spark, ord_df, cap=50000000, chunk_size=8)
-
-
-def capped_balance_walk(spark: SparkSession, ord_df: DataFrame,
-                        cap: int, chunk_size: int = 8) -> DataFrame:
-    """The clamp fold behind q_orders_capped_balance, factored so
-    property tests can drive it with generated chains.  ``ord_df`` is
-    (custkey, cents, rn) with rn 1-based per custkey; returns
-    (custkey, chunk, bal_cents) — the clamped balance checkpoint after
-    each ``chunk_size``-order chunk.
-
-    One grouped pass, no eager job: per customer, the rn-sorted cents
-    are sliced into chunks, and an outer ``aggregate`` over the chunks
-    carries the balance through the inner per-order clamp fold while
-    appending each chunk's closing balance; ``posexplode`` turns the
-    list into rows.  The outer fold copies its output array once per
-    chunk, so its cost is quadratic in chunks per customer — fine for
-    order chains of tens of orders (TPC-H), where the recursive CTE it
-    replaces paid one Spark job per chunk level instead.  A customer's
-    whole chain must fit in one row."""
-    return spark.sql(
-        """
-        SELECT custkey, CAST(chunk AS BIGINT) AS chunk, bal_cents
-        FROM (
-          SELECT custkey,
-                 posexplode(aggregate(
-                   transform(sequence(0, (size(cents) - 1) DIV {k}),
-                             i -> slice(cents, i * {k} + 1, {k})),
-                   named_struct('bal', CAST(0 AS BIGINT),
-                                'out', CAST(array() AS ARRAY<BIGINT>)),
-                   (acc, a) -> aggregate(
-                     a, acc.bal,
-                     (bal, x) -> LEAST(CAST({cap} AS BIGINT), bal + x),
-                     bal -> named_struct('bal', bal,
-                                         'out', concat(acc.out, array(bal))))
-                 ).out) AS (chunk, bal_cents)
-          FROM (SELECT custkey,
-                       transform(array_sort(collect_list(struct(rn, cents))),
-                                 x -> x.cents) AS cents
-                FROM {ord} GROUP BY custkey)
-        )
-        """,
-        ord=ord_df, k=int(chunk_size), cap=int(cap),
-    )
-
-
-ORACLES["orders_capped_balance"] = """
-    WITH RECURSIVE ord AS (
-      SELECT o_custkey AS custkey,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-             ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                ORDER BY o_orderdate, o_orderkey) AS rn
-      FROM orders
-    ),
-    chunks AS (
-      SELECT custkey, CAST((rn - 1) // 8 AS BIGINT) AS chunk,
-             list(cents ORDER BY rn) AS cents_arr
-      FROM ord GROUP BY custkey, (rn - 1) // 8
-    ),
-    walk(custkey, chunk, bal_cents) AS (
-      SELECT custkey, chunk,
-             list_reduce(list_prepend(CAST(0 AS BIGINT), cents_arr),
-                         (acc, x) -> LEAST(CAST(50000000 AS BIGINT), acc + x))
-      FROM chunks WHERE chunk = 0
-      UNION ALL
-      SELECT c.custkey, c.chunk,
-             list_reduce(list_prepend(w.bal_cents, c.cents_arr),
-                         (acc, x) -> LEAST(CAST(50000000 AS BIGINT), acc + x))
-      FROM walk w JOIN chunks c
-        ON c.custkey = w.custkey AND c.chunk = w.chunk + 1
-    )
-    SELECT custkey, chunk, bal_cents FROM walk
-"""
-
-
-ORACLES["emb_ivf_recall_report"] = (
-    "WITH truth AS (SELECT query_id, cand_id FROM ("
-    + _cosine_topk_sql()
-    + ") t),\n"
-    + ",\n".join(
-        f"ap{n} AS (SELECT query_id, cand_id FROM ({_ivf_topk_sql(nprobe=n)}) a{n})"
-        for n in _IVF_AUDIT_NPROBES
-    )
-    + "\n"
-    + "\nUNION ALL\n".join(_ivf_recall_leg_sql(n) for n in _IVF_AUDIT_NPROBES)
-)
-
-
-_DSIR_BUCKETS = 1024
-_DSIR_K = 100
-
-
-def q_corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance selection (operators.curation.dsir_select; Xie
-    et al. 2023): hashed-bigram log-likelihood-ratio scoring of the raw
-    corpus against the target distribution (here the ``lang = 'en'``
-    rows stand in for the curated target set), top-100 kept.  One
-    corpus pass builds BOTH feature distributions (conditional sum in
-    one n_buckets-key aggregation); the ≤1024-row log-ratio table is
-    broadcast to the scoring scan; top-k is TakeOrderedAndProject.
-
-    No counterpart in the reference (its selection is site-config
-    driven, JobRunner.scala:31-44); this is the LLM-pipeline
-    data-selection op the published pretraining recipes use."""
-    from .operators.curation import dsir_select
-    from .sources.readers import collapse_dial
-
-    return dsir_select(
-        _t(spark, sf_dir, "documents"),
-        target=F.col("lang") == "en",
-        n_buckets=_DSIR_BUCKETS,
-        k=_DSIR_K,
-        # footer row count, no Spark job — above the shared collapse
-        # dial both DSIR passes build the gram stream once per DISTINCT
-        # text (round-11 verdict #6); driver/bench SFs keep the direct
-        # two-pass plan the hash gate covers
-        collapse=collapse_dial(spark, sf_dir),
-    )
-
-
-ORACLES["corpus_dsir_select"] = f"""
-    WITH toks AS (
-      SELECT doc_id, source, lang, {_TOKS} AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, source, lang,
-             {_hash_sql("w[i] || ' ' || w[i+1]", seed="dsir")}
-               % {_DSIR_BUCKETS} AS bucket
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w))) AS i) t
-      WHERE len(w) >= 2
-    ),
-    counts AS (
-      SELECT bucket, COUNT(*) AS c_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS c_tgt
-      FROM grams GROUP BY bucket
-    ),
-    tot AS (
-      SELECT SUM(c_raw) AS t_raw, SUM(c_tgt) AS t_tgt FROM counts
-    ),
-    lr AS (
-      SELECT bucket,
-             ln(c_tgt + 1) - ln(t_tgt + {_DSIR_BUCKETS})
-             - ln(c_raw + 1) + ln(t_raw + {_DSIR_BUCKETS}) AS lr
-      FROM counts, tot
-    ),
-    scores AS (
-      SELECT g.doc_id, g.source, g.lang, ROUND(SUM(l.lr), 6) AS score
-      FROM grams g JOIN lr l USING (bucket)
-      GROUP BY 1, 2, 3
-    )
-    SELECT doc_id, source, lang, score
-    FROM scores
-    ORDER BY score DESC, doc_id
-    LIMIT {_DSIR_K}
-"""
-
-
-def q_corpus_shard_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-shard unigram Jensen-Shannon divergence vs the global corpus
-    (operators.curation.shard_divergence) over the SAME deterministic
-    md5 shard assignment as corpus_shard_manifest — the mixing
-    diagnostic for a training shard layout.  The absent-token tail of
-    the JSD folds into a closed form, so the plan touches only the
-    (shard, token) pairs that exist: ONE corpus aggregation bounded to
-    |shards|×|vocab| rows, three windows over that bounded relation
-    (including the unpartitioned grand-total pass over bytes), and a
-    min_by argmax for the top token inside the per-shard aggregation —
-    a single subtree, nothing re-reads the corpus."""
-    from .operators.curation import shard_divergence
-    from .operators.text import cross_engine_hash
-
-    docs = _t(spark, sf_dir, "documents")
-    shard = (
-        cross_engine_hash(
-            F.concat(F.lit("shuffle:"), F.col("doc_id").cast("string"))
-        )
-        % _MANIFEST_SHARDS
-    )
-    return shard_divergence(docs.withColumn("shard", shard))
-
-
-ORACLES["corpus_shard_divergence"] = f"""
-    WITH docs_s AS (
-      SELECT ('0x' || substr(md5(concat('shuffle:', CAST(doc_id AS VARCHAR))), 1, 8))::BIGINT
-               % {_MANIFEST_SHARDS} AS shard,
-             {_TOKS} AS w
-      FROM documents
-    ),
-    tok AS (
-      SELECT shard, unnest(w) AS tok FROM docs_s
-    ),
-    st AS (
-      SELECT shard, tok, COUNT(*) AS c_st FROM tok GROUP BY shard, tok
-    ),
-    enriched AS (
-      SELECT shard, tok, c_st,
-             SUM(c_st) OVER (PARTITION BY tok) AS c_g,
-             SUM(c_st) OVER (PARTITION BY shard) AS t_s,
-             SUM(c_st) OVER () AS g_tot
-      FROM st
-    ),
-    terms AS (
-      SELECT shard, tok, t_s,
-             0.5 * (c_st / t_s) * ln((c_st / t_s) / ((c_st / t_s + c_g / g_tot) / 2))
-             + 0.5 * (c_g / g_tot) * ln((c_g / g_tot) / ((c_st / t_s + c_g / g_tot) / 2))
-               AS contrib,
-             c_g / g_tot AS q_present,
-             ROUND((c_st / t_s) / (c_g / g_tot), 6) AS over_ratio
-      FROM enriched
-    ),
-    top_tok AS (
-      SELECT shard, tok AS top_token FROM (
-        SELECT shard, tok,
-               ROW_NUMBER() OVER (
-                 PARTITION BY shard ORDER BY over_ratio DESC, tok
-               ) AS rn
-        FROM terms
-      ) WHERE rn = 1
-    ),
-    per_shard AS (
-      SELECT shard, MAX(t_s) AS n_tokens,
-             ROUND(SUM(contrib) + 0.5 * ln(2) * (1 - SUM(q_present)), 6)
-               AS js_divergence
-      FROM terms GROUP BY shard
-    ),
-    n_docs AS (
-      SELECT shard, COUNT(*) AS n_docs FROM docs_s GROUP BY shard
-    )
-    SELECT CAST(p.shard AS BIGINT) AS shard,
-           CAST(d.n_docs AS BIGINT) AS n_docs,
-           CAST(p.n_tokens AS BIGINT) AS n_tokens,
-           p.js_divergence,
-           t.top_token
-    FROM per_shard p
-    JOIN n_docs d ON p.shard = d.shard
-    JOIN top_tok t ON p.shard = t.shard
-"""
-
-
-def q_corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance RESAMPLING (operators.curation.dsir_resample) —
-    the selection step Xie et al. 2023 actually prescribe: sample
-    ``k`` documents without replacement with probability ∝ exp(score)
-    via the Gumbel-top-k trick, instead of the deterministic top-k
-    (which over-concentrates on one mode of the target distribution;
-    ``corpus_dsir_select`` is the ranked twin).  The Gumbel noise is a
-    pure function of the doc id through the cross-engine md5 hash, so
-    the draw is reproducible and the oracle replays it exactly.  Plan:
-    the shared DSIR scoring core (model pass + broadcast-scored pass,
-    collapse-gated like the select twin) plus one noise projection and
-    a TakeOrderedAndProject.
-
-    No counterpart in the reference (JobRunner.scala:31-44 selects by
-    site config); this is the published pretraining-selection recipe."""
-    from .operators.curation import dsir_resample
-    from .sources.readers import collapse_dial
-
-    return dsir_resample(
-        _t(spark, sf_dir, "documents"),
-        target=F.col("lang") == "en",
-        n_buckets=_DSIR_BUCKETS,
-        k=_DSIR_K,
-        collapse=collapse_dial(spark, sf_dir),
-    )
-
-
-ORACLES["corpus_dsir_resample"] = f"""
-    WITH toks AS (
-      SELECT doc_id, source, lang, {_TOKS} AS w FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, source, lang,
-             {_hash_sql("w[i] || ' ' || w[i+1]", seed="dsir")}
-               % {_DSIR_BUCKETS} AS bucket
-      FROM toks, LATERAL (SELECT unnest(range(1, len(w))) AS i) t
-      WHERE len(w) >= 2
-    ),
-    counts AS (
-      SELECT bucket, COUNT(*) AS c_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS c_tgt
-      FROM grams GROUP BY bucket
-    ),
-    tot AS (
-      SELECT SUM(c_raw) AS t_raw, SUM(c_tgt) AS t_tgt FROM counts
-    ),
-    lr AS (
-      SELECT bucket,
-             ln(c_tgt + 1) - ln(t_tgt + {_DSIR_BUCKETS})
-             - ln(c_raw + 1) + ln(t_raw + {_DSIR_BUCKETS}) AS lr
-      FROM counts, tot
-    ),
-    scores AS (
-      SELECT g.doc_id, g.source, g.lang, ROUND(SUM(l.lr), 6) AS score
-      FROM grams g JOIN lr l USING (bucket)
-      GROUP BY 1, 2, 3
-    )
-    SELECT doc_id, source, lang, score,
-           ROUND(score + -ln(-ln(
-             ({_hash_sql("CAST(doc_id AS VARCHAR)", seed="gumbel")} + 0.5)
-               / 4294967296.0)), 6) AS gumbel_key
-    FROM scores
-    ORDER BY gumbel_key DESC, doc_id
-    LIMIT {_DSIR_K}
-"""
-
-
-def q_corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style perplexity bucketing (Wenzek et al. 2020, "CCNet:
-    Extracting High Quality Monolingual Datasets from Web Crawl
-    Data"): per language, order documents by corpus-bigram-LM
-    perplexity and split into head / middle / tail thirds — the
-    curation stage the published pretraining recipes keep head+middle
-    from.  Buckets are RANK-exact, not quantile-interpolated:
-    ``bucket = (3·(rn−1)) div n`` over the ``(ppl, doc_id)``
-    row_number — pure integer arithmetic, so there is no
-    float-threshold boundary for the two engines to disagree on
-    (interpolated tertiles put documents EXACTLY ON the threshold at
-    n ≡ 1 mod 3, where a ulp of libm difference flips the bucket).
-
-    Plan: the doc_bigram_perplexity pipeline (two bounded model
-    aggregations + two equi-joins), a per-language ranking and a
-    broadcast join of the per-language counts.  Below the footer dial
-    the ranking is one per-language window (same partitioned-window
-    shape as the rank_normalized flagship — parallel across
-    languages); ABOVE it (round-12 verdict #3: at 100 TB a single
-    dominant language funnels ~all rows through one window task) the
-    rank goes through ``range_partitioned_row_number`` grouped by
-    lang — the range shuffle keys on (lang, ppl, doc_id), so a
-    dominant language spreads across ppl-ordered partitions instead
-    of one hot reducer, and the per-language counts read the same
-    lazily-checkpointed relation rather than re-evaluating the
-    perplexity pipeline.  Both paths are value-identical (pinned by
-    test_properties.test_ccnet_range_rank_path_identical).  Documents
-    with < 2 tokens have no perplexity and are excluded on both
-    engines."""
-    from .operators.ordering import RANGE_RANK_MIN_ROWS
-    from .queries_analytics import q_doc_bigram_perplexity
-    from .sources.readers import table_row_count
-
-    docs = _t(spark, sf_dir, "documents")
-    per = q_doc_bigram_perplexity(spark, sf_dir)
-    lp = per.join(docs.select("doc_id", "lang"), "doc_id")
-    return _ccnet_bucket_stats(
-        lp,
-        range_rank=table_row_count(sf_dir, "documents")
-        > RANGE_RANK_MIN_ROWS,
-    )
-
-
-def _ccnet_bucket_stats(lp: DataFrame, range_rank: bool) -> DataFrame:
-    """Rank-exact per-language thirds over a ``(doc_id, n_bigrams,
-    ppl, lang)`` relation — the bucketing core of
-    ``q_corpus_ccnet_buckets``, split out so the property suite can
-    pin the two ranking paths identical on the same input."""
-    if range_rank:
-        from .operators.ordering import range_partitioned_row_number
-
-        # one lazy checkpoint feeds BOTH the rank and the counts: the
-        # perplexity lineage behind lp is two model aggregations and
-        # two joins — without this the counts agg re-evaluates it
-        lp = lp.localCheckpoint(eager=False)
-        ranked = range_partitioned_row_number(
-            lp,
-            [F.col("ppl"), F.col("doc_id")],
-            out_col="rn",
-            group_cols=["lang"],
-        )
-    else:
-        w = Window.partitionBy("lang").orderBy("ppl", "doc_id")
-        ranked = lp.withColumn("rn", F.row_number().over(w))
-    counts = lp.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    rk = ranked.join(F.broadcast(counts), "lang").withColumn(
-        "bidx", F.expr("(3 * (rn - 1)) div n")
-    )
-    label = (
-        F.when(F.col("bidx") == 0, "head")
-        .when(F.col("bidx") == 1, "middle")
-        .otherwise("tail")
-    )
-    return rk.groupBy("lang", label.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_bigrams").cast("long").alias("total_bigrams"),
-        F.min("ppl").alias("min_ppl"),
-        F.max("ppl").alias("max_ppl"),
-        F.round(F.avg("ppl"), 4).alias("avg_ppl"),
-    )
-
-
-ORACLES["corpus_ccnet_buckets"] = f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS} AS t FROM documents
-      WHERE len({_TOKS}) >= 2),
-    bg AS (
-      SELECT doc_id, t[g] AS w1, t[g] || ' ' || t[g + 1] AS bg
-      FROM (SELECT doc_id, t,
-                   unnest(generate_series(1, len(t) - 1)) AS g
-            FROM toks)),
-    m12 AS (SELECT bg, COUNT(*) AS c12 FROM bg GROUP BY 1),
-    m1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
-    sc AS (
-      SELECT doc_id, -ln(c12::DOUBLE / c1) AS nll
-      FROM bg JOIN m12 USING (bg) JOIN m1 USING (w1)),
-    ppl AS (
-      SELECT doc_id, COUNT(*) AS n_bigrams,
-             ROUND(EXP(AVG(nll)), 4) AS ppl
-      FROM sc GROUP BY doc_id),
-    lp AS (
-      SELECT d.lang, p.doc_id, p.n_bigrams, p.ppl
-      FROM ppl p JOIN documents d USING (doc_id)),
-    rk AS (
-      SELECT lang, n_bigrams, ppl,
-             (3 * (ROW_NUMBER() OVER (PARTITION BY lang
-                                      ORDER BY ppl, doc_id) - 1))
-               // (COUNT(*) OVER (PARTITION BY lang)) AS bidx
-      FROM lp)
-    SELECT lang,
-           CASE bidx WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-                     ELSE 'tail' END AS bucket,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_bigrams) AS BIGINT) AS total_bigrams,
-           MIN(ppl) AS min_ppl,
-           MAX(ppl) AS max_ppl,
-           ROUND(AVG(ppl), 4) AS avg_ppl
-    FROM rk GROUP BY 1, 2
-"""
-
-
-def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directional n-gram CONTAINMENT pairs (new round 13):
-    C(a → b) = |A∩B| / |A| ≥ 0.4 over 3-gram shingle sets with the
-    standard df-1000 cap — the asymmetric twin of dedup_ngram_jaccard
-    that catches a short document quoted inside a long one (Jaccard
-    |A|/|B| ≈ 0, containment 1.0), the measure behind
-    contained-document stripping in the exact-substring dedup recipes.
-    Same inverted-index candidate generation (never all-pairs), same
-    shared collapse dial: above it every superlinear stage runs at the
-    distinct-content fingerprint level (operators.dedup)."""
-    from .operators.dedup import ngram_containment_pairs
-    from .sources.readers import collapse_dial
-
-    return ngram_containment_pairs(
-        _t(spark, sf_dir, "documents"), n=3, threshold=0.4,
-        collapse_distinct=collapse_dial(spark, sf_dir),
-    )
-
-
-ORACLES["dedup_ngram_containment"] = f"""
-    WITH sh0 AS ({_SHINGLES_SQL}),
-    freq AS (SELECT shingle, COUNT(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0
-           JOIN freq ON sh0.shingle = freq.shingle WHERE freq.df <= 1000),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    sized AS (
-      SELECT a_id, b_id, n_inter, na.n_sh AS n_a, nb.n_sh AS n_b
-      FROM inter
-      JOIN sizes na ON na.doc_id = a_id
-      JOIN sizes nb ON nb.doc_id = b_id
-    )
-    SELECT contained_id, container_id, containment FROM (
-      SELECT a_id AS contained_id, b_id AS container_id,
-             ROUND(n_inter / n_a::DOUBLE, 6) AS containment FROM sized
-      UNION ALL
-      SELECT b_id AS contained_id, a_id AS container_id,
-             ROUND(n_inter / n_b::DOUBLE, 6) AS containment FROM sized
-    ) WHERE containment >= 0.4
-"""
-
-
-#: Per-source training-epoch factors for corpus_epoch_upsample (mixing
-#: config, not data): a source with factor e contributes floor(e) full
-#: copies of every document plus one extra copy of a deterministic
-#: frac(e) hash-share of them — the "epochs per source" table of the
-#: published pretraining mixes (LLaMA's Wikipedia 2.45 epochs, books
-#: 2.23, etc.).  Factors < 1 downsample (0 full copies, a frac(e)
-#: keep-share).  Unlisted sources run exactly 1 epoch.
-EPOCH_FACTORS = {"src0": 3.2, "src1": 2.0, "src2": 1.5, "src3": 0.4}
-
-
-def _epoch_rows() -> list[tuple[str, int, int]]:
-    """(source, whole_epochs, fractional-hash threshold) with the
-    threshold computed ONCE here (int(frac · 2³²)) and inlined as the
-    SAME literal into both the Spark expression and the oracle SQL —
-    engine-exact by construction."""
-    return [
-        (k, int(v), int((v - int(v)) * 2**32))
-        for k, v in sorted(EPOCH_FACTORS.items())
-    ]
-
-
-def q_corpus_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source epoch upsampling (new round 13): replicate each
-    document ``floor(e)`` times and give a deterministic ``frac(e)``
-    hash-share of its source one extra copy — the source-repetition
-    step of a pretraining mix, generalizing stratified_sample (pure
-    downsampling) to factors above 1.  The keep/extra decision is the
-    cross-engine md5 hash of doc_id (no RNG state, re-runs never flip
-    a row; same machinery as hash_split/DSIR).  Pure scan-side
-    expressions — ZERO shuffle at any corpus size; the output is the
-    (doc_id, source, n_copies) relation a downstream interleave/pack
-    stage consumes without ever materializing the copies."""
-    from .operators.text import cross_engine_hash
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    whole, thr = F.lit(1), F.lit(0).cast("long")
-    for k, w, fr in _epoch_rows():
-        whole = F.when(F.col("source") == k, F.lit(w)).otherwise(whole)
-        thr = F.when(F.col("source") == k, F.lit(fr)).otherwise(thr)
-    h = cross_engine_hash(F.col("doc_id").cast("string"), seed="epoch")
-    out = docs.withColumn(
-        "n_copies", (whole + (h < thr).cast("int")).cast("long")
-    )
-    return out.filter(F.col("n_copies") > 0).select(
-        "doc_id", "source", "n_copies"
-    )
-
-
-ORACLES["corpus_epoch_upsample"] = f"""
-    WITH e AS (
-      SELECT doc_id, source,
-             CASE source {' '.join(f"WHEN '{k}' THEN {w}" for k, w, _ in _epoch_rows())} ELSE 1 END AS whole,
-             CASE source {' '.join(f"WHEN '{k}' THEN {fr}" for k, _, fr in _epoch_rows())} ELSE 0 END AS thr,
-             {_hash_sql('doc_id', seed='epoch')} AS h
-      FROM documents)
-    SELECT doc_id, source,
-           CAST(whole + CASE WHEN h < thr THEN 1 ELSE 0 END AS BIGINT)
-             AS n_copies
-    FROM e
-    WHERE whole + CASE WHEN h < thr THEN 1 ELSE 0 END > 0
-"""
-
-
-# Dict ORDER is deliberate: the correctness driver records the first
-# ~50 entries into CORRECTNESS_r{N}.json, so verification rotates
-# round-by-round (round-2 verdict #3).  Round-6 front (see the
-# per-section comments below): the seven ML graduations (first hash
-# rows ever — a green window makes the whole catalog hash-checked
-# with zero no_oracle entries), the two round-6 additions, the two
-# ADVICE-touched queries, then the 44 stale r2-era rows
-# refactored-first (round-5 verdict #2) — five trivial ones spill to
-# round 7 because the window holds 50.  The full set is always
-# verified locally by tests/test_oracle_parity.py regardless of
-# position.
-QUERIES = {
-    # -- (a) round-6 ML graduations: first hash-checked driver rows for
-    # the seven former rows-only queries (round-5 verdict #1) --
-    "ml_train_rmse": q_ml_train_rmse,
-    "ml_score_topk": q_ml_score_topk,
-    "ml_feature_importance": q_ml_feature_importance,
-    "ml_cv_tuning": q_ml_cv_tuning,
-    "emb_kmeans_centroids": q_emb_kmeans_centroids,
-    "emb_pq_train_report": q_emb_pq_train_report,
-    "emb_pq_topk": q_emb_pq_topk,
-    "emb_pq_persisted_topk": q_emb_pq_persisted_topk,
-    "doc_quality_classifier": q_doc_quality_classifier,
-    "ml_als_recs": _qa.q_ml_als_recs,
-    # -- (b) round-6 additions: first driver rows --
-    "doc_dup_span_maximal": q_doc_dup_span_maximal,
-    "pipeline_e2e_score": q_pipeline_e2e_score,
-    "corpus_bloom_decontaminate": q_corpus_bloom_decontaminate,
-    # -- (c) implementation changed in round 6 (round-5 ADVICE fixes +
-    # the self-review _positional_dup_grams refactor): re-verify under
-    # the driver ahead of already-green entries --
-    "doc_heavy_hitters": q_doc_heavy_hitters,
-    "events_orders_cogroup": q_events_orders_cogroup,
-    "doc_dup_span_removal": q_doc_dup_span_removal,
-    # -- (d) stalest rows (r2) whose implementations were refactored in
-    # r4-r5 (similarity/dedup rewrites) — hard signal predates the
-    # code (round-5 verdict #2) --
-    "dedup_simhash": q_dedup_simhash,
-    "emb_ivf_topk": q_emb_ivf_topk,
-    "emb_ivf_persisted_topk": q_emb_ivf_persisted_topk,
-    "emb_ivfpq_topk": q_emb_ivfpq_topk,
-    "emb_ivfpq_append_topk": q_emb_ivfpq_append_topk,
-    "emb_pq_refine_topk": q_emb_pq_refine_topk,
-    "emb_pq_refine_recall_report": q_emb_pq_refine_recall_report,
-    "emb_pq_refine_r_sweep": q_emb_pq_refine_r_sweep,
-    "emb_ivfpq_persisted_topk": q_emb_ivfpq_persisted_topk,
-    "emb_cosine_topk": q_emb_cosine_topk,
-    "emb_cosine_topk_np": q_emb_cosine_topk_np,
-    "dedup_emb_cosine": q_dedup_emb_cosine,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    # -- (e) remaining r2-era rows, refreshed this round.  Five trivial
-    # single-operator r2 queries (count_by_site, distinct_sites,
-    # exists_filter, suffix_filter_rewrite, feature_unpivot) did
-    # not fit the 50-slot window and rotate forward in round 7, as do
-    # pricing_summary_sql (displaced by doc_dup_span_removal's
-    # post-refactor re-verification; its non-SQL twin stays below) and
-    # tpch_q5_regional (displaced by the corpus_bloom_decontaminate
-    # addition; unchanged since r2 and pytest-pinned); all seven are
-    # continuously pinned by test_oracle_parity --
-    "corpus_hash_split": q_corpus_hash_split,
-    "customer_balance_merge": q_customer_balance_merge,
-    "dedup_exact": q_dedup_exact,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_lang_id": q_doc_lang_id,
-    "doc_pii_redact": q_doc_pii_redact,
-    "doc_quality": q_doc_quality,
-    "doc_quality_flags": q_doc_quality_flags,
-    "doc_repetition": q_doc_repetition,
-    "doc_token_stats": q_doc_token_stats,
-    "emb_ann_lsh": q_emb_ann_lsh,
-    "emb_centroids": q_emb_centroids,
-    "events_asof_join": q_events_asof_join,
-    "events_range_join": q_events_range_join,
-    "events_resample_ffill": q_events_resample_ffill,
-    "events_sessionize": q_events_sessionize,
-    "events_sliding": q_events_sliding,
-    "events_stream_join": q_events_stream_join,
-    "events_stream_sessionize": q_events_stream_sessionize,
-    "events_stream_stateful": q_events_stream_stateful,
-    "events_stream_tumbling": q_events_stream_tumbling,
-    "events_tumbling": q_events_tumbling,
-    "feature_pivot": q_feature_pivot,
-    "median_crossing": q_median_crossing,
-    "mm_decode_meta": q_mm_decode_meta,
-    "mm_decode_png": q_mm_decode_png,
-    "mm_media_meta": q_mm_media_meta,
-    "predictions_fold": q_predictions_fold,
-    "pricing_summary": q_pricing_summary,
-    "rank_normalized": q_rank_normalized,
-    "topk_per_group": q_topk_per_group,
-    "tpch_q3_shipping": q_tpch_q3_shipping,
-    "tpch_q5_regional": q_tpch_q5_regional,
-    # -- (f) driver-green in rounds 3-5 (freshest rows; rotate forward
-    # in later rounds as needed) --
-    "corpus_weighted_sample": _qa.q_corpus_weighted_sample,
-    "dedup_lsh_recall_report": _qa.q_dedup_lsh_recall_report,
-    "dedup_lsh_recall_sampled": _qa.q_dedup_lsh_recall_sampled,
-    "events_anomaly_mad": _qa.q_events_anomaly_mad,
-    "events_first_last_touch": _qa.q_events_first_last_touch,
-    "events_median_arrow": _qa.q_events_median_arrow,
-    "events_reach_curve": _qa.q_events_reach_curve,
-    "events_sessionize_dynamic": _qa.q_events_sessionize_dynamic,
-    "events_stream_chained": q_events_stream_chained,
-    "events_stream_rocksdb": _qa.q_events_stream_rocksdb,
-    "lineitem_equidepth_histogram": _qa.q_lineitem_equidepth_histogram,
-    "orders_month_spine": _qa.q_orders_month_spine,
-    "orders_pipe_sql": _qa.q_orders_pipe_sql,
-    "orders_pivot_unpivot_sql": _qa.q_orders_pivot_unpivot_sql,
-    "part_skyline": _qa.q_part_skyline,
-    "dedup_clusters": q_dedup_clusters,
-    "tsv_roundtrip": q_tsv_roundtrip,
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_incremental_persisted": q_dedup_incremental_persisted,
-    "docs_stream_dedup_gate": q_docs_stream_dedup_gate,
-    "docs_stream_dedup_verified": q_docs_stream_dedup_verified,
-    "supplier_pareto": _qa.q_supplier_pareto,
-    "events_ewma": _qa.q_events_ewma,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "corpus_keep_best": q_corpus_keep_best,
-    "corpus_keep_best_pairs": q_corpus_keep_best_pairs,
-    "corpus_dedup_report": q_corpus_dedup_report,
-    "events_sketch_stats": q_events_sketch_stats,
-    "events_approx_stats": q_events_approx_stats,
-    "events_hll_merge": q_events_hll_merge,
-    "mm_audio_windows": q_mm_audio_windows,
-    "part_pagerank": q_part_pagerank,
-    "supplier_fuzzy_pairs": q_supplier_fuzzy_pairs,
-    "doc_dup_span_fraction": q_doc_dup_span_fraction,
-    "events_incremental_agg": q_events_incremental_agg,
-    "lineitem_zorder_pruning": q_lineitem_zorder_pruning,
-    "orders_bucketed_join": q_orders_bucketed_join,
-    "emb_ivf_recall_report": q_emb_ivf_recall_report,
-    "emb_ivfpq_recall_report": q_emb_ivfpq_recall_report,
-    "emb_ivfpq_recall_sampled": q_emb_ivfpq_recall_sampled,
-    "orders_capped_balance": q_orders_capped_balance,
-    "dedup_semdedup": q_dedup_semdedup,
-    "docs_schema_evolution": q_docs_schema_evolution,
-    "docs_compaction": q_docs_compaction,
-    "corpus_temperature_sample": q_corpus_temperature_sample,
-    # pricing_summary_sql spilled from the 50-slot window to make room
-    # for doc_dup_span_removal's post-refactor re-verification: it is
-    # the SQL-frontend twin of pricing_summary (same relation, same
-    # oracle), which STAYS in the window, and test_oracle_parity pins
-    # it continuously regardless of position.
-    "pricing_summary_sql": q_pricing_summary_sql,
-    "corpus_pack_sequences": q_corpus_pack_sequences,
-    "corpus_source_quota": q_corpus_source_quota,
-    "corpus_profile": q_corpus_profile,
-    "doc_string_funcs": q_doc_string_funcs,
-    "doc_bm25_topk": q_doc_bm25_topk,
-    "events_time_rollup": q_events_time_rollup,
-    "lineitem_price_histogram": q_lineitem_price_histogram,
-    "corpus_blocklist": q_corpus_blocklist,
-    "orders_cohort_retention": q_orders_cohort_retention,
-    "dedup_ngram_capped": q_dedup_ngram_capped,
-    "pysource_stream": q_pysource_stream,
-    "events_transitions": q_events_transitions,
-    "basket_part_pairs": q_basket_part_pairs,
-    "events_resample_interp": q_events_resample_interp,
-    "lineitem_skew_profile": q_lineitem_skew_profile,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "corpus_token_budget": q_corpus_token_budget,
-    "corpus_bpe_budget": q_corpus_bpe_budget,
-    "corpus_shard_manifest": q_corpus_shard_manifest,
-    "corpus_shard_append": q_corpus_shard_append,
-    "corpus_bpe_pack": q_corpus_bpe_pack,
-    "corpus_dsir_select": q_corpus_dsir_select,
-    "corpus_dsir_resample": q_corpus_dsir_resample,
-    "corpus_ccnet_buckets": q_corpus_ccnet_buckets,
-    "dedup_ngram_containment": q_dedup_ngram_containment,
-    "corpus_epoch_upsample": q_corpus_epoch_upsample,
-    "corpus_shard_divergence": q_corpus_shard_divergence,
-    "corpus_interleave": q_corpus_interleave,
-    "doc_array_funcs": q_doc_array_funcs,
-    "corpus_contamination": q_corpus_contamination,
-    "pricing_rollup": q_pricing_rollup,
-    "customer_semi_anti": q_customer_semi_anti,
-    "nation_set_ops": q_nation_set_ops,
-    "orders_salted_join": q_orders_salted_join,
-    "events_funnel": q_events_funnel,
-    "lineitem_stats": q_lineitem_stats,
-    "events_user_lag": q_events_user_lag,
-    "events_json_props": q_events_json_props,
-    "events_zscore_outliers": q_events_zscore_outliers,
-    "tpch_q6_forecast": q_tpch_q6_forecast,
-    "tpch_q10_returns": q_tpch_q10_returns,
-    "tpch_q13_custdist": q_tpch_q13_custdist,
-    "tpch_q22_acctbal": q_tpch_q22_acctbal,
-    "pricing_cube": q_pricing_cube,
-    "orders_above_cust_avg": q_orders_above_cust_avg,
-    "tpch_q2_min_cost": q_tpch_q2_min_cost,
-    "tpch_q4_priority": q_tpch_q4_priority,
-    "tpch_q7_volume": q_tpch_q7_volume,
-    "tpch_q8_share": q_tpch_q8_share,
-    "tpch_q9_profit": q_tpch_q9_profit,
-    "feature_unpivot": q_feature_unpivot,
-    "exists_filter": q_exists_filter,
-    "count_by_site": q_count_by_site,
-    "distinct_sites": q_distinct_sites,
-    "suffix_filter_rewrite": q_suffix_filter_rewrite,
-    "tpch_q11_important": q_tpch_q11_important,
-    "tpch_q12_priority": q_tpch_q12_priority,
-    "tpch_q15_top_supplier": q_tpch_q15_top_supplier,
-    "tpch_q16_supplier_cnt": q_tpch_q16_supplier_cnt,
-    "tpch_q17_small_qty": q_tpch_q17_small_qty,
-    "tpch_q19_disjunctive": q_tpch_q19_disjunctive,
-    "tpch_q20_excess": q_tpch_q20_excess,
-    "tpch_q21_waiting": q_tpch_q21_waiting,
-    "orders_window_funcs": q_orders_window_funcs,
-    "lineitem_moving_sum": q_lineitem_moving_sum,
-    "orders_date_funcs": q_orders_date_funcs,
-    "corpus_stratified_sample": q_corpus_stratified_sample,
-    "lineitem_percentiles": q_lineitem_percentiles,
-    "pricing_grouping_sets": q_pricing_grouping_sets,
-    "events_hourly_heatmap": q_events_hourly_heatmap,
-    "doc_chunks_udtf": q_doc_chunks_udtf,
-    "mm_frame_sample": q_mm_frame_sample,
-    "emb_sq8_topk": q_emb_sq8_topk,
-    "events_stream_dedup": q_events_stream_dedup,
-    "doc_tfidf_topterms": q_doc_tfidf_topterms,
-    "lineitem_yearly_growth": q_lineitem_yearly_growth,
-    "events_trimmed_mean": q_events_trimmed_mean,
-    "pysource_scan": q_pysource_scan,
-    "pysource_write_roundtrip": q_pysource_write_roundtrip,
-    "parquet_prune_roundtrip": q_parquet_prune_roundtrip,
-    "ingest_join": q_ingest_join,
-    "nation_revenue_share": q_nation_revenue_share,
-    "tpch_q14_promo": q_tpch_q14_promo,
-    "tpch_q18_bigorders": q_tpch_q18_bigorders,
-    "dedup_simhash64_pairs": q_dedup_simhash64_pairs,
-    "dedup_band_histogram": q_dedup_band_histogram,
-    "doc_rarity_quality": q_doc_rarity_quality,
-    "events_stream_hopping": q_events_stream_hopping,
-    "lineitem_udaf_wavg": q_lineitem_udaf_wavg,
-    "events_stream_static": q_events_stream_static,
-    "events_scd2_intervals": _qa.q_events_scd2_intervals,
-    "events_regr_trend": _qa.q_events_regr_trend,
-    "lineitem_corr_matrix": _qa.q_lineitem_corr_matrix,
-    "events_bitmap_distinct": _qa.q_events_bitmap_distinct,
-    "lineitem_dq_checks": _qa.q_lineitem_dq_checks,
-    "doc_bigram_perplexity": _qa.q_doc_bigram_perplexity,
-    "corpus_vocab_growth": _qa.q_corpus_vocab_growth,
-    "orders_lateral_topk": _qa.q_orders_lateral_topk,
-    "events_trailing_range_sum": _qa.q_events_trailing_range_sum,
-    "events_variant_props": _qa.q_events_variant_props,
-    "customer_rfm": _qa.q_customer_rfm,
-    "orders_snapshot_diff": _qa.q_orders_snapshot_diff,
-    "pricing_decimal_exact": _qa.q_pricing_decimal_exact,
-}
-
-# -- Round-7 driver window (round-6 verdict #1): the ~50 entries below
-# lead ``queries()`` so the driver's correctness window covers (a) the
-# queries added or rewritten this round (no green signal yet), (b) all
-# 41 catalog queries whose latest driver hash predates round 4 — after
-# this sweep every query's hard signal postdates the r4-r5 refactors —
-# and (c) the ML queries whose invariant flags gained degenerate-input
-# guards (ADVICE r6 #2).  Relative order of everything else is kept. --
-_R7_WINDOW = [
-    # (a) new / rewritten in round 7
-    "dedup_emb_cosine",          # scale-adaptive multi-table LSH
-    "corpus_keep_best",          # group-shaped (star edges + CC)
-    "corpus_keep_best_pairs",    # new audit variant
-    "corpus_dedup_report",       # group-shaped report
-    "pysource_write_roundtrip",  # new: two-phase-commit writer row
-    "parquet_prune_roundtrip",   # new: partitioned-sink row
-    "corpus_interleave",         # closed-form mix_rank rewrite
-    "mm_decode_png",             # new: real PNG encode->parse round trip
-    "dedup_simhash64_pairs",     # r7 late: first-colliding-band claiming
-    "dedup_clusters",            # r7 late: consumes the claimed simhash pairs
-    "emb_pq_train_report",       # r7 late: new product-quantization tier
-    "emb_pq_topk",               # r7 late: hash-exact PQ search
-    # (b) stale r2/r3 rows (latest driver hash predates round 4)
-    "count_by_site",
-    "distinct_sites",
-    "exists_filter",
-    "feature_unpivot",
-    "pricing_summary_sql",
-    "suffix_filter_rewrite",
-    "tpch_q5_regional",
-    "basket_part_pairs",
-    "corpus_blocklist",
-    "corpus_contamination",
-    "corpus_token_budget",
-    "customer_semi_anti",
-    "dedup_ngram_capped",
-    "dedup_simhash_pairs",
-    "doc_array_funcs",
-    "events_funnel",
-    "events_json_props",
-    "events_resample_interp",
-    "events_transitions",
-    "events_user_lag",
-    "events_zscore_outliers",
-    "lineitem_price_histogram",
-    "lineitem_skew_profile",
-    "lineitem_stats",
-    "nation_set_ops",
-    "orders_above_cust_avg",
-    "orders_cohort_retention",
-    "orders_salted_join",
-    "pricing_cube",
-    "pricing_rollup",
-    "pysource_stream",
-    "tpch_q10_returns",
-    "tpch_q13_custdist",
-    "tpch_q22_acctbal",
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q8_share",
-    "tpch_q9_profit",
-    # (c) ml flag queries with new degenerate-input guards.  These got
-    # fresh hash-green rows in the round-6 window and the guards only
-    # fire on degenerate inputs absent from the driver's sf0.01 corpus
-    # (pytest covers those paths), so when the 50-slot window is tight
-    # they yield to (a)'s this-round rewrites — doc_quality_classifier
-    # already spilled in the original layout, and ml_train_rmse /
-    # emb_kmeans_centroids now sit just past the cutoff for the two
-    # late simhash-claiming rewrites above.
-    "ml_train_rmse",
-    "emb_kmeans_centroids",
-    "doc_quality_classifier",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R7_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R7_WINDOW)},
-}
-
-
-
-# -- Round-8 driver window: leads with (a) the LAST two stale rows —
-# tpch_q8_share / tpch_q9_profit, whose newest driver hash is still r3
-# (they sat at slots 51-52 of the round-7 window, just past the 50-row
-# cutoff) — (b) this round's new/changed queries (the persisted-PQ and
-# persisted-IVF index paths, the combined IVF-ADC tier, the streaming
-# ingest dedup gate; corpus_interleave's overflow-safe mix_rank
-# rearrangement; dedup_emb_cosine's footer-metadata sizing), and
-# (c) the queries whose newest hard signal is r4, oldest-first.  The
-# six late-round additions push the list to 55 for a 50-row window,
-# so the last five r4 rows (tpch_q17/q18/q19/q20/q21) stay r4-signal
-# one more round — pytest parity covers them; new/changed queries
-# outrank re-stamping already-green rows.  Relative order kept. --
-_R8_WINDOW = [
-    "tpch_q8_share",
-    "tpch_q9_profit",
-    "emb_pq_persisted_topk",
-    "emb_ivf_persisted_topk",
-    "emb_ivfpq_topk",
-    "emb_ivfpq_persisted_topk",
-    "docs_stream_dedup_gate",
-    "dedup_incremental_persisted",
-    "corpus_interleave",
-    "dedup_emb_cosine",
-    "corpus_stratified_sample",
-    "corpus_vocab_growth",
-    "customer_rfm",
-    "dedup_band_histogram",
-    "doc_bigram_perplexity",
-    "doc_chunks_udtf",
-    "doc_rarity_quality",
-    "doc_tfidf_topterms",
-    "emb_sq8_topk",
-    "events_bitmap_distinct",
-    "events_hourly_heatmap",
-    "events_regr_trend",
-    "events_scd2_intervals",
-    "events_stream_dedup",
-    "events_stream_hopping",
-    "events_stream_static",
-    "events_trailing_range_sum",
-    "events_trimmed_mean",
-    "events_variant_props",
-    "ingest_join",
-    "lineitem_corr_matrix",
-    "lineitem_dq_checks",
-    "lineitem_moving_sum",
-    "lineitem_percentiles",
-    "lineitem_udaf_wavg",
-    "lineitem_yearly_growth",
-    "mm_frame_sample",
-    "nation_revenue_share",
-    "orders_date_funcs",
-    "orders_lateral_topk",
-    "orders_snapshot_diff",
-    "orders_window_funcs",
-    "pricing_decimal_exact",
-    "pricing_grouping_sets",
-    "pysource_scan",
-    "tpch_q11_important",
-    "tpch_q12_priority",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt",
-    "tpch_q17_small_qty",
-    "tpch_q18_bigorders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess",
-    "tpch_q21_waiting",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R8_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R8_WINDOW)},
-}
-
-
-# -- Round-9 driver window (round-8 verdict #1): exactly 50 entries.
-# (a) queries whose implementation was rewritten in round 8 but whose
-# newest driver hash is r7, pre-rewrite (the hard signal must postdate
-# the code it certifies): dedup_clusters (simhash_clusters_collapsed)
-# and orders_salted_join (merge-hint pin); (b) rewritten THIS round:
-# the two simhash pair enumerations (signature collapse + expansion);
-# (c) the FIVE round-9 additions (first driver rows): the IVFPQ recall
-# grid, the index-append path, the verified streaming gate, and the
-# two late refine rows; (d) the five r4-stale tpch rows the r8 window
-# listed past its 50-row cutoff; (e) 36 of the 41 queries whose
-# newest hard signal is r5 — FIVE spill to round 10 to hold the 50:
-# orders_month_spine / orders_pipe_sql / orders_pivot_unpivot_sql
-# (single-shape SQL-frontend rows, unchanged since r3) plus
-# supplier_pareto and tsv_roundtrip (bumped for the two late refine
-# additions; see the trailing note in the list).  All five are
-# continuously pinned by test_oracle_parity.  After this sweep every
-# catalog signal is r6+ except those five — sweep them FIRST in the
-# round-10 window. --
-_R9_WINDOW = [
-    # (a) rewritten r8, signal still r7
-    "dedup_clusters",
-    "orders_salted_join",
-    # (b) rewritten r9: signature-collapse pair enumeration
-    "dedup_simhash_pairs",
-    "dedup_simhash64_pairs",
-    # (c) new in r9
-    "emb_ivfpq_recall_report",
-    "emb_ivfpq_append_topk",
-    "docs_stream_dedup_verified",
-    "emb_pq_refine_topk",
-    "emb_pq_refine_recall_report",
-    # (d) r4-stale tail
-    "tpch_q17_small_qty",
-    "tpch_q18_bigorders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess",
-    "tpch_q21_waiting",
-    # (e) r5-stale sweep (alphabetical)
-    "corpus_pack_sequences",
-    "corpus_profile",
-    "corpus_source_quota",
-    "corpus_temperature_sample",
-    "corpus_weighted_sample",
-    "dedup_incremental",
-    "dedup_lsh_recall_report",
-    "dedup_ngram_jaccard",
-    "dedup_semdedup",
-    "doc_bm25_topk",
-    "doc_dup_span_fraction",
-    "doc_string_funcs",
-    "docs_compaction",
-    "docs_schema_evolution",
-    "emb_ivf_recall_report",
-    "events_anomaly_mad",
-    "events_approx_stats",
-    "events_ewma",
-    "events_first_last_touch",
-    "events_hll_merge",
-    "events_incremental_agg",
-    "events_median_arrow",
-    "events_reach_curve",
-    "events_sessionize_dynamic",
-    "events_sketch_stats",
-    "events_stream_chained",
-    "events_stream_rocksdb",
-    "events_time_rollup",
-    "lineitem_equidepth_histogram",
-    "lineitem_zorder_pruning",
-    "mm_audio_windows",
-    "orders_bucketed_join",
-    "orders_capped_balance",
-    "part_pagerank",
-    "part_skyline",
-    "supplier_fuzzy_pairs",
-    # supplier_pareto and tsv_roundtrip spill to round 10 for the late emb_pq_refine_topk
-    # additions (new rows need their first signal; both spilled rows
-    # are r5-green, unchanged, and pinned by oracle parity)
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R9_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R9_WINDOW)},
-}
-
-# -- Round-10 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the FIVE r5-stale rows the r9
-# window spilled (the round-9 verdict's #1 ask — S1/S3 TSV fidelity
-# and the SQL-frontend breadth rows); (b) the THREE round-10
-# additions needing their first signal (the sampled recall audits,
-# the refinement R-sweep, and the BPE budget row); (c) ml_als_recs,
-# touched this round (variance stabilization, round-9 verdict #2);
-# (d) 41 of the 48 remaining queries whose newest hard signal is r6
-# (alphabetical).  SEVEN r6 rows spill to round 11 to hold the 50 —
-# chosen as the rows whose correctness surface is ALSO re-pinned
-# every round outside the window: rank_normalized is entry(), smoke-
-# checked by the driver each round; predictions_fold is pinned by the
-# golden reference-TSV end-to-end test; the five ML/pipeline rows
-# (ml_train_rmse, ml_score_topk, ml_cv_tuning, ml_feature_importance,
-# pipeline_e2e_score) are invariant-pinned in pytest and run in full
-# in every suite pass.  Sweep those seven FIRST in the round-11
-# window. --
-_R10_WINDOW = [
-    # (a) r5-stale spill from round 9
-    "orders_month_spine",
-    "orders_pipe_sql",
-    "orders_pivot_unpivot_sql",
-    "supplier_pareto",
-    "tsv_roundtrip",
-    # (b) new in r10
-    "emb_ivfpq_recall_sampled",
-    "emb_pq_refine_r_sweep",
-    "corpus_bpe_budget",
-    "corpus_shard_manifest",
-    "corpus_shard_append",
-    "corpus_bpe_pack",
-    # (c) touched in r10
-    "ml_als_recs",
-    # (d) r6-stale sweep (alphabetical)
-    "corpus_bloom_decontaminate",
-    "corpus_hash_split",
-    "customer_balance_merge",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "doc_dup_span_maximal",
-    "doc_dup_span_removal",
-    "doc_fingerprint",
-    "doc_heavy_hitters",
-    "doc_lang_id",
-    "doc_pii_redact",
-    "doc_quality",
-    "doc_quality_classifier",
-    "doc_quality_flags",
-    "doc_repetition",
-    "doc_token_stats",
-    "emb_ann_lsh",
-    "emb_centroids",
-    "emb_cosine_topk",
-    "emb_cosine_topk_np",
-    "emb_ivf_topk",
-    "emb_kmeans_centroids",
-    "events_asof_join",
-    "events_orders_cogroup",
-    "events_range_join",
-    "events_resample_ffill",
-    "events_sessionize",
-    "events_sliding",
-    "events_stream_join",
-    "events_stream_sessionize",
-    "events_stream_stateful",
-    "events_stream_tumbling",
-    "events_tumbling",
-    "feature_pivot",
-    "median_crossing",
-    "mm_decode_meta",
-    "mm_media_meta",
-    "pricing_summary",
-    "topk_per_group",
-    "tpch_q3_shipping",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R10_WINDOW)},
-}
-
-# -- Round-11 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the TEN rows whose newest driver
-# row is r6 — the reference-pipeline core the round-10 verdict's #1
-# ask names (the r10 window listed three of them, but the driver runs
-# exactly 50 and they sat at positions 51-53); (b) round-11 additions
-# needing their first signal; (c) 37 of the 44 rows whose newest
-# driver row is r7 (alphabetical).  SEVEN r7 rows spill to round 12 —
-# chosen as pure-SQL TPC-H shapes (tpch_q2/q4/q5/q6/q7 plus, displaced
-# by the two round-11 curation additions, tpch_q10/q13), unchanged
-# since round 2 and re-pinned by the full oracle-parity pytest run
-# every round.  Sweep those seven FIRST in the round-12 window. --
-_R11_WINDOW = [
-    # (a) r6-stale sweep (round-10 verdict #1)
-    "ml_cv_tuning",
-    "ml_feature_importance",
-    "ml_score_topk",
-    "ml_train_rmse",
-    "pipeline_e2e_score",
-    "predictions_fold",
-    "pricing_summary",
-    "rank_normalized",
-    "topk_per_group",
-    "tpch_q3_shipping",
-    # (b) new in r11
-    "dedup_lsh_recall_sampled",
-    "corpus_dsir_select",
-    "corpus_shard_divergence",
-    # (c) r7-stale sweep (alphabetical; 7 TPC-H rows spill to r12)
-    "basket_part_pairs",
-    "corpus_blocklist",
-    "corpus_contamination",
-    "corpus_dedup_report",
-    "corpus_keep_best",
-    "corpus_keep_best_pairs",
-    "corpus_token_budget",
-    "count_by_site",
-    "customer_semi_anti",
-    "dedup_ngram_capped",
-    "distinct_sites",
-    "doc_array_funcs",
-    "emb_pq_topk",
-    "emb_pq_train_report",
-    "events_funnel",
-    "events_json_props",
-    "events_resample_interp",
-    "events_transitions",
-    "events_user_lag",
-    "events_zscore_outliers",
-    "exists_filter",
-    "feature_unpivot",
-    "lineitem_price_histogram",
-    "lineitem_skew_profile",
-    "lineitem_stats",
-    "mm_decode_png",
-    "nation_set_ops",
-    "orders_above_cust_avg",
-    "orders_cohort_retention",
-    "parquet_prune_roundtrip",
-    "pricing_cube",
-    "pricing_rollup",
-    "pricing_summary_sql",
-    "pysource_stream",
-    "pysource_write_roundtrip",
-    "suffix_filter_rewrite",
-    "tpch_q22_acctbal",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R11_WINDOW)},
-}
-
-# -- Round-12 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the SEVEN rows whose newest driver
-# row is r7 — the pure-SQL TPC-H shapes the round-11 window spilled
-# (its own note and the round-11 verdict's #2 both order them swept
-# FIRST); (b) the TWO round-12 additions needing their first signal;
-# (c) 41 of the 50 rows whose newest driver row is r8 (alphabetical).
-# The remaining NINE r8 rows spill to round 13 — chosen as the
-# alphabetical tail (pricing_grouping_sets, pysource_scan and seven
-# tpch_* SQL shapes, all unchanged since r8 and re-pinned by the full
-# oracle-parity pytest run every round).  Sweep those FIRST in the
-# round-13 window. --
-_R12_WINDOW = [
-    # (a) r7-stale sweep (round-11 verdict #2)
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q5_regional",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q10_returns",
-    "tpch_q13_custdist",
-    # (b) new in r12
-    "corpus_dsir_resample",
-    "corpus_ccnet_buckets",
-    # (c) r8-stale sweep (alphabetical; 9 rows spill to r13)
-    "corpus_interleave",
-    "corpus_stratified_sample",
-    "corpus_vocab_growth",
-    "customer_rfm",
-    "dedup_band_histogram",
-    "dedup_emb_cosine",
-    "dedup_incremental_persisted",
-    "doc_bigram_perplexity",
-    "doc_chunks_udtf",
-    "doc_rarity_quality",
-    "doc_tfidf_topterms",
-    "docs_stream_dedup_gate",
-    "emb_ivf_persisted_topk",
-    "emb_ivfpq_persisted_topk",
-    "emb_ivfpq_topk",
-    "emb_pq_persisted_topk",
-    "emb_sq8_topk",
-    "events_bitmap_distinct",
-    "events_hourly_heatmap",
-    "events_regr_trend",
-    "events_scd2_intervals",
-    "events_stream_dedup",
-    "events_stream_hopping",
-    "events_stream_static",
-    "events_trailing_range_sum",
-    "events_trimmed_mean",
-    "events_variant_props",
-    "ingest_join",
-    "lineitem_corr_matrix",
-    "lineitem_dq_checks",
-    "lineitem_moving_sum",
-    "lineitem_percentiles",
-    "lineitem_udaf_wavg",
-    "lineitem_yearly_growth",
-    "mm_frame_sample",
-    "nation_revenue_share",
-    "orders_date_funcs",
-    "orders_lateral_topk",
-    "orders_snapshot_diff",
-    "orders_window_funcs",
-    "pricing_decimal_exact",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R12_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R12_WINDOW)},
-}
-
-# -- Round-13 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the NINE rows whose newest driver
-# row is r8 — the alphabetical-tail spill the round-12 window note
-# ordered swept FIRST (round-12 verdict Next #2); (b) the TWO
-# round-13 additions needing their first signal; (c) the TWELVE
-# queries whose implementation changed this round — the shared
-# collapse_dial migration (all collapse consumers) and the ccnet
-# range-rank gate — re-verified under the driver ahead of pure
-# staleness rotation; (d) 27 of the 48 remaining rows whose newest
-# driver row is r9 (alphabetical).  The other 21 r9 rows spill to
-# round 14 (alphabetical tail from events_median_arrow through
-# tpch_q21_waiting) — sweep those FIRST in the round-14 window. --
-_R13_WINDOW = [
-    # (a) r8-stale sweep (round-12 verdict #2)
+FAMILIES = (core, tpch, warehouse, events, sources, text, dedup, embeddings,
+            pq, corpus, ml)
+
+# The external correctness driver records the first 50 rows of
+# ``queries()`` each round; these lead the catalog in this order, and
+# every other row follows in family order.
+DRIVER_WINDOW = [
     "pricing_grouping_sets",
     "pysource_scan",
     "tpch_q8_share",
@@ -9950,11 +37,8 @@ _R13_WINDOW = [
     "tpch_q14_promo",
     "tpch_q15_top_supplier",
     "tpch_q16_supplier_cnt",
-    # (b) new in r13
     "dedup_ngram_containment",
     "corpus_epoch_upsample",
-    # (c) implementation changed in r13 (collapse_dial migration +
-    # ccnet range-rank gate)
     "corpus_ccnet_buckets",
     "corpus_bpe_budget",
     "corpus_bpe_pack",
@@ -9967,7 +51,6 @@ _R13_WINDOW = [
     "dedup_ngram_capped",
     "dedup_ngram_jaccard",
     "doc_bigram_perplexity",
-    # (d) r9-stale sweep (alphabetical; 21 rows spill to r14)
     "corpus_pack_sequences",
     "corpus_profile",
     "corpus_source_quota",
@@ -9996,7 +79,7 @@ _R13_WINDOW = [
     "events_hll_merge",
     "events_incremental_agg",
 ]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R13_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R13_WINDOW)},
-}
+
+_ALL = {name: fn for fam in FAMILIES for name, fn in fam.QUERIES.items()}
+QUERIES = {name: _ALL[name] for name in DRIVER_WINDOW} | _ALL
+ORACLES = {name: sql for fam in FAMILIES for name, sql in fam.ORACLES.items()}

@@ -312,7 +312,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: Target sub-corpus size for the SAMPLED quality audits (round-9
 #: verdict #3 for the ANN recall grids; round-11 verdict #4 for the
 #: LSH dedup recall report).  Lives beside table_row_count because
-#: both catalog modules (queries, queries_analytics) derive the
+#: the catalog's sampled audits (catalog.dedup, catalog.pq) derive the
 #: deterministic sample modulus s = ceil(n / target) from it and the
 #: import must stay cycle-free.  At or below this many rows s = 1 —
 #: the sampled audit IS the exact audit, so every driver/bench hash

@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import __spark_entry__ as entry_mod
 
-from recommendation_translation_spark.queries import ORACLES, QUERIES
+from recommendation_translation_spark.queries import (
+    DRIVER_WINDOW,
+    FAMILIES,
+    ORACLES,
+    QUERIES,
+)
 
 # The ONLY queries allowed to lack a DuckDB oracle (rows-only checks);
 # every one needs a reason.  Growing this set silently weakens the
@@ -40,6 +45,28 @@ def test_no_orphan_oracles():
 def test_entry_module_exposes_catalog():
     assert entry_mod.queries().keys() == QUERIES.keys()
     assert entry_mod.oracle_sql().keys() == ORACLES.keys()
+
+
+def test_registry_is_the_disjoint_union_of_its_families():
+    """Every row belongs to exactly one family: the registry merges the
+    family dicts, so a name two families define would silently keep
+    only one of the two rows."""
+    for kind, merged in (("QUERIES", QUERIES), ("ORACLES", ORACLES)):
+        seen: dict[str, str] = {}
+        for fam in FAMILIES:
+            for name in getattr(fam, kind):
+                assert name not in seen, (
+                    f"{kind} row {name!r} in {seen.get(name)} and {fam.__name__}"
+                )
+                seen[name] = fam.__name__
+        assert seen.keys() == merged.keys()
+
+
+def test_driver_window_leads_the_catalog():
+    """The external correctness driver records the first 50 rows of
+    ``queries()``: they are the declared window, in order."""
+    assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50
+    assert list(entry_mod.queries())[:50] == DRIVER_WINDOW
 
 
 def test_every_query_has_a_baseline_anchor():

@@ -406,6 +406,40 @@ def test_failed_site_is_isolated_and_caches_nothing(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _write_raw_tsv(path, first_id: int, seed: int) -> set[str]:
+    """An A1 raw-data TSV over every fixture site with ids from
+    ``first_id`` on; returns its ids."""
+    rng = random.Random(seed)
+    ids = [f"Q{first_id + i}" for i in range(N_IDS)]
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f, delimiter="\t")
+        w.writerow(["", "id", "site", "title", "pageviews"])
+        for i, qid in enumerate(ids):
+            for site in SITES:
+                w.writerow([i * len(SITES) + SITES.index(site), qid, site,
+                            f"Article_{qid}", float(rng.randint(1, 500))])
+    return set(ids)
+
+
+def test_rerun_over_rewritten_input_reads_the_new_file(spark, tmp_path_factory):
+    """A second run in the same session, over an input rewritten at the
+    same path, computes its feature matrix from the new file: ``run``
+    releases the matrix it cached, so Spark cannot match the new plan
+    (same path, same stages) to the first run's cached data, and it
+    leaves the session's cache manager as it found it."""
+    d = tmp_path_factory.mktemp("rewrite")
+    raw = d / "raw.tsv"
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    for first_id, seed in ((100, 1), (900, 2)):
+        ids = _write_raw_tsv(raw, first_id, seed)
+        artifacts = run(spark, Params(parse_raw_data=True, extract_features=True,
+                                      raw_data=str(raw), output_dir=str(d / f"run{seed}")))
+        feats = spark.read.parquet(artifacts["feature_data"])
+        assert {r.id for r in feats.select("id").collect()} == ids
+    assert cache_manager.isEmpty()
+
+
 def test_split_inputs_equal_combined(spark, fixture_dir, tmp_path_factory):
     """EP1 parity: sitelinks ⋈ pagecounts (with .z filter/rewrite)
     produces the same parsed relation as the combined raw-data TSV."""

@@ -727,12 +727,12 @@ def test_shard_append_composes_into_gapless_layout(spark, sf_dir):
     # lengths — must not hide behind one dataset shape.
     from pyspark.sql import functions as F
 
-    from recommendation_translation_spark.queries import (
-        QUERIES,
+    from recommendation_translation_spark.catalog.core import _t
+    from recommendation_translation_spark.catalog.corpus import (
         _shard_keys_frame,
         _shard_manifest_frame,
-        _t,
     )
+    from recommendation_translation_spark.queries import QUERIES
 
     docs = _t(spark, sf_dir, "documents")
     keys = _shard_keys_frame(docs)

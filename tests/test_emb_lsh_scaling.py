@@ -77,7 +77,7 @@ def test_dedup_emb_cosine_plan_build_runs_no_count_job(spark):
     contract asserted is Δjobs(full plan build) == Δjobs(bare read):
     the operator itself contributes ZERO jobs (the old default ran a
     full count(), one extra job, which this test would catch)."""
-    from recommendation_translation_spark.queries import q_dedup_emb_cosine
+    from recommendation_translation_spark.catalog.embeddings import q_dedup_emb_cosine
     from recommendation_translation_spark.sources.readers import table_row_count
 
     from .conftest import SF_SMALL

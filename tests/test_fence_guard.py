@@ -15,7 +15,7 @@ import sys
 import threading
 import types
 
-from recommendation_translation_spark import queries
+from recommendation_translation_spark.catalog import ml as queries
 from recommendation_translation_spark.bench_common import (
     ANCHOR_PROBE,
     PROBE_FACTOR_BOUNDS,

@@ -24,7 +24,8 @@ from recommendation_translation_spark.plans.checks import (
     count_exchanges,
     physical_plan,
 )
-from recommendation_translation_spark.queries import QUERIES, long_table
+from recommendation_translation_spark.catalog.core import long_table
+from recommendation_translation_spark.queries import QUERIES
 
 from .conftest import SF_SMALL
 
@@ -116,7 +117,7 @@ def test_feature_pivot_two_shuffles(spark):
     # floor (3 → 6) whenever an ml_* parity test ran first in the
     # shared session.  Unpersist so the floor is asserted on the real
     # from-scratch plan, order-independently.
-    from recommendation_translation_spark import queries as _q
+    from recommendation_translation_spark.catalog import ml as _q
 
     for feats, _models in _q._ML_CACHE.values():
         feats.unpersist()
@@ -1133,7 +1134,7 @@ def test_capped_balance_walk_is_one_lazy_grouped_fold(spark):
     """The clamp fold is one grouped pass: building it submits no Spark
     job (no eager checkpoint of the chunks, no materialized walk), and
     its plan has no recursive-CTE loop and no broadcast hint."""
-    from recommendation_translation_spark.queries import capped_balance_walk
+    from recommendation_translation_spark.catalog.warehouse import capped_balance_walk
 
     ord_df = spark.createDataFrame(
         [(1, 5, 1), (1, 7, 2), (2, 3, 1)], "custkey long, cents long, rn int"
@@ -1174,8 +1175,10 @@ def test_catalog_table_reads_go_through_read_table():
     """Every catalog table read goes through ``sources.readers.read_table``,
     which memoizes the schema: a plain parquet read submits a
     schema-inference job each time a builder runs.  SQL text is scanned
-    too, since a ``parquet.`path``` reference plans the same read."""
-    from recommendation_translation_spark import queries, queries_analytics
+    too, since a ``parquet.`path``` reference plans the same read.  The
+    modules scanned are the registry's families, so a new family is
+    covered without editing this test."""
+    from recommendation_translation_spark.queries import FAMILIES
 
     planted = [
         'lines = spark.read.parquet(f"{sf_dir}/lineitem.parquet")',
@@ -1185,7 +1188,8 @@ def test_catalog_table_reads_go_through_read_table():
     allowed = "orders = read_table(spark, sf_dir, 'orders')"
     assert _table_read_bypasses("\n".join([allowed, *planted])) == planted
 
-    for mod in (queries, queries_analytics):
+    assert len(FAMILIES) > 1
+    for mod in FAMILIES:
         bypasses = _table_read_bypasses(inspect.getsource(mod))
         assert not bypasses, f"{mod.__name__}: {bypasses}"
 
@@ -1540,7 +1544,7 @@ def test_compact_partitioned_preserves_layout_and_dpp(spark):
         pq_adc_rank,
         pq_lut_expr,
     )
-    from recommendation_translation_spark.queries import (
+    from recommendation_translation_spark.catalog.embeddings import (
         _align_partition_key,
         _queries_frame,
     )
@@ -1714,7 +1718,7 @@ def test_ccnet_range_rank_no_per_lang_window(spark):
     # exchange instead
     import re
 
-    from recommendation_translation_spark.queries import _ccnet_bucket_stats
+    from recommendation_translation_spark.catalog.corpus import _ccnet_bucket_stats
 
     lp = spark.createDataFrame(
         [(i, 3, float(i % 9), "en" if i % 10 else "de") for i in range(200)],

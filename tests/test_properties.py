@@ -729,7 +729,7 @@ def test_capped_balance_walk_equals_sequential_fold(spark, chains, cap):
     # into each chunk's inner clamp aggregate()) must equal the naive
     # per-element clamp fold — chunking only sets which balances are
     # emitted, never the semantics
-    from recommendation_translation_spark.queries import capped_balance_walk
+    from recommendation_translation_spark.catalog.warehouse import capped_balance_walk
 
     rows = [
         (k, int(c), i + 1)
@@ -786,7 +786,7 @@ def test_ivf_topk_multi_slices_equal_single_nprobe(spark):
         ivf_topk,
         ivf_topk_multi,
     )
-    from recommendation_translation_spark.queries import _queries_frame
+    from recommendation_translation_spark.catalog.embeddings import _queries_frame
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = _queries_frame(emb)
@@ -810,10 +810,8 @@ def test_ivfpq_topk_multi_slice_equals_ivfpq_topk(spark):
     from recommendation_translation_spark.operators.similarity import (
         ivfpq_topk_multi,
     )
-    from recommendation_translation_spark.queries import (
-        _queries_frame,
-        q_emb_ivfpq_topk,
-    )
+    from recommendation_translation_spark.catalog.embeddings import _queries_frame
+    from recommendation_translation_spark.catalog.pq import q_emb_ivfpq_topk
 
     sf_dir = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -989,7 +987,7 @@ def test_cogroup_shard_count_is_pure_execution_key(spark):
     # purely an execution key", queries.q_events_orders_cogroup) pinned
     # against future edits — shard count 1, 7 and 64 must produce the
     # IDENTICAL relation at sf0.001.
-    from recommendation_translation_spark.queries import (
+    from recommendation_translation_spark.catalog.events import (
         q_events_orders_cogroup,
     )
 
@@ -1282,9 +1280,9 @@ def test_audit_sample_modulus_matches_sql_twin(tmp_path):
     sub-corpora in the two engines."""
     import duckdb
 
-    from recommendation_translation_spark.queries import (
-        _AUDIT_SAMPLE_TARGET,
-        _audit_sample_cte,
+    from recommendation_translation_spark.catalog.dedup import _audit_sample_cte
+    from recommendation_translation_spark.sources.readers import (
+        AUDIT_SAMPLE_TARGET as _AUDIT_SAMPLE_TARGET,
     )
 
     con = duckdb.connect()
@@ -1688,7 +1686,7 @@ def test_bigram_ppl_collapse_path_identical(spark):
     # third application of the multiplicity-weighted collapse: the
     # bigram-LM model counts and per-doc perplexities must be identical
     # whether computed per row or per distinct text
-    from recommendation_translation_spark.queries_analytics import _bigram_ppl
+    from recommendation_translation_spark.catalog.text import _bigram_ppl
 
     texts = [
         "alpha beta gamma beta alpha",
@@ -1765,7 +1763,7 @@ def test_ccnet_range_rank_path_identical(spark):
     # two paths must produce identical bucket stats on the same input,
     # including a 90%-dominant language, a 1-doc language, tied ppl
     # values (doc_id tie-break), and n ≡ 1 (mod 3) group sizes
-    from recommendation_translation_spark.queries import _ccnet_bucket_stats
+    from recommendation_translation_spark.catalog.corpus import _ccnet_bucket_stats
 
     rows = []
     # dominant language: 61 docs (61 % 3 == 1 — the tertile boundary
