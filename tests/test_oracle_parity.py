@@ -106,3 +106,43 @@ from .conftest import SF_SMALL  # noqa: E402
 def test_oracle_parity_second_distribution(spark, duck_small, name):
     ok, msg = compare(QUERIES[name](spark, SF_SMALL), duck_small.sql(ORACLES[name]))
     assert ok, f"{name} @ sf0.001: {msg}"
+
+
+# Rows whose builders consult the shared collapse dial
+# (sources.readers.collapse_dial).  No test scale reaches the dial's
+# row gate (COLLAPSE_MIN_ROWS documents), so the dial is forced on
+# here: each row's collapse branch must meet the same oracle as the
+# direct branch the other parity tests take.
+COLLAPSE_CONSUMERS = [
+    "corpus_bpe_budget",
+    "corpus_bpe_pack",
+    "corpus_ccnet_buckets",
+    "corpus_dedup_report",
+    "corpus_dsir_resample",
+    "corpus_dsir_select",
+    "corpus_keep_best",
+    "corpus_keep_best_pairs",
+    "dedup_lsh_recall_report",
+    "dedup_ngram_capped",
+    "dedup_ngram_containment",
+    "dedup_ngram_jaccard",
+    "doc_bigram_perplexity",
+]
+
+
+@pytest.mark.parametrize("name", COLLAPSE_CONSUMERS)
+def test_oracle_parity_collapse_branch(spark, duck_small, monkeypatch, name):
+    from recommendation_translation_spark.catalog import corpus, dedup, text
+
+    consulted = []
+
+    def collapse_on(spark, sf_dir):
+        consulted.append(sf_dir)
+        return True
+
+    for module in (corpus, dedup, text):
+        monkeypatch.setattr(module, "collapse_dial", collapse_on)
+    spark_df = QUERIES[name](spark, SF_SMALL)
+    assert consulted, f"{name} never consulted the collapse dial"
+    ok, msg = compare(spark_df, duck_small.sql(ORACLES[name]))
+    assert ok, f"{name} (collapse branch) @ sf0.001: {msg}"

@@ -705,6 +705,25 @@ def test_shard_manifest_one_pass_no_single_partition(spark):
     assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) <= 1
 
 
+def test_ordered_measure_plan_is_reproducible(spark):
+    # the ordering offsets are computed inside the plan, never collected
+    # and baked into it as literals: three builds of the same row in one
+    # session print one normalized plan, so a plan diff shows only real
+    # plan changes
+    from tools_dump_plans import normalized
+
+    plans = {
+        normalized(
+            physical_plan(
+                QUERIES["lineitem_equidepth_histogram"](spark, SF_SMALL),
+                mode="simple",
+            )
+        )
+        for _ in range(3)
+    }
+    assert len(plans) == 1, "\n\n".join(plans)
+
+
 def test_shard_append_broadcasts_tails_no_single_partition(spark):
     # append cost must be ∝ batch: the base contributes a bounded
     # 16-row tails aggregate joined by BROADCAST (never a shuffle of

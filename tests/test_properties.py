@@ -588,15 +588,17 @@ def test_interleave_is_stable_permutation(spark, rows):
 
 
 def test_range_partitioned_grouping_handles_null_groups(spark):
-    # concat_ws skips NULL operands, so null group values need the
-    # sentinel path — regression for the offset-map key alignment
+    # NULL is a group of its own, distinct from every string value, as
+    # in Window.partitionBy: a string key that renders NULL as "\x00"
+    # merged the NULL and "\x00" groups' partition counts
     from pyspark.sql import Window
     from recommendation_translation_spark.operators.ordering import (
         range_partitioned_row_number,
     )
 
     df = spark.createDataFrame(
-        [("a", 1), (None, 2), ("a", 3), (None, 4), ("b", 5)],
+        [("a", 1), (None, 2), ("a", 3), (None, 4), ("b", 5)]
+        + [(None if i % 2 else "\x00", 10 + i) for i in range(40)],
         "grp string, id long",
     )
     got = {
@@ -615,13 +617,13 @@ def test_range_partitioned_grouping_handles_null_groups(spark):
 
 
 def test_range_partitioned_grouping_nonstring_and_empty_groups(spark):
-    # Regression for the round-3 advisor note: the offset-map key must
-    # be the SAME Spark-computed string on both sides.  Rebuilding it
-    # in Python broke (a) empty-string groups (the `if gkey` falsy
-    # branch picked the ungrouped key format) and (b) any type where
-    # Python str() != Spark CAST AS STRING — booleans ("True" vs
-    # "true") being the canonical case.  A silent miss coalesces every
-    # offset to 0 and restarts numbering per partition.
+    # Group values are compared as values, never through a string
+    # rendering: a Python str() of them broke (a) empty-string groups
+    # and (b) any type where Python str() != Spark CAST AS STRING —
+    # booleans ("True" vs "true") being the canonical case — and a
+    # separator-joined key merged groups that differ only in where the
+    # separator sits.  A silent miss restarts or shifts the numbering
+    # per partition.
     import datetime
 
     from pyspark.sql import Window
@@ -648,20 +650,30 @@ def test_range_partitioned_grouping_nonstring_and_empty_groups(spark):
             ],
             "grp timestamp, id long",
         ),
+        # two group columns whose values differ only in where a "\x1f"
+        # sits: ("a\x1fb", "c") and ("a", "b\x1fc") are two groups
+        (
+            [
+                (("a\x1fb", "c") if i % 2 else ("a", "b\x1fc")) + (i,)
+                for i in range(40)
+            ],
+            "grp string, grp2 string, id long",
+        ),
     ]
     for rows, schema in cases:
         df = spark.createDataFrame(rows, schema)
+        groups = [c for c in df.columns if c != "id"]
         got = {
-            (r.grp, r.id): r.rn
+            tuple(r)
             for r in range_partitioned_row_number(
-                df, [F.col("id")], "rn", group_cols=["grp"]
-            ).collect()
+                df, [F.col("id")], "rn", group_cols=groups
+            ).select(*df.columns, "rn").collect()
         }
         want = {
-            (r.grp, r.id): r.rn
+            tuple(r)
             for r in df.withColumn(
                 "rn",
-                F.row_number().over(Window.partitionBy("grp").orderBy("id")),
+                F.row_number().over(Window.partitionBy(*groups).orderBy("id")),
             ).collect()
         }
         assert got == want, schema

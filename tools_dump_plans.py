@@ -5,11 +5,11 @@ tests/test_plan_quality.py; this dump is the human-auditable twin.
 
 Usage: ``python tools_dump_plans.py [OUT [SF_DIR]]`` (default
 ``PLANS.md`` in the repo root and the test suite's sf0.001).  Plans
-are normalized — expression ids (``#123L``), ``plan_id=N``,
-``/tmp/...`` paths and the per-partition offsets of range-partitioned
-row numbers stripped — so two checkouts' dumps, taken on the
-same host with the same ``SPARK_GRAFT_CPUS``, can be diffed.  The
-code imported is the checkout this script lives in."""
+are normalized — expression ids (``#123L``), ``plan_id=N`` and
+``/tmp/...`` paths stripped, lambda variables renumbered per plan — so
+two checkouts' dumps, taken on the same host with the same
+``SPARK_GRAFT_CPUS``, can be diffed.  The code imported is the
+checkout this script lives in."""
 
 from __future__ import annotations
 
@@ -39,18 +39,23 @@ _RUN_SPECIFIC = [
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/…"),
-    # operators.ordering bakes per-partition offsets, read from that
-    # build's range partitions, into a map literal indexed by the
-    # partition id; the range sampler draws different boundaries per
-    # build, so only those map values are blanked
-    (re.compile(r"values: \[[^\]]*\](?=\)\[[^\]]*_pid)"), "values: […]"),
 ]
+
+# higher-order-function lambda variables (``lambda x_303#``) are named
+# from a process-wide counter, so one more or fewer lambda anywhere
+# earlier renames every later one
+_LAMBDA_VAR = re.compile(r"(?<=lambda )([a-z]+)_\d+")
 
 
 def normalized(plan: str) -> str:
-    """``plan`` without the ids and scratch paths that differ per run."""
+    """``plan`` without the ids and scratch paths that differ per run,
+    its lambda variables numbered in first-seen order."""
     for pat, repl in _RUN_SPECIFIC:
         plan = pat.sub(repl, plan)
+    names: dict[str, str] = {}
+    plan = _LAMBDA_VAR.sub(
+        lambda m: names.setdefault(m[0], f"{m[1]}_{len(names)}"), plan
+    )
     return plan.strip()
 
 
