@@ -384,7 +384,7 @@ def q_corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test benchmark-contamination scan: train docs sharing any
     8-gram with a test doc (GPT-3 app. C methodology), via the
     deterministic hash split.  Grams are pre-hashed to 60-bit digests
-    before the join (operators.curation.doc_ngrams hashed=True — the
+    before the join (operators.curation.doc_ngrams — the
     oracle hashes identically, so parity holds, collisions included;
     at 10⁶ grams the odds of one are ~4·10⁻⁷)."""
 
@@ -521,30 +521,24 @@ def q_corpus_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, no Spark job) the WHOLE text-functional stage — the BPE
     chain AND the quality score, both pure functions of the text —
     collapses to once-per-DISTINCT-text via
-    operators.text.per_distinct_text (sha2-fingerprint join-back):
+    operators.text.per_distinct_text (text_key join-back), which runs
+    the same scoring body over one representative per text:
     hash-identical by text-functionality, and expression work scales
     with distinct texts instead of rows (sf10 measured in SCALE.md).
     Driver/bench SFs keep the exchange-free direct plan."""
 
-    docs = _t(spark, sf_dir, "documents")
-    if collapse_dial(spark, sf_dir):
-        q = per_distinct_text(
-            docs.select("doc_id", "text"),
-            lambda reps, key: quality_score(
-                reps.withColumn(
-                    "n_bpe_pieces", bpe_piece_count("text").cast("long")
-                ),
-                id_col=key,
-                keep_cols=("n_bpe_pieces",),
-            ),
-        )
-    else:
-        q = quality_score(
-            docs.withColumn(
-                "n_bpe_pieces", bpe_piece_count("text").cast("long")
-            ),
+    def scored(frame: DataFrame, key: str = "doc_id") -> DataFrame:
+        return quality_score(
+            frame.withColumn("n_bpe_pieces", bpe_piece_count("text").cast("long")),
+            id_col=key,
             keep_cols=("n_bpe_pieces",),
         )
+
+    docs = _t(spark, sf_dir, "documents")
+    if collapse_dial(spark, sf_dir):
+        q = per_distinct_text(docs.select("doc_id", "text"), scored)
+    else:
+        q = scored(docs)
     sel = token_budget_sample(
         q,
         budget_tokens=50_000,

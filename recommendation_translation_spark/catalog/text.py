@@ -24,6 +24,7 @@ from ..operators.text import (
     fingerprint,
     lang_id,
     quality_score,
+    text_key,
     token_stats,
     tokens,
 )
@@ -636,11 +637,12 @@ def q_doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter on both engines).
 
     Above the footer-count collapse dial (round 12 — the dedup-report /
-    DSIR insight a third time) the WHOLE pipeline runs at the
-    distinct-text level: both model counts are recovered exactly by
-    weighting each distinct text's bigrams with its clone multiplicity
-    (``c12 = Σ m_t·cnt_t(bg)``), every distinct text is scored once,
-    and the narrow (fp, n_bigrams, avg_nll, ppl) relation joins back —
+    DSIR insight a third time) the same pipeline runs keyed by
+    operators.text.text_key instead of the document id: both model
+    counts are recovered exactly by weighting each distinct text's
+    bigrams with its clone multiplicity (``c12 = Σ m_t·cnt_t(bg)``),
+    every distinct text is scored once, and the narrow (key, n_bigrams,
+    avg_nll, ppl) relation joins back —
     path-identical (the per-doc NLL multiset IS the rep's), work
     Θ(distinct·bigrams) instead of Θ(rows·bigrams)."""
 
@@ -677,7 +679,15 @@ def _bigram_ppl(docs: DataFrame, collapse: bool = False,
                 spread_rows: int | None = None) -> DataFrame:
     """Corpus-bigram-LM scoring core for q_doc_bigram_perplexity (and,
     through it, corpus_ccnet_buckets) — see that docstring for the
-    algorithm and the ``collapse`` contract.
+    algorithm.
+
+    One body for both states of the collapse dial: the model counts,
+    the NLL and the per-key scoring are written once, and ``collapse``
+    picks only the keying and the join-back.  Direct: bigrams keyed by
+    ``doc_id``, each counted once (``count``).  Collapsed: bigrams of
+    one representative per :func:`~..operators.text.text_key`, each
+    weighted by its clone multiplicity (``sum(m)``), the per-key
+    scores joined back to every document.
 
     ``spread_rows`` (caller's footer count, r14): below the spread
     gate the documents scan is ONE parquet split, and every consumer
@@ -707,52 +717,41 @@ def _bigram_ppl(docs: DataFrame, collapse: bool = False,
         ).select(key, "p.w1", "p.bg")
 
     if collapse:
-        t = F.col("text")
-        fp = F.when(t.isNull(), F.lit("null")).otherwise(F.sha2(t, 256))
-        fpmap = docs.select("doc_id", fp.alias("__fp"))
-        mult = fpmap.groupBy("__fp").agg(F.count(F.lit(1)).alias("m"))
-        rep_bg = (
+        fpmap = docs.select("doc_id", text_key().alias("__fp"))
+        key, weight = "__fp", F.sum("m")
+        bg = (
             bigrams(
-                docs.select(fp.alias("__fp"), "text")
+                docs.select(text_key().alias("__fp"), "text")
                 .dropDuplicates(["__fp"]),
-                "__fp",
+                key,
             )
             # feeds both model aggregations AND the scoring join — the
             # per_distinct_text checkpoint discipline; narrow, bounded
             # by distinct texts × bigrams
             .localCheckpoint(eager=False)
         )
-        wm = rep_bg.join(mult, "__fp")
-        m12 = wm.groupBy("bg").agg(F.sum("m").alias("c12"))
-        m1 = wm.groupBy("w1").agg(F.sum("m").alias("c1"))
-        nll = -F.log(F.col("c12").cast("double") / F.col("c1"))
-        rep_scores = (
-            rep_bg.join(m12, "bg")
-            .join(m1, "w1")
-            .groupBy("__fp")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-                F.round(F.avg(nll), 6).alias("avg_nll"),
-                F.round(F.exp(F.avg(nll)), 4).alias("ppl"),
-            )
+        weighted = bg.join(
+            fpmap.groupBy(key).agg(F.count(F.lit(1)).alias("m")), key
         )
-        return fpmap.join(rep_scores, "__fp").select(
-            "doc_id", "n_bigrams", "avg_nll", "ppl"
-        )
-    bg = bigrams(docs, "doc_id")
-    m12 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
-    m1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
+    else:
+        key, weight = "doc_id", F.count(F.lit(1))
+        bg = weighted = bigrams(docs, key)
+    m12 = weighted.groupBy("bg").agg(weight.alias("c12"))
+    m1 = weighted.groupBy("w1").agg(weight.alias("c1"))
     nll = -F.log(F.col("c12").cast("double") / F.col("c1"))
-    return (
+    scores = (
         bg.join(m12, "bg")
         .join(m1, "w1")
-        .groupBy("doc_id")
+        .groupBy(key)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
             F.round(F.avg(nll), 6).alias("avg_nll"),
             F.round(F.exp(F.avg(nll)), 4).alias("ppl"),
         )
     )
+    if collapse:
+        return fpmap.join(scores, key).select("doc_id", "n_bigrams", "avg_nll", "ppl")
+    return scores
 
 
 QUERIES = {

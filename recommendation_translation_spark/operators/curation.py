@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import tokens
+from .text import text_key, tokens
 
 __all__ = [
     "quality_flags",
@@ -45,7 +45,6 @@ __all__ = [
     "doc_ngrams",
     "maximal_dup_spans",
     "duplicate_span_removal_maximal",
-    "ngram_contamination",
     "bloom_decontaminate",
     "blocklist_filter",
     "pack_sequences",
@@ -752,9 +751,9 @@ def corpus_profile(df: DataFrame, text_col: str = "text",
 
 
 def doc_ngrams(df: DataFrame, n: int = 8, text_col: str = "text",
-               id_col: str = "doc_id", hashed: bool = True,
+               id_col: str = "doc_id",
                keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Distinct word n-grams per document → (doc_id, gram).
+    """Distinct hashed word n-grams per document → (doc_id, gram).
 
     Gram generation is a higher-order ``transform`` over a
     ``sequence`` of start offsets + ``slice``/``concat_ws`` — pure
@@ -762,8 +761,8 @@ def doc_ngrams(df: DataFrame, n: int = 8, text_col: str = "text",
     caller aggregates/joins).  Documents shorter than n words emit
     nothing.
 
-    ``hashed=True`` (default) replaces the gram string with a 60-bit
-    digest (``int(md5(gram)[:15], 16)``) BEFORE the distinct — the
+    Each gram string is replaced with a 60-bit digest
+    (``int(md5(gram)[:15], 16)``) BEFORE the distinct — the
     dedup shuffle and any downstream join then ship 8-byte longs
     instead of ~n-word strings (the same trick that made the n-gram
     Jaccard join 3.7× faster).  The digest is engine-portable (DuckDB:
@@ -786,38 +785,11 @@ def doc_ngrams(df: DataFrame, n: int = 8, text_col: str = "text",
     out = df.repartition(par).filter(F.size(toks) >= n).select(
         F.col(id_col), *keep, F.explode(grams).alias("gram")
     )
-    if hashed:
-        out = out.select(
-            id_col,
-            *keep,
-            F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long").alias("gram"),
-        )
-    return out.distinct()
-
-
-def ngram_contamination(train: DataFrame, test: DataFrame, n: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Benchmark-contamination check: for every train document, how
-    many of its distinct n-grams appear in ANY test document (Brown et
-    al. 2020 GPT-3 app. C methodology).  Returns only contaminated
-    train docs: (doc_id, n_shared_grams, n_test_docs).
-
-    Grams are pre-hashed to 60-bit digests (see ``doc_ngrams``), so
-    the cross-split join and both COUNT DISTINCTs run over longs —
-    at corpus scale this is the difference between shuffling the
-    corpus's text volume and shuffling 16 bytes per gram."""
-    tr = doc_ngrams(train, n=n, text_col=text_col, id_col=id_col)
-    te = doc_ngrams(test, n=n, text_col=text_col, id_col=id_col).select(
-        F.col(id_col).alias("test_id"), "gram"
-    )
-    return (
-        tr.join(te, "gram")
-        .groupBy(F.col(id_col))
-        .agg(
-            F.count_distinct("gram").alias("n_shared_grams"),
-            F.count_distinct("test_id").alias("n_test_docs"),
-        )
-    )
+    return out.select(
+        id_col,
+        *keep,
+        F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long").alias("gram"),
+    ).distinct()
 
 
 def duplicate_span_stats(docs: DataFrame, n: int = 8,
@@ -1069,11 +1041,17 @@ def ngram_contamination_split(docs_with_split: DataFrame, n: int = 8,
                               test_value: str = "test",
                               text_col: str = "text",
                               id_col: str = "doc_id") -> DataFrame:
-    """`ngram_contamination` over a corpus that already carries its
-    train/test ``split_col`` — grams the corpus ONCE and filters the
-    materialized gram relation per side, instead of running the
-    tokenize→explode→hash→distinct pipeline (and its shuffle) twice.
-    At 100 TB that halves the dominant cost — the corpus-text pass —
+    """Benchmark-contamination check over a corpus that carries its
+    train/test ``split_col``: for every train document, how many of its
+    distinct n-grams appear in ANY test document (Brown et al. 2020
+    GPT-3 app. C methodology).  Returns only contaminated train docs:
+    (doc_id, n_shared_grams, n_test_docs).
+
+    Grams are pre-hashed to 60-bit digests (see ``doc_ngrams``), so the
+    cross-split join and both distinct counts run over longs.  It grams
+    the corpus ONCE and filters the materialized gram relation per
+    side, instead of running the tokenize→explode→hash→distinct
+    pipeline (and its shuffle) once per split.  At 100 TB that halves the dominant cost — the corpus-text pass —
     and is why a split column beats two physical corpora for
     contamination scans.  The split rides through the gram distinct as
     a per-doc-constant passthrough (NOT a re-join — a per-doc side map
@@ -1081,7 +1059,11 @@ def ngram_contamination_split(docs_with_split: DataFrame, n: int = 8,
     and broadcasting it an OOM at corpus scale).  The gram relation is
     localCheckpoint'd: both the train and test branches read the same
     materialized longs (lineage truncated; same fixed-executor caveat
-    as ordering.py)."""
+    as ordering.py).  The two distinct counts are ``size(collect_set)``
+    per document, not ``count_distinct``: two distinct aggregates would
+    plan an ``Expand`` whose projection order follows expression
+    hashes, which carry expression ids, so the plan would depend on
+    what was built before it in the same process."""
     grams = doc_ngrams(
         docs_with_split.select(id_col, text_col, split_col),
         n=n, text_col=text_col, id_col=id_col, keep_cols=(split_col,),
@@ -1094,8 +1076,8 @@ def ngram_contamination_split(docs_with_split: DataFrame, n: int = 8,
         tr.join(te, "gram")
         .groupBy(F.col(id_col))
         .agg(
-            F.count_distinct("gram").alias("n_shared_grams"),
-            F.count_distinct("test_id").alias("n_test_docs"),
+            F.size(F.collect_set("gram")).cast("long").alias("n_shared_grams"),
+            F.size(F.collect_set("test_id")).cast("long").alias("n_test_docs"),
         )
     )
 
@@ -1284,18 +1266,22 @@ def _dsir_scores(docs: DataFrame, target: F.Column, n_buckets: int,
     ``id_col``, so the k-boundary is deterministic cross-engine.
     Documents with < 2 tokens have no features and are not scored.
 
+    One body for both states of the collapse dial: the model counts,
+    the log-ratio table and the scoring are written once, and
+    ``collapse`` picks only the keying and the join-back.
     ``collapse=True`` (round-11 verdict #6) is the collapse-before-
     compute plan for duplication-heavy corpora: the gram stream — the
     tokenize + per-bigram md5, the dominant cost of BOTH passes — is
-    built once per DISTINCT text (sha2 fingerprint, the
-    per_distinct_text key standard) and lazily checkpointed.  The
-    MODEL pass recovers the exact per-bucket counts by weighting each
-    distinct text's grams with its (row, target-row) multiplicities —
-    ``c_raw = Σ m_t·cnt_t(b)``, ``c_tgt = Σ mt_t·cnt_t(b)`` — exact
-    integers, so the log-ratio table is bit-identical; the SCORING
-    pass scores each distinct text once against the broadcast table
-    and joins the narrow (fp, score) relation back (scores are pure
-    functions of the text; property-pinned path-identical).  Work
+    keyed by :func:`~.text.text_key` instead of the document id, built
+    once per DISTINCT text and lazily checkpointed.  The MODEL pass
+    recovers the exact per-bucket counts by weighting each distinct
+    text's grams with its (row, target-row) multiplicities — ``sum``
+    where the direct path has ``count``: ``c_raw = Σ m_t·cnt_t(b)``,
+    ``c_tgt = Σ mt_t·cnt_t(b)`` — exact integers, so the log-ratio
+    table is bit-identical; the SCORING pass scores each distinct text
+    once against the broadcast table and joins the narrow (key, score)
+    relation back (scores are pure functions of the text;
+    property-pinned path-identical).  Work
     Θ(distinct·grams) instead of Θ(rows·grams); the ∝N legs that
     remain are one cheap fingerprint pass and the narrow join-back.
     On a unique corpus it degrades to the fingerprint exchange —
@@ -1305,52 +1291,42 @@ def _dsir_scores(docs: DataFrame, target: F.Column, n_buckets: int,
     # word_shingles discipline): few input splits must not serialize
     # the gram hashing into few tasks
     par = docs.sparkSession.sparkContext.defaultParallelism
+    row_cols = [
+        F.col(id_col),
+        *[F.col(c) for c in carry_cols],
+        target.cast("boolean").alias("is_target"),
+    ]
+    in_target = F.when(F.col("is_target"), 1).otherwise(0)
+    bucket = F.explode(_hashed_bigram_buckets(text_col, n_buckets)).alias("bucket")
     if collapse:
-        t = F.col(text_col)
-        fp = F.when(t.isNull(), F.lit("null")).otherwise(F.sha2(t, 256))
         fpdocs = docs.repartition(par).select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            target.cast("boolean").alias("is_target"),
-            fp.alias("__fp"),
+            *row_cols, text_key(text_col).alias("__fp")
         )
-        rep_feats = (
-            docs.select(fp.alias("__fp"), t.alias(text_col))
+        keys = ["__fp"]
+        feats = (
+            docs.select(text_key(text_col).alias("__fp"), text_col)
             .dropDuplicates(["__fp"])
             .repartition(par)
-            .select(
-                "__fp",
-                F.explode(
-                    _hashed_bigram_buckets(text_col, n_buckets)
-                ).alias("bucket"),
-            )
+            .select("__fp", bucket)
             # evaluated by BOTH passes — without the lazy checkpoint
             # each would re-run the distinct+gram pipeline; narrow
             # (fp, bucket), bounded by distinct texts × grams
             .localCheckpoint(eager=False)
         )
-        mult = fpdocs.groupBy("__fp").agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("mt"),
+        weighted = feats.join(
+            fpdocs.groupBy("__fp").agg(
+                F.count(F.lit(1)).alias("m"), F.sum(in_target).alias("mt")
+            ),
+            "__fp",
         )
-        per_bucket = (
-            rep_feats.join(mult, "__fp")
-            .groupBy("bucket")
-            .agg(F.sum("m").alias("c_raw"), F.sum("mt").alias("c_tgt"))
-        )
+        c_raw, c_tgt = F.sum("m"), F.sum("mt")
     else:
-        feats = docs.repartition(par).select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            target.cast("boolean").alias("is_target"),
-            F.explode(
-                _hashed_bigram_buckets(text_col, n_buckets)
-            ).alias("bucket"),
-        )
-        per_bucket = feats.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("c_raw"),
-            F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("c_tgt"),
-        )
+        keys = [id_col, *carry_cols]
+        feats = weighted = docs.repartition(par).select(*row_cols, bucket)
+        c_raw, c_tgt = F.count(F.lit(1)), F.sum(in_target)
+    per_bucket = weighted.groupBy("bucket").agg(
+        c_raw.alias("c_raw"), c_tgt.alias("c_tgt")
+    )
     # the grand totals come from an UNPARTITIONED window over the
     # ≤ n_buckets-row bucket table — a SinglePartition pass over bytes
     # — keeping the model a single subtree.  The 1-row-aggregate
@@ -1368,21 +1344,13 @@ def _dsir_scores(docs: DataFrame, target: F.Column, n_buckets: int,
             + F.log(F.sum("c_raw").over(w_all) + n_buckets)
         ).alias("lr"),
     )
+    scores = (
+        feats.join(F.broadcast(lr_tbl), "bucket")
+        .groupBy(*keys)
+        .agg(F.round(F.sum("lr"), 6).alias("score"))
+    )
     if collapse:
-        rep_scores = (
-            rep_feats.join(F.broadcast(lr_tbl), "bucket")
-            .groupBy("__fp")
-            .agg(F.round(F.sum("lr"), 6).alias("score"))
-        )
-        scores = fpdocs.join(rep_scores, "__fp").select(
-            id_col, *carry_cols, "score"
-        )
-    else:
-        scores = (
-            feats.join(F.broadcast(lr_tbl), "bucket")
-            .groupBy(id_col, *carry_cols)
-            .agg(F.round(F.sum("lr"), 6).alias("score"))
-        )
+        return fpdocs.join(scores, "__fp").select(id_col, *carry_cols, "score")
     return scores
 
 

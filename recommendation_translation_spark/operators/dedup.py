@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import spread_small_by
 from .text import cross_engine_hash, cross_engine_hash_hi, tokens
 
 __all__ = [
@@ -155,19 +156,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ``max_doc_freq=None`` to explicitly opt out (e.g. for an exact
 # ground-truth set in a recall audit).
 DEFAULT_MAX_DOC_FREQ = 1000
-
-
-def _spread_by(df: DataFrame, spread_rows: int | None, *cols: str) -> DataFrame:
-    """Footer-gated keyed spread (similarity.spread_small_by): pin a
-    SMALL compute-heavy stream cores-wide ahead of per-row-expensive
-    probes, where AQE's bytes-based coalescing would serialize it to
-    ~2 tasks.  Above the gate (or with ``spread_rows`` None) the
-    relation is data-scale: keep the planner's adaptive exchanges — a
-    pinned width there would be the local-mode scale bug the round
-    rules name."""
-    from .similarity import spread_small_by
-
-    return spread_small_by(df, spread_rows, *cols)
 
 
 def _shingle_sizes(sh: DataFrame, key: str) -> DataFrame:
@@ -294,6 +282,61 @@ def _capped_fp_shingles(
     return fpmap, fpg, rsh
 
 
+def _pair_audit(
+    df: DataFrame,
+    n: int,
+    threshold: float,
+    max_doc_freq: int | None,
+    collapse_distinct: bool,
+    emit,
+    directional: bool,
+) -> DataFrame:
+    """The one body of the all-pairs audits (ngram_jaccard_pairs /
+    ngram_containment_pairs).  ``emit`` maps the all-pairs overlap
+    kernel's (a_id, b_id, n_inter, n_a, n_b) rows to the audit's three
+    output columns — first id, second id, value — kept where the value
+    is ≥ ``threshold``.
+
+    The dial picks only the keying.  Direct: the kernel runs over the
+    df-capped document shingles and ``emit`` yields the answer.
+    ``collapse_distinct``: it runs over distinct-content fingerprints
+    (_capped_fp_shingles — document counts in the df-cap recovered as
+    Σ clone multiplicities), and one tail turns fingerprint pairs into
+    document pairs: each pair expands to its clones' document ids, and
+    every pair of documents inside one fingerprint group with ≥ 1
+    surviving shingle — value exactly 1.0 for both measures (the
+    direct path computes round(n/n, 6)) — is emitted closed-form,
+    unordered (a < b) or, ``directional``, in both directions."""
+    if not collapse_distinct:
+        sh = _capped_shingles(df, n, max_doc_freq)
+        return emit(_shingle_overlap(sh, "doc_id", "a_id", "b_id"))
+    fpmap, fpg, rsh = _capped_fp_shingles(df, n, max_doc_freq)
+    fp_pairs = emit(_shingle_overlap(rsh, "__fp", "a_id", "b_id"))
+    a, b, value = fp_pairs.columns
+    x, y = F.col("x"), F.col("y")
+
+    def clones(fp: str, doc: str) -> DataFrame:
+        return fpmap.select(F.col("__fp").alias(fp), F.col("doc_id").alias(doc))
+
+    first, second = (x, y) if directional else (F.least(x, y), F.greatest(x, y))
+    cross_docs = (
+        fp_pairs.join(clones(a, "x"), a)
+        .join(clones(b, "y"), b)
+        .select(first.alias(a), second.alias(b), value)
+    )
+    same_docs = (
+        _shingle_sizes(rsh, "__fp")
+        .join(fpg.filter(F.col("m") >= 2), "__fp")
+        .join(clones("__fp", "x"), "__fp")
+        .join(clones("__fp", "y"), "__fp")
+        .filter(x != y if directional else x < y)
+        .withColumn(value, F.lit(1.0))
+        .filter(F.col(value) >= threshold)
+        .select(x.alias(a), y.alias(b), value)
+    )
+    return cross_docs.unionByName(same_docs)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 3,
@@ -315,57 +358,24 @@ def ngram_jaccard_pairs(
     distinct-text collapse — see ngram_rep_edges): the audit's OUTPUT
     is quadratic per clone group by definition, but its COMPUTE need
     not be — Jaccard is a function of the two (normalized) texts, so
-    the shingle inverted index, the df-cap (document counts recovered
-    as Σ clone multiplicities), and the intersection self-join all run
-    over distinct-content fingerprints; a same-fp group with any
-    surviving shingle is a Jaccard-1.0 clique emitted closed-form.
-    The doc-level legs are the narrow fingerprint passes and the final
-    fp-pair → doc-pair expansion, which is ∝ OUTPUT.  Crucially the
+    the shingle inverted index, the df-cap and the intersection
+    self-join all run over distinct-content fingerprints, and the
+    shared pair-audit tail (:func:`_pair_audit`) expands fingerprint
+    pairs to document pairs and emits same-content cliques at 1.0
+    closed-form; the doc-level legs are ∝ OUTPUT.  Crucially the
     shingle self-join no longer multiplies by duplication²: a 10×-
     tiled corpus pays 100× per shingle bucket on the direct path and
     1× here.  Bit-identical pairs (property-pinned, df-cap interplay
     included); callers gate on the footer row count
     (sources.readers.collapse_dial).
     """
-    if collapse_distinct:
-        fpmap, fpg, rsh = _capped_fp_shingles(df, n, max_doc_freq)
-        cross = _jaccard_at_least(
-            _shingle_overlap(rsh, "__fp", "f1", "f2"), threshold
-        ).select("f1", "f2", "jaccard")
-        m1 = fpmap.select(F.col("__fp").alias("f1"), F.col("doc_id").alias("x"))
-        m2 = fpmap.select(F.col("__fp").alias("f2"), F.col("doc_id").alias("y"))
-        cross_docs = (
-            cross.join(m1, "f1")
-            .join(m2, "f2")
-            .select(
-                F.least("x", "y").alias("a_id"),
-                F.greatest("x", "y").alias("b_id"),
-                "jaccard",
-            )
-        )
-        # same-content cliques: every pair inside an fp group with ≥1
-        # surviving shingle has jaccard exactly 1.0 (the direct path
-        # computes round(n/n, 6) per pair); emitted closed-form
-        same = (
-            _shingle_sizes(rsh, "__fp")
-            .join(fpg.filter(F.col("m") >= 2), "__fp")
-            .withColumn("jaccard", F.lit(1.0))
-            .filter(F.col("jaccard") >= threshold)
-            .select("__fp", "jaccard")
-        )
-        same_docs = (
-            same.join(fpmap.select("__fp", F.col("doc_id").alias("x")), "__fp")
-            .join(fpmap.select("__fp", F.col("doc_id").alias("y")), "__fp")
-            .filter(F.col("x") < F.col("y"))
-            .select(
-                F.col("x").alias("a_id"), F.col("y").alias("b_id"), "jaccard"
-            )
-        )
-        return cross_docs.unionByName(same_docs)
-    sh = _capped_shingles(df, n, max_doc_freq)
-    return _jaccard_at_least(
-        _shingle_overlap(sh, "doc_id", "a_id", "b_id"), threshold
-    ).select("a_id", "b_id", "jaccard")
+    return _pair_audit(
+        df, n, threshold, max_doc_freq, collapse_distinct,
+        lambda overlap: _jaccard_at_least(overlap, threshold).select(
+            "a_id", "b_id", "jaccard"
+        ),
+        directional=False,
+    )
 
 
 def ngram_containment_pairs(
@@ -395,64 +405,31 @@ def ngram_containment_pairs(
     inverted index — never an all-pairs join — and
     ``collapse_distinct=True`` runs every superlinear stage (index,
     df-cap, intersection self-join) at the distinct-content
-    fingerprint level with an output-proportional doc expansion, the
-    round-12 collapse family applied verbatim; callers gate on the
-    shared dial (sources.readers.collapse_dial).
+    fingerprint level through the same pair-audit body as
+    ``ngram_jaccard_pairs`` (:func:`_pair_audit`, its tail in the
+    directional form); callers gate on the shared dial
+    (sources.readers.collapse_dial).
     """
-    def emit_both(pairs: DataFrame, ka: str, kb: str) -> DataFrame:
-        """(ka, kb, n_inter, n_a, n_b) → directional rows, both ways."""
+    def emit_both(pairs: DataFrame) -> DataFrame:
+        """(a_id, b_id, n_inter, n_a, n_b) → directional rows, both ways."""
         fwd = pairs.select(
-            F.col(ka).alias("contained_id"),
-            F.col(kb).alias("container_id"),
+            F.col("a_id").alias("contained_id"),
+            F.col("b_id").alias("container_id"),
             F.round(F.col("n_inter") / F.col("n_a"), 6).alias("containment"),
         )
         rev = pairs.select(
-            F.col(kb).alias("contained_id"),
-            F.col(ka).alias("container_id"),
+            F.col("b_id").alias("contained_id"),
+            F.col("a_id").alias("container_id"),
             F.round(F.col("n_inter") / F.col("n_b"), 6).alias("containment"),
         )
         return fwd.unionByName(rev).filter(
             F.col("containment") >= threshold
         )
 
-    if collapse_distinct:
-        fpmap, fpg, rsh = _capped_fp_shingles(df, n, max_doc_freq)
-        fp_pairs = emit_both(_shingle_overlap(rsh, "__fp", "f1", "f2"), "f1", "f2")
-        m1 = fpmap.select(
-            F.col("__fp").alias("contained_id"), F.col("doc_id").alias("x")
-        )
-        m2 = fpmap.select(
-            F.col("__fp").alias("container_id"), F.col("doc_id").alias("y")
-        )
-        cross_docs = (
-            fp_pairs.join(m1, "contained_id")
-            .join(m2, "container_id")
-            .select(
-                F.col("x").alias("contained_id"),
-                F.col("y").alias("container_id"),
-                "containment",
-            )
-        )
-        # same-content cliques: containment is exactly 1.0 in BOTH
-        # directions for every ordered pair inside an fp group with
-        # ≥ 1 surviving shingle
-        same_docs = (
-            _shingle_sizes(rsh, "__fp")
-            .join(fpg.filter(F.col("m") >= 2), "__fp")
-            .join(fpmap.select("__fp", F.col("doc_id").alias("x")), "__fp")
-            .join(fpmap.select("__fp", F.col("doc_id").alias("y")), "__fp")
-            .filter(F.col("x") != F.col("y"))
-            .withColumn("containment", F.lit(1.0))
-            .filter(F.col("containment") >= threshold)
-            .select(
-                F.col("x").alias("contained_id"),
-                F.col("y").alias("container_id"),
-                "containment",
-            )
-        )
-        return cross_docs.unionByName(same_docs)
-    sh = _capped_shingles(df, n, max_doc_freq)
-    return emit_both(_shingle_overlap(sh, "doc_id", "a_id", "b_id"), "a_id", "b_id")
+    return _pair_audit(
+        df, n, threshold, max_doc_freq, collapse_distinct, emit_both,
+        directional=True,
+    )
 
 
 def content_fingerprints(
@@ -585,7 +562,7 @@ def ngram_rep_edges(
         # and reverted: co-partitioning flips the probes from
         # broadcast joins to sort-merge joins over the full shingle
         # stream — measured 2x worse.)
-        candfp = _spread_by(
+        candfp = spread_small_by(
             rshc.select(
                 "rep_id", "rep_fp", F.col("__fp").alias("b_fp")
             ).distinct(),
@@ -629,7 +606,7 @@ def ngram_rep_edges(
     # r13: footer-gated cores-wide pin of the candidate pair stream —
     # see the collapse path's note above (same AQE byte-blind coalesce,
     # same broadcast-preserving fix)
-    cand = _spread_by(
+    cand = spread_small_by(
         sh.filter(F.col("doc_id") > F.col("rep"))
         .select(F.col("rep").alias("a_id"), F.col("doc_id").alias("b_id"))
         .distinct(),
@@ -853,12 +830,10 @@ def first_collision_claim(
 
 def band_collision_pairs(
     wide: DataFrame,
-    wide_other: DataFrame | None = None,
     bands: int = 4,
     id_col: str = "doc_id",
     a_name: str = "a_id",
     b_name: str = "b_id",
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Unique LSH candidate pairs via FIRST-colliding-band claiming.
 
@@ -872,19 +847,12 @@ def band_collision_pairs(
     construction, so the ``distinct`` disappears and downstream
     verification work is paid once per pair, not once per collision.
     The output SET is provably identical to the distinct-of-unions.
-
-    Self-join when ``wide_other`` is None (pairs filtered to
-    ``a_name < b_name``); otherwise ``wide`` × ``wide_other`` with ids
-    assumed disjoint (the incremental-ingest shape).  ``carry`` names
-    payload columns of the wide frame(s) surfaced per side as
-    ``a_<col>`` / ``b_<col>`` (e.g. the simhash signature, so the
-    verifier never joins back to fetch it).
+    A self-join: pairs are filtered to ``a_name < b_name``.
     """
-    def expand(w: DataFrame, ident: str, prefix: str, side: str) -> DataFrame:
+    def expand(ident: str, prefix: str) -> DataFrame:
         return (
-            w.select(
+            wide.select(
                 F.col(id_col).alias(ident),
-                *[F.col(c).alias(f"{side}_{c}") for c in carry],
                 *[F.col(f"band_{i}").alias(f"{prefix}{i}") for i in range(bands)],
             )
             .withColumn(
@@ -900,15 +868,12 @@ def band_collision_pairs(
             )
         )
 
-    a = expand(wide, a_name, "ab_", "a")
-    b = expand(wide if wide_other is None else wide_other, b_name, "bb_", "b")
-    j = a.join(b, ["band", "band_hash"])
-    if wide_other is None:
-        j = j.filter(F.col(a_name) < F.col(b_name))
+    pairs = expand(a_name, "ab_").join(expand(b_name, "bb_"), ["band", "band_hash"])
     claimed = first_collision_claim("band", "ab_", "bb_", bands)
-    return j.filter(claimed).select(
-        a_name, b_name,
-        *[f"a_{c}" for c in carry], *[f"b_{c}" for c in carry],
+    return (
+        pairs.filter(F.col(a_name) < F.col(b_name))
+        .filter(claimed)
+        .select(a_name, b_name)
     )
 
 

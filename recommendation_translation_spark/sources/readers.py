@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..operators.text import text_key
 from ..schemas import PAGECOUNT_SCHEMA
 
 __all__ = [
@@ -380,24 +381,20 @@ def distinct_text_fraction(spark: SparkSession, sf_dir: str,
     rows, in (0, 1] — the signal the collapse dial actually wants
     (round-12 verdict #5: a production pipeline sets the dial from its
     dedup report's duplication ratio, not a row count).  ONE
-    ``approx_count_distinct(sha2(text))`` Spark job per (corpus,
+    ``approx_count_distinct(text_key(text))`` Spark job per (corpus,
     fingerprint), memoized for the process lifetime — repeated plan
     builds over the same files cost nothing, and a rewrite is never
     served a stale fraction.  The 5% HLL error is irrelevant at the
-    0.9 decision threshold.  NULL texts count as one distinct value
-    (the dedup_exact sentinel convention)."""
+    0.9 decision threshold.  It counts operators.text.text_key, the
+    key every raw-text collapse groups on, so NULL texts count as one
+    distinct value."""
     key = _table_fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
     got = _DISTINCT_FRACTION_MEMO.get(key)
     if got is None:
-        t = F.col(text_col)
         row = (
             spark.read.parquet(key[0])
             .select(
-                F.approx_count_distinct(
-                    F.when(t.isNull(), F.lit("null")).otherwise(
-                        F.sha2(t, 256)
-                    )
-                ).alias("d"),
+                F.approx_count_distinct(text_key(text_col)).alias("d"),
                 F.count(F.lit(1)).alias("n"),
             )
             .first()

@@ -724,6 +724,24 @@ def test_ordered_measure_plan_is_reproducible(spark):
     assert len(plans) == 1, "\n\n".join(plans)
 
 
+def test_contamination_plan_is_reproducible(spark):
+    # the per-document distinct counts are size(collect_set(...)), not
+    # two count_distinct: those plan an Expand whose projection order
+    # follows expression hashes, which carry expression ids, so the
+    # plan changed with the rows built before it in the same session
+    from tools_dump_plans import normalized
+
+    def plan(name):
+        return normalized(
+            physical_plan(QUERIES[name](spark, SF_SMALL), mode="simple")
+        )
+
+    first = plan("corpus_contamination")
+    plan("corpus_bpe_budget")
+    assert "Expand" not in first
+    assert plan("corpus_contamination") == first
+
+
 def test_shard_append_broadcasts_tails_no_single_partition(spark):
     # append cost must be ∝ batch: the base contributes a bounded
     # 16-row tails aggregate joined by BROADCAST (never a shuffle of

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -1610,6 +1611,10 @@ def test_dsir_collapse_path_identical(spark):
     assert len({round(k - s, 6) for _, s, k in r_direct}) > 1
 
 
+@pytest.mark.parametrize(
+    "operator",
+    ["ngram_rep_edges", "ngram_jaccard_pairs", "ngram_containment_pairs"],
+)
 @SETTINGS
 @given(
     rows=st.lists(
@@ -1628,21 +1633,20 @@ def test_dsir_collapse_path_identical(spark):
         min_size=1, max_size=30, unique_by=lambda t: t[0],
     ),
 )
-def test_ngram_rep_edges_collapse_identity_random(spark, rows):
+def test_ngram_rep_edges_collapse_identity_random(spark, operator, rows):
     # randomized pin of the fp-level collapse: arbitrary duplication
     # mixes, overlapping vocabularies, short/empty/NULL texts — the
-    # collapsed and direct edge sets must be identical, including
-    # jaccard values
-    from recommendation_translation_spark.operators.dedup import (
-        ngram_rep_edges,
-    )
+    # collapsed and direct pair sets must be identical, values
+    # included; over the rep edges and both tails of the pair audit
+    # (unordered jaccard pairs, directional containment pairs)
+    from recommendation_translation_spark.operators import dedup
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     def edges(collapse):
         return sorted(
-            (r["a_id"], r["b_id"], r["jaccard"])
-            for r in ngram_rep_edges(
+            tuple(r)
+            for r in getattr(dedup, operator)(
                 df, n=3, threshold=0.2, collapse_distinct=collapse
             ).collect()
         )
