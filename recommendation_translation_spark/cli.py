@@ -39,6 +39,15 @@ log = logging.getLogger(__name__)
 
 __all__ = ["Params", "build_parser", "check_config", "run", "main"]
 
+#: The largest raw input, in bytes over its files, whose job compiles
+#: with C1 only (``session.c1_only``).  perfbench translate inputs of 4
+#: sites, 4-core host, ``job_s`` against the same code with C2: 2,000
+#: items (0.12 MB) -13 %, 10,000 (0.63 MB) -9 %, 30,000 (2.0 MB) and
+#: 50,000 (3.4 MB) -3 %, 100,000 (6.9 MB) +21 %.  In a local-mode
+#: driver the tasks run in this JVM, and a longer job's hot loops
+#: repay C2.
+C1_ONLY_MAX_INPUT_BYTES = 1 << 20
+
 #: Threads of the background artifact writer.  The sites' fits tend to
 #: finish together, so their model saves, a handful of one-task jobs
 #: each, run side by side.
@@ -290,10 +299,24 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
     return artifacts
 
 
+def _short_job(p: Params) -> bool:
+    """Whether the run parses raw input files of at most
+    ``C1_ONLY_MAX_INPUT_BYTES`` between them.  A run that starts from
+    earlier artifacts, or names an input that is not a local file, is
+    not known to be short."""
+    if not p.parse_raw_data:
+        return False
+    paths = [x for x in (p.raw_data, p.raw_sitelinks, p.raw_pagecounts) if x]
+    if not all(os.path.isfile(x) for x in paths):
+        return False
+    return sum(os.path.getsize(x) for x in paths) <= C1_ONLY_MAX_INPUT_BYTES
+
+
 def main(argv: list[str] | None = None) -> int:
+    import contextlib
     import sys
 
-    from .session import get_spark
+    from .session import c1_only, get_spark
 
     p = params_from_args(sys.argv[1:] if argv is None else argv)
     errors = check_config(p)
@@ -302,7 +325,10 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: {e}", file=sys.stderr)
         return 2
     spark = get_spark(app_name="recommendation-translation")
-    artifacts = run(spark, p)
+    # the entry point runs one job per driver, as spark-submit runs it:
+    # a short job's JIT costs more than C2 code would save
+    with c1_only(spark) if _short_job(p) else contextlib.nullcontext():
+        artifacts = run(spark, p)
     for k, v in artifacts.items():
         print(f"{k}: {v}")
     return 0

@@ -50,8 +50,25 @@ SITE_PARALLELISM = 8
 # — RMSE evaluator.  We add a seed.
 
 
+class _ForestModel(RandomForestRegressionModel):
+    """A fitted forest whose ``trees`` are wrapped on demand.  PySpark
+    declares them a ``cached_property``, which ``JavaModel.__init__``
+    evaluates when it lists the model's params (``Params.params`` skips
+    only plain properties): about 1,000 py4j round trips per fit for
+    trees nothing here reads.  Saving is the Java model's, unchanged."""
+
+    @property
+    def trees(self):
+        return RandomForestRegressionModel.trees.func(self)
+
+
+class _Forest(RandomForestRegressor):
+    def _create_model(self, java_model) -> _ForestModel:
+        return _ForestModel(java_model)
+
+
 def _regressor(seed: int) -> RandomForestRegressor:
-    return RandomForestRegressor(labelCol="label", featuresCol="features", seed=seed)
+    return _Forest(labelCol="label", featuresCol="features", seed=seed)
 
 
 def _evaluator() -> RegressionEvaluator:

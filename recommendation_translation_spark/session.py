@@ -23,13 +23,15 @@ import shlex
 import shutil
 import subprocess
 import sys
-from typing import Callable
+import tempfile
+from typing import Callable, Iterator
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-__all__ = ["ensure_python_protobuf", "get_spark", "inherit_local_properties"]
+__all__ = ["c1_only", "ensure_python_protobuf", "get_spark", "inherit_local_properties"]
 
 #: Known locations of a vendored pure-python ``google.protobuf``
 #: runtime on hosts whose interpreter has no protobuf installed (this
@@ -115,14 +117,15 @@ def get_spark(
     (JDK class-data sharing): the classes an earlier launch with the
     same key loaded, already parsed and verified, are mapped from
     ``__cds__/<key>.jsa`` beside this module instead of read from
-    Spark's jars.  The key hashes the ``java`` binary, the jars, the
-    driver heap and the JVM flags, so an upgrade or another heap trains
-    a new archive.  Without a published archive the JVM trains one: it
-    dumps the classes it loaded when it exits (a slower launch and
-    exit, once per key), and this process publishes the dump at
-    interpreter exit after stopping the session and waiting for the
-    JVM.  No archive is used, and the JVM starts as without it, when
-    the directory is not writable, when anything adds classpath
+    Spark's jars.  The key hashes the archive directory's path, the
+    ``java`` binary, the jars, the driver heap and the JVM flags, so a
+    moved checkout, an upgrade or another heap trains a new archive.
+    Without a published archive the JVM trains one: it dumps the
+    classes it loaded when it exits (a slower launch and exit, once per
+    key), and this process publishes the dump at interpreter exit after
+    stopping the session and waiting for the JVM.  No archive is used,
+    and the JVM starts as without it, when the directory is not
+    writable, when anything adds classpath
     directories (a conf directory holding more than templates,
     ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH``,
     ``PYSPARK_SUBMIT_ARGS``, ``spark.driver.extraClassPath`` or
@@ -244,9 +247,12 @@ def _archive_launch(conf: dict[str, str]) -> tuple[str, str | None, str] | None:
         os.makedirs(empty_conf, exist_ok=True)
         if os.listdir(empty_conf) or not os.access(_CDS_DIR, os.W_OK | os.X_OK):
             return None
-        # what the JVM checks before it maps an archive; -D properties
-        # are not checked, and perfbench's differ per run
+        # what the JVM checks before it maps an archive: the app class
+        # path starts with the conf directory, so a checkout moved or
+        # copied elsewhere trains its own; -D properties are not
+        # checked, and perfbench's differ per run
         digest = hashlib.sha256()
+        digest.update(f"{empty_conf}\n".encode())
         java = os.path.realpath(java)
         digest.update(f"{java} {os.stat(java).st_mtime_ns}\n".encode())
         jars = os.path.join(spark_home, "jars")
@@ -307,6 +313,92 @@ def _publish_archive(proc: subprocess.Popen, part: str, jsa: str) -> None:
             os.replace(part, jsa)
         else:
             os.remove(part)
+
+
+#: The HotSpot compiler directive of a one-job driver: no method is
+#: compiled by C2, so methods that get hot stay with C1.
+_C1_ONLY = '[{match: "*.*", c2: {Exclude: true}}]'
+
+
+@contextlib.contextmanager
+def c1_only(spark: SparkSession) -> Iterator[None]:
+    """Compile with C1 only while the block runs: for a driver that runs
+    one short job and exits, as ``spark-submit`` runs it.
+
+    A short cold job's JIT costs more than the code it compiles saves:
+    C2 compiler threads used 21.6 s of CPU in a 9.2 s job on 4 cores.
+    A longer job whose tasks run in this JVM repays C2, so the caller
+    picks the jobs (``cli.C1_ONLY_MAX_INPUT_BYTES``).  The
+    block pushes the compiler directive ``_C1_ONLY`` onto the driver
+    JVM's directive stack through the ``DiagnosticCommand`` MBean and
+    pops it when the block exits, so it works whether ``get_spark`` or
+    ``spark-submit`` launched the JVM, and a long session keeps C2
+    outside the block.  A method whose C2 compile is excluded during the
+    block stays C1-only for the rest of that JVM's life (HotSpot marks
+    it not C2-compilable), which is what a one-job driver wants.
+
+    The mark is part of the method's archived state, so a JVM that dumps
+    a class-data archive when it exits (the first launch per archive
+    key, ``get_spark``) keeps C2: every later JVM that maps the archive,
+    warm sessions included, would run the marked methods C1-only.  When
+    the JVM offers no such MBean or operation, the block runs as without
+    it.
+    """
+    # no JVM behind the session (AttributeError), no such MBean or
+    # operation (Py4JError), no temporary file (OSError)
+    unavailable = (AttributeError, Py4JError, OSError)
+    added = False
+    try:
+        if not _dumps_archive(spark):
+            with tempfile.NamedTemporaryFile("w", suffix=".json") as directive:
+                directive.write(_C1_ONLY)
+                directive.flush()
+                # the JVM parses the file on add; a file it cannot parse adds nothing
+                added = _diagnostic_command(
+                    spark, "compilerDirectivesAdd", directive.name
+                ).startswith("1 compiler directives added")
+    except unavailable:
+        pass
+    try:
+        yield
+    finally:
+        if added:
+            # a job that broke the gateway took the JVM and its directive with it
+            with contextlib.suppress(*unavailable):
+                _diagnostic_command(spark, "compilerDirectivesRemove")
+
+
+def _dumps_archive(spark: SparkSession) -> bool:
+    """Whether the driver JVM writes a dynamic class-data archive at exit."""
+    flags = _diagnostic_command(spark, "vmFlags").split()
+    return "-XX:+DynamicDumpSharedSpaces" in flags
+
+
+def _diagnostic_command(spark: SparkSession, op: str, *args: str) -> str:
+    """Run the JVM diagnostic command ``op`` (``jcmd``'s, in camel case)
+    and return its output.  ``MBeanServer.invoke`` is called through the
+    interface's ``Method``: py4j cannot resolve it on the platform
+    server's class, whose package the JDK does not export."""
+    jvm, gateway = spark._jvm, spark.sparkContext._gateway
+
+    def array(cls, *items):
+        out = gateway.new_array(cls, len(items))
+        for i, item in enumerate(items):
+            out[i] = item
+        return out
+
+    for_name = jvm.java.lang.Class.forName
+    invoke = for_name("javax.management.MBeanServer").getMethod("invoke", array(
+        jvm.java.lang.Class, for_name("javax.management.ObjectName"),
+        for_name("java.lang.String"), for_name("[Ljava.lang.Object;"),
+        for_name("[Ljava.lang.String;")))
+    server = jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer()
+    name = jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand")
+    string = jvm.java.lang.String
+    return invoke.invoke(server, array(
+        jvm.java.lang.Object, name, op,
+        array(jvm.java.lang.Object, array(string, *args)),
+        array(string, "[Ljava.lang.String;")))
 
 
 def inherit_local_properties(sc: SparkContext, fn: Callable) -> Callable:

@@ -22,7 +22,13 @@ import random
 
 import pytest
 
-from recommendation_translation_spark.cli import Params, check_config, run
+from recommendation_translation_spark.cli import (
+    C1_ONLY_MAX_INPUT_BYTES,
+    Params,
+    _short_job,
+    check_config,
+    run,
+)
 
 # ---------------------------------------------------------------------------
 # fixture generation (FIXTURES.md A1-A3 invariants)
@@ -404,6 +410,164 @@ def test_failed_site_is_isolated_and_caches_nothing(spark):
     assert results["a"].error and "bad feature" in results["a"].error
     assert results["b"].error is None and results["b"].model is not None
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+#: py4j round trips one forest fit may make.  A fit that wraps its 20
+#: trees eagerly, as PySpark's own model class does when it lists its
+#: params, made about 1,300; one that does not, about 140.
+FIT_PY4J_CEILING = 500
+
+
+def test_fit_wraps_no_tree_until_asked(spark, tmp_path, monkeypatch):
+    """A fitted forest wraps its trees only when ``trees`` is read, and
+    saves as PySpark's own model class loads."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+    from py4j.protocol import MEMORY_COMMAND_NAME
+    from pyspark.ml.linalg import Vectors
+    from pyspark.ml.regression import RandomForestRegressionModel
+
+    from recommendation_translation_spark.pipeline.train import _regressor
+
+    rng = random.Random(5)
+    train = spark.createDataFrame(
+        [(Vectors.dense(rng.random(), rng.random()), rng.random()) for _ in range(60)],
+        ["features", "label"]).cache()
+    train.count()
+    calls = []
+    send, fitting = GatewayClient.send_command, threading.get_ident()
+
+    def counted(self, command, *args, **kwargs):
+        # the fit's own calls: not other threads', nor the detaching of
+        # objects that earlier tests left to the garbage collector
+        if threading.get_ident() == fitting and not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    model = _regressor(1).fit(train)
+    monkeypatch.undo()
+    train.unpersist()
+    assert len(calls) < FIT_PY4J_CEILING
+    assert len(model.trees) == model.getNumTrees == 20
+    model.write().save(str(tmp_path / "forest"))
+    loaded = RandomForestRegressionModel.load(str(tmp_path / "forest"))
+    assert loaded.getNumTrees == 20
+    assert loaded.toDebugString == model.toDebugString
+
+
+def test_run_pushes_no_compiler_directive(spark, fixture_dir, tmp_path, monkeypatch):
+    """Only the one-job entry point ``main`` compiles with C1 only: the
+    library call leaves the session's JIT alone."""
+    from recommendation_translation_spark import session
+
+    calls = []
+    monkeypatch.setattr(session, "_diagnostic_command",
+                        lambda *a: calls.append(a[1:]) or "")
+    run(spark, Params(parse_raw_data=True, raw_data=str(fixture_dir / "raw.tsv"),
+                      output_dir=str(tmp_path)))
+    assert calls == []
+
+
+def test_short_job_is_a_parse_of_small_local_files(tmp_path):
+    half = tmp_path / "half.txt"
+    with open(half, "wb") as f:
+        f.truncate(C1_ONLY_MAX_INPUT_BYTES // 2)
+    assert _short_job(Params(parse_raw_data=True, raw_data=str(half)))
+    assert _short_job(Params(parse_raw_data=True, raw_sitelinks=str(half),
+                             raw_pagecounts=str(half)))
+    with open(half, "ab") as f:
+        f.write(b"x")
+    # the input files count together
+    assert not _short_job(Params(parse_raw_data=True, raw_sitelinks=str(half),
+                                 raw_pagecounts=str(half)))
+    # a glob, a directory and earlier artifacts have no known size
+    for raw in (str(tmp_path / "*.txt"), str(tmp_path)):
+        assert not _short_job(Params(parse_raw_data=True, raw_data=raw))
+    assert not _short_job(Params(extract_features=True, parsed_data=str(tmp_path)))
+
+
+@pytest.mark.parametrize("size, pushed", [(C1_ONLY_MAX_INPUT_BYTES, True),
+                                          (C1_ONLY_MAX_INPUT_BYTES + 1, False)])
+def test_main_compiles_only_a_short_job_with_c1_only(spark, tmp_path, monkeypatch,
+                                                    size, pushed):
+    """``main`` runs a job whose raw input is within the size limit under
+    ``c1_only`` and a larger one with C2, as ``run`` does."""
+    from recommendation_translation_spark import cli, session
+
+    raw = tmp_path / "raw.tsv"
+    with open(raw, "wb") as f:
+        f.truncate(size)
+    ops = []
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(session, "_diagnostic_command",
+                        lambda spark, op, *a: ops.append(op) or "")
+    monkeypatch.setattr(cli, "run", lambda spark, p: {})
+    argv = ["--parse-raw-data", "--raw-data", str(raw), "--output-dir", str(tmp_path)]
+    assert cli.main(argv) == 0
+    assert ("compilerDirectivesAdd" in ops) is pushed
+
+
+#: ``cli.main`` in a fresh driver process.  An unwritable class-data
+#: cache gives a plain launch, with no archive to train at exit; ``run``
+#: reports the driver's compiler directive count while it runs.
+MAIN_CHILD = r"""
+import json, sys
+from recommendation_translation_spark import cli, session
+session._CDS_DIR = sys.argv[1]
+run, directives = cli.run, []
+def probed(spark, p):
+    out = session._diagnostic_command(spark, "compilerDirectivesPrint")
+    directives.append(out.count("Directive:"))
+    return run(spark, p)
+cli.run = probed
+rc = cli.main(sys.argv[2:])
+print(json.dumps({"rc": rc, "directives": directives}))
+"""
+
+
+def _node_data(spark, model_dir: str, site: str) -> list:
+    data = spark.read.parquet(os.path.join(model_dir, site, "data"))
+    return data.orderBy("treeID", "nodeData.id").collect()
+
+
+def test_main_outputs_equal_run(spark, fixture_dir, full_run, tmp_path):
+    """``cli.main`` compiles the job with C1 only, in a driver of its
+    own; its predictions and models equal those of ``run`` in this
+    session (C2 code) on the same input and seed."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    blocked = tmp_path / "file"
+    blocked.write_text("")
+    # the CSV's row order follows the shuffle partitions, which the
+    # child's session sets to its core count
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
+               SPARK_GRAFT_CPUS=spark.conf.get("spark.sql.shuffle.partitions"),
+               PYTHONPATH=repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    args = ["--parse-raw-data", "--extract-features", "--build-models", "--score-items",
+            "--raw-data", str(fixture_dir / "raw.tsv"), "--output-dir", str(tmp_path / "out"),
+            "--seed", "42"]
+    proc = subprocess.run([sys.executable, "-c", MAIN_CHILD, str(blocked / "cds"), *args],
+                          env=env, cwd=repo, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.strip().splitlines()
+    assert json.loads(lines[-1]) == {"rc": 0, "directives": [2]}
+    artifacts = dict(ln.split(": ", 1) for ln in lines[:-1] if ": " in ln)
+
+    def csv_text(arts) -> str:
+        (path,) = glob.glob(os.path.join(arts["predictions"], "*.csv.bz2"))
+        with bz2.open(path, "rt") as f:
+            return f.read()
+
+    assert csv_text(artifacts) == csv_text(full_run)
+    for site in SITES:
+        assert _node_data(spark, artifacts["model_dir"], site) == \
+            _node_data(spark, full_run["model_dir"], site), site
 
 
 def _write_raw_tsv(path, first_id: int, seed: int) -> set[str]:
